@@ -763,23 +763,14 @@ object RelationalQueries {
 
   /** The generic form of [[histQuantile]]: sketch `centsCol` per
     * `groupCol` group of `df` — shared with the event-time-window variant
-    * ([[eventsHourlyQuantile]]) and, through [[histQuantileFromCells]],
-    * with the streaming twin that receives its cells from a watermarked
-    * windowed aggregation. */
+    * ([[eventsHourlyQuantile]]). The cells `(groupCol, b, cnt)` are the
+    * sketch's mergeable part: cells from any partitioning of the data sum
+    * into the same table, and the read-off below is identical on top. */
   private[graft] def histQuantileOver(df: DataFrame, groupCol: String,
-      centsCol: Column): DataFrame =
-    histQuantileFromCells(
-      df.select(col(groupCol), length(bin(centsCol)).cast("long").as("b"))
-        .groupBy(groupCol, "b").agg(count(lit(1)).as("cnt")),
-      groupCol)
-
-  /** Quantile read-off from already-aggregated histogram cells
-    * `(groupCol, b, cnt)` — the MERGE-side of the sketch: cells from any
-    * partitioning of the data (per-partition, per-day, per-micro-batch)
-    * sum into the same table, and this read-off is identical on top. */
-  private[graft] def histQuantileFromCells(h: DataFrame, groupCol: String): DataFrame = {
+      centsCol: Column): DataFrame = {
     val w = Window.partitionBy(groupCol).orderBy("b")
-    val cum = h
+    val cum = df.select(col(groupCol), length(bin(centsCol)).cast("long").as("b"))
+      .groupBy(groupCol, "b").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum("cnt").over(w))
       .withColumn("n", sum("cnt").over(Window.partitionBy(groupCol)))
     def estC(q: Int): Column = {
@@ -801,12 +792,7 @@ object RelationalQueries {
 
   /** [[histQuantile]] over EVENT-TIME hours: per wall-clock hour, the
     * sketched p50/p95 of event value — the latency/size-percentile
-    * dashboard panel shape, and the batch twin of the STREAMING windowed
-    * sketch (`streaming.StreamingHistQuantile`): a watermarked
-    * `groupBy(window, b).count` emits exactly these cells per finalized
-    * window, and [[histQuantileFromCells]] reads the same quantiles off
-    * them — the sketch's cell-wise mergeability is what makes the
-    * incremental windowed form EQUAL the batch form. */
+    * dashboard panel shape. */
   def eventsHourlyQuantile(s: SparkSession, dir: String): DataFrame =
     histQuantileOver(
       Tables.events(s, dir).withColumn("hour", date_trunc("hour", col("ts"))),
@@ -981,9 +967,7 @@ object RelationalQueries {
     * window span 2B, the error side explodes to its (≤ 2, deduplicated)
     * covering buckets, clicks join once on their own bucket, and the exact
     * band predicate stays as residual — a pair meets only in the click's
-    * bucket, so no dedup pass. [[graft.plans.BucketedIntervalJoinRule]]
-    * performs this same rewrite automatically for ad-hoc band joins; this
-    * operator is the explicit form the oracle checks. */
+    * bucket, so no dedup pass. */
   def eventsBandJoin(s: SparkSession, dir: String): DataFrame = {
     val B = 1800000000L // half-width: 30 minutes in microseconds
     val ev = Tables.events(s, dir)
@@ -999,11 +983,10 @@ object RelationalQueries {
     * `(event_id, e_us)` probes and `(c_us, c_v)` matches — factored out
     * (like [[intervalJoinCore]]) so the boundary spec can drive crafted
     * epoch-micros through the REAL operator. Buckets use EXACT floor
-    * division (`(x − pmod(x, W)) div W` — the same spelling as
-    * [[graft.plans.BucketedIntervalJoinRule]]): Spark's `div` truncates
-    * toward zero, which under-covers below zero, so pre-1970 / negative
-    * timestamps would silently drop pairs the BETWEEN oracle keeps
-    * (spec-pinned on a domain straddling 0). */
+    * division (`(x − pmod(x, W)) div W`, as in [[intervalJoinCore]]):
+    * Spark's `div` truncates toward zero, which under-covers below zero,
+    * so pre-1970 / negative timestamps would silently drop pairs the
+    * BETWEEN oracle keeps (spec-pinned on a domain straddling 0). */
   private[graft] def bandJoinCore(errors: DataFrame, clicks: DataFrame,
       B: Long): DataFrame = {
     val W = 2 * B // bucket width = window span
@@ -1154,10 +1137,10 @@ object RelationalQueries {
   private[graft] def intervalJoinCore(purchases: DataFrame, clicks: DataFrame,
       salt: Int = 1): DataFrame = {
     val H = 3600000000L // interval (and bucket) width, microseconds
-    // EXACT floor division for the bucket key (the BucketedIntervalJoinRule
-    // spelling): with true floor, fd(t − H) = fd(t) − 1 identically for ALL
-    // integers — including negative epoch-micros, where truncating `div`
-    // rounds toward zero and under-covers (spec-pinned straddling 0)
+    // EXACT floor division for the bucket key: with true floor,
+    // fd(t − H) = fd(t) − 1 identically for ALL integers — including
+    // negative epoch-micros, where truncating `div` rounds toward zero and
+    // under-covers (spec-pinned straddling 0)
     def fd(x: String) = s"(($x) - pmod(($x), ${H}L)) div ${H}L"
     val probes0 = purchases.withColumn("bucket", explode(array(
       expr(s"${fd("p_us")} - 1L"), expr(fd("p_us")))))

@@ -214,7 +214,7 @@ object SparkEntry {
     // servers BY EVENT with COLLIDING query ids (events 2k and 2k+1 share
     // plain id q-k on srv0/srv1). A global merge on the plain ids would
     // cross-contaminate the lifecycles (dup initials, clobbered stats);
-    // the per-server namespacing (exactly StreamingMerge.fleetPipeline's
+    // the per-server namespacing (exactly StreamingMerge.fleetMergeWithDelivery's
     // composite key) must keep them independent — pinned hash-exact by
     // the per-event oracle.
     "log_merged_fleet" -> ((s, dir) =>

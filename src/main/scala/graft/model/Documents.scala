@@ -10,9 +10,6 @@ import graft.operators.{CurationPipeline, Dedup, Pii, Sampling, Tables, TextAnal
 case class Document(doc_id: Long, text: String, lang: String, source: String,
     n_chars: Long)
 
-/** [[Dedup.exact]] output: one row per distinct text. */
-case class DedupGroup(fp: String, keep_id: Long, n_copies: Long)
-
 /** [[Sampling.packChunks]] output: a document's place in the packed
   * fixed-budget training stream of its source. */
 case class PackedChunk(source: String, doc_id: Long, n_tokens: Long,
@@ -48,8 +45,6 @@ object Documents {
   // typed call site
   private implicit val documentEnc: org.apache.spark.sql.Encoder[Document] =
     org.apache.spark.sql.Encoders.product[Document]
-  private implicit val dedupGroupEnc: org.apache.spark.sql.Encoder[DedupGroup] =
-    org.apache.spark.sql.Encoders.product[DedupGroup]
   private implicit val packedChunkEnc: org.apache.spark.sql.Encoder[PackedChunk] =
     org.apache.spark.sql.Encoders.product[PackedChunk]
   private implicit val corpusReportEnc: org.apache.spark.sql.Encoder[CorpusReport] =
@@ -61,23 +56,12 @@ object Documents {
   implicit class DocumentOps(private val ds: Dataset[Document]) extends AnyVal {
     private def df: DataFrame = ds.toDF()
 
-    /** Exact-dedup groups (typed [[Dedup.exact]]). */
-    def dedupGroups: Dataset[DedupGroup] =
-      Dedup.exact(df).as[DedupGroup]
-
     /** Keep one document per distinct text (the minimum id, matching
       * [[Dedup.exact]]'s keep rule): a broadcast-friendly semi join against
       * the 16-byte-keyed group table. */
     def withoutExactDups: Dataset[Document] =
       ds.join(Dedup.exact(df).select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
         .as[Document]
-
-    /** Keep one document per NEAR-dup cluster (the component-minimum id,
-      * matching [[Dedup.clusters]]'s keep rule — exact copies share a
-      * component, so this subsumes [[withoutExactDups]]). */
-    def withoutNearDups(threshold: Double = 0.8): Dataset[Document] =
-      ds.join(Dedup.clusters(df, threshold).filter(col("kept")).select("doc_id"),
-        Seq("doc_id"), "left_semi").as[Document]
 
     /** Keep one document per CANONICAL-text group ([[Dedup.canonical]]'s
       * keep rule) — additionally folds case/punctuation/whitespace
@@ -133,17 +117,6 @@ object Documents {
         defaultRate: Double = Sampling.DefaultRate,
         budget: Long = 512): Dataset[PackedChunk] =
       ds.withoutExactDups
-        .keptByRepetition()
-        .keptByClassifier
-        .sampledMixture(rates, defaultRate)
-        .packed(budget)
-
-    /** The full curation pass with the NEAR-dup stage — the typed twin of
-      * [[graft.operators.CurationPipeline.e2eNear]]. */
-    def curatedNear(rates: Map[String, Double] = Sampling.DefaultRates,
-        defaultRate: Double = Sampling.DefaultRate,
-        budget: Long = 512, threshold: Double = 0.8): Dataset[PackedChunk] =
-      ds.withoutNearDups(threshold)
         .keptByRepetition()
         .keptByClassifier
         .sampledMixture(rates, defaultRate)

@@ -1224,12 +1224,6 @@ object TextAnalysis {
     id
   }
 
-  /** The base's `last_delta` stamp ∨ the highest delta on disk — what a
-    * replay-stable-id fold compares against ([[saveBm25StatsDeltaAt]]). */
-  private[graft] def textStatsHighWater(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    additiveHighWater(spark, path)
-
   /** Base + above-stamp delta stats frames, in replay order (order is
     * immaterial — the loads aggregate commutatively). */
   private def additiveParts(spark: org.apache.spark.sql.SparkSession,

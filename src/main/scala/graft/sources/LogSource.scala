@@ -85,7 +85,8 @@ object LogSource {
   /** Read a single log file as (seq, value) with `seq` = exact line number —
     * the arrival order the keyed merge correlates on. zipWithIndex is the
     * only order-guaranteed batch path for a multi-split text file (SURVEY
-    * §7.3); for directory-at-scale use the streaming `filePipeline`. */
+    * §7.3); a live, growing log goes through the streaming tail source
+    * ([[graft.sources.TailFileSourceProvider]]) instead. */
   def readText(spark: SparkSession, path: String): DataFrame = {
     checkLogFile(path)
     import spark.implicits._

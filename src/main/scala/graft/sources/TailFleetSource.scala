@@ -43,7 +43,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * file (byte offset within rotation epoch), and lines of different files
   * are causally independent — exactly the partial order the keyed merge
   * needs once query ids are namespaced per server (see
-  * `StreamingMerge.fleetPipeline`). A restart may grow/shrink the fleet:
+  * `StreamingMerge.fleetMergeWithDelivery`). A restart may grow/shrink the fleet:
   * checkpointed offsets are matched by path, a new path starts at its own
   * initial offset, a removed path's offset entry is ignored.
   *

@@ -98,10 +98,4 @@ object ClickHouseSql {
   def bootstrap(table: String): Seq[String] = Seq(
     createTable(table),
     insert(table, "seed", 0L, MetricsJdbcUpsert.staticGrid))
-
-  /** The statements one micro-batch emits — the per-batch seam twin of
-    * [[MetricsJdbcAppend.applyDelta]]. */
-  def forBatch(table: String, source: String, batchId: Long,
-      rows: Seq[(String, String, String, Long)]): Seq[String] =
-    Seq(insert(table, source, batchId, rows))
 }

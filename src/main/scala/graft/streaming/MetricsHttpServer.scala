@@ -5,16 +5,15 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The pull-based `/metrics` endpoint (SURVEY §2.1 S4; reference
   * main.go:55-68): a JDK `com.sun.net.httpserver` server on the driver
   * serving the latest Prometheus text exposition. The served body is the
-  * few-KB post-aggregation rendering from [[MetricsSink.exposition]] —
+  * few-KB rendering of the driver-side registry ([[PromRegistry.render]]) —
   * executors never serve HTTP; all input-scale work happens in the
-  * aggregation DataFrames before the driver-side collect.
+  * streaming merge before the driver-side collect.
   *
   * Lifecycle mirrors the reference: start before the pipeline attaches,
   * `stop(graceful)` drains in-flight scrapes on shutdown (main.go:130-142's
@@ -114,86 +113,28 @@ final class MetricsHttpServer(port: Int = 0, host: String = "0.0.0.0") {
   def stop(gracefulSeconds: Int = 1): Unit = server.stop(gracefulSeconds)
 }
 
-/** Wires the streaming log pipeline into [[MetricsHttpServer]]: every
-  * micro-batch re-renders the exposition over the corpus seen so far and
-  * atomically swaps the served text — the Spark-native analog of the
-  * reference's registry mutated by the tail loop and read by the scrape
-  * handler (thread boundary #3 in SURVEY §3.3).
+/** Wires the exporter's streaming pipeline into [[MetricsHttpServer]]:
+  * the keyed merge emits one observation event per reference observe site
+  * and a driver-side [[PromRegistry]] folds each micro-batch's (tiny)
+  * delta, then atomically swaps the served text — the Spark-native analog
+  * of the reference's registry mutated by the tail loop and read by the
+  * scrape handler (thread boundary #3 in SURVEY §3.3). Serving cost per
+  * batch is O(batch events); corpus size never re-enters. Line/delivery
+  * counts ride the SAME stream ([[StreamingMerge.mergeWithDelivery]]), so
+  * they commit under the same batch as the merge metrics, exactly-once
+  * together.
   */
 object MetricsServing {
 
-  /** Start serving `dir`'s log files. Each micro-batch of newly-arrived
-    * lines is accumulated (cached union — the parse cost of old batches is
-    * not repaid) and the full metric surface re-rendered. Delivery-failed
-    * lines (S3) count `errors{type="tail_line"}` and never reach the parser.
-    *
-    * NOTE this re-renders the ACCUMULATED corpus per batch — O(corpus) work
-    * per batch, unbounded over a long-running tail. It is the golden-path
-    * form whose output the batch oracle pins; long-running deployments
-    * (and [[graft.Exporter]]) use [[serveIncremental]], the O(batch)
-    * registry path spec-asserted byte-identical to this rendering.
-    *
-    * @return the streaming query; stop it, then `server.stop()`.
-    */
-  def serve(spark: SparkSession, dir: String, server: MetricsHttpServer,
-      checkpointDir: String, availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    val acc = new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-
-    val lines = spark.readStream.text(dir).as[String]
-
-    val writer = lines.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[String], batchId: Long) =>
-        val seqd = StreamingMerge.seqAssign(batch, batchId)
-
-        val merged = acc.get().map(_.unionAll(seqd)).getOrElse(seqd).cache()
-        val delivered = graft.sources.LogSource.withDelivery(merged)
-        // one pass: materializes the cache AND yields both counts; read_lines
-        // counts only delivered lines — the reference increments AFTER the
-        // tail-error `continue` (main.go:113-120)
-        val stats = delivered.agg(
-          coalesce(sum(when(col("tail_ok"), 1L).otherwise(0L)), lit(0L)),
-          coalesce(sum(when(col("tail_ok"), 0L).otherwise(1L)), lit(0L))).head()
-        acc.getAndSet(Some(merged)).foreach(_.unpersist())
-
-        val okLines = delivered.filter(col("tail_ok")).select("seq", "value")
-        server.update(MetricsSink.exposition(
-          graft.operators.LogParser.parse(okLines),
-          readLines = stats.getLong(0), tailLineErrors = stats.getLong(1)))
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
-
-  /** INCREMENTAL serving — the scale path: instead of re-aggregating the
-    * accumulated corpus per batch (like [[serve]]), the stateful merge emits
-    * one observation event per reference observe site and a driver-side
-    * [[PromRegistry]] folds each micro-batch's (tiny) delta; line/delivery
-    * counts ride the SAME stream as per-line events
-    * ([[StreamingMerge.mergeWithDelivery]]), folded batch-synchronously —
-    * no listener side channel. Serving cost per batch is O(batch events),
-    * corpus size never re-enters. Registry counters are volatile across
-    * restarts, exactly like the reference's in-process registry (the
-    * JDBC-seeded continuation lives on the overloads that take a sink:
-    * [[serveIncrementalTail]]/[[serveIncrementalFleet]] with
-    * `resumeFromJdbc` — this directory-mode overload has no warehouse to
-    * seed from). At scale the "record" outputs would additionally feed a
-    * table sink; here they are simply not collected. */
-  def serveIncremental(spark: SparkSession, dir: String, server: MetricsHttpServer,
-      checkpointDir: String, availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    val seqd = StreamingMerge.seqAssign(spark.readStream.text(dir).as[String])
-    serveIncrementalLines(spark, seqd, server, checkpointDir, availableNow)
-  }
-
-  /** [[serveIncremental]] for a true tail-follow of ONE appending file
+  /** True tail-follow of ONE appending file
     * ([[graft.sources.TailFileSourceProvider]]) — the reference's primary
     * mode, registry-served: `tail -f` → parse → keyed merge → observation
-    * fold → `GET /metrics`. With `jdbc` set, every micro-batch's metric
-    * delta ALSO lands exactly-once in the JDBC table
-    * ([[MetricsJdbcUpsert]]) off the same stream — the scrape surface and
-    * the warehouse sink share one merge, one checkpoint. */
+    * fold → `GET /metrics`. Registry counters are volatile across
+    * restarts, exactly like the reference's in-process registry, unless
+    * `resumeFromJdbc` seeds them from the warehouse. With `jdbc` set,
+    * every micro-batch's metric delta ALSO lands exactly-once in the JDBC
+    * table ([[MetricsJdbcUpsert]]) off the same stream — the scrape
+    * surface and the warehouse sink share one merge, one checkpoint. */
   def serveIncrementalTail(spark: SparkSession, path: String, server: MetricsHttpServer,
       checkpointDir: String, fromStart: Boolean = false,
       jdbc: Option[MetricsJdbcSink] = None,
@@ -210,9 +151,9 @@ object MetricsServing {
       .option("maxBytesPerTrigger", maxBytesPerTrigger.toString)
       .option("backfill", backfill.mkString(","))
       .load()
-    serveIncrementalLines(spark, lines, server, checkpointDir,
-      availableNow = availableNow, jdbc = jdbc, telemetry = telemetry,
-      resumeFromJdbc = resumeFromJdbc, trigger = trigger)
+    serveMerged(spark, StreamingMerge.mergeWithDelivery(lines, timeoutMs = 0L),
+      new PromRegistry, server, checkpointDir, availableNow, jdbc, telemetry,
+      resumeFromJdbc, trigger)
   }
 
   /** [[serveIncrementalTail]] for a FLEET of tailed server logs through ONE
@@ -309,70 +250,4 @@ object MetricsServing {
     telemetry.foreach { t => server.attachTelemetry(t); t.observeQuery(spark, query) }
     query
   }
-
-  /** Shared incremental-serving pipeline over any streaming `(seq, value)`
-    * line frame. */
-  private def serveIncrementalLines(spark: SparkSession, seqLines: DataFrame,
-      server: MetricsHttpServer, checkpointDir: String,
-      availableNow: Boolean,
-      jdbc: Option[MetricsJdbcSink] = None,
-      telemetry: Option[ExporterTelemetry] = None,
-      resumeFromJdbc: Boolean = false,
-      trigger: Option[String] = None): StreamingQuery = {
-    // ONE stream carries everything — merge metrics AND the per-line
-    // delivery events (read_line / tail_line): the former observe() +
-    // StreamingQueryListener side channel was at-most-once (a crash after
-    // the checkpoint commit but before the async progress event lost that
-    // batch's line counts; listener exceptions vanish into the listener
-    // bus), and its JDBC writes raced the batch ledger. In-stream, the
-    // delivery counts commit under the SAME foreachBatch (and, with jdbc
-    // configured, the same ledger row) as the merge metrics.
-    serveMerged(spark, StreamingMerge.mergeWithDelivery(seqLines, timeoutMs = 0L),
-      new PromRegistry, server, checkpointDir, availableNow, jdbc, telemetry,
-      resumeFromJdbc, trigger)
-  }
-
-  /** Table-sink form (BASELINE north star: metrics land in a queryable
-    * table, not just an in-process registry): every micro-batch hands the
-    * pluggable [[MetricsWriter]] the registry snapshot over the corpus so
-    * far (`MetricsSink.metricsTable` — distributed write, no driver
-    * collect). Readers see the latest snapshot; the table is the scrape
-    * surface.
-    *
-    * NOTE like [[serve]], this variant re-renders the ACCUMULATED corpus
-    * each batch — O(corpus seen so far) per batch, which is the
-    * golden-path/bounded-corpus form (its output is what the oracle checks).
-    * A long-running tail deployment should prefer [[serveIncremental]]
-    * (O(batch) registry folding, spec-asserted byte-identical rendering)
-    * with a periodic snapshot through the same writer. */
-  def serveWith(spark: SparkSession, dir: String, sink: MetricsWriter,
-      checkpointDir: String, availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    val acc = new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-
-    val writer = spark.readStream.text(dir).as[String].writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[String], batchId: Long) =>
-        val seqd = StreamingMerge.seqAssign(batch, batchId)
-
-        val merged = acc.get().map(_.unionAll(seqd)).getOrElse(seqd).cache()
-        val delivered = graft.sources.LogSource.withDelivery(merged)
-        val stats = delivered.agg(
-          coalesce(sum(when(col("tail_ok"), 1L).otherwise(0L)), lit(0L)),
-          coalesce(sum(when(col("tail_ok"), 0L).otherwise(1L)), lit(0L))).head()
-        acc.getAndSet(Some(merged)).foreach(_.unpersist())
-
-        val okLines = delivered.filter(col("tail_ok")).select("seq", "value")
-        sink.write(MetricsSink.metricsTable(
-          graft.operators.LogParser.parse(okLines),
-          readLines = stats.getLong(0), tailLineErrors = stats.getLong(1)), batchId)
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
-
-  /** [[serveWith]] through a [[ParquetMetricsWriter]]. */
-  def serveToTable(spark: SparkSession, dir: String, outPath: String,
-      checkpointDir: String, availableNow: Boolean = false): StreamingQuery =
-    serveWith(spark, dir, new ParquetMetricsWriter(outPath), checkpointDir, availableNow)
 }

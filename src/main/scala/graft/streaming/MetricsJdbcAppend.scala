@@ -3,11 +3,6 @@ package graft.streaming
 import java.sql.Connection
 import java.util.Properties
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-import graft.streaming.StreamingMerge.MergeOut
-
 /** The APPEND-ONLY metric sink dialect — the executable form of the
   * ClickHouse mapping [[MetricsJdbcUpsert]]'s scaladoc describes: instead
   * of folding each micro-batch's delta into a keyed table with `UPDATE`
@@ -213,29 +208,5 @@ object MetricsJdbcAppend {
         deleted - summed.size - markers.size
       } catch { case e: Throwable => conn.rollback(); throw e }
     } finally conn.close()
-  }
-
-  /** The `foreachBatch` function — same contract as
-    * [[MetricsJdbcUpsert.writer]], append dialect. */
-  def writer(t: Target, source: String): (Dataset[MergeOut], Long) => Unit = { (batch, batchId) =>
-    val delta = MetricsJdbcUpsert.deltaRows(batch).collect().toSeq.map(r =>
-      (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-    applyDelta(t, source, batchId, delta)
-    ()
-  }
-
-  /** End-to-end serving into the append dialect — the ClickHouse-shaped
-    * twin of [[MetricsJdbcUpsert.serveJdbc]]: same stream, same delta,
-    * append-only landing, read through `<table>_folded`. */
-  def serveJdbc(spark: SparkSession, dir: String, t: Target,
-      checkpointDir: String, availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    ensureTables(t)
-    val seqd = StreamingMerge.seqAssign(spark.readStream.text(dir).as[String])
-    val outs = StreamingMerge.mergeWithDelivery(seqd, timeoutMs = 0L)
-    val w = outs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(writer(t, MetricsJdbcUpsert.ledgerSource(checkpointDir)))
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 }

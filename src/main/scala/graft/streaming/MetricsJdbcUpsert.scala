@@ -3,17 +3,15 @@ package graft.streaming
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 import graft.operators.PromMetrics
 import graft.streaming.StreamingMerge.MergeOut
 
-/** EXACTLY-ONCE JDBC metric sink — the upsert-form completion of the
-  * BASELINE "Structured Streaming + ClickHouse sink" shape (the snapshot
-  * [[JdbcMetricsWriter]] re-creates the whole table per batch; this one
-  * keeps a stable table and ADDS each micro-batch's registry delta).
+/** EXACTLY-ONCE JDBC metric sink — the upsert form of the BASELINE
+  * "Structured Streaming + ClickHouse sink" shape: a stable table to which
+  * each micro-batch ADDS its registry delta.
   *
   * The pipeline is `streaming merge → per-batch metric delta → transactional
   * upsert`: [[deltaRows]] turns one micro-batch of the stateful merge's
@@ -302,15 +300,6 @@ object MetricsJdbcUpsert {
     deltaRows(batch).collect().toSeq.map(r =>
       (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
 
-  /** The `foreachBatch` function: [[writeDelta]] curried for
-    * `foreachBatch`. `source` must be unique per streaming query writing to
-    * `t` (use [[ledgerSource]] of the query's checkpoint dir); the default
-    * fits the one-query-per-table deployments the specs drive. */
-  def writer(t: Target, source: String = "merge"): (Dataset[MergeOut], Long) => Unit = { (batch, batchId) =>
-    writeDelta(t, source, batch, batchId)
-    ()
-  }
-
   /** The table's current cumulative rows — the registry-resume seed
     * ([[PromRegistry.seedFrom]]). KB-scale by the same label-cardinality
     * argument as the scrape exposition; read once at query start. */
@@ -331,22 +320,5 @@ object MetricsJdbcUpsert {
         buf += ((rs.getString(1), rs.getString(2), rs.getString(3), rs.getLong(4)))
       buf.toSeq
     } finally conn.close()
-  }
-
-  /** End-to-end serving into JDBC: tail `dir`'s log lines, run the keyed
-    * stateful merge WITH the per-line delivery events union'd in
-    * ([[StreamingMerge.mergeWithDelivery]]), land every micro-batch's
-    * whole metric delta — merge metrics AND `read_lines`/`tail_line`
-    * counts — under one ledger row, exactly-once together. */
-  def serveJdbc(spark: SparkSession, dir: String, t: Target,
-      checkpointDir: String, availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    ensureTables(t)
-    val seqd = StreamingMerge.seqAssign(spark.readStream.text(dir).as[String])
-    val outs = StreamingMerge.mergeWithDelivery(seqd, timeoutMs = 0L)
-    val w = outs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(writer(t, ledgerSource(checkpointDir)))
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 }

@@ -12,10 +12,9 @@ import graft.operators.{PromMetrics, QueryMerge}
   * the Prometheus text exposition format (counters as monotonic totals,
   * histograms as cumulative `{le}` series + `_sum` + `_count`).
   *
-  * Batch: call [[exposition]] on a parsed-event frame. Streaming: call it
-  * inside `writeStream.foreachBatch` on each micro-batch's accumulated
-  * state (or on the batch view of the completed-record table) and serve the
-  * string from any HTTP endpoint — the driver-side exposition is a few KB
+  * [[exposition]] renders a parsed-event frame in one batch pass; it is
+  * the reference rendering the exporter's incremental [[PromRegistry]]
+  * reproduces byte-for-byte. The driver-side exposition is a few KB
   * regardless of input scale because every aggregation reduces before
   * collect.
   */

@@ -71,9 +71,6 @@ final class PromRegistry extends MergeRegistry {
   private val bpsHist = new Hist(PromMetrics.BpsBuckets)
   private var rowsSum, bytesSum, rpsSum, bpsSum, statsN = 0L
 
-  def addReadLines(n: Long): Unit = synchronized { readLines += n }
-  def addTailLineErrors(n: Long): Unit = synchronized { tailLineErrors += n }
-
   /** Fold one merge emission (counter or observation) into the registry. */
   def observe(o: MergeOut): Unit = synchronized {
     o.out match {

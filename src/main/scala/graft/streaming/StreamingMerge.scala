@@ -29,25 +29,11 @@ import graft.model.{ChQuery, LogEvent}
   * `RocksDBStateStoreProvider`, the store that holds at 100x where the
   * HDFS-backed in-memory default falls over), one in-flight record per id;
   * per-batch per-key work is O(lines of that query). Checkpointing gives
-  * exactly-once the reference never had. Eviction timeouts come in both
-  * flavors: wall-clock (`ProcessingTimeTimeout`, default) and
-  * watermark-driven (`eventTimeTimeout = true` — deterministic on replay).
+  * exactly-once the reference never had. The eviction timeout is
+  * wall-clock (`ProcessingTimeTimeout`); `timeoutMs <= 0` disables it, as
+  * both exporter call sites do.
   */
 object StreamingMerge {
-
-  /** Rename the [[graft.operators.LogParser]] output columns to
-    * [[LogEvent]] encoder names. */
-  def toLogEvents(parsed: DataFrame): Dataset[LogEvent] = {
-    import parsed.sparkSession.implicits._
-    parsed.select(
-      col("seq"), col("kind"), col("id"), col("pid"), col("ts"),
-      col("host"), col("port"),
-      col("query_text").as("queryText"), col("stmt_type").as("stmtType"),
-      col("rows_read").as("rowsRead"), col("bytes_read").as("bytesRead"),
-      col("rps"), col("speed"), col("memory"),
-      col("error_code").as("errorCode"), col("error_message").as("errorMessage"),
-      col("cv_ok").as("cvOk")).as[LogEvent]
-  }
 
   private def insertRecord(e: LogEvent): ChQuery =
     ChQuery(
@@ -91,13 +77,11 @@ object StreamingMerge {
     * counter increments at exactly the reference's observe sites.
     * Package-visible for direct testing via `TestGroupState`. */
   private[graft] def transitionFull(events: Iterator[LogEvent], state: GroupState[ChQuery],
-      timeoutMs: Long, eventTimeTimeout: Boolean = false): Iterator[MergeOut] = {
+      timeoutMs: Long): Iterator[MergeOut] = {
     val out = scala.collection.mutable.ListBuffer.empty[MergeOut]
     def counter(t: String): Unit = out += MergeOut("counter", None, Some(t))
     var cur: Option[ChQuery] = state.getOption
-    var maxTsMs = Long.MinValue
     events.toSeq.sortBy(_.seq).foreach { e =>
-      e.ts.foreach(t => maxTsMs = math.max(maxTsMs, t.getTime))
       e.kind match {
         // pre-aggregated per-partition delivery counts (synthetic
         // CountIdPrefix-keyed events from the single-scan fold) — stateless
@@ -155,29 +139,20 @@ object StreamingMerge {
     cur match {
       case Some(rec) =>
         state.update(rec)
-        if (timeoutMs > 0) {
-          if (eventTimeTimeout) {
-            // watermark-driven eviction: the record expires `timeoutMs` of
-            // EVENT time after its last line (fall back to the watermark
-            // itself when the batch carried no timestamps — late stats-only
-            // batches — so the deadline always sits above the watermark)
-            val base = math.max(maxTsMs, state.getCurrentWatermarkMs())
-            state.setTimeoutTimestamp(base + timeoutMs)
-          } else state.setTimeoutDuration(timeoutMs)
-        }
+        if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
       case None => if (state.exists) state.remove()
     }
     out.iterator
   }
 
-  /** [[mergeWithMetrics]] plus per-line DELIVERY accounting in the same
-    * output stream: `MergeOut("read_line", n = …)` per delivered-line
-    * count, `MergeOut("tail_line", n = …)` per delivery-failure count
-    * (the S3 side channel). Every counter the serving layer needs rides
-    * ONE stream, so a `foreachBatch` sink commits delivery counts and
-    * merge metrics under the SAME batch — exactly-once together — where
-    * the former `observe()` + StreamingQueryListener side channel was
-    * at-most-once.
+  /** The exporter's single-file merge: per-line DELIVERY accounting and
+    * the keyed merge in ONE output stream — `MergeOut("read_line", n = …)`
+    * per delivered-line count, `MergeOut("tail_line", n = …)` per
+    * delivery-failure count (the S3 side channel), and every record,
+    * counter and observation of [[transitionFull]]. Every counter the
+    * serving layer needs rides one stream, so a `foreachBatch` sink
+    * commits delivery counts and merge metrics under the SAME batch —
+    * exactly-once together.
     *
     * SINGLE SCAN: the source range is read exactly once per micro-batch.
     * [[graft.operators.LogParser.parseKeepAll]] keeps non-matching and
@@ -185,14 +160,10 @@ object StreamingMerge {
     * them map-side (per partition, BEFORE the shuffle — kind-null rows
     * never shuffle) and appends one synthetic `read_count`/`tail_count`
     * event per partition, which the state function passes through as the
-    * pre-aggregated `n`-valued delivery emissions. The former shape was a
-    * two-branch union that re-read the tail range per branch. */
+    * pre-aggregated `n`-valued delivery emissions. */
   def mergeWithDelivery(seqLines: DataFrame,
-      timeoutMs: Long = 30 * 60 * 1000L): Dataset[MergeOut] = {
-    val delivered = graft.sources.LogSource.withDelivery(seqLines)
-    val parsedAll = graft.operators.LogParser.parseKeepAll(delivered)
-    mergeWithMetrics(deliveredEvents(parsedAll, fleet = false), timeoutMs)
-  }
+      timeoutMs: Long = 30 * 60 * 1000L): Dataset[MergeOut] =
+    keyedMerge(deliveredEvents(seqLines, fleet = false), timeoutMs)((_, outs) => outs)
 
   /** Id prefix (U+0001 sentinel) of the synthetic per-partition
     * delivery-count events. Even a pathological real query id of the same
@@ -201,15 +172,18 @@ object StreamingMerge {
     * stateless passthrough), so both lifecycles proceed unaffected. */
   private val CountIdPrefix = "\u0001c:"
 
-  /** Typed events from a [[graft.operators.LogParser.parseKeepAll]] frame,
-    * with per-partition delivery counts folded in-band: passes real events
-    * through lazily, counts delivered/failed lines map-side, and emits one
-    * trailing `read_count`/`tail_count` synthetic event per partition
-    * (per server on the fleet path — `fleet = true` expects a `src`
-    * column, namespaces every id `src + FleetSep + id`, and keys the count
+  /** Typed events from a `(seq, value)` line frame (plus `src` on the
+    * fleet path), with per-partition delivery counts folded in-band:
+    * delivery check and [[graft.operators.LogParser.parseKeepAll]], then
+    * real events pass through lazily, delivered/failed lines are counted
+    * map-side, and one trailing `read_count`/`tail_count` synthetic event
+    * is emitted per partition (per server on the fleet path — `fleet =
+    * true` namespaces every id `src + FleetSep + id` and keys the count
     * events per (partition, src)). */
-  private[graft] def deliveredEvents(parsedAll: DataFrame, fleet: Boolean): Dataset[LogEvent] = {
-    import parsedAll.sparkSession.implicits._
+  private[graft] def deliveredEvents(lines: DataFrame, fleet: Boolean): Dataset[LogEvent] = {
+    import lines.sparkSession.implicits._
+    val parsedAll = graft.operators.LogParser.parseKeepAll(
+      graft.sources.LogSource.withDelivery(lines))
     val srcCol = if (fleet) col("src") else lit("")
     val idCol =
       if (fleet) concat_ws(FleetSep, col("src"), col("id"))
@@ -248,166 +222,27 @@ object StreamingMerge {
     }
   }
 
-  /** Record-only view of [[transitionFull]] (compat + simple pipelines). */
-  private[graft] def transition(events: Iterator[LogEvent], state: GroupState[ChQuery],
-      timeoutMs: Long): Iterator[ChQuery] =
-    transitionFull(events, state, timeoutMs).flatMap(_.record)
+  /** One state-function call for one key: a timed-out key flushes its
+    * stuck record (insert/error-only/abandoned — the leak fix, emitted
+    * with `fullInfo = false` so no data is lost); any other key replays
+    * its events through [[transitionFull]]. */
+  private[graft] def advance(events: Iterator[LogEvent], state: GroupState[ChQuery],
+      timeoutMs: Long): Iterator[MergeOut] =
+    if (state.hasTimedOut) {
+      val rec = state.get
+      state.remove()
+      Iterator.single(MergeOut("record", Some(rec), None))
+    } else transitionFull(events, state, timeoutMs)
 
-  /** The full streaming merge: completed records (plus timeout-flushed
-    * partials) AND error-counter increments, in append mode. Downstream:
-    * `.filter(_.out == "record")` for the record sink,
-    * `.filter(_.out == "counter").groupBy("counterType").count()` (or a
-    * foreachBatch accumulation) for the `chlogexporter_errors` surface. */
-  def mergeWithMetrics(events: Dataset[LogEvent],
-      timeoutMs: Long = 30 * 60 * 1000L,
-      eventTimeTimeout: Boolean = false,
-      watermarkDelay: String = "10 minutes"): Dataset[MergeOut] = {
+  /** The one keyed merge both exporter forms run: events shuffle to their
+    * id's state partition and [[advance]] runs per key; `emit` sees the
+    * state key with each call's emissions (the fleet form tags them with
+    * their server). `timeoutMs <= 0` disables the leak-fix eviction timer:
+    * under `Trigger.AvailableNow` an armed processing-time timeout keeps
+    * scheduling no-data batches and the drain never ends. */
+  private def keyedMerge(events: Dataset[LogEvent], timeoutMs: Long)(
+      emit: (String, Iterator[MergeOut]) => Iterator[MergeOut]): Dataset[MergeOut] = {
     import events.sparkSession.implicits._
-    // timeoutMs <= 0 disables the leak-fix eviction timer — required when a
-    // downstream stateful operator (e.g. a watermarked window agg) runs in
-    // the same AvailableNow job, where armed processing-time timeouts keep
-    // scheduling batches and the trigger never drains.
-    // eventTimeTimeout = the J5 watermark-driven alternative (SURVEY §2.4):
-    // stuck records expire `timeoutMs` of EVENT time after their last line,
-    // once the watermark (bounded by `watermarkDelay` of lateness) passes
-    // the deadline — deterministic on replay, unlike wall-clock timeouts,
-    // and it drains fine under AvailableNow (fires only on watermark
-    // movement, which needs data).
-    val timeoutConf =
-      if (timeoutMs <= 0) GroupStateTimeout.NoTimeout
-      else if (eventTimeTimeout) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    val src =
-      if (timeoutMs > 0 && eventTimeTimeout) events.withWatermark("ts", watermarkDelay)
-      else events
-    src
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: String, es: Iterator[LogEvent], state: GroupState[ChQuery]) =>
-          if (state.hasTimedOut) {
-            // leak fix: flush the stuck record (insert/error-only/abandoned)
-            val rec = state.get
-            state.remove()
-            Iterator.single(MergeOut("record", Some(rec), None))
-          } else transitionFull(es, state, timeoutMs, eventTimeTimeout)
-      }
-  }
-
-  /** Record-only streaming merge. */
-  def merge(events: Dataset[LogEvent], timeoutMs: Long = 30 * 60 * 1000L): Dataset[ChQuery] = {
-    import events.sparkSession.implicits._
-    mergeWithMetrics(events, timeoutMs).flatMap(_.record)
-  }
-
-  /** Watermarked event-time windowed aggregation over the completed-record
-    * stream: per-minute query counts by statement type, late data bounded
-    * by the watermark (SURVEY §2.7 — the windowed-agg surface the reference
-    * approximates with its wall-clock counters). Append mode: a window
-    * finalizes once the watermark passes its end. */
-  def windowedQueryCounts(records: Dataset[ChQuery],
-      watermark: String = "10 minutes", windowLen: String = "1 minute"): DataFrame = {
-    records
-      .withColumn("start_ts", col("startTime"))
-      .withWatermark("start_ts", watermark)
-      .groupBy(window(col("start_ts"), windowLen), col("stmtType"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"), col("stmtType").as("stmt_type"), col("cnt"))
-  }
-
-  /** Arrival-order `seq` for a streaming line Dataset: `batchId` (20 bits)
-    * | partition id (20 bits) | line index within the partition (24 bits).
-    * Text-source partitions preserve file order, so same-file lines (the
-    * only ones whose relative order the correlation depends on) keep their
-    * arrival order; the 20-bit partition field holds a million partitions
-    * per batch (the old 8-bit packing collided past 256 partitions).
-    * (`monotonically_increasing_id` is not allowed in streaming plans.) */
-  def seqAssign(lines: Dataset[String], batchId: Long = 0L): DataFrame = {
-    import lines.sparkSession.implicits._
-    lines.mapPartitions { it =>
-      val base = (batchId << 44) |
-        (org.apache.spark.TaskContext.getPartitionId().toLong << 24)
-      it.zipWithIndex.map { case (v, i) => (base | i.toLong, v) }
-    }.toDF("seq", "value")
-  }
-
-  /** Full streaming pipeline from a directory of log files (the rotation
-    * story: each rotated file is a new file in the directory — a better fit
-    * than the reference's tail-and-reopen). Cross-batch seq reuse is fine
-    * here: the state function orders events within one micro-batch only. */
-  def filePipeline(spark: org.apache.spark.sql.SparkSession, dir: String,
-      timeoutMs: Long = 30 * 60 * 1000L): Dataset[ChQuery] = {
-    import spark.implicits._
-    val lines = seqAssign(spark.readStream.text(dir).as[String])
-    merge(toLogEvents(graft.operators.LogParser.parse(lines)), timeoutMs)
-  }
-
-  /** The reference's primary mode end-to-end: tail-follow ONE appending log
-    * file ([[graft.sources.TailFileSourceProvider]], seek-to-EOF default /
-    * `fromStart` = `--from-start`) → parse → keyed merge — the exact
-    * main.go:100-129 loop, with `seq` = line start byte offset. */
-  def tailPipeline(spark: org.apache.spark.sql.SparkSession, path: String,
-      fromStart: Boolean = false, timeoutMs: Long = 30 * 60 * 1000L,
-      maxBytesPerTrigger: Long = 0L): Dataset[ChQuery] = {
-    val lines = spark.readStream
-      .format(classOf[graft.sources.TailFileSourceProvider].getName)
-      .option("path", path)
-      .option("fromStart", fromStart.toString)
-      .option("maxBytesPerTrigger", maxBytesPerTrigger.toString)
-      .load()
-    merge(toLogEvents(graft.operators.LogParser.parse(lines)), timeoutMs)
-  }
-
-  /** Server-id separator inside the fleet merge's composite state key:
-    * U+0000 cannot appear in a ClickHouse query id. */
-  private val FleetSep = "\u0000"
-
-  /** The CLUSTER deployment of the reference's loop: tail a FLEET of server
-    * logs ([[graft.sources.TailFleetSourceProvider]], one per ClickHouse
-    * server) through ONE keyed merge. Query ids are only unique per server,
-    * so the merge keys state on the composite `(src, id)` — two servers
-    * reusing the same id stay independent lifecycles — and completed
-    * records come back with a `server` column (the source path) alongside
-    * the original id.
-    *
-    * Scale shape: one cheap single-partition scan per progressing file,
-    * then the shuffle into the id-partitioned `flatMapGroupsWithState` is
-    * where parallelism happens — state spreads over
-    * `spark.sql.shuffle.partitions` regardless of fleet size, and adding
-    * servers adds scan tasks, never widens any single tail. */
-  def fleetPipeline(spark: org.apache.spark.sql.SparkSession, paths: Seq[String],
-      fromStart: Boolean = false, timeoutMs: Long = 30 * 60 * 1000L,
-      maxBytesPerTrigger: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat_ws, substring_index}
-    val lines = spark.readStream
-      .format(classOf[graft.sources.TailFleetSourceProvider].getName)
-      .option("paths", paths.mkString(","))
-      .option("fromStart", fromStart.toString)
-      .option("maxBytesPerTrigger", maxBytesPerTrigger.toString)
-      .load()
-    // `src` passes through the parser untouched, then folds into the state
-    // key; the merge itself is byte-for-byte the single-file one
-    val parsed = graft.operators.LogParser.parse(lines)
-      .withColumn("id", concat_ws(FleetSep, col("src"), col("id")))
-      .drop("src")
-    merge(toLogEvents(parsed), timeoutMs).toDF()
-      .withColumn("server", substring_index(col("id"), FleetSep, 1))
-      .withColumn("id", substring_index(col("id"), FleetSep, -1))
-  }
-
-  /** [[mergeWithDelivery]] over a FLEET line frame (`src, seq, value` from
-    * [[graft.sources.TailFleetSourceProvider]]): the same single-scan
-    * delivery fold and keyed merge, with state keyed on the composite
-    * `(src, id)` (query ids are only unique per server) and EVERY emission
-    * tagged `server = src` — completed records, error counters, metric
-    * observations, and the per-partition delivery counts alike. This is
-    * what gives the fleet exporter per-server metric series
-    * ([[FleetPromRegistry]]) and per-server JDBC label rows off one merge. */
-  def fleetMergeWithDelivery(fleetLines: DataFrame,
-      timeoutMs: Long = 30 * 60 * 1000L): Dataset[MergeOut] = {
-    import fleetLines.sparkSession.implicits._
-    val delivered = graft.sources.LogSource.withDelivery(fleetLines)
-    val parsedAll = graft.operators.LogParser.parseKeepAll(delivered)
-    val events = deliveredEvents(parsedAll, fleet = true)
     val timeoutConf =
       if (timeoutMs <= 0) GroupStateTimeout.NoTimeout
       else GroupStateTimeout.ProcessingTimeTimeout
@@ -415,18 +250,37 @@ object StreamingMerge {
       .groupByKey(_.id)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
         (key: String, es: Iterator[LogEvent], state: GroupState[ChQuery]) =>
-          val sep = key.indexOf(FleetSep)
-          val server = if (sep >= 0) key.substring(0, sep) else ""
-          val base =
-            if (state.hasTimedOut) {
-              val rec = state.get
-              state.remove()
-              Iterator.single(MergeOut("record", Some(rec), None))
-            } else transitionFull(es, state, timeoutMs)
-          // un-namespace the record id; the server rides its own field
-          base.map(o => o.copy(server = Some(server),
-            record = o.record.map(r =>
-              if (sep >= 0) r.copy(id = r.id.substring(sep + 1)) else r)))
+          emit(key, advance(es, state, timeoutMs))
       }
   }
+
+  /** Server-id separator inside the fleet merge's composite state key:
+    * U+0000 cannot appear in a ClickHouse query id. */
+  private val FleetSep = "\u0000"
+
+  /** [[mergeWithDelivery]] over a FLEET line frame (`src, seq, value` from
+    * [[graft.sources.TailFleetSourceProvider]], one member per ClickHouse
+    * server): the same single-scan delivery fold and keyed merge, with
+    * state keyed on the composite `(src, id)` — query ids are only unique
+    * per server, so two servers reusing the same id stay independent
+    * lifecycles — and EVERY emission tagged `server = src`: completed
+    * records (id un-namespaced), error counters, metric observations, and
+    * the per-partition delivery counts alike. This is what gives the fleet
+    * exporter per-server metric series ([[FleetPromRegistry]]) and
+    * per-server JDBC label rows off one merge.
+    *
+    * Scale shape: one cheap single-partition scan per progressing file,
+    * then the shuffle into the id-partitioned state is where parallelism
+    * happens — state spreads over `spark.sql.shuffle.partitions`
+    * regardless of fleet size. */
+  def fleetMergeWithDelivery(fleetLines: DataFrame,
+      timeoutMs: Long = 30 * 60 * 1000L): Dataset[MergeOut] =
+    keyedMerge(deliveredEvents(fleetLines, fleet = true), timeoutMs) { (key, outs) =>
+      val sep = key.indexOf(FleetSep)
+      val server = if (sep >= 0) key.substring(0, sep) else ""
+      // un-namespace the record id; the server rides its own field
+      outs.map(o => o.copy(server = Some(server),
+        record = o.record.map(r =>
+          if (sep >= 0) r.copy(id = r.id.substring(sep + 1)) else r)))
+    }
 }

@@ -44,14 +44,8 @@ object StreamingSimilarity {
     * [[StreamingDedup.firstOccurrences]]'s vector twin, the upstream pass
     * the novelty gates' contract asks for (in-stream duplicates are not
     * matched against each other; this collapses them before the gate).
-    * Streaming semantics are arrival-order; on a BATCH frame Spark keeps
-    * an arbitrary row — batch callers wanting a deterministic winner use
-    * [[firstVectorOccurrencesById]]. */
-  def firstVectorOccurrences(vecs: DataFrame): DataFrame =
-    withVecFp(vecs).dropDuplicates("vfp")
-
-  /** Deterministic batch form: the MIN-vec_id row wins per distinct
-    * quantized vector — what a replayed foreachBatch body needs (an
+    * Deterministic: the MIN-vec_id row wins per distinct quantized
+    * vector — what a replayed foreachBatch body needs (an
     * arbitrary-winner collapse would stage a different vec_id on replay
     * and break byte-idempotent re-staging). One keyed window, never
     * partitionless. */

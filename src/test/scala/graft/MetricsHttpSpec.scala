@@ -9,7 +9,9 @@ import scala.io.Source
 import graft.streaming.{MetricsHttpServer, MetricsServing, MetricsSink}
 
 /** S4: the pull-based `/metrics` endpoint (reference main.go:55-68) — start
-  * the streaming pipeline, scrape over real HTTP, golden-match the text. */
+  * the exporter's serving path ([[MetricsServing.serveIncrementalTail]]),
+  * scrape over real HTTP, golden-match the text against the batch
+  * exposition over the same lines. */
 class MetricsHttpSpec extends SparkSpec {
 
   private def get(url: String): (Int, String) = {
@@ -102,17 +104,23 @@ class MetricsHttpSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
-  test("pipeline serves the Prometheus exposition over HTTP; graceful shutdown") {
-    val logDir = Files.createTempDirectory("graft-http-logs")
+  /** Drain `log` through the exporter's single-file serving path into
+    * `server` (AvailableNow, from the start of the file). */
+  private def serveDrained(log: java.nio.file.Path, server: MetricsHttpServer): Unit = {
     val ckpt = Files.createTempDirectory("graft-http-ckpt")
-    Files.write(logDir.resolve("server.log.1"),
-      corpus.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val q = MetricsServing.serveIncrementalTail(spark, log.toString, server,
+      ckpt.toString, fromStart = true, availableNow = true)
+    try assert(q.awaitTermination(60000), "the drain must terminate on its own")
+    finally q.stop()
+  }
+
+  test("pipeline serves the Prometheus exposition over HTTP; graceful shutdown") {
+    val log = Files.createTempFile("graft-http", ".log")
+    Files.write(log, corpus.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
 
     val server = new MetricsHttpServer(0).start()
     try {
-      val q = MetricsServing.serve(spark, logDir.toString, server,
-        ckpt.toString, availableNow = true)
-      q.awaitTermination(120000)
+      serveDrained(log, server)
 
       val (code, body) = get(s"http://127.0.0.1:${server.boundPort}/metrics")
       assert(code == 200)
@@ -143,8 +151,6 @@ class MetricsHttpSpec extends SparkSpec {
   }
 
   test("incremental registry serves byte-identical exposition to the batch path") {
-    val logDir = Files.createTempDirectory("graft-inc-logs")
-    val ckpt = Files.createTempDirectory("graft-inc-ckpt")
     // corpus with an insert lifecycle (time_obs without completion) and a
     // corrupt line (tail_line path) on top of the base corpus
     val extra = Seq(
@@ -153,14 +159,12 @@ class MetricsHttpSpec extends SparkSpec {
       "2024.03.01 12:01:03.500000 [ 9 ] {ins1} <Debug> MemoryTracker: Peak memory usage (for query): 2 MiB.")
     val corrupt = "broken � delivery"
     val all = corpus ++ extra :+ corrupt
-    Files.write(logDir.resolve("server.log"),
-      all.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val log = Files.createTempFile("graft-inc", ".log")
+    Files.write(log, all.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
 
     val server = new MetricsHttpServer(0).start()
     try {
-      val q = MetricsServing.serveIncremental(spark, logDir.toString, server,
-        ckpt.toString, availableNow = true)
-      q.awaitTermination(120000)
+      serveDrained(log, server)
 
       // golden: batch exposition over the delivered (non-corrupt) lines
       import spark.implicits._
@@ -172,13 +176,9 @@ class MetricsHttpSpec extends SparkSpec {
       val golden = MetricsSink.exposition(parsed,
         readLines = (corpus ++ extra).size.toLong, tailLineErrors = 1L)
 
-      // listener delivery counts land asynchronously — poll to equality
-      val deadline = System.nanoTime() + 60000L * 1000000L
-      var body = get(s"http://127.0.0.1:${server.boundPort}/metrics")._2
-      while (body != golden && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        body = get(s"http://127.0.0.1:${server.boundPort}/metrics")._2
-      }
+      // delivery counts ride the merge's own stream: the drained query has
+      // already folded them, no polling
+      val body = get(s"http://127.0.0.1:${server.boundPort}/metrics")._2
       assert(body == golden, {
         val bs = body.linesIterator.toSeq; val gs = golden.linesIterator.toSeq
         val diff = bs.zipAll(gs, "<missing>", "<missing>").filter(p => p._1 != p._2).take(5)
@@ -190,68 +190,5 @@ class MetricsHttpSpec extends SparkSpec {
       assert(body.contains("""chlogexporter_errors{type="tail_line"} 1"""))
       assert(body.contains("chlogexporter_read_lines 7"), "delivered lines only")
     } finally server.stop(0)
-  }
-
-  test("table sink: the registry lands as a queryable parquet table") {
-    val logDir = Files.createTempDirectory("graft-tbl-logs")
-    val ckpt = Files.createTempDirectory("graft-tbl-ckpt")
-    val out = Files.createTempDirectory("graft-tbl-out").resolve("metrics")
-    Files.write(logDir.resolve("server.log"),
-      corpus.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-
-    val q = MetricsServing.serveToTable(spark, logDir.toString, out.toString,
-      ckpt.toString, availableNow = true)
-    q.awaitTermination(120000)
-
-    val t = spark.read.parquet(out.toString)
-    assert(t.columns.toSeq == Seq("metric", "labels", "le", "value"))
-    def one(metric: String, labels: String): Double =
-      t.filter(org.apache.spark.sql.functions.col("metric") === metric &&
-        org.apache.spark.sql.functions.col("labels") === labels)
-        .select("value").collect() match {
-        case Array(r) => r.getDouble(0)
-        case other => fail(s"$metric{$labels}: ${other.length} rows")
-      }
-    assert(one("chlogexporter_read_lines", "") == 4.0)
-    assert(one("clickhouse_query_count", "type=select") == 1.0)
-    assert(one("chlogexporter_errors", "type=not_found_query") == 1.0)
-    assert(one("clickhouse_select_query_rows_read_count", "") == 1.0)
-    // cumulative bucket at le=5 for the 2.5s query
-    assert(t.filter("metric = 'clickhouse_query_time_bucket' and labels = 'type=select' and le = 5.0")
-      .select("value").head().getDouble(0) == 1.0)
-  }
-
-  test("a rotated-in file updates the served exposition while running") {
-    val logDir = Files.createTempDirectory("graft-http-logs2")
-    val ckpt = Files.createTempDirectory("graft-http-ckpt2")
-    Files.write(logDir.resolve("a.log"),
-      (corpus.head + "\n").getBytes(StandardCharsets.UTF_8))
-
-    def poll(pred: String => Boolean, timeoutMs: Long): String = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      var body = get(s"http://127.0.0.1:${server.boundPort}/metrics")._2
-      while (!pred(body) && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        body = get(s"http://127.0.0.1:${server.boundPort}/metrics")._2
-      }
-      body
-    }
-
-    lazy val server = new MetricsHttpServer(0).start()
-    val q = MetricsServing.serve(spark, logDir.toString, server, ckpt.toString)
-    try {
-      val body1 = poll(_.contains("chlogexporter_read_lines 1"), 120000)
-      assert(body1.contains("chlogexporter_read_lines 1"))
-
-      // rotation story: a new file appears in the directory mid-run
-      Files.write(logDir.resolve("b.log"),
-        corpus.tail.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-      val body2 = poll(_.contains("chlogexporter_read_lines 4"), 120000)
-      assert(body2.contains("chlogexporter_read_lines 4"))
-      assert(body2.contains("""clickhouse_query_count{stmt_type="select"} 1"""))
-    } finally {
-      q.stop()
-      server.stop(0)
-    }
   }
 }

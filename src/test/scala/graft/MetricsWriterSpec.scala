@@ -2,67 +2,40 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import graft.streaming.MetricsSink
 
-import graft.operators.LogParser
-import graft.streaming.{JdbcMetricsWriter, MetricsSink, ParquetMetricsWriter}
-
-/** The pluggable registry sink (BASELINE "ClickHouse sink" north star):
-  * the same registry snapshot written through the parquet writer and the
-  * JDBC writer (against a REAL embedded Derby database — the ClickHouse
-  * JDBC shape without network) must read back identically. */
+/** The exporter's JDBC metric sinks (`--jdbc`, BASELINE "ClickHouse sink"
+  * north star) against REAL embedded databases ([[JdbcBackends]] — the
+  * ClickHouse JDBC shape without network): exactly-once deltas across a
+  * checkpointed restart, the append dialect's folded read, compaction, and
+  * the ledger upgrade path. */
 class MetricsWriterSpec extends SparkSpec {
   import spark.implicits._
-
-  private def registry(): DataFrame = {
-    val dt = "2024.03.01 12:00:01.000000"
-    val lines = Seq(
-      (0L, s"$dt [ 7 ] {w1} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 1"),
-      (1L, s"$dt [ 7 ] {w1} <Information> executeQuery: Read 500 rows, 2 KiB in 0.100 sec., 5000 rows/sec., 20 KiB/sec."),
-      (2L, s"$dt [ 7 ] {w1} <Error> executeQuery: Code: 60, e.displayText() = DB::Exception: boom"),
-      (3L, s"2024.03.01 12:00:03.500000 [ 7 ] {w1} <Debug> MemoryTracker: Peak memory usage (for query): 3 MiB."))
-    MetricsSink.metricsTable(LogParser.parse(lines.toDF("seq", "value")), readLines = 4L)
-  }
 
   private def key(r: org.apache.spark.sql.Row): (String, String, Option[Double], Double) =
     (r.getAs[String]("metric"), r.getAs[String]("labels"),
       Option(r.getAs[java.lang.Double]("le")).map(_.doubleValue()), r.getAs[Double]("value"))
 
-  test("parquet and JDBC writers land the same registry rows; JDBC survives a snapshot overwrite") {
-    val reg = registry().cache()
-    val direct = reg.collect().map(key).toSet
-    assert(direct.nonEmpty && direct.exists(_._1 == "clickhouse_query_time_bucket"))
-
-    val pqPath = Files.createTempDirectory("graft_reg_pq").toString + "/reg"
-    new ParquetMetricsWriter(pqPath).write(reg, batchId = 0L)
-    val fromParquet = spark.read.parquet(pqPath).collect().map(key).toSet
-
-    // Derby has no non-finite DOUBLE -> the +Inf bucket needs the sentinel
-    // (ClickHouse/Postgres targets pass Inf through, default)
-    val inf = Double.MaxValue
-    val url = "jdbc:derby:memory:graftreg;create=true"
-    val jdbc = new JdbcMetricsWriter(url, "registry", infinitySentinel = Some(inf))
-    jdbc.write(reg, batchId = 0L)
-    // second snapshot overwrites, like every micro-batch does
-    jdbc.write(reg, batchId = 1L)
-    val fromJdbc = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", "registry").load()
-      .collect().map(key).toSet
-
-    val directSentinel = direct.map {
-      case (m, l, Some(le), v) if le.isPosInfinity => (m, l, Some(inf), v)
-      case r => r
-    }
-    assert(fromParquet == direct, "parquet round trip must be lossless")
-    assert(fromJdbc == directSentinel,
-      s"jdbc-only: ${(fromJdbc -- directSentinel).take(3)}; missing: ${(directSentinel -- fromJdbc).take(3)}")
-    reg.unpersist()
+  /** One `--drain-and-exit` exporter run over `log` from `ckpt`, landing
+    * its deltas in `table` through the `dialect` JDBC sink. */
+  private def exportOnce(log: java.nio.file.Path, ckpt: String, url: String,
+      table: String, dialect: String): Unit = {
+    val (server, q) = Exporter.run(spark, Exporter.Config(
+      logs = Seq(log.toString), listen = "127.0.0.1:0", fromStart = true,
+      checkpoint = Some(ckpt), jdbcUrl = Some(url), jdbcTable = table,
+      jdbcDialect = dialect, selfMetrics = false, drainAndExit = true))
+    try assert(q.awaitTermination(60000), "--drain-and-exit must terminate on its own")
+    finally { q.stop(); server.stop(0) }
   }
+
+  private def appendLines(log: java.nio.file.Path, lines: Seq[String]): Unit =
+    Files.write(log, lines.mkString("", "\n", "\n").getBytes,
+      java.nio.file.StandardOpenOption.APPEND)
 
   for (backend <- JdbcBackends.all)
   test(s"exactly-once JDBC upsert: streaming merge deltas match the batch registry across a restart [${backend.name}]") {
     import graft.streaming.MetricsJdbcUpsert
-    val dir = Files.createTempDirectory("graft_jdbc_in").toString
+    val log = Files.createTempFile("graft_jdbc_in", ".log")
     val ckpt = Files.createTempDirectory("graft_jdbc_ckpt").toString
     val db = s"upsert${java.util.UUID.randomUUID().toString.take(8)}"
     val t = MetricsJdbcUpsert.Target(backend.url(db), "metrics")
@@ -111,29 +84,21 @@ class MetricsWriterSpec extends SparkSpec {
         graft.operators.LogParser.parse(
           lines.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toDF("seq", "value")),
         readLines = lines.size.toLong).collect().map(key).toSet
-    def eventually(expect: Set[(String, String, Option[Double], Double)]): Unit = {
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      var got = jdbcRows()
-      while (got != expect && System.nanoTime() < deadline) { // listener lands async
-        Thread.sleep(200); got = jdbcRows()
-      }
+    def check(expect: Set[(String, String, Option[Double], Double)]): Unit = {
+      val got = jdbcRows()
       assert(got == expect,
         s"jdbc-only: ${(got -- expect).take(5)}; missing: ${(expect -- got).take(5)}")
     }
 
-    Files.write(java.nio.file.Paths.get(dir, "part1.log"),
-      part1.mkString("", "\n", "\n").getBytes)
-    val q1 = MetricsJdbcUpsert.serveJdbc(spark, dir, t, ckpt, availableNow = true)
-    q1.awaitTermination(120000L)
-    eventually(expected(part1))
+    appendLines(log, part1)
+    exportOnce(log, ckpt, t.url, t.table, "upsert")
+    check(expected(part1))
 
     // restart: same checkpoint, same table — run 2 resumes the merge state
     // (w1 completes) and keeps ADDING deltas to the already-populated table
-    Files.write(java.nio.file.Paths.get(dir, "part2.log"),
-      part2.mkString("", "\n", "\n").getBytes)
-    val q2 = MetricsJdbcUpsert.serveJdbc(spark, dir, t, ckpt, availableNow = true)
-    q2.awaitTermination(120000L)
-    eventually(expected(part1 ++ part2))
+    appendLines(log, part2)
+    exportOnce(log, ckpt, t.url, t.table, "upsert")
+    check(expected(part1 ++ part2))
 
     // replay idempotence: a re-delivered batch (crash between sink commit
     // and checkpoint commit) hits the ledger and is skipped whole. The
@@ -156,7 +121,7 @@ class MetricsWriterSpec extends SparkSpec {
   for (backend <- JdbcBackends.all)
   test(s"append dialect (ClickHouse shape): folded read equals the upsert table on the same stream, replay included [${backend.name}]") {
     import graft.streaming.{MetricsJdbcAppend, MetricsJdbcUpsert}
-    val dir = Files.createTempDirectory("graft_app_in").toString
+    val log = Files.createTempFile("graft_app_in", ".log")
     val ckptU = Files.createTempDirectory("graft_app_ckpt_u").toString
     val ckptA = Files.createTempDirectory("graft_app_ckpt_a").toString
     val db = s"append${java.util.UUID.randomUUID().toString.take(8)}"
@@ -188,14 +153,11 @@ class MetricsWriterSpec extends SparkSpec {
     }
 
     def runBoth(): Unit = {
-      val qU = MetricsJdbcUpsert.serveJdbc(spark, dir, tU, ckptU, availableNow = true)
-      qU.awaitTermination(120000L)
-      val qA = MetricsJdbcAppend.serveJdbc(spark, dir, tA, ckptA, availableNow = true)
-      qA.awaitTermination(120000L)
+      exportOnce(log, ckptU, url, tU.table, "upsert")
+      exportOnce(log, ckptA, url, tA.table, "append")
     }
 
-    Files.write(java.nio.file.Paths.get(dir, "part1.log"),
-      part1.mkString("", "\n", "\n").getBytes)
+    appendLines(log, part1)
     runBoth()
     val u1 = rowsOf(tU.table)
     val a1 = rowsOf(tA.folded)
@@ -203,8 +165,7 @@ class MetricsWriterSpec extends SparkSpec {
     assert(a1.exists(_._1 == "clickhouse_query_count"))
 
     // restart: both dialects resume their checkpoints and keep accumulating
-    Files.write(java.nio.file.Paths.get(dir, "part2.log"),
-      part2.mkString("", "\n", "\n").getBytes)
+    appendLines(log, part2)
     runBoth()
     val u2 = rowsOf(tU.table)
     val a2 = rowsOf(tA.folded)

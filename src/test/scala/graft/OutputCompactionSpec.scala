@@ -59,7 +59,8 @@ class OutputCompactionSpec extends SparkSpec {
       val q = StreamingCuration.ingestTo(spark, in, outPath, ckpt,
         availableNow = true, outCompactEvery = 1,
         outMergeRatio = 2, outMergeMin = 2)
-      q.awaitTermination(180000L)
+      try assert(q.awaitTermination(180000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     // three id-ordered thirds across two runs with a restart between —

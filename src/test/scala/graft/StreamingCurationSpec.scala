@@ -35,7 +35,8 @@ class StreamingCurationSpec extends SparkSpec {
     def runOnce(): Unit = {
       val in = spark.readStream.schema(docs.schema).parquet(srcDir)
       val q = StreamingCuration.ingestTo(spark, in, outPath, ckpt, availableNow = true)
-      q.awaitTermination(180000L)
+      try assert(q.awaitTermination(180000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     // run 1: the id-ordered first half (ingest order = id order is the
@@ -145,7 +146,8 @@ class StreamingCurationSpec extends SparkSpec {
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.Once())
         .start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
       ()
     }
     import scala.jdk.CollectionConverters._

@@ -37,7 +37,8 @@ class StreamingDedupSpec extends SparkSpec {
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     // run 1: A B A C -> exactly one A, one B, one C; the kept A is the
@@ -96,7 +97,8 @@ class StreamingDedupSpec extends SparkSpec {
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     writeJson(src, "b1.json", b1)
@@ -141,7 +143,8 @@ class StreamingDedupSpec extends SparkSpec {
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     // b1: alpha at 10:00 -> emitted; watermark after the batch: 09:50
@@ -192,7 +195,8 @@ class StreamingDedupSpec extends SparkSpec {
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     streamDocs.filter(col("doc_id") <= splitId).select("doc_id", "text")
@@ -233,7 +237,8 @@ class StreamingDedupSpec extends SparkSpec {
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     // b1: a corpus copy (rejected), a novel doc (kept), its in-stream dup (dropped)
@@ -284,7 +289,8 @@ class StreamingDedupSpec extends SparkSpec {
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
+      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
+      finally q.stop()
     }
 
     streamVecs.filter(col("vec_id") <= splitId).select("vec_id", "label", "embedding")

@@ -5,34 +5,46 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.model.ChQuery
 import graft.operators.{LogParser, LogRender, QueryMerge, Tables}
 import graft.streaming.StreamingMerge
+import graft.streaming.StreamingMerge.MergeOut
 
 /** Batch ≡ streaming equivalence on the driver's rendered log corpus
-  * (VERDICT r1 item 6): the oracle-checked batch merge and the
-  * `flatMapGroupsWithState` streaming merge must produce the same completed
-  * records and the same error-counter totals for the same corpus — the
-  * streaming path's bridge into the DuckDB-oracle loop.
+  * (VERDICT r1 item 6): the oracle-checked batch merge and the exporter's
+  * streaming merge ([[StreamingMerge.mergeWithDelivery]] over the tail
+  * source, at the exporter's `timeoutMs = 0`) must produce the same
+  * completed records and the same error-counter totals for the same
+  * corpus — the streaming path's bridge into the DuckDB-oracle loop.
   */
 class StreamingEquivalenceSpec extends SparkSpec {
   import spark.implicits._
 
   /** Render the sf0.001 events corpus to a log file on disk, return
-    * (file dir, the exact (seq, value) frame batch-parses). */
+    * (log file, the exact (seq, value) frame batch-parses). */
   private def renderCorpus(): (String, org.apache.spark.sql.DataFrame) = {
     val lines = LogRender.lines(Tables.events(spark, sf()))
     val ordered = lines.orderBy("seq").select("value").as[String].collect()
-    val dir = Files.createTempDirectory("graft_equiv").toFile
-    Files.write(new java.io.File(dir, "clickhouse-server.log").toPath,
-      ordered.mkString("", "\n", "\n").getBytes)
-    (dir.getAbsolutePath, lines)
+    val log = Files.createTempFile("graft_equiv", ".log")
+    Files.write(log, ordered.mkString("", "\n", "\n").getBytes)
+    (log.toString, lines)
   }
 
+  /** Every emission of the exporter's merge over one drain of `log`. */
+  private def drainMerge(log: String, ckpt: String): Seq[MergeOut] = {
+    val outs = new java.util.concurrent.ConcurrentLinkedQueue[MergeOut]()
+    drainAvailable(StreamingMerge.mergeWithDelivery(tailLines(log), timeoutMs = 0L),
+      ckpt) { batch => batch.collect().foreach(outs.add) }
+    outs.asScala.toSeq
+  }
+
+  private def freshCkpt(): String = Files.createTempDirectory("graft_equiv_ckpt").toString
+
+  private def counterTotals(outs: Seq[MergeOut]): Map[String, Long] =
+    outs.flatMap(_.counterType).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+
   test("streaming merge equals the oracle-checked batch merge on the rendered corpus") {
-    val (dir, lines) = renderCorpus()
+    val (log, lines) = renderCorpus()
 
     // batch side: the oracle-checked merged table, completed records only
     // (with NoTimeout the streaming side emits exactly the completed ones)
@@ -47,13 +59,7 @@ class StreamingEquivalenceSpec extends SparkSpec {
 
     // streaming side: AvailableNow over the file, NoTimeout (armed
     // processing-time timeouts never drain under AvailableNow)
-    val out = StreamingMerge.filePipeline(spark, dir, timeoutMs = 0L)
-    val qname = s"equiv_${System.nanoTime()}"
-    val q = out.writeStream.format("memory").queryName(qname)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000L)
-
-    val streaming = spark.table(qname).as[ChQuery].collect()
+    val streaming = drainMerge(log, freshCkpt()).flatMap(_.record)
       .map(r => (r.id, r.query, r.port, r.pid, r.rowsRead, r.bytesRead,
         r.elapsed, r.rps, r.speed, r.memory, r.error, r.errorCode,
         r.errorMessage, r.stmtType, r.host)).toSet
@@ -64,29 +70,12 @@ class StreamingEquivalenceSpec extends SparkSpec {
   }
 
   test("streaming error-counter totals equal the oracle-checked batch counters") {
-    val (dir, lines) = renderCorpus()
+    val (log, lines) = renderCorpus()
 
     val batchCounters = QueryMerge.errorCounters(LogParser.parse(lines))
       .as[(String, Long)].collect().toMap
 
-    val counts = StreamingEquivalenceSpec.counters
-    counts.clear()
-    val parsed = StreamingMerge.toLogEvents(LogParser.parse(
-      StreamingMerge.seqAssign(spark.readStream.text(dir).as[String])))
-    val q = StreamingMerge.mergeWithMetrics(parsed, timeoutMs = 0L)
-      .filter(_.out == "counter")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[StreamingMerge.MergeOut], _: Long) =>
-        batch.collect().foreach(_.counterType.foreach(t =>
-          StreamingEquivalenceSpec.counters.merge(t, 1L, (a, b) => Long.box(a + b))))
-        ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_equiv_ckpt").toString)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000L)
-
-    val streamingCounters = counts.asScala.map { case (k, v) => k -> Long.unbox(v) }.toMap
+    val streamingCounters = counterTotals(drainMerge(log, freshCkpt()))
     assert(streamingCounters.nonEmpty)
     assert(streamingCounters == batchCounters,
       s"streaming=$streamingCounters batch=$batchCounters")
@@ -104,9 +93,8 @@ class StreamingEquivalenceSpec extends SparkSpec {
       s"$dt3 [ 7 ] {ru} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 2",
       s"$dt3 [ 7 ] {ru} <Error> executeQuery: Code: 60, e.displayText() = DB::Exception: boom",
       s"$dt4 [ 7 ] {ru} <Debug> MemoryTracker: Peak memory usage (for query): 5 MiB.")
-    val dir = Files.createTempDirectory("graft_reuse").toFile
-    Files.write(new java.io.File(dir, "reuse.log").toPath,
-      lines.mkString("", "\n", "\n").getBytes)
+    val log = Files.createTempFile("graft_reuse", ".log")
+    Files.write(log, lines.mkString("", "\n", "\n").getBytes)
 
     val batchParsed = LogParser.parse(
       lines.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("seq", "value"))
@@ -114,12 +102,7 @@ class StreamingEquivalenceSpec extends SparkSpec {
       .select("query", "rows_read", "memory", "elapsed", "error", "error_code")
       .as[(String, Long, Long, Double, Boolean, Long)].collect().toSet
 
-    val out = StreamingMerge.filePipeline(spark, dir.getAbsolutePath, timeoutMs = 0L)
-    val qname = s"reuse_${System.nanoTime()}"
-    val q = out.writeStream.format("memory").queryName(qname)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(240000L)
-    val streaming = spark.table(qname).as[ChQuery].collect()
+    val streaming = drainMerge(log.toString, freshCkpt()).flatMap(_.record)
       .map(r => (r.query, r.rowsRead, r.memory, r.elapsed, r.error, r.errorCode)).toSet
 
     assert(batch.size == 2, s"two lifecycles expected, got $batch")
@@ -128,10 +111,10 @@ class StreamingEquivalenceSpec extends SparkSpec {
   }
 
   test("counters are exactly-once across a checkpointed kill/restart mid-corpus") {
-    val srcDir = Files.createTempDirectory("graft_cnt_src").toFile
-    val ckpt = Files.createTempDirectory("graft_cnt_ckpt").toString
-    val counts = StreamingEquivalenceSpec.recovered
-    counts.clear()
+    val log = Files.createTempFile("graft_cnt_src", ".log")
+    val ckpt = freshCkpt()
+    def append(ls: String*): Unit = Files.write(log,
+      ls.mkString("", "\n", "\n").getBytes, java.nio.file.StandardOpenOption.APPEND)
 
     val dt = "2024.03.01 12:00:01.000000"
     def initial(id: String) =
@@ -141,41 +124,17 @@ class StreamingEquivalenceSpec extends SparkSpec {
     def memory(id: String) =
       s"2024.03.01 12:00:02.000000 [ 7 ] {$id} <Debug> MemoryTracker: Peak memory usage (for query): 3 MiB."
 
-    def runOnce(): Unit = {
-      val parsed = StreamingMerge.toLogEvents(LogParser.parse(
-        StreamingMerge.seqAssign(spark.readStream.text(srcDir.getAbsolutePath).as[String])))
-      val q = StreamingMerge.mergeWithMetrics(parsed, timeoutMs = 0L)
-        .filter(_.out == "counter")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[StreamingMerge.MergeOut], _: Long) =>
-          batch.collect().foreach(_.counterType.foreach(t =>
-            StreamingEquivalenceSpec.recovered.merge(t, 1L, (a, b) => Long.box(a + b))))
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(240000L)
-    }
-
     // run 1: orphan stats (not_found) + initial + duplicate initial
-    Files.write(new java.io.File(srcDir, "f1.log").toPath,
-      Seq(stats("ghost"), initial("r1"), initial("r1")).mkString("", "\n", "\n").getBytes)
-    runOnce() // query stops (AvailableNow) = the "kill" point; state + commits in ckpt
+    append(stats("ghost"), initial("r1"), initial("r1"))
+    // the query stops (AvailableNow) = the "kill" point; state + commits in ckpt
+    val run1 = drainMerge(log.toString, ckpt)
 
     // run 2 (restart from checkpoint): completion + post-eviction orphan
-    Files.write(new java.io.File(srcDir, "f2.log").toPath,
-      Seq(memory("r1"), stats("r1")).mkString("", "\n", "\n").getBytes)
-    runOnce()
+    append(memory("r1"), stats("r1"))
+    val run2 = drainMerge(log.toString, ckpt)
 
-    val totals = counts.asScala.map { case (k, v) => k -> Long.unbox(v) }.toMap
+    val totals = counterTotals(run1 ++ run2)
     // exactly-once: ghost orphan 1, dup 1 (NOT replayed by run 2), post-eviction orphan 1
     assert(totals == Map("not_found_query" -> 2L, "duplicated_initial_query" -> 1L), totals.toString)
   }
-}
-
-object StreamingEquivalenceSpec {
-  val counters: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long] =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  val recovered: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long] =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 }

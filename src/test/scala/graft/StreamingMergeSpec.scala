@@ -2,16 +2,15 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 
 import graft.model.{ChQuery, LogEvent}
-import graft.operators.LogParser
 import graft.streaming.StreamingMerge
 
 /** Streaming semantics (SURVEY §2.7): the state machine is exercised
   * directly through Spark's TestGroupState harness (deterministic,
-  * micro-batch boundaries controlled exactly), plus a file-source
-  * integration run of the full streaming pipeline.
+  * micro-batch boundaries controlled exactly), plus tail-source runs of
+  * the exporter's merge ([[StreamingMerge.mergeWithDelivery]]).
   */
 class StreamingMergeSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
@@ -28,10 +27,11 @@ class StreamingMergeSpec extends SparkSpec {
     }
   }
 
-  /** Parse crafted lines into LogEvents (reusing the real parser). */
+  /** Parse crafted lines into LogEvents (reusing the exporter's parse and
+    * delivery fold, minus its per-partition count events). */
   private def events(lines: (Long, String)*): Seq[LogEvent] =
-    StreamingMerge.toLogEvents(LogParser.parse(lines.toDF("seq", "value")))
-      .collect().toSeq.sortBy(_.seq)
+    StreamingMerge.deliveredEvents(lines.toDF("seq", "value"), fleet = false)
+      .collect().toSeq.filterNot(e => e.kind.endsWith("_count")).sortBy(_.seq)
 
   private def jopt[T](o: Option[T]): org.apache.spark.api.java.Optional[T] =
     o.map(org.apache.spark.api.java.Optional.of[T]).getOrElse(org.apache.spark.api.java.Optional.empty[T]())
@@ -43,7 +43,7 @@ class StreamingMergeSpec extends SparkSpec {
       hasTimedOut = false)
 
   private def run(state: TestGroupState[ChQuery], es: Seq[LogEvent]): Seq[ChQuery] =
-    StreamingMerge.transition(es.iterator, state, 60000L).toSeq
+    StreamingMerge.transitionFull(es.iterator, state, 60000L).flatMap(_.record).toSeq
 
   test("batch 1 initial -> state; batch 2 stats+memory -> emit completed, state evicted") {
     val s1 = freshState()
@@ -114,43 +114,36 @@ class StreamingMergeSpec extends SparkSpec {
       batchProcessingTimeMs = 1000L,
       eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
       hasTimedOut = true)
-    val out = (if (s.hasTimedOut) {
-      val rec = s.get; s.remove(); Iterator.single(rec)
-    } else Iterator.empty).toSeq
-    assert(out == Seq(stuck) && s.isRemoved)
+    val out = StreamingMerge.advance(Iterator.empty, s, 60000L).toSeq
+    assert(out == Seq(StreamingMerge.MergeOut("record", Some(stuck), None)) && s.isRemoved)
+    assert(!out.head.record.get.fullInfo)
+  }
+
+  /** Records the exporter's merge emits over one drain of `log`. */
+  private def drainRecords(log: java.nio.file.Path, ckpt: String): Seq[ChQuery] = {
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[ChQuery]()
+    drainAvailable(StreamingMerge.mergeWithDelivery(tailLines(log.toString), timeoutMs = 0L),
+      ckpt) { batch => batch.collect().flatMap(_.record).foreach(emitted.add) }
+    emitted.asScala.toSeq
   }
 
   /** Checkpoint-recovery scenario shared by the two state-store-provider
     * tests: run 1 persists open state, run 2 restarts from the checkpoint
     * and can only complete the record if that state was recovered. */
   private def recoveryScenario(): Unit = {
-    val dir = Files.createTempDirectory("graft_ckpt_src").toFile
+    val log = Files.createTempFile("graft_ckpt_src", ".log")
     val ckpt = Files.createTempDirectory("graft_ckpt").toFile.getAbsolutePath
-    val emitted = StreamingMergeSpec.emitted
-    emitted.clear()
-
-    def runOnce(): Unit = {
-      val out = StreamingMerge.filePipeline(spark, dir.getAbsolutePath)
-      val q = out.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[ChQuery], _: Long) =>
-          StreamingMergeSpec.emitted.addAll(batch.collect().toSeq.asJava)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
-    }
+    def append(line: String): Unit =
+      Files.write(log, (line + "\n").getBytes, java.nio.file.StandardOpenOption.APPEND)
 
     // run 1: only the initial line arrives -> state persisted, nothing emitted
-    Files.write(new java.io.File(dir, "part1.log").toPath, mkLine(0, "c1", "initial")._2.getBytes)
-    runOnce()
-    assert(emitted.isEmpty)
+    append(mkLine(0, "c1", "initial")._2)
+    assert(drainRecords(log, ckpt).isEmpty)
 
     // run 2 (fresh query from the same checkpoint): memory line completes the
     // record ONLY IF the state from run 1 was recovered
-    Files.write(new java.io.File(dir, "part2.log").toPath, mkLine(1, "c1", "memory")._2.getBytes)
-    runOnce()
-    val recs = emitted.asScala.toSeq
+    append(mkLine(1, "c1", "memory")._2)
+    val recs = drainRecords(log, ckpt)
     assert(recs.length == 1 && recs.head.id == "c1" && recs.head.fullInfo)
   }
 
@@ -170,134 +163,19 @@ class StreamingMergeSpec extends SparkSpec {
     }
   }
 
-  test("event-time timeout: the watermark passing the deadline flushes stuck state") {
-    val dir = Files.createTempDirectory("graft_ett_src").toFile
-    val ckpt = Files.createTempDirectory("graft_ett_ckpt").toFile.getAbsolutePath
-    val emitted = StreamingMergeSpec.ettRecords
-    emitted.clear()
-
-    def lifecycle(id: String, hh: Int, mm: Int = 0): Seq[String] = {
-      val dt = f"2024.03.01 $hh%02d:$mm%02d:01.000000"
-      Seq(
-        s"$dt [ 7 ] {$id} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 1",
-        s"$dt [ 7 ] {$id} <Debug> MemoryTracker: Peak memory usage (for query): 1 MiB.")
-    }
-
-    def runOnce(): Unit = {
-      val parsed = StreamingMerge.toLogEvents(LogParser.parse(
-        StreamingMerge.seqAssign(spark.readStream.text(dir.getAbsolutePath).as[String])))
-      val q = StreamingMerge
-        .mergeWithMetrics(parsed, timeoutMs = 10 * 60 * 1000L,
-          eventTimeTimeout = true, watermarkDelay = "10 minutes")
-        .flatMap(_.record)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[ChQuery], _: Long) =>
-          StreamingMergeSpec.ettRecords.addAll(batch.collect().toSeq.asJava)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
-    }
-
-    // run 1: a lone initial at 12:00 -> stuck state, deadline 12:10 event time
-    Files.write(new java.io.File(dir, "f1.log").toPath,
-      s"2024.03.01 12:00:01.000000 [ 7 ] {stuck} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 1\n".getBytes)
-    runOnce()
-    assert(emitted.isEmpty, "nothing completes in run 1")
-
-    // run 2: a 12:05 lifecycle advances the watermark only to 11:55 < 12:10
-    // (the post-data no-data batch re-checks timers at the new watermark),
-    // so the stuck record must NOT flush yet
-    Files.write(new java.io.File(dir, "f2.log").toPath,
-      lifecycle("w2", 12, 5).mkString("", "\n", "\n").getBytes)
-    runOnce()
-    assert(emitted.asScala.map(_.id).toSet == Set("w2"),
-      s"premature flush: ${emitted.asScala.map(_.id)}")
-
-    // run 3: a 13:00 lifecycle advances the watermark to 12:50 > 12:10 ->
-    // the stuck record flushes with fullInfo=false (leak fix, event-time)
-    Files.write(new java.io.File(dir, "f3.log").toPath,
-      lifecycle("w3", 13).mkString("", "\n", "\n").getBytes)
-    runOnce()
-    val byId = emitted.asScala.map(r => r.id -> r).toMap
-    assert(byId.keySet == Set("stuck", "w2", "w3"), byId.keySet.toString)
-    assert(!byId("stuck").fullInfo && byId("stuck").stmtType == "select")
-    assert(byId("w2").fullInfo && byId("w3").fullInfo)
-  }
-
-  test("watermarked windowed aggregation finalizes windows as event time advances") {
-    val dir = Files.createTempDirectory("graft_wm_src").toFile
-    val ckpt = Files.createTempDirectory("graft_wm_ckpt").toFile.getAbsolutePath
-    val windows = StreamingMergeSpec.windows
-    windows.clear()
-
-    def lifecycle(id: String, hh: Int, mm: Int): String = {
-      val dt = f"2024.03.01 $hh%02d:$mm%02d:01.000000"
-      Seq(
-        s"$dt [ 7 ] {$id} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 1",
-        s"$dt [ 7 ] {$id} <Debug> MemoryTracker: Peak memory usage (for query): 1 MiB.")
-        .mkString("\n")
-    }
-
-    def runOnce(): Unit = {
-      val out = StreamingMerge.windowedQueryCounts(
-        StreamingMerge.filePipeline(spark, dir.getAbsolutePath, timeoutMs = 0L))
-      val q = out.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          StreamingMergeSpec.windows.addAll(batch.collect()
-            .map(r => (r.getAs[java.sql.Timestamp]("window_start").toString,
-              r.getAs[String]("stmt_type"), r.getAs[Long]("cnt"))).toSeq.asJava)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000L)
-    }
-
-    Files.write(new java.io.File(dir, "f1.log").toPath, lifecycle("w1", 12, 0).getBytes)
-    runOnce()
-    assert(windows.isEmpty, "window open: watermark has not passed it")
-
-    Files.write(new java.io.File(dir, "f2.log").toPath, lifecycle("w2", 12, 30).getBytes)
-    runOnce() // watermark -> 12:20, finalizes the 12:00 window
-    Files.write(new java.io.File(dir, "f3.log").toPath, lifecycle("w3", 13, 0).getBytes)
-    runOnce() // watermark -> 12:50, finalizes the 12:30 window
-    assert(windows.asScala.toSet == Set(
-      ("2024-03-01 12:00:00.0", "select", 1L),
-      ("2024-03-01 12:30:00.0", "select", 1L)))
-  }
-
   test("file-source streaming pipeline end-to-end (AvailableNow)") {
-    val dir = Files.createTempDirectory("graft_stream").toFile
+    val log = Files.createTempFile("graft_stream", ".log")
     val lines = Seq(
       mkLine(0, "f1", "initial"), mkLine(1, "f1", "stats"),
       mkLine(2, "f1", "error"), mkLine(3, "f1", "memory"),
       mkLine(4, "f2", "initial", "INSERT INTO t VALUES (1)"), mkLine(5, "f2", "memory"),
       mkLine(6, "f3", "stats") // orphan
     ).map(_._2)
-    Files.write(new java.io.File(dir, "clickhouse-server.log").toPath,
-      lines.mkString("\n").getBytes)
+    Files.write(log, lines.mkString("", "\n", "\n").getBytes)
 
-    val out = StreamingMerge.filePipeline(spark, dir.getAbsolutePath)
-    val qname = s"file_pipe_${System.nanoTime()}"
-    val q = out.writeStream.format("memory").queryName(qname)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000L)
-    val recs = spark.table(qname).as[ChQuery].collect()
+    val recs = drainRecords(log, Files.createTempDirectory("graft_stream_ckpt").toString)
     assert(recs.length == 1)
     assert(recs.head.id == "f1" && recs.head.fullInfo && recs.head.error
       && recs.head.errorCode == 60L && recs.head.rowsRead == 500L)
   }
-}
-
-object StreamingMergeSpec {
-  /** Cross-restart sink buffers for the checkpoint-recovery tests
-    * (foreachBatch closures must reference driver-side shared state). */
-  val emitted: java.util.concurrent.ConcurrentLinkedQueue[graft.model.ChQuery] =
-    new java.util.concurrent.ConcurrentLinkedQueue[graft.model.ChQuery]()
-  val windows: java.util.concurrent.ConcurrentLinkedQueue[(String, String, Long)] =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Long)]()
-  val ettRecords: java.util.concurrent.ConcurrentLinkedQueue[graft.model.ChQuery] =
-    new java.util.concurrent.ConcurrentLinkedQueue[graft.model.ChQuery]()
 }

@@ -169,31 +169,27 @@ class TailFileSourceSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("tailPipeline: the full reference main loop over an appending file") {
+  test("the full reference main loop over an appending file: tail, parse, merge") {
     val f = Files.createTempFile("graft-tailpipe", ".log")
+    val ckpt = Files.createTempDirectory("graft-tailpipe-ckpt").toString
     val dt = "2024.03.01 12:00:01.000000"
-    val qname = s"tailpipe_${System.nanoTime()}"
-    val q = StreamingMerge.tailPipeline(spark, f.toString, fromStart = true, timeoutMs = 0L)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    try {
-      append(f, s"$dt [ 7 ] {t1} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 1\n")
-      append(f, s"$dt [ 7 ] {t1} <Information> executeQuery: Read 500 rows, 2 KiB in 0.100 sec., 5000 rows/sec., 20 KiB/sec.\n")
-      q.processAllAvailable()
-      assert(spark.table(qname).count() == 0, "no memory line yet -> still in state")
+    def drain(): Seq[ChQuery] = {
+      val recs = new java.util.concurrent.ConcurrentLinkedQueue[ChQuery]()
+      drainAvailable(StreamingMerge.mergeWithDelivery(tailLines(f.toString), timeoutMs = 0L),
+        ckpt) { batch => batch.collect().flatMap(_.record).foreach(recs.add) }
+      import scala.jdk.CollectionConverters._
+      recs.asScala.toSeq
+    }
+    append(f, s"$dt [ 7 ] {t1} <Debug> executeQuery: (from 10.0.0.9:9000) SELECT 1\n")
+    append(f, s"$dt [ 7 ] {t1} <Information> executeQuery: Read 500 rows, 2 KiB in 0.100 sec., 5000 rows/sec., 20 KiB/sec.\n")
+    assert(drain().isEmpty, "no memory line yet -> still in state")
 
-      append(f, s"2024.03.01 12:00:02.000000 [ 7 ] {t1} <Debug> MemoryTracker: Peak memory usage (for query): 3 MiB.\n")
-      val deadline = System.nanoTime() + 60000L * 1000000L
-      var recs = Seq.empty[ChQuery]
-      while (recs.isEmpty && System.nanoTime() < deadline) {
-        q.processAllAvailable()
-        recs = spark.table(qname).as[ChQuery].collect().toSeq
-      }
-      assert(recs.length == 1)
-      val r = recs.head
-      assert(r.id == "t1" && r.fullInfo && r.rowsRead == 500L &&
-        r.memory == 3L * 1024 * 1024 && r.elapsed == 1.0)
-    } finally q.stop()
+    append(f, s"2024.03.01 12:00:02.000000 [ 7 ] {t1} <Debug> MemoryTracker: Peak memory usage (for query): 3 MiB.\n")
+    val recs = drain()
+    assert(recs.length == 1)
+    val r = recs.head
+    assert(r.id == "t1" && r.fullInfo && r.rowsRead == 500L &&
+      r.memory == 3L * 1024 * 1024 && r.elapsed == 1.0)
   }
 
   test("maxBytesPerTrigger: a backlog drains in bounded line-aligned polls; the true tail is still reported") {

@@ -35,6 +35,21 @@ class TailFleetSpec extends SparkSpec {
     assert(TailFleetOffset.parse(TailFleetOffset(Map.empty).json()).offsets.isEmpty)
   }
 
+  /** The fleet merge's completed records as `(server, id, rowsRead,
+    * memory, fullInfo)`, appended to [[TailFleetSpec.sunk]]. */
+  private def sinkRecords(batch: org.apache.spark.sql.Dataset[StreamingMerge.MergeOut]): Unit =
+    batch.collect().foreach(o => o.record.foreach(r => TailFleetSpec.sunk.add((
+      o.server.getOrElse(""), r.id, r.rowsRead, r.memory, r.fullInfo))))
+
+  /** One AvailableNow drain of the fleet merge over `paths`; returns
+    * everything sunk so far. */
+  private def drainFleet(paths: Seq[String], ckpt: String): Seq[(String, String, Long, Long, Boolean)] = {
+    drainAvailable(StreamingMerge.fleetMergeWithDelivery(fleetLines(paths), timeoutMs = 0L),
+      ckpt)(sinkRecords)
+    import scala.jdk.CollectionConverters._
+    TailFleetSpec.sunk.asScala.toSeq
+  }
+
   private def fleetScenario(): Unit = {
     val a = Files.createTempFile("graft-fleet-a", ".log")
     val b = Files.createTempFile("graft-fleet-b", ".log")
@@ -42,40 +57,16 @@ class TailFleetSpec extends SparkSpec {
     val sunk = TailFleetSpec.sunk
     sunk.clear()
 
-    def start(): StreamingQuery =
-      StreamingMerge.fleetPipeline(spark, Seq(a.toString, b.toString),
-        fromStart = true, timeoutMs = 0L)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => TailFleetSpec.sunk.add((
-            r.getAs[String]("server"), r.getAs[String]("id"),
-            r.getAs[Long]("rowsRead"), r.getAs[Long]("memory"),
-            r.getAs[Boolean]("fullInfo"))))
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-
-    def waitFor(n: Int, q: StreamingQuery): Seq[(String, String, Long, Long, Boolean)] = {
-      val deadline = System.nanoTime() + 120000L * 1000000L
-      while (sunk.size < n && System.nanoTime() < deadline) q.processAllAvailable()
-      import scala.jdk.CollectionConverters._
-      sunk.asScala.toSeq
-    }
-
     // run 1: both servers run a query with the SAME id "w1"; only server
     // b's completes — a's stays open in the merge state
-    val q1 = start()
-    try {
-      append(a, initial("w1"))
-      append(a, stats("w1", 500L))
-      append(b, initial("w1", "SELECT 2"))
-      append(b, stats("w1", 10L))
-      append(b, memory("w1"))
-      val recs = waitFor(1, q1)
-      assert(recs == Seq((b.toString, "w1", 10L, 3L * 1024 * 1024, true)),
-        s"b's lifecycle must complete alone with ITS stats: $recs")
-    } finally q1.stop()
+    append(a, initial("w1"))
+    append(a, stats("w1", 500L))
+    append(b, initial("w1", "SELECT 2"))
+    append(b, stats("w1", 10L))
+    append(b, memory("w1"))
+    val recs1 = drainFleet(Seq(a.toString, b.toString), ckpt)
+    assert(recs1 == Seq((b.toString, "w1", 10L, 3L * 1024 * 1024, true)),
+      s"b's lifecycle must complete alone with ITS stats: $recs1")
 
     // while down: server a's log ROTATES (copytruncate) and the new
     // generation carries the memory line completing a's still-open w1;
@@ -85,19 +76,16 @@ class TailFleetSpec extends SparkSpec {
     append(b, stats("w2", 77L))
     append(b, memory("w2"))
 
-    val q2 = start()
-    try {
-      val recs = waitFor(3, q2)
-      // a's w1 completes with the stats it accumulated BEFORE the restart
-      // and rotation — state survived both, unpolluted by b's same-id
-      // query — and b adds exactly w2; nothing is re-emitted
-      val mb = 3L * 1024 * 1024
-      assert(recs.toSet == Set(
-        (a.toString, "w1", 500L, mb, true),
-        (b.toString, "w1", 10L, mb, true),
-        (b.toString, "w2", 77L, mb, true)), recs.toString)
-      assert(recs.size == 3, s"no duplicate records across the restart: $recs")
-    } finally q2.stop()
+    val recs = drainFleet(Seq(a.toString, b.toString), ckpt)
+    // a's w1 completes with the stats it accumulated BEFORE the restart
+    // and rotation — state survived both, unpolluted by b's same-id
+    // query — and b adds exactly w2; nothing is re-emitted
+    val mb = 3L * 1024 * 1024
+    assert(recs.toSet == Set(
+      (a.toString, "w1", 500L, mb, true),
+      (b.toString, "w1", 10L, mb, true),
+      (b.toString, "w2", 77L, mb, true)), recs.toString)
+    assert(recs.size == 3, s"no duplicate records across the restart: $recs")
   }
 
   test("two rotating fleet files, same query id, one keyed merge, restart mid-lifecycle") {
@@ -110,33 +98,9 @@ class TailFleetSpec extends SparkSpec {
     sunk.clear()
     val ckpt = Files.createTempDirectory("graft-fleet-grow-ckpt").toString
 
-    def start(paths: Seq[java.nio.file.Path]): StreamingQuery =
-      StreamingMerge.fleetPipeline(spark, paths.map(_.toString),
-        fromStart = true, timeoutMs = 0L)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => TailFleetSpec.sunk.add((
-            r.getAs[String]("server"), r.getAs[String]("id"),
-            r.getAs[Long]("rowsRead"), r.getAs[Long]("memory"),
-            r.getAs[Boolean]("fullInfo"))))
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-
-    def waitFor(n: Int, q: StreamingQuery): Seq[(String, String, Long, Long, Boolean)] = {
-      val deadline = System.nanoTime() + 120000L * 1000000L
-      while (sunk.size < n && System.nanoTime() < deadline) q.processAllAvailable()
-      import scala.jdk.CollectionConverters._
-      sunk.asScala.toSeq
-    }
-
     // run 1: single-member fleet, one completed lifecycle
-    val q1 = start(Seq(a))
-    try {
-      append(a, initial("g1")); append(a, stats("g1", 11L)); append(a, memory("g1"))
-      assert(waitFor(1, q1).size == 1)
-    } finally q1.stop()
+    append(a, initial("g1")); append(a, stats("g1", 11L)); append(a, memory("g1"))
+    assert(drainFleet(Seq(a.toString), ckpt).size == 1)
 
     // a NEW server joins the fleet while the query is down; its history
     // exists before the restart — the checkpoint has no offset entry for
@@ -145,18 +109,15 @@ class TailFleetSpec extends SparkSpec {
     Files.write(b, (initial("g1", "SELECT 9") + stats("g1", 22L) + memory("g1")).getBytes)
     append(a, initial("g2")); append(a, stats("g2", 33L)); append(a, memory("g2"))
 
-    val q2 = start(Seq(a, b))
-    try {
-      val recs = waitFor(3, q2)
-      val mb = 3L * 1024 * 1024
-      // a resumes from its checkpointed offset (g1 NOT re-read), b's full
-      // history is ingested, and the reused id g1 stays per-server
-      assert(recs.toSet == Set(
-        (a.toString, "g1", 11L, mb, true),
-        (a.toString, "g2", 33L, mb, true),
-        (b.toString, "g1", 22L, mb, true)), recs.toString)
-      assert(recs.size == 3, s"a's g1 must not be re-emitted: $recs")
-    } finally q2.stop()
+    val recs = drainFleet(Seq(a.toString, b.toString), ckpt)
+    val mb = 3L * 1024 * 1024
+    // a resumes from its checkpointed offset (g1 NOT re-read), b's full
+    // history is ingested, and the reused id g1 stays per-server
+    assert(recs.toSet == Set(
+      (a.toString, "g1", 11L, mb, true),
+      (a.toString, "g2", 33L, mb, true),
+      (b.toString, "g1", 22L, mb, true)), recs.toString)
+    assert(recs.size == 3, s"a's g1 must not be re-emitted: $recs")
   }
 
   test("dynamic membership: a glob-matched file created mid-stream joins within a micro-batch") {
@@ -167,16 +128,13 @@ class TailFleetSpec extends SparkSpec {
     val sunk = TailFleetSpec.sunk
     sunk.clear()
 
+    // a live (non-AvailableNow) query: the join under test happens while
+    // the query runs, with no restart in between
     def start(): StreamingQuery =
-      StreamingMerge.fleetPipeline(spark, Seq(s"$dir/*.log"),
-        fromStart = true, timeoutMs = 0L)
+      StreamingMerge.fleetMergeWithDelivery(fleetLines(Seq(s"$dir/*.log")), timeoutMs = 0L)
         .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => TailFleetSpec.sunk.add((
-            r.getAs[String]("server"), r.getAs[String]("id"),
-            r.getAs[Long]("rowsRead"), r.getAs[Long]("memory"),
-            r.getAs[Boolean]("fullInfo"))))
-          ()
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[StreamingMerge.MergeOut], _: Long) =>
+          sinkRecords(batch)
         }
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
@@ -211,15 +169,12 @@ class TailFleetSpec extends SparkSpec {
     // appended while down are delivered (no re-read of b's history)
     val b = dir.resolve("b.log")
     append(b, initial("d2") + stats("d2", 9L) + memory("d2"))
-    val q2 = start()
-    try {
-      val recs = waitFor(3, q2)
-      assert(recs.toSet == Set(
-        (a.toString, "d1", 5L, mb, true),
-        (b.toString, "d1", 7L, mb, true),
-        (b.toString, "d2", 9L, mb, true)), recs.toString)
-      assert(recs.size == 3, s"b's history must not be re-read on restart: $recs")
-    } finally q2.stop()
+    val recs = drainFleet(Seq(s"$dir/*.log"), ckpt)
+    assert(recs.toSet == Set(
+      (a.toString, "d1", 5L, mb, true),
+      (b.toString, "d1", 7L, mb, true),
+      (b.toString, "d2", 9L, mb, true)), recs.toString)
+    assert(recs.size == 3, s"b's history must not be re-read on restart: $recs")
   }
 
   test("a member dropped from the config is not resurrected by its checkpoint entry") {
