@@ -221,10 +221,7 @@ object Exporter {
 
   def main(args: Array[String]): Unit = {
     val config = parseArgs(args.toSeq)
-    val spark = SparkSession.builder()
-      .appName("prometheus-clickhouselog-exporter")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = DaemonSession("prometheus-clickhouselog-exporter")
     val (server, query) = run(spark, config)
     // graceful shutdown à la main.go:130-142: stop the tail, drain scrapes
     sys.addShutdownHook {

@@ -194,10 +194,7 @@ object Ingest {
 
   def main(args: Array[String]): Unit = {
     val config = parseArgs(args.toSeq)
-    val spark = SparkSession.builder()
-      .appName("graft-curation-ingest")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = DaemonSession("graft-curation-ingest")
     val in = source(spark, config)
     val gate = nearGate(spark, config)
     // stats bootstrap: deltas fold onto a base; zeros are the additive

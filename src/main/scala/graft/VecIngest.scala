@@ -396,10 +396,7 @@ object VecIngest {
 
   def main(args: Array[String]): Unit = {
     val config = parseArgs(args.toSeq)
-    val spark = SparkSession.builder()
-      .appName("graft-vector-ingest")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = DaemonSession("graft-vector-ingest")
     val in = source(spark, config)
     val telemetry =
       if (config.selfMetrics) Some(new graft.streaming.IngestTelemetry) else None

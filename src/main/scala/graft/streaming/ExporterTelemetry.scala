@@ -12,9 +12,10 @@ import graft.sources.{TailFleetOffset, TailOffset}
 /** The exporter's metrics ABOUT ITSELF — the `graft_*` block every real
   * Prometheus exporter appends to its exposition (node_exporter's
   * `node_scrape_*`, promhttp's handler counters): scrape traffic, micro-batch
-  * cadence, merge-state size, and — the one only the tail source can provide —
-  * the live backlog gauge, `graft_tail_backlog_bytes`: how many bytes sit in
-  * the log file(s) beyond what the stream has admitted. Under
+  * cadence, merge-state size and partition count, and — the one only the
+  * tail source can provide — the live backlog gauge,
+  * `graft_tail_backlog_bytes`: how many bytes sit in the log file(s)
+  * beyond what the stream has admitted. Under
   * `maxBytesPerTrigger` admission control this is the drain progress a
   * dashboard alerts on (backlog not shrinking = the exporter can't keep up);
   * it is computable ONLY because the source reports its true tail separately
@@ -45,6 +46,7 @@ final class ExporterTelemetry extends SelfTelemetry {
   @volatile private var lastBatchDurationMs = 0L
   @volatile private var lastBatchInputRows = 0L
   @volatile private var stateRows = 0L
+  @volatile private var statePartitions = 0L
   /** server path -> unadmitted bytes; "" = the single-file (label-free)
     * form. Swapped whole per progress event — a scrape never sees a
     * half-updated gauge set. */
@@ -63,6 +65,7 @@ final class ExporterTelemetry extends SelfTelemetry {
       Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
     lastBatchInputRows = p.numInputRows
     stateRows = p.stateOperators.map(_.numRowsTotal).sum
+    statePartitions = p.stateOperators.map(_.numShufflePartitions).maxOption.getOrElse(0L)
     p.sources.foreach { s =>
       for {
         end <- Option(s.endOffset)
@@ -109,6 +112,10 @@ final class ExporterTelemetry extends SelfTelemetry {
       "gauge", Seq(s"graft_last_batch_input_rows $lastBatchInputRows"))
     fam("graft_merge_state_rows", "Rows held by the keyed merge's state store",
       "gauge", Seq(s"graft_merge_state_rows $stateRows"))
+    // fixed when the checkpoint was first written: a resumed old checkpoint
+    // shows its original count here, not the session's default
+    fam("graft_merge_state_partitions", "State-store partitions of the keyed merge",
+      "gauge", Seq(s"graft_merge_state_partitions $statePartitions"))
     val backlogLines = backlog.toSeq.sortBy(_._1).map {
       case ("", v) => s"graft_tail_backlog_bytes $v"
       case (srv, v) =>

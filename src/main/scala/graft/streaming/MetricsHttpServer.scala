@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The pull-based `/metrics` endpoint (SURVEY §2.1 S4; reference
@@ -198,8 +199,10 @@ object MetricsServing {
     *
     *   - registry resume: seed from the warehouse snapshot and serve the
     *     resumed values BEFORE the first micro-batch lands;
-    *   - every batch feeds two sinks and up to three actions — persist so
-    *     the source range / parse / state-store replay runs once;
+    *   - with a JDBC sink every batch feeds two sinks and up to three
+    *     actions — persist so the source range / parse / state-store replay
+    *     runs once; without one the registry collect is the only action
+    *     and the batch is not cached;
     *   - a ledger-replayed batch is already IN the seeded snapshot: a
     *     RESUMED registry must skip the fold or double-count it, while a
     *     volatile (zeroed) registry must fold it — it lost it at restart
@@ -228,16 +231,20 @@ object MetricsServing {
     val writer = outs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[StreamingMerge.MergeOut], batchId: Long) =>
-        val evs = batch.persist()
+        // without a JDBC sink the registry collect is the batch's only
+        // action, and a cache would cost CPU and heap for nothing
+        val evs = if (jdbc.nonEmpty) batch.persist() else batch
         try {
           val applied = jdbc.forall(_.writeDelta(
             MetricsJdbcUpsert.ledgerSource(checkpointDir), evs, batchId))
           if (applied || !resumed) {
-            evs.filter(o => o.out != "record")
+            // a column predicate, so the record rows (which carry the
+            // query text) are dropped before deserialization
+            evs.filter(col("out") =!= "record")
               .collect().foreach(registry.observe)
             server.update(registry.render())
           }
-        } finally { evs.unpersist(); () }
+        } finally { if (jdbc.nonEmpty) evs.unpersist(); () }
       }
     // the freshness-vs-CPU knob (`--trigger <interval>`): a quiet tail under
     // the default ASAP trigger busy-polls latestOffset() per trigger

@@ -272,7 +272,10 @@ object StreamingMerge {
     * Scale shape: one cheap single-partition scan per progressing file,
     * then the shuffle into the id-partitioned state is where parallelism
     * happens — state spreads over `spark.sql.shuffle.partitions`
-    * regardless of fleet size. */
+    * regardless of fleet size. The daemons default that to the core count
+    * ([[graft.DaemonSession]]); every micro-batch runs and commits one
+    * state-store partition per shuffle partition, and a checkpoint keeps
+    * the count it was first written with. */
   def fleetMergeWithDelivery(fleetLines: DataFrame,
       timeoutMs: Long = 30 * 60 * 1000L): Dataset[MergeOut] =
     keyedMerge(deliveredEvents(fleetLines, fleet = true), timeoutMs) { (key, outs) =>

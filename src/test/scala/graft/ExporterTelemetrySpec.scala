@@ -57,6 +57,8 @@ class ExporterTelemetrySpec extends SparkSpec {
     assert(r0.contains("# TYPE graft_scrapes_total counter"))
     assert(r0.contains("graft_scrapes_total 0"))
     assert(r0.contains("graft_batches_total 0"))
+    assert(r0.contains("# TYPE graft_merge_state_partitions gauge"))
+    assert(r0.contains("graft_merge_state_partitions 0"))
     // no backlog series until a tail-source progress event arrives
     assert(r0.contains("# TYPE graft_tail_backlog_bytes gauge"))
     assert(metric(r0, "graft_tail_backlog_bytes").isEmpty)
@@ -88,7 +90,8 @@ class ExporterTelemetrySpec extends SparkSpec {
       }
       val drained = poll { b =>
         metric(b, "chlogexporter_read_lines").contains(10L) &&
-          metric(b, "graft_tail_backlog_bytes").contains(0L)
+          metric(b, "graft_tail_backlog_bytes").contains(0L) &&
+          metric(b, "graft_merge_state_partitions").exists(_ > 0L)
       }
       // the data families and the self block coexist in one exposition
       assert(drained.contains("""clickhouse_query_count{stmt_type="select"} 10"""))
@@ -99,6 +102,9 @@ class ExporterTelemetrySpec extends SparkSpec {
         s"the capped drain takes several micro-batches: $drained")
       assert(metric(drained, "graft_merge_state_rows").exists(_ >= 10L),
         "ten uncompleted queries sit in the merge state")
+      assert(metric(drained, "graft_merge_state_partitions").contains(
+        spark.conf.get("spark.sql.shuffle.partitions").toLong),
+        "the merge keeps one state-store partition per shuffle partition")
       // the scrape counter moves between consecutive scrapes (and counts itself)
       val s1 = metric(get(s"http://127.0.0.1:${server.boundPort}/metrics"),
         "graft_scrapes_total").get
