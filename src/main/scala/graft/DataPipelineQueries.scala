@@ -67,19 +67,19 @@ object DataPipelineQueries {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val d = docs(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-didx").toString
-      Dedup.saveIndex(Dedup.corpusIndex(d.filter(pmod(col("doc_id"), lit(3)) === 0)), path)
+      Dedup.CorpusFiles.save(Dedup.corpusIndex(d.filter(pmod(col("doc_id"), lit(3)) === 0)), path)
       // fold the batch and persist ONLY its O(batch) delta — the in-memory
       // refreshed index is deliberately discarded: the RELOAD over
       // base+delta is the artifact this row gates through (the in-memory
       // swap path is dedup_index_refresh's row and IndexDeltaSpec)
-      val loaded = Dedup.loadIndex(s, path)
+      val loaded = Dedup.CorpusFiles.load(s, path)
       val (_, delta, dropFoldCaches) =
         Dedup.refreshIndexTracked(loaded, d.filter(pmod(col("doc_id"), lit(3)) === 1))
-      Dedup.saveIndexDelta(delta, path)
+      Dedup.CorpusFiles.saveDelta(delta, path)
       dropFoldCaches()
       loaded.release()
       // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Dedup.loadIndex(s, path, pin = false)
+      val reloaded = Dedup.CorpusFiles.load(s, path, pin = false)
       val pinned = reloaded.truncated()
       reloaded.release()
       IndexFiles.delete(s, path)
@@ -112,16 +112,16 @@ object DataPipelineQueries {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val e = emb(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-eidx").toString
-      Similarity.saveEmbedIndex(
+      Similarity.EmbedFiles.save(
         Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0)), path)
-      val loaded = Similarity.loadEmbedIndex(s, path)
+      val loaded = Similarity.EmbedFiles.load(s, path)
       val (_, delta, dropFoldCaches) = Similarity.refreshEmbedIndexTracked(
         loaded, e.filter(pmod(col("vec_id"), lit(3)) === 1))
-      Similarity.saveEmbedIndexDelta(delta, path)
+      Similarity.EmbedFiles.saveDelta(delta, path)
       dropFoldCaches()
       loaded.release()
       // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Similarity.loadEmbedIndex(s, path, pin = false)
+      val reloaded = Similarity.EmbedFiles.load(s, path, pin = false)
       val pinned = reloaded.truncated()
       reloaded.release()
       IndexFiles.delete(s, path)
@@ -152,13 +152,13 @@ object DataPipelineQueries {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val e = emb(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-kgidx").toString
-      Similarity.saveKnnGraph(
+      Similarity.GraphFiles.save(
         Similarity.knnGraphIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0)), path)
       val holder = new graft.operators.RefreshableKnnGraph(
-        Similarity.loadKnnGraph(s, path))
+        Similarity.GraphFiles.load(s, path))
       holder.fold(e.filter(pmod(col("vec_id"), lit(3)) === 1), deltaPath = Some(path))
       // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Similarity.loadKnnGraph(s, path, pin = false)
+      val reloaded = Similarity.GraphFiles.load(s, path, pin = false)
       val pinned = reloaded.truncated()
       reloaded.release()
       IndexFiles.delete(s, path)
@@ -192,16 +192,16 @@ object DataPipelineQueries {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val e = emb(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-pqidx").toString
-      Similarity.savePqIndex(
+      Similarity.PqFiles.save(
         Similarity.pqIndexBuild(e.filter(pmod(col("vec_id"), lit(3)) === 0)), path)
-      val loaded = Similarity.loadPqIndex(s, path)
+      val loaded = Similarity.PqFiles.load(s, path)
       val (_, delta, dropFoldCaches) = Similarity.appendEncodePqTracked(
         loaded, e.filter(pmod(col("vec_id"), lit(3)) === 1))
-      Similarity.savePqIndexDelta(delta, path)
+      Similarity.PqFiles.saveDelta(delta, path)
       dropFoldCaches()
       loaded.release()
       // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Similarity.loadPqIndex(s, path, pin = false)
+      val reloaded = Similarity.PqFiles.load(s, path, pin = false)
       val pinned = reloaded.truncated()
       reloaded.release()
       IndexFiles.delete(s, path)
@@ -239,11 +239,11 @@ object DataPipelineQueries {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val d = docs(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-bm25").toString
-      TextAnalysis.saveBm25Stats(
+      TextAnalysis.Bm25Files.save(
         TextAnalysis.bm25Stats(d.filter(pmod(col("doc_id"), lit(3)) === 0)), path)
-      TextAnalysis.saveBm25StatsDelta(
+      TextAnalysis.Bm25Files.saveDelta(
         TextAnalysis.bm25Stats(d.filter(pmod(col("doc_id"), lit(3)) === 1)), path)
-      val stats = TextAnalysis.loadBm25Stats(s, path).localCheckpoint(true)
+      val stats = TextAnalysis.Bm25Files.load(s, path).localCheckpoint(true)
       IndexFiles.delete(s, path)
       TextAnalysis.bm25TopKWith(d, stats)
     }),

@@ -34,9 +34,9 @@ object DeltaProfile {
         var idx0: Dedup.CorpusIndex = null
         stage("build_base") { idx0 = Dedup.corpusIndex(
           d.filter(pmod(col("doc_id"), lit(3)) === 0)) }
-        stage("save_base")(Dedup.saveIndex(idx0, path))
+        stage("save_base")(Dedup.CorpusFiles.save(idx0, path))
         var loaded: Dedup.CorpusIndex = null
-        stage("load_base") { loaded = Dedup.loadIndex(spark, path) }
+        stage("load_base") { loaded = Dedup.CorpusFiles.load(spark, path) }
         var delta: Dedup.IndexDelta = null
         var drop: () => Unit = null
         stage("fold") {
@@ -44,11 +44,11 @@ object DeltaProfile {
             loaded, d.filter(pmod(col("doc_id"), lit(3)) === 1))
           delta = dd; drop = dr
         }
-        stage("save_delta")(Dedup.saveIndexDelta(delta, path))
+        stage("save_delta")(Dedup.CorpusFiles.saveDelta(delta, path))
         drop(); loaded.release()
         var pinned: Dedup.CorpusIndex = null
         stage("reload") {
-          val reloaded = Dedup.loadIndex(spark, path)
+          val reloaded = Dedup.CorpusFiles.load(spark, path)
           pinned = reloaded.truncated()
           reloaded.release()
         }
@@ -64,15 +64,15 @@ object DeltaProfile {
         var idx0: Similarity.KnnGraphIndex = null
         stage("build_base") { idx0 = Similarity.knnGraphIndex(
           e.filter(pmod(col("vec_id"), lit(3)) === 0)) }
-        stage("save_base")(Similarity.saveKnnGraph(idx0, path))
+        stage("save_base")(Similarity.GraphFiles.save(idx0, path))
         var holder: graft.operators.RefreshableKnnGraph = null
         stage("load_base") { holder = new graft.operators.RefreshableKnnGraph(
-          Similarity.loadKnnGraph(spark, path)) }
+          Similarity.GraphFiles.load(spark, path)) }
         stage("fold")(holder.fold(
           e.filter(pmod(col("vec_id"), lit(3)) === 1), deltaPath = Some(path)))
         var pinned: Similarity.KnnGraphIndex = null
         stage("reload") {
-          val reloaded = Similarity.loadKnnGraph(spark, path)
+          val reloaded = Similarity.GraphFiles.load(spark, path)
           pinned = reloaded.truncated()
           reloaded.release()
         }
@@ -87,9 +87,9 @@ object DeltaProfile {
         var idx0: Similarity.PqIndex = null
         stage("build_base") { idx0 = Similarity.pqIndexBuild(
           e.filter(pmod(col("vec_id"), lit(3)) === 0)) }
-        stage("save_base")(Similarity.savePqIndex(idx0, path))
+        stage("save_base")(Similarity.PqFiles.save(idx0, path))
         var loaded: Similarity.PqIndex = null
-        stage("load_base") { loaded = Similarity.loadPqIndex(spark, path) }
+        stage("load_base") { loaded = Similarity.PqFiles.load(spark, path) }
         var delta: Similarity.PqDelta = null
         var drop: () => Unit = null
         stage("fold") {
@@ -97,11 +97,11 @@ object DeltaProfile {
             loaded, e.filter(pmod(col("vec_id"), lit(3)) === 1))
           delta = dd; drop = dr
         }
-        stage("save_delta")(Similarity.savePqIndexDelta(delta, path))
+        stage("save_delta")(Similarity.PqFiles.saveDelta(delta, path))
         drop(); loaded.release()
         var pinned: Similarity.PqIndex = null
         stage("reload") {
-          val reloaded = Similarity.loadPqIndex(spark, path)
+          val reloaded = Similarity.PqFiles.load(spark, path)
           pinned = reloaded.truncated()
           reloaded.release()
         }
@@ -116,9 +116,9 @@ object DeltaProfile {
         var idx0: Similarity.EmbedIndex = null
         stage("build_base") { idx0 = Similarity.embedIndex(
           e.filter(pmod(col("vec_id"), lit(3)) === 0)) }
-        stage("save_base")(Similarity.saveEmbedIndex(idx0, path))
+        stage("save_base")(Similarity.EmbedFiles.save(idx0, path))
         var loaded: Similarity.EmbedIndex = null
-        stage("load_base") { loaded = Similarity.loadEmbedIndex(spark, path) }
+        stage("load_base") { loaded = Similarity.EmbedFiles.load(spark, path) }
         var delta: Similarity.EmbedDelta = null
         var drop: () => Unit = null
         stage("fold") {
@@ -126,11 +126,11 @@ object DeltaProfile {
             loaded, e.filter(pmod(col("vec_id"), lit(3)) === 1))
           delta = dd; drop = dr
         }
-        stage("save_delta")(Similarity.saveEmbedIndexDelta(delta, path))
+        stage("save_delta")(Similarity.EmbedFiles.saveDelta(delta, path))
         drop(); loaded.release()
         var pinned: Similarity.EmbedIndex = null
         stage("reload") {
-          val reloaded = Similarity.loadEmbedIndex(spark, path)
+          val reloaded = Similarity.EmbedFiles.load(spark, path)
           pinned = reloaded.truncated()
           reloaded.release()
         }

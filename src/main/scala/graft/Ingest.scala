@@ -73,7 +73,7 @@ object Ingest {
       // lagged one batch, and every fold appends an O(batch) DELTA — never
       // an O(index) rewrite — so restarts resume the index instead of
       // re-admitting history (StreamingDedup.novelNearCorpusIngest +
-      // Dedup.saveIndexDelta/loadIndex; compact with Dedup.compactIndex)
+      // Dedup.CorpusFiles: O(batch) deltas, load, compact)
       case "--near-index" :: v :: t => loop(t, c.copy(nearIndex = Some(v)))
       case "--near-threshold" :: v :: t =>
         loop(t, c.copy(nearThreshold = v.toDouble))
@@ -84,11 +84,11 @@ object Ingest {
         loop(t, c.copy(nearCompactEvery = v.toInt))
       // LIVING BM25 corpus statistics over the admitted population: each
       // batch folds an O(batch) delta keyed on the replay-stable batch id
-      // (TextAnalysis.saveBm25StatsDeltaAt); loadBm25Stats over
+      // (TextAnalysis.Bm25Files.saveDeltaAt); Bm25Files.load over
       // base+deltas feeds bm25TopKWith between runs
       case "--bm25-stats" :: v :: t => loop(t, c.copy(bm25Stats = Some(v)))
       // compact the stats delta chain every N landed deltas (0 = never) —
-      // --near-compact-every's stats twin (TextAnalysis.compactBm25Stats);
+      // --near-compact-every's stats twin (TextAnalysis.Bm25Files.compact);
       // bounds the delta dirs and the restart load's union
       case "--bm25-compact-every" :: v :: t =>
         loop(t, c.copy(bm25CompactEvery = v.toInt))
@@ -167,17 +167,17 @@ object Ingest {
     * the base must exist before the first O(batch) delta lands on it).
     * The gate runs in DURABLE mode: staged admissions and per-fold deltas
     * live under the index path, so a crash at any point resumes without
-    * re-admitting history ([[graft.streaming.StreamingDedup.IngestGate]]). */
+    * re-admitting history ([[graft.streaming.IngestGate]]). */
   private[graft] def nearGate(spark: SparkSession,
-      config: Config): Option[graft.streaming.StreamingDedup.IngestGate] =
+      config: Config): Option[graft.streaming.IngestGate] =
     config.nearIndex.map { path =>
       import graft.operators.{Dedup, RefreshableCorpusIndex}
       val idx0 =
-        if (Dedup.indexExists(spark, path)) Dedup.loadIndex(spark, path)
+        if (Dedup.CorpusFiles.exists(spark, path)) Dedup.CorpusFiles.load(spark, path)
         else {
           import spark.implicits._
           val empty = Dedup.corpusIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"))
-          Dedup.saveIndex(empty, path)
+          Dedup.CorpusFiles.save(empty, path)
           empty
         }
       graft.streaming.StreamingDedup.novelNearCorpusIngest(
@@ -199,8 +199,8 @@ object Ingest {
     val gate = nearGate(spark, config)
     // stats bootstrap: deltas fold onto a base; zeros are the additive
     // identity, so a fresh path starts from the empty-corpus row
-    config.bm25Stats.filterNot(graft.operators.TextAnalysis.textStatsExist(spark, _))
-      .foreach(p => graft.operators.TextAnalysis.saveBm25Stats(
+    config.bm25Stats.filterNot(graft.operators.TextAnalysis.Bm25Files.exists(spark, _))
+      .foreach(p => graft.operators.TextAnalysis.Bm25Files.save(
         graft.operators.TextAnalysis.emptyBm25Stats(spark), p))
     // ops surface: /metrics (graft_ingest_* self-telemetry) + /healthz
     val telemetry =

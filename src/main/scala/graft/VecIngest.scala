@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{IndexMaintenance, RefreshableEmbedIndex, RefreshableKnnGraph, RefreshablePqIndex, Similarity}
-import graft.streaming.{OutputCompaction, StreamingSimilarity}
+import graft.streaming.{IngestGate, OutputCompaction, StreamingSimilarity}
 
 /** The vector-ingest daemon — [[Ingest]]'s embedding-side sibling and the
   * runnable surface for the vector gate family: watch a directory for
@@ -144,15 +144,15 @@ object VecIngest {
     /** Novelty gate against the living embed index: load the persisted
       * base+deltas, else bootstrap an empty-corpus base (everything is
       * novel until folds accumulate; deltas need a base to fold onto). */
-    private[graft] val embedGate: StreamingSimilarity.EmbedIngestGate = {
+    private[graft] val embedGate: IngestGate = {
       val idx0 =
-        if (Similarity.embedIndexExists(spark, c.index))
-          Similarity.loadEmbedIndex(spark, c.index)
+        if (Similarity.EmbedFiles.exists(spark, c.index))
+          Similarity.EmbedFiles.load(spark, c.index)
         else {
           import spark.implicits._
           val empty = Similarity.embedIndex(
             Seq.empty[(Long, Int, Seq[Float])].toDF("vec_id", "label", "embedding"))
-          Similarity.saveEmbedIndex(empty, c.index)
+          Similarity.EmbedFiles.save(empty, c.index)
           empty
         }
       val ref = new RefreshableEmbedIndex(idx0)
@@ -174,8 +174,8 @@ object VecIngest {
         maintainEvery = c.maintainEvery, maintain = monitor)
     }
 
-    private var pqGate: Option[StreamingSimilarity.PqIngestGate] = None
-    private var graphGate: Option[StreamingSimilarity.KnnGraphIngestGate] = None
+    private var pqGate: Option[IngestGate] = None
+    private var graphGate: Option[IngestGate] = None
 
     private[graft] def embedDecisions: Seq[IndexMaintenance.Decision] =
       embedGate.decisions
@@ -208,23 +208,23 @@ object VecIngest {
       OutputCompaction.readIfAny(spark, c.out)
         .map(_.count()).getOrElse(0L)
 
-    private def ensurePq(): Option[StreamingSimilarity.PqIngestGate] =
+    private def ensurePq(): Option[IngestGate] =
       c.pqIndex.flatMap { p =>
         pqGate.orElse {
           // below the bootstrap threshold with no persisted base yet:
           // stage nothing — the crossing batch's bootstrap trains over
           // everything landed so far, so nothing is lost by waiting
-          if (!Similarity.pqIndexExists(spark, p) && cumAdmitted < c.bootstrapMin) None
+          if (!Similarity.PqFiles.exists(spark, p) && cumAdmitted < c.bootstrapMin) None
           else {
             val ref =
-              if (Similarity.pqIndexExists(spark, p))
-                new RefreshablePqIndex(Similarity.loadPqIndex(spark, p))
+              if (Similarity.PqFiles.exists(spark, p))
+                new RefreshablePqIndex(Similarity.PqFiles.load(spark, p))
               else {
                 // train over EVERYTHING admitted so far (this batch
                 // already landed), not just the crossing batch — the
                 // bootstrap codebook sees the whole accumulated population
                 val b = Similarity.pqIndexBuild(corpus())
-                Similarity.savePqIndex(b, p)
+                Similarity.PqFiles.save(b, p)
                 val r = new RefreshablePqIndex(b)
                 // the holder owns CHECKPOINTED copies; the build's pins
                 // root cached plans on the MUTABLE out path and must not
@@ -245,17 +245,17 @@ object VecIngest {
         }
       }
 
-    private def ensureGraph(): Option[StreamingSimilarity.KnnGraphIngestGate] =
+    private def ensureGraph(): Option[IngestGate] =
       c.graphIndex.flatMap { p =>
         graphGate.orElse {
-          if (!Similarity.knnGraphExists(spark, p) && cumAdmitted < c.bootstrapMin) None
+          if (!Similarity.GraphFiles.exists(spark, p) && cumAdmitted < c.bootstrapMin) None
           else {
             val ref =
-              if (Similarity.knnGraphExists(spark, p))
-                new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, p))
+              if (Similarity.GraphFiles.exists(spark, p))
+                new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, p))
               else {
                 val b = Similarity.knnGraphIndex(corpus(), centroidMod = c.centroidMod)
-                Similarity.saveKnnGraph(b, p)
+                Similarity.GraphFiles.save(b, p)
                 val r = new RefreshableKnnGraph(b)
                 b.release() // same mutable-path pin discipline as the PQ bootstrap
                 r
@@ -281,10 +281,10 @@ object VecIngest {
     // (A fresh path stays lazy: the bootstrap needs admissions first.)
     locally {
       c.pqIndex.foreach { p =>
-        if (Similarity.pqIndexExists(spark, p)) { ensurePq(); () }
+        if (Similarity.PqFiles.exists(spark, p)) { ensurePq(); () }
       }
       c.graphIndex.foreach { p =>
-        if (Similarity.knnGraphExists(spark, p)) { ensureGraph(); () }
+        if (Similarity.GraphFiles.exists(spark, p)) { ensureGraph(); () }
       }
     }
 

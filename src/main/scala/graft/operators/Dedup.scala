@@ -1219,7 +1219,7 @@ object Dedup {
 
   /** Precomputed EXISTING-corpus side of the stream-vs-corpus NEAR-dup
     * novelty gate ([[bestMatchAgainst]] /
-    * [[graft.streaming.StreamingDedup.novelNearCorpus]]): the exact-tier
+    * [[graft.streaming.StreamingDedup.novelNearCorpusIngest]]): the exact-tier
     * fingerprint table (16-byte md5 → the group's minimum member id), the
     * dup-group representatives' shingle sets (verify side), and their
     * capped LSH band buckets (candidate side). All three are pinned — at
@@ -1370,7 +1370,7 @@ object Dedup {
     * pure append), the rep re-key map (collision-sized), and the refreshed
     * dropped-bucket size table (tiny — degenerate buckets only; the one
     * non-append component, so each delta carries the whole refreshed
-    * table and the latest wins at load). [[saveIndexDelta]] writes exactly
+    * table and the latest wins at load). [[CorpusFiles]]`.saveDelta` writes exactly
     * this, which is what makes per-fold persistence O(batch) instead of
     * the O(index) full-snapshot rewrite. */
   final case class IndexDelta private[operators] (
@@ -1562,7 +1562,7 @@ object Dedup {
   // re-materialized every component (O(index) memory writes per batch —
   // the same cost class the persisted deltas removed from disk). Plan
   // depth is bounded by periodic in-memory compaction (materialize the
-  // view into one segment), exactly the on-disk `compactIndex` discipline.
+  // view into one segment), exactly the on-disk compaction discipline.
 
   /** One fold's fresh, batch-sized pieces, computed against the current
     * VIEW (same arithmetic as [[refreshIndexCore]] — the collide split,
@@ -1631,7 +1631,7 @@ object Dedup {
     * union per component, one broadcast re-key by the composed map, bucket
     * rows filtered once by the CURRENT (checkpointed, tiny) oversized set
     * — sizes only grow, so the latest drop set subsumes every earlier one,
-    * the same argument as [[loadIndex]]'s replay. */
+    * the same argument as [[CorpusFiles]]' replay. */
   private[operators] def segmentedView(
       fps: Seq[DataFrame], sets: Seq[DataFrame], buckets: Seq[DataFrame],
       oversized: DataFrame, remap: DataFrame,
@@ -1654,175 +1654,56 @@ object Dedup {
       .unionByName(idx.oversized)
       .groupBy("band", "sig").agg(sum("n").as("n"))
 
-  // ──────────────────── DELTA-STRUCTURED PERSISTENCE ────────────────────
-  // The persisted index is LSM-shaped so a fold loop writes O(batch) bytes
-  // per fold, never O(index) — the reference's tail-follow is incremental-
-  // by-construction (main.go:100-106); this is its index-side analog, and
-  // the same base+append+compact discipline MetricsJdbcAppend proves for
-  // the metric sink. Layout under `path` (any Hadoop-FS scheme):
-  //
-  //   base_v<V>/{fps,sets,buckets,fp_bloom,bucket_bloom,oversized,meta}
-  //   delta_<N>/{fresh_fps,fresh_sets,fresh_buckets,fp_bloom_words,
-  //              bucket_bloom_words,remap,oversized}
-  //
-  // meta carries the knobs plus `last_delta` — the highest delta id that
-  // base already incorporates. loadIndex reads the HIGHEST base version and
-  // folds only deltas with id > last_delta, so a compaction crash between
-  // "new base published" and "dead files swept" is ignored-by-construction,
-  // never double-applied. Every numbered directory publishes by atomic
-  // rename from a `.tmp` sibling; `.tmp` leftovers are invisible to loads
-  // and overwritten by the next writer. Single-writer contract (one ingest
-  // loop owns a path); readers are safe at any moment.
-
-  private val BaseComponents =
-    Seq("fps", "sets", "buckets", "fp_bloom", "bucket_bloom", "oversized")
-  private val DeltaComponents =
-    Seq("fresh_fps", "fresh_sets", "fresh_buckets", "fp_bloom_words",
-      "bucket_bloom_words", "remap", "oversized")
-
-  /** True when `path` holds a persisted index (some published base). */
-  def indexExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    IndexFiles.numbered(spark, path, "base_v").nonEmpty
-
-  /** The delta-id HIGH-WATER MARK: the max over deltas on disk AND the
-    * latest base's `last_delta` stamp. New deltas must number ABOVE both —
-    * compaction sweeps the folded delta files but its base remembers them
-    * via the stamp, and a post-compaction fold numbered from the (now
-    * empty) disk listing alone would land BELOW the stamp and be invisible
-    * to every load. */
-  private[graft] def deltaHighWater(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val onDisk =
-      IndexFiles.numbered(spark, path, "delta_").map(_._1).maxOption.getOrElse(0L)
-    val stamped = IndexFiles.numbered(spark, path, "base_v").lastOption
-      .map { case (_, p) => IndexFiles.readMeta(spark, p.toString)("last_delta").toLong }
-      .getOrElse(0L)
-    math.max(onDisk, stamped)
-  }
-
-  /** PERSIST a full [[CorpusIndex]] snapshot as a new base version — the
-    * bootstrap write (and [[compactIndex]]'s internals). The snapshot is
-    * stamped `last_delta` = the highest delta currently at `path`, i.e. it
-    * asserts "this index value already incorporates every persisted fold"
-    * — true for a fresh path (no deltas), for a [[RefreshableCorpusIndex]]
-    * that folded-and-[[saveIndexDelta]]ed in lockstep, and for a compaction
-    * load. Superseded base versions are pruned after the atomic publish. */
-  def saveIndex(idx: CorpusIndex, path: String): Unit = {
-    val spark = idx.fps.sparkSession
-    val lastDelta = deltaHighWater(spark, path)
-    val v = IndexFiles.numbered(spark, path, "base_v")
-      .map(_._1).maxOption.getOrElse(0L) + 1
-    val tmp = s"$path/base_v$v.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(idx.frames.zip(BaseComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.writeMetaKv(spark, tmp, Seq(
+  /** The corpus index's persisted artifact ([[IndexFiles.Artifact]]). The
+    * replay re-keys by each delta's remap, appends its fresh fps/sets/
+    * bucket rows, ORs its Bloom words in, and applies the final
+    * dropped-bucket filter ONCE at the end: a bucket's true size only
+    * grows, so the latest `oversized` table subsumes every earlier drop,
+    * and filter-then-rekey commutes with rekey-then-filter because
+    * re-keying never touches the bucket key. Gate decisions and later
+    * [[refreshIndex]]es equal the in-memory original's (spec-pinned), and
+    * the `dedup_index_delta` registry row pins the gate output against the
+    * DuckDB oracle through a base + delta round trip. */
+  private[graft] object CorpusFiles extends IndexFiles.Artifact[CorpusIndex, IndexDelta](
+      "corpus index",
+      Seq("fps", "sets", "buckets", "fp_bloom", "bucket_bloom", "oversized"),
+      Seq("fresh_fps", "fresh_sets", "fresh_buckets", "fp_bloom_words",
+        "bucket_bloom_words", "remap", "oversized")) {
+    protected def baseFrames(idx: CorpusIndex): Seq[DataFrame] = idx.frames
+    protected def meta(idx: CorpusIndex): Seq[(String, String)] = Seq(
       "bucket_cap" -> idx.bucketCap.toString,
-      "log_bloom_bits" -> idx.logBloomBits.toString,
-      "last_delta" -> lastDelta.toString))
-    IndexFiles.publish(spark, tmp, s"$path/base_v$v")
-    IndexFiles.numbered(spark, path, "base_v").filter(_._1 < v)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
-  }
+      "log_bloom_bits" -> idx.logBloomBits.toString)
+    protected def deltaFrames(delta: IndexDelta): Seq[DataFrame] = delta.frames
+    override protected def detach(loaded: CorpusIndex): CorpusIndex = loaded.truncated()
 
-  /** PERSIST one fold's [[IndexDelta]] as the next numbered delta — the
-    * O(batch) per-fold write. Returns the assigned delta id. */
-  def saveIndexDelta(delta: IndexDelta, path: String): Long = {
-    val spark = delta.freshFps.sparkSession
-    val n = deltaHighWater(spark, path) + 1
-    val tmp = s"$path/delta_$n.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(delta.frames.zip(DeltaComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.publish(spark, tmp, s"$path/delta_$n")
-    n
-  }
-
-  /** Load the persisted index: the highest base version REPLAYED through
-    * every newer delta, in id order — re-key by each delta's remap, append
-    * its fresh fps/sets/bucket rows, OR its Bloom words in, and apply the
-    * final dropped-bucket filter ONCE at the end (a bucket's true size only
-    * grows, so the latest `oversized` table subsumes every earlier drop;
-    * filter-then-rekey commutes with rekey-then-filter because re-keying
-    * never touches the bucket key). Gate decisions and subsequent
-    * [[refreshIndex]]es equal the in-memory original's — spec-pinned
-    * contents-identical across fold/save/load/compact, and the
-    * `dedup_index_delta` registry row pins the gate output against the
-    * DuckDB oracle through a full base+delta round trip. */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String): CorpusIndex =
-    loadIndex(spark, path, pin = true)
-
-  /** [[loadIndex]] with the component pinning optional: a caller that
-    * immediately `truncated()`s the loaded index (the delta registry rows'
-    * reload, [[compactIndex]]) writes every component to executor storage
-    * TWICE under the pinned load — once filling the pin's cache blocks,
-    * once for the checkpoint RDD the truncation keeps. `pin = false` skips
-    * the doomed pin; callers that QUERY the loaded index repeatedly (the
-    * daemons' startup load, the gate rows' first load whose components the
-    * fold joins against more than once) keep the default. */
-  private[graft] def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, pin: Boolean): CorpusIndex = {
-    val bases = IndexFiles.numbered(spark, path, "base_v")
-    require(bases.nonEmpty, s"no persisted corpus index at $path")
-    val base = bases.last._2.toString
-    val meta = IndexFiles.readMeta(spark, base)
-    val lastDelta = meta("last_delta").toLong
-    val deltas = IndexFiles.numbered(spark, path, "delta_").filter(_._1 > lastDelta)
-    def rd(dir: String, name: String) = spark.read.parquet(s"$dir/$name")
-
-    var fps = rd(base, "fps")
-    var sets = rd(base, "sets")
-    var bucketRows = rd(base, "buckets")
-    var fpW = rd(base, "fp_bloom")
-    var bW = rd(base, "bucket_bloom")
-    var oversized = rd(base, "oversized")
-    deltas.foreach { case (_, p) =>
-      val d = p.toString
-      val rekey = rekeyWith(rd(d, "remap")) _
-      fps = rekey(fps, "match_id").unionByName(rd(d, "fresh_fps"))
-      sets = rekey(sets, "doc_id").unionByName(rd(d, "fresh_sets"))
-      bucketRows = rekey(bucketRows, "doc_id").unionByName(rd(d, "fresh_buckets"))
-      fpW = fpW.unionAll(rd(d, "fp_bloom_words"))
-      bW = bW.unionAll(rd(d, "bucket_bloom_words"))
-      oversized = rd(d, "oversized")
+    protected def replay(c: IndexFiles.Chain,
+        pin: DataFrame => DataFrame): CorpusIndex = {
+      var fps = c.base("fps")
+      var sets = c.base("sets")
+      var bucketRows = c.base("buckets")
+      var fpW = c.base("fp_bloom")
+      var bW = c.base("bucket_bloom")
+      var oversized = c.base("oversized")
+      c.deltas.foreach { d =>
+        val rekey = rekeyWith(d("remap")) _
+        fps = rekey(fps, "match_id").unionByName(d("fresh_fps"))
+        sets = rekey(sets, "doc_id").unionByName(d("fresh_sets"))
+        bucketRows = rekey(bucketRows, "doc_id").unionByName(d("fresh_buckets"))
+        fpW = fpW.unionAll(d("fp_bloom_words"))
+        bW = bW.unionAll(d("bucket_bloom_words"))
+        oversized = d("oversized")
+      }
+      val oversizedP = pin(oversized)
+      val buckets =
+        if (c.deltas.isEmpty) pin(bucketRows) // base buckets are already capped
+        else pin(bucketRows.join(
+          broadcast(oversizedP.select("band", "sig")), Seq("band", "sig"), "left_anti"))
+      def orWords(df: DataFrame): DataFrame =
+        if (c.deltas.isEmpty) df
+        else df.groupBy("w").agg(bit_or(col("bits")).as("bits"))
+      CorpusIndex(pin(fps), pin(sets), buckets, pin(orWords(fpW)), pin(orWords(bW)),
+        c.meta("log_bloom_bits").toInt, oversizedP, c.meta("bucket_cap").toInt)
     }
-    val pinF: DataFrame => DataFrame =
-      if (pin) PinnedCaches.pin else identity
-    val oversizedP = pinF(oversized)
-    val buckets =
-      if (deltas.isEmpty) pinF(bucketRows) // base buckets are already capped
-      else pinF(bucketRows.join(
-        broadcast(oversizedP.select("band", "sig")), Seq("band", "sig"), "left_anti"))
-    def orWords(df: DataFrame): DataFrame =
-      if (deltas.isEmpty) df
-      else df.groupBy("w").agg(bit_or(col("bits")).as("bits"))
-    CorpusIndex(pinF(fps), pinF(sets), buckets, pinF(orWords(fpW)), pinF(orWords(bW)),
-      meta("log_bloom_bits").toInt, oversizedP,
-      meta("bucket_cap").toInt)
-  }
-
-  /** COMPACT the persisted base+deltas into one new base snapshot — the
-    * LSM compaction step that bounds load-time delta replay (run it every
-    * K folds or on a size trigger, like [[graft.streaming.MetricsJdbcAppend]]'s
-    * `compact`). Loads, materializes OFF the source files
-    * ([[CorpusIndex.truncated]] — the new snapshot must not lazily read
-    * directories the sweep is about to delete), publishes the snapshot, and
-    * sweeps the folded deltas. Contents-identical to the uncompacted load
-    * (spec-pinned); crash-safe at every boundary — the base publishes by
-    * atomic rename, and an interrupted sweep leaves only dead files that
-    * the `last_delta` rule skips. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val folded = deltaHighWater(spark, path)
-    // pin = false: the load is immediately checkpointed and discarded, so
-    // pinning would write every component to executor storage twice
-    val loaded = loadIndex(spark, path, pin = false)
-    val snap = loaded.truncated()
-    loaded.release()
-    saveIndex(snap, path) // stamps last_delta = folded (single-writer)
-    IndexFiles.numbered(spark, path, "delta_").filter(_._1 <= folded)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
   }
 
   /** Best corpus match per incoming document — the shared core of the

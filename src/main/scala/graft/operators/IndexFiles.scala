@@ -1,15 +1,14 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Hadoop-FS plumbing shared by the corpus/embed index persistence
-  * ([[Dedup.saveIndex]]/[[Similarity.saveEmbedIndex]], their delta forms,
-  * and the ingest gates' durable staging): numbered-directory listing
-  * (`base_v<V>` / `delta_<N>` / `batch=<B>`), atomic tmp-then-rename
-  * publication, recursive delete. Everything goes through the path's own
-  * `FileSystem`, never `java.io.File` — these artifacts live on
-  * `s3a://`-like stores in a real deployment. */
+/** Hadoop-FS plumbing shared by the persisted index artifacts
+  * ([[IndexFiles.Artifact]]), the ingest gates' durable staging and the
+  * output compaction: numbered-directory listing, manifest-last
+  * publication, writer fencing, recursive delete. Everything goes through
+  * the path's own `FileSystem`, never `java.io.File` — these artifacts
+  * live on `s3a://`-like stores in a real deployment. */
 private[graft] object IndexFiles {
 
   def fs(spark: SparkSession, path: String): FileSystem =
@@ -313,5 +312,178 @@ private[graft] object IndexFiles {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     Await.result(Future.traverse(work)(w => Future(w())), Duration.Inf)
+  }
+
+  // ──────────────────── THE PERSISTED INDEX ARTIFACT ────────────────────
+
+  private val BasePrefix = "base_v"
+  private val DeltaPrefix = "delta_"
+  private val StampKey = "last_delta"
+
+  /** Published base versions at `path`, ascending. */
+  def bases(spark: SparkSession, path: String): Seq[(Long, Path)] =
+    numbered(spark, path, BasePrefix)
+
+  /** The latest base's `last_delta` stamp (0 without a base). */
+  def stamp(spark: SparkSession, path: String): Long =
+    bases(spark, path).lastOption
+      .map { case (_, p) => readMeta(spark, p.toString)(StampKey).toLong }
+      .getOrElse(0L)
+
+  /** The LIVE delta chain: published deltas above the latest stamp, in
+    * replay order. Dead deltas (≤ stamp) a crashed sweep left are not in
+    * it. */
+  def liveDeltas(spark: SparkSession, path: String): Seq[(Long, Path)] = {
+    val s = stamp(spark, path)
+    numbered(spark, path, DeltaPrefix).filter(_._1 > s)
+  }
+
+  /** The delta-id HIGH-WATER mark: the max over deltas on disk AND the
+    * latest stamp. A new delta numbers above both — the base save sweeps
+    * the deltas it swallowed, so a fold numbered from the disk listing
+    * alone would land at or below the stamp and be invisible to every
+    * load. */
+  def highWater(spark: SparkSession, path: String): Long =
+    math.max(numbered(spark, path, DeltaPrefix).map(_._1).maxOption.getOrElse(0L),
+      stamp(spark, path))
+
+  /** What a family's replay fold reads: the base's components and meta,
+    * and each live delta's components, in id order. */
+  final case class Chain(base: String => DataFrame, meta: Map[String, String],
+      deltas: Seq[String => DataFrame])
+
+  /** THE PERSISTED INDEX ARTIFACT — the one on-disk format of every index
+    * family: corpus ([[Dedup.CorpusFiles]]), embed
+    * ([[Similarity.EmbedFiles]]), kNN graph ([[Similarity.GraphFiles]]),
+    * PQ ([[Similarity.PqFiles]]) and BM25 stats
+    * ([[TextAnalysis.Bm25Files]]). It is LSM-shaped, so a fold loop
+    * writes O(batch) bytes per fold, never O(index) — the reference's
+    * tail-follow is incremental by construction (main.go:100-106), and this
+    * is its index-side analog, with the same base + append + compact
+    * discipline [[graft.streaming.MetricsJdbcAppend]] uses for the metric
+    * sink. Layout under `path` (any Hadoop-FS scheme):
+    *
+    *   base_v<V>/<base component>/ …, meta_kv, _manifest
+    *   delta_<N>/<delta component>/ …, _manifest
+    *
+    * A family declares only its component names, its meta keys and its
+    * replay fold (the base plus the live delta chain into its index
+    * value). Everything else lives here, under these crash rules:
+    *
+    *   - `meta_kv` carries the family's knobs plus `last_delta`: the
+    *     highest delta id the base already incorporates. A load reads the
+    *     HIGHEST base and replays only deltas with id > `last_delta`, in id
+    *     order, so a delta the stamp swallowed is ignored by construction,
+    *     never applied twice;
+    *   - deltas number above the [[highWater]] mark;
+    *   - every numbered directory is written as a `.tmp` sibling and
+    *     published manifest-last ([[publish]]). `.tmp` and unmarked
+    *     directories are invisible to loads ([[numbered]]) and are
+    *     overwritten by the next writer of that number;
+    *   - a base save stamps `last_delta` = the high-water mark (it asserts
+    *     that the saved value incorporates every persisted fold), publishes,
+    *     prunes the superseded bases and then sweeps the deltas its stamp
+    *     swallowed. A crash before the sweep leaves only dead deltas;
+    *     compaction is "load, truncate, save base";
+    *   - one writer per path, fenced by [[claimWriter]]; readers are safe
+    *     at any moment.
+    *
+    * Bases written before `meta_kv` keep their knobs in a 1-row parquet
+    * `meta` directory, which [[readMeta]] still reads. */
+  abstract class Artifact[I, D](kind: String, baseComponents: Seq[String],
+      deltaComponents: Seq[String]) {
+    /** The base components of `idx`, in `baseComponents` order. */
+    protected def baseFrames(idx: I): Seq[DataFrame]
+    /** The family's knobs (the stamp is added here). */
+    protected def meta(idx: I): Seq[(String, String)]
+    /** The delta components of `delta`, in `deltaComponents` order. */
+    protected def deltaFrames(delta: D): Seq[DataFrame]
+    /** The replay fold: the base plus the live delta chain into the index
+      * value, each kept component passed through `pin`. */
+    protected def replay(chain: Chain, pin: DataFrame => DataFrame): I
+    /** Compaction's truncation: materialize a loaded value off the delta
+      * files the base save sweeps. Plain frames need none. */
+    protected def detach(loaded: I): I = loaded
+
+    /** True when `path` holds a published base. */
+    def exists(spark: SparkSession, path: String): Boolean =
+      bases(spark, path).nonEmpty
+
+    /** Persist `idx` as the next base version (see the crash rules). */
+    def save(idx: I, path: String): Unit = {
+      val frames = baseFrames(idx)
+      val spark = frames.head.sparkSession
+      val stamped = highWater(spark, path)
+      val v = bases(spark, path).map(_._1).maxOption.getOrElse(0L) + 1
+      write(spark, path, s"$BasePrefix$v", baseComponents.zip(frames),
+        meta(idx) :+ (StampKey -> stamped.toString))
+      bases(spark, path).filter(_._1 < v)
+        .foreach { case (_, p) => delete(spark, p.toString) }
+      numbered(spark, path, DeltaPrefix).filter(_._1 <= stamped)
+        .foreach { case (_, p) => delete(spark, p.toString) }
+    }
+
+    /** Persist one fold's O(batch) delta as the next numbered delta.
+      * Returns the assigned id. */
+    def saveDelta(delta: D, path: String): Long = {
+      val frames = deltaFrames(delta)
+      val n = highWater(frames.head.sparkSession, path) + 1
+      write(frames.head.sparkSession, path, s"$DeltaPrefix$n",
+        deltaComponents.zip(frames), Nil)
+      n
+    }
+
+    /** Persist a delta under a REPLAY-STABLE id (a foreachBatch batchId + 1,
+      * so ids start above the empty-base stamp 0). A delta that depends
+      * only on its batch is then replay-safe without staging: a replayed
+      * batch overwrites identical bytes, and a replay whose id a base
+      * already swallowed (id ≤ stamp) skips, because its content is in that
+      * base. */
+    def saveDeltaAt(delta: D, path: String, id: Long): Option[Long] = {
+      val frames = deltaFrames(delta)
+      val spark = frames.head.sparkSession
+      if (id <= stamp(spark, path)) None
+      else {
+        write(spark, path, s"$DeltaPrefix$id", deltaComponents.zip(frames), Nil)
+        Some(id)
+      }
+    }
+
+    /** Load the highest base replayed through its live delta chain, each
+      * component pinned. */
+    def load(spark: SparkSession, path: String): I = load(spark, path, pin = true)
+
+    /** [[load]] with the pinning optional: a caller that immediately
+      * truncates the loaded value (compaction, the registry's delta rows)
+      * would otherwise write every component to executor storage twice —
+      * once for the pin, once for the checkpoint. */
+    def load(spark: SparkSession, path: String, pin: Boolean): I = {
+      val bs = bases(spark, path)
+      require(bs.nonEmpty, s"no persisted $kind at $path")
+      val base = bs.last._2.toString
+      val kv = readMeta(spark, base)
+      def reader(dir: String): String => DataFrame =
+        name => spark.read.parquet(s"$dir/$name")
+      val live = numbered(spark, path, DeltaPrefix)
+        .filter(_._1 > kv(StampKey).toLong)
+      replay(Chain(reader(base), kv, live.map { case (_, p) => reader(p.toString) }),
+        if (pin) PinnedCaches.pin else identity)
+    }
+
+    /** COMPACT the base + delta chain into one new base — bounds what a
+      * restart replays. Contents-identical to the uncompacted load. */
+    def compact(spark: SparkSession, path: String): Unit =
+      save(detach(load(spark, path, pin = false)), path)
+
+    private def write(spark: SparkSession, path: String, name: String,
+        components: Seq[(String, DataFrame)], kv: Seq[(String, String)]): Unit = {
+      val tmp = s"$path/$name.tmp"
+      delete(spark, tmp)
+      inParallel(components.map { case (c, df) =>
+        () => sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$c")
+      })
+      if (kv.nonEmpty) writeMetaKv(spark, tmp, kv)
+      publish(spark, tmp, s"$path/$name")
+    }
   }
 }

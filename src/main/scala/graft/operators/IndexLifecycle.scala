@@ -16,15 +16,15 @@ import org.apache.spark.sql.DataFrame
   *     tables, whose size is capacity-bounded by `logBloomBits`, a
   *     build-time knob constant in corpus growth), optionally persists the
   *     same pieces as the fold's O(batch) [[Dedup.IndexDelta]]
-  *     (`deltaPath`; a restart [[Dedup.loadIndex]]es base+deltas instead
-  *     of rebuilding), and publishes a LAZY VIEW over the segments
+  *     (`deltaPath`; a restart loads base+deltas through
+  *     [[Dedup.CorpusFiles]] instead of rebuilding), and publishes a LAZY VIEW over the segments
   *     ([[Dedup.segmentedView]]: union per component, one broadcast
   *     re-key, one dropped-bucket anti-join) through one volatile write —
   *     a concurrent reader (a streaming micro-batch gating against
   *     [[current]]) sees only complete, checkpointed inputs;
   *   - every `maxSegments` folds the holder COMPACTS in memory
   *     (materialize the view into one segment — the same discipline as the
-  *     on-disk [[Dedup.compactIndex]]), bounding both view plan depth (the
+  *     on-disk [[Dedup.CorpusFiles.compact]]), bounding both view plan depth (the
   *     OOM the old checkpoint-everything fold existed to prevent) and the
   *     segment count, and amortizing the one O(index) re-materialization
   *     across that many O(batch) folds;
@@ -97,7 +97,7 @@ final class RefreshableCorpusIndex(initial: Dedup.CorpusIndex,
   /** Fold `newDocs` in and atomically publish the refreshed view.
     * Synchronized: concurrent folders would otherwise both refresh the same
     * base and lose one batch. When `deltaPath` is set, the fold's O(batch)
-    * delta lands there BEFORE the swap ([[Dedup.saveIndexDelta]] is
+    * delta lands there BEFORE the swap ([[Dedup.CorpusFiles.saveDelta]] is
     * content-idempotent under replay: re-folding already-indexed docs
     * yields an empty-fresh delta). Returns the published index. */
   def fold(newDocs: DataFrame, releaseOld: Boolean = true,
@@ -139,7 +139,7 @@ final class RefreshableCorpusIndex(initial: Dedup.CorpusIndex,
       // the persisted delta carries THIS fold's pieces + the refreshed
       // dropped-bucket table
       deltaPath.foreach { p =>
-        Dedup.saveIndexDelta(Dedup.IndexDelta(seg.fps, seg.sets, seg.buckets,
+        Dedup.CorpusFiles.saveDelta(Dedup.IndexDelta(seg.fps, seg.sets, seg.buckets,
           parts.fpWords, parts.bucketWords, ck(4), ck(7)), p)
       }
       tracked.foreach(_.unpersist())
@@ -237,8 +237,8 @@ final class RefreshableKnnGraph(initial: Similarity.KnnGraphIndex,
   /** Fold `newVecs` in under the frozen centroids and atomically publish —
     * checkpointing only the fold's O(batch) segment. With `deltaPath` set,
     * the same four frames land there BEFORE the swap
-    * ([[Similarity.saveKnnGraphDelta]]) — a restart
-    * [[Similarity.loadKnnGraph]]s base+deltas instead of re-folding. */
+    * ([[Similarity.GraphFiles.saveDelta]]) — a restart
+    * loads base+deltas ([[Similarity.GraphFiles]]) instead of re-folding. */
   def fold(newVecs: DataFrame, releaseOld: Boolean = true,
       deltaPath: Option[String] = None): Similarity.KnnGraphIndex =
     synchronized {
@@ -251,7 +251,7 @@ final class RefreshableKnnGraph(initial: Similarity.KnnGraphIndex,
         () => parts.probesNew.localCheckpoint(true),
         () => parts.edgesSeg.localCheckpoint(true),
         () => parts.tombstones.localCheckpoint(true)))
-      deltaPath.foreach(p => Similarity.saveKnnGraphDelta(
+      deltaPath.foreach(p => Similarity.GraphFiles.saveDelta(
         Similarity.KnnGraphDelta(ck(0), ck(1), ck(2), ck(3)), p))
       tracked.foreach(_.unpersist())
 
@@ -330,8 +330,8 @@ final class RefreshablePqIndex(initial: Similarity.PqIndex,
     * the encode reads only the broadcast codebook, and only the batch's
     * two fresh frames are checkpointed (a new segment). With `deltaPath`
     * set, the same frames land there BEFORE the swap
-    * ([[Similarity.savePqIndexDelta]]) — the durable O(batch)-per-fold
-    * discipline; a restart [[Similarity.loadPqIndex]]es base+deltas
+    * ([[Similarity.PqFiles.saveDelta]]) — the durable O(batch)-per-fold
+    * discipline; a restart loads base+deltas ([[Similarity.PqFiles]])
     * instead of re-encoding. */
   def append(newVecs: DataFrame, releaseOld: Boolean = true,
       deltaPath: Option[String] = None): Similarity.PqIndex =
@@ -344,7 +344,7 @@ final class RefreshablePqIndex(initial: Similarity.PqIndex,
         () => delta.codesNew.localCheckpoint(true),
         () => delta.qNew.localCheckpoint(true)))
       deltaPath.foreach(p =>
-        Similarity.savePqIndexDelta(Similarity.PqDelta(ck(0), ck(1)), p))
+        Similarity.PqFiles.saveDelta(Similarity.PqDelta(ck(0), ck(1)), p))
       tracked.foreach(_.unpersist())
 
       var segs2 = s.segs :+ PSeg(ck(0), ck(1))
@@ -364,16 +364,17 @@ final class RefreshablePqIndex(initial: Similarity.PqIndex,
   /** Retrain over `corpus` (the full refreshed population), re-encode,
     * version-bump, swap — resets to one fresh segment (the full
     * compaction a retrain is anyway). With `indexPath` set the retrained
-    * index persists as a NEW BASE whose `last_delta` stamp swallows the
-    * frozen-codebook deltas — they were encoded against the dead codebook,
-    * and the stamp makes every future load ignore them by construction. */
+    * index persists as a NEW BASE whose stamp swallows the
+    * frozen-codebook deltas — they were encoded against the dead codebook;
+    * the stamp makes every future load ignore them and the base save
+    * sweeps them. */
   def retrain(corpus: DataFrame, releaseOld: Boolean = true,
       indexPath: Option[String] = None): Similarity.PqIndex =
     synchronized {
       val rebuilt = Similarity.retrainPqIndex(corpus, state.view)
       val next = rebuilt.truncated()
       rebuilt.release()
-      indexPath.foreach(p => Similarity.savePqIndex(next, p))
+      indexPath.foreach(p => Similarity.PqFiles.save(next, p))
       state = stateOf(next)
       if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
       state.view
@@ -404,7 +405,7 @@ object IndexMaintenance {
     * floor; a breach retrains over `corpus` (the FULL refreshed
     * population — a retrain re-encodes everything) and, with `indexPath`
     * set, persists the new base (whose stamp swallows the dead-codebook
-    * deltas — see [[Similarity.savePqIndex]]). */
+    * deltas — see [[Similarity.PqFiles.save]]). */
   def maintainPq(holder: RefreshablePqIndex, corpus: DataFrame, floor: Double,
       k: Int = 5, nQueries: Int = 10, rerank: Int = 32,
       indexPath: Option[String] = None): Decision = {
@@ -441,8 +442,9 @@ object IndexMaintenance {
     * vs the floor; a breach rebuilds the graph from scratch over `corpus`
     * (fresh coarse quantizer — the graph has no partial retrain, see
     * [[RefreshableKnnGraph]]) and swaps it in. With `indexPath` set the
-    * rebuilt graph persists as a new base whose `last_delta` stamp
-    * swallows the dead-quantizer deltas ([[Similarity.saveKnnGraph]]) —
+    * rebuilt graph persists as a new base whose stamp
+    * swallows (and whose save sweeps) the dead-quantizer deltas
+    * ([[Similarity.GraphFiles]]) —
     * without it a durable deployment would reload the STALE graph after
     * the swap (the PQ side's retrain already persists this way). */
   def maintainKnnGraph(holder: RefreshableKnnGraph, corpus: DataFrame,
@@ -456,7 +458,7 @@ object IndexMaintenance {
     else {
       holder.rebuildWith(Similarity.knnGraphIndex(corpus,
         holder.current.k, holder.current.nProbe, centroidMod))
-      indexPath.foreach(p => Similarity.saveKnnGraph(holder.current, p))
+      indexPath.foreach(p => Similarity.GraphFiles.save(holder.current, p))
       Decision(before, retrained = true, Some(recall()))
     }
   }
@@ -503,7 +505,7 @@ final class RefreshableEmbedIndex(initial: Similarity.EmbedIndex,
       var segs2 = s.segs :+ seg
       var next = view(segs2, ck(3))
       deltaPath.foreach { p =>
-        Similarity.saveEmbedIndexDelta(
+        Similarity.EmbedFiles.saveDelta(
           Similarity.EmbedDelta(seg.qc, seg.cb, ck(3)), p)
       }
       tracked.foreach(_.unpersist())

@@ -510,117 +510,41 @@ object Similarity {
       Seq(qNew, freshBuckets, oversized)
   }
 
-  private val EmbedBaseComponents = Seq("qc", "cb", "oversized")
-  private val EmbedDeltaComponents = Seq("q_new", "fresh_buckets", "oversized")
+  /** The embed index's persisted artifact ([[IndexFiles.Artifact]]). The
+    * replay appends quantized vectors and bucket rows and applies the
+    * latest dropped-bucket filter once at the end (sizes only grow, so the
+    * latest `oversized` subsumes every earlier drop). Contents-identical
+    * to the in-memory folded index (spec-pinned; `embed_index_delta` pins
+    * the gate output through the round trip). */
+  private[graft] object EmbedFiles extends IndexFiles.Artifact[EmbedIndex, EmbedDelta](
+      "embed index", Seq("qc", "cb", "oversized"),
+      Seq("q_new", "fresh_buckets", "oversized")) {
+    protected def baseFrames(idx: EmbedIndex): Seq[DataFrame] = idx.frames
+    protected def meta(idx: EmbedIndex): Seq[(String, String)] = Seq(
+      "bucket_cap" -> idx.bucketCap.toString, "tables" -> idx.tables.toString)
+    protected def deltaFrames(delta: EmbedDelta): Seq[DataFrame] = delta.frames
+    override protected def detach(loaded: EmbedIndex): EmbedIndex = loaded.truncated()
 
-  /** True when `path` holds a persisted embed index. */
-  def embedIndexExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    IndexFiles.numbered(spark, path, "base_v").nonEmpty
-
-  /** Delta-id high-water mark over deltas on disk AND the latest base's
-    * `last_delta` stamp — see [[graft.operators.Dedup]]'s `deltaHighWater`
-    * for why a post-compaction fold must number above the stamp. */
-  private[graft] def embedDeltaHighWater(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val onDisk =
-      IndexFiles.numbered(spark, path, "delta_").map(_._1).maxOption.getOrElse(0L)
-    val stamped = IndexFiles.numbered(spark, path, "base_v").lastOption
-      .map { case (_, p) => IndexFiles.readMeta(spark, p.toString)("last_delta").toLong }
-      .getOrElse(0L)
-    math.max(onDisk, stamped)
-  }
-
-  /** Persist a full [[EmbedIndex]] snapshot as a new base version —
-    * [[graft.operators.Dedup.saveIndex]]'s vector twin (same LSM layout,
-    * same `last_delta` stamp and crash-safety argument — see the
-    * delta-structured-persistence block there). */
-  def saveEmbedIndex(idx: EmbedIndex, path: String): Unit = {
-    val spark = idx.qc.sparkSession
-    val lastDelta = embedDeltaHighWater(spark, path)
-    val v = IndexFiles.numbered(spark, path, "base_v")
-      .map(_._1).maxOption.getOrElse(0L) + 1
-    val tmp = s"$path/base_v$v.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(idx.frames.zip(EmbedBaseComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.writeMetaKv(spark, tmp, Seq(
-      "bucket_cap" -> idx.bucketCap.toString,
-      "tables" -> idx.tables.toString,
-      "last_delta" -> lastDelta.toString))
-    IndexFiles.publish(spark, tmp, s"$path/base_v$v")
-    IndexFiles.numbered(spark, path, "base_v").filter(_._1 < v)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
-  }
-
-  /** Persist one fold's [[EmbedDelta]] — the O(batch) per-fold write. */
-  def saveEmbedIndexDelta(delta: EmbedDelta, path: String): Long = {
-    val spark = delta.qNew.sparkSession
-    val n = embedDeltaHighWater(spark, path) + 1
-    val tmp = s"$path/delta_$n.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(delta.frames.zip(EmbedDeltaComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.publish(spark, tmp, s"$path/delta_$n")
-    n
-  }
-
-  /** Load the persisted embed index: highest base + every newer delta —
-    * append quantized vectors and bucket rows, apply the latest
-    * dropped-bucket filter once at the end (sizes only grow, so the latest
-    * `oversized` subsumes every earlier drop). Contents-identical to the
-    * in-memory folded index (spec-pinned; `embed_index_delta` pins the gate
-    * output through the round trip). */
-  def loadEmbedIndex(spark: org.apache.spark.sql.SparkSession, path: String): EmbedIndex =
-    loadEmbedIndex(spark, path, pin = true)
-
-  /** [[loadEmbedIndex]] with optional component pinning — `pin = false` for
-    * load-then-truncate callers (the delta row's reload, compaction), which
-    * otherwise materialize every component to executor storage twice (see
-    * [[graft.operators.Dedup.loadIndex]]). */
-  private[graft] def loadEmbedIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, pin: Boolean): EmbedIndex = {
-    val bases = IndexFiles.numbered(spark, path, "base_v")
-    require(bases.nonEmpty, s"no persisted embed index at $path")
-    val base = bases.last._2.toString
-    val meta = IndexFiles.readMeta(spark, base)
-    val lastDelta = meta("last_delta").toLong
-    val deltas = IndexFiles.numbered(spark, path, "delta_").filter(_._1 > lastDelta)
-    def rd(dir: String, name: String) = spark.read.parquet(s"$dir/$name")
-
-    var qc = rd(base, "qc")
-    var cbRows = rd(base, "cb")
-    var oversized = rd(base, "oversized")
-    deltas.foreach { case (_, p) =>
-      val d = p.toString
-      qc = qc.unionByName(rd(d, "q_new"))
-      cbRows = cbRows.unionByName(rd(d, "fresh_buckets"))
-      oversized = rd(d, "oversized")
+    protected def replay(c: IndexFiles.Chain,
+        pin: DataFrame => DataFrame): EmbedIndex = {
+      var qc = c.base("qc")
+      var cbRows = c.base("cb")
+      var oversized = c.base("oversized")
+      c.deltas.foreach { d =>
+        qc = qc.unionByName(d("q_new"))
+        cbRows = cbRows.unionByName(d("fresh_buckets"))
+        oversized = d("oversized")
+      }
+      val oversizedP = pin(oversized)
+      val cb =
+        if (c.deltas.isEmpty) pin(cbRows)
+        else pin(cbRows.join(
+          broadcast(oversizedP.select("table", "bucket")), Seq("table", "bucket"), "left_anti"))
+      EmbedIndex(pin(qc), cb, oversizedP, c.meta("bucket_cap").toInt,
+        // metas written before the gate's table count was persisted carry no
+        // `tables` key; those indexes were built at the then-global 4
+        c.meta.getOrElse("tables", NumTables.toString).toInt)
     }
-    val pinF: DataFrame => DataFrame =
-      if (pin) PinnedCaches.pin else identity
-    val oversizedP = pinF(oversized)
-    val cb =
-      if (deltas.isEmpty) pinF(cbRows)
-      else pinF(cbRows.join(
-        broadcast(oversizedP.select("table", "bucket")), Seq("table", "bucket"), "left_anti"))
-    EmbedIndex(pinF(qc), cb, oversizedP, meta("bucket_cap").toInt,
-      // metas written before the gate's table count was persisted carry no
-      // `tables` key; those indexes were built at the then-global 4
-      meta.getOrElse("tables", NumTables.toString).toInt)
-  }
-
-  /** Compact the persisted base+deltas into one new base —
-    * [[graft.operators.Dedup.compactIndex]]'s vector twin. */
-  def compactEmbedIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val folded = embedDeltaHighWater(spark, path)
-    val loaded = loadEmbedIndex(spark, path, pin = false)
-    val snap = loaded.truncated()
-    loaded.release()
-    saveEmbedIndex(snap, path)
-    IndexFiles.numbered(spark, path, "delta_").filter(_._1 <= folded)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
   }
 
   /** INDEX LIFECYCLE, vector side — fold a batch of new embeddings into an
@@ -1822,16 +1746,12 @@ object Similarity {
        |FROM h CROSS JOIN p""".stripMargin
 
   // ──────────── kNN-GRAPH PERSISTENCE (base + tombstone deltas) ────────────
-  // The same LSM layout as the other three index families. The edge
-  // component is not pure-append (a fold REPLACES affected old queries'
+  // The edge component is not pure-append (a fold REPLACES affected old queries'
   // rows), but a fold supersedes WHOLE query_ids — so a delta is the
   // fold's [[GraphSegmentParts]] (batch qn/probe rows, fresh edge rows,
   // affected-id tombstones) and load replays deltas in id order: append
   // qn/probes, and per delta `edges := (edges ⊖ tombstones) ∪ edges_seg`
   // — the on-disk twin of the segmented holder's latest-wins view.
-
-  private val GraphComponents = Seq("cents", "qn", "probes", "edges")
-  private val GraphDeltaComponents = Seq("qn_new", "probes_new", "edges_seg", "tombstones")
 
   /** One graph fold's O(batch) persistence payload (see
     * [[GraphSegmentParts]] for why each piece is batch-proportional). */
@@ -1842,106 +1762,35 @@ object Similarity {
       Seq(qnNew, probesNew, edgesSeg, tombstones)
   }
 
-  /** True when `path` holds a persisted graph index. */
-  def knnGraphExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    IndexFiles.numbered(spark, path, "base_v").nonEmpty
+  /** The kNN graph's persisted artifact ([[IndexFiles.Artifact]]). The
+    * replay appends qn/probes; edges apply each delta's tombstones, then
+    * union its fresh rows (order matters: a later fold may supersede rows
+    * an earlier delta introduced). Folding the loaded graph equals folding
+    * the original (spec-pinned), so a restarted graph lifecycle resumes
+    * instead of rebuilding. */
+  private[graft] object GraphFiles extends IndexFiles.Artifact[KnnGraphIndex, KnnGraphDelta](
+      "knn graph", Seq("cents", "qn", "probes", "edges"),
+      Seq("qn_new", "probes_new", "edges_seg", "tombstones")) {
+    protected def baseFrames(idx: KnnGraphIndex): Seq[DataFrame] = idx.frames
+    protected def meta(idx: KnnGraphIndex): Seq[(String, String)] = Seq(
+      "k" -> idx.k.toString, "n_probe" -> idx.nProbe.toString)
+    protected def deltaFrames(delta: KnnGraphDelta): Seq[DataFrame] = delta.frames
+    override protected def detach(loaded: KnnGraphIndex): KnnGraphIndex = loaded.truncated()
 
-  /** Delta-id high-water mark — deltas on disk AND the latest base's
-    * stamp (the post-compaction numbering gotcha, shared with the other
-    * families). */
-  private[graft] def graphDeltaHighWater(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val onDisk =
-      IndexFiles.numbered(spark, path, "delta_").map(_._1).maxOption.getOrElse(0L)
-    val stamped = IndexFiles.numbered(spark, path, "base_v").lastOption
-      .map { case (_, p) => IndexFiles.readMeta(spark, p.toString)("last_delta").toLong }
-      .getOrElse(0L)
-    math.max(onDisk, stamped)
-  }
-
-  /** Persist a [[KnnGraphIndex]] snapshot as a new base version
-    * (components in parallel, knobs + `last_delta` stamp in `meta_kv`,
-    * superseded bases pruned after the atomic publish). */
-  def saveKnnGraph(idx: KnnGraphIndex, path: String): Unit = {
-    val spark = idx.cents.sparkSession
-    val lastDelta = graphDeltaHighWater(spark, path)
-    val v = IndexFiles.numbered(spark, path, "base_v")
-      .map(_._1).maxOption.getOrElse(0L) + 1
-    val tmp = s"$path/base_v$v.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(idx.frames.zip(GraphComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.writeMetaKv(spark, tmp, Seq(
-      "k" -> idx.k.toString,
-      "n_probe" -> idx.nProbe.toString,
-      "last_delta" -> lastDelta.toString))
-    IndexFiles.publish(spark, tmp, s"$path/base_v$v")
-    IndexFiles.numbered(spark, path, "base_v").filter(_._1 < v)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
-  }
-
-  /** Persist one fold's [[KnnGraphDelta]] — the O(batch) per-fold write. */
-  def saveKnnGraphDelta(delta: KnnGraphDelta, path: String): Long = {
-    val spark = delta.qnNew.sparkSession
-    val n = graphDeltaHighWater(spark, path) + 1
-    val tmp = s"$path/delta_$n.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(delta.frames.zip(GraphDeltaComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.publish(spark, tmp, s"$path/delta_$n")
-    n
-  }
-
-  /** Load the persisted graph: highest base + every delta above its stamp,
-    * replayed in id order — qn/probes append; edges apply each delta's
-    * tombstones then union its fresh rows (order matters: a later fold may
-    * supersede rows an earlier delta introduced). Folding the loaded index
-    * equals folding the original (spec-pinned) — a restarted graph
-    * lifecycle resumes instead of rebuilding. */
-  def loadKnnGraph(spark: org.apache.spark.sql.SparkSession,
-      path: String): KnnGraphIndex = loadKnnGraph(spark, path, pin = true)
-
-  /** [[loadKnnGraph]] with optional component pinning — `pin = false` for
-    * load-then-truncate callers (see [[graft.operators.Dedup.loadIndex]]). */
-  private[graft] def loadKnnGraph(spark: org.apache.spark.sql.SparkSession,
-      path: String, pin: Boolean): KnnGraphIndex = {
-    val bases = IndexFiles.numbered(spark, path, "base_v")
-    require(bases.nonEmpty, s"no persisted knn graph at $path")
-    val base = bases.last._2.toString
-    val meta = IndexFiles.readMeta(spark, base)
-    val deltas = IndexFiles.numbered(spark, path, "delta_")
-      .filter(_._1 > meta("last_delta").toLong)
-    def rd(dir: String, name: String) = spark.read.parquet(s"$dir/$name")
-
-    var qn = rd(base, "qn")
-    var probes = rd(base, "probes")
-    var edges = rd(base, "edges")
-    deltas.foreach { case (_, p) =>
-      val d = p.toString
-      qn = qn.unionByName(rd(d, "qn_new"))
-      probes = probes.unionByName(rd(d, "probes_new"))
-      edges = edges.join(broadcast(rd(d, "tombstones")), Seq("query_id"), "left_anti")
-        .unionByName(rd(d, "edges_seg"))
+    protected def replay(c: IndexFiles.Chain,
+        pin: DataFrame => DataFrame): KnnGraphIndex = {
+      var qn = c.base("qn")
+      var probes = c.base("probes")
+      var edges = c.base("edges")
+      c.deltas.foreach { d =>
+        qn = qn.unionByName(d("qn_new"))
+        probes = probes.unionByName(d("probes_new"))
+        edges = edges.join(broadcast(d("tombstones")), Seq("query_id"), "left_anti")
+          .unionByName(d("edges_seg"))
+      }
+      KnnGraphIndex(pin(c.base("cents")), pin(qn), pin(probes), pin(edges),
+        c.meta("k").toInt, c.meta("n_probe").toInt)
     }
-    val pinF: DataFrame => DataFrame =
-      if (pin) PinnedCaches.pin else identity
-    KnnGraphIndex(pinF(rd(base, "cents")), pinF(qn), pinF(probes),
-      pinF(edges), meta("k").toInt, meta("n_probe").toInt)
-  }
-
-  /** Compact the persisted base+deltas into one new base, then sweep the
-    * folded deltas — bounds the restart replay chain (and its anti-join
-    * depth), same discipline as the other families. */
-  def compactKnnGraph(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val folded = graphDeltaHighWater(spark, path)
-    val loaded = loadKnnGraph(spark, path, pin = false)
-    val snap = loaded.truncated()
-    loaded.release()
-    saveKnnGraph(snap, path)
-    IndexFiles.numbered(spark, path, "delta_").filter(_._1 <= folded)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
   }
 
   /** DuckDB oracle for the `knn_graph_refresh` registry row — the graph
@@ -2517,116 +2366,32 @@ object Similarity {
   def retrainPqIndex(emb: DataFrame, prev: PqIndex): PqIndex =
     pqIndexBuild(emb, prev.subspaces, prev.nCodes, prev.iters, prev.version + 1)
 
-  // ──────────── PQ-INDEX PERSISTENCE (base + pure-append deltas) ────────────
-  // Same LSM layout as the corpus/embed indexes (versioned bases published
-  // by atomic tmp-rename, numbered O(batch) deltas, `last_delta` stamp,
-  // periodic compaction), and STRICTLY simpler replay: appends under a
-  // frozen codebook are pure append of (codes, qn) — no re-key map, no
-  // dropped-bucket filter. A RETRAIN (new codebook, version bump) persists
-  // as a new base whose stamp swallows every older delta — deltas encoded
-  // against the dead codebook are ignored-by-construction at load, the
-  // exact property retraining needs.
-
-  private val PqBaseComponents = Seq("cents", "codes", "qn")
-  private val PqDeltaComponents = Seq("codes_new", "q_new")
-
-  /** True when `path` holds a persisted PQ index. */
-  def pqIndexExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    IndexFiles.numbered(spark, path, "base_v").nonEmpty
-
-  /** Delta-id high-water mark over deltas on disk AND the latest base's
-    * stamp — the post-compaction numbering gotcha, see
-    * [[graft.operators.Dedup]]'s `deltaHighWater`. */
-  private[graft] def pqDeltaHighWater(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val onDisk =
-      IndexFiles.numbered(spark, path, "delta_").map(_._1).maxOption.getOrElse(0L)
-    val stamped = IndexFiles.numbered(spark, path, "base_v").lastOption
-      .map { case (_, p) => IndexFiles.readMeta(spark, p.toString)("last_delta").toLong }
-      .getOrElse(0L)
-    math.max(onDisk, stamped)
-  }
-
-  /** Persist a full [[PqIndex]] snapshot as a new base version (components
-    * in parallel, knobs + codebook version + `last_delta` stamp in
-    * `meta_kv`, superseded bases pruned after the atomic publish). */
-  def savePqIndex(idx: PqIndex, path: String): Unit = {
-    val spark = idx.cents.sparkSession
-    val lastDelta = pqDeltaHighWater(spark, path)
-    val v = IndexFiles.numbered(spark, path, "base_v")
-      .map(_._1).maxOption.getOrElse(0L) + 1
-    val tmp = s"$path/base_v$v.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(idx.frames.zip(PqBaseComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.writeMetaKv(spark, tmp, Seq(
+  /** The PQ index's persisted artifact ([[IndexFiles.Artifact]]). Appends
+    * under a frozen codebook are pure append of (codes, qn), so the replay
+    * is two unions: no re-key map, no dropped-bucket filter. A RETRAIN (new
+    * codebook, version bump) persists as a new base whose stamp swallows
+    * every older delta, so deltas encoded against the dead codebook are
+    * never replayed, and the base save sweeps them. Contents-identical to
+    * the in-memory append chain (spec-pinned; `sim_pq_delta` pins the ADC
+    * chain's answers through the round trip). */
+  private[graft] object PqFiles extends IndexFiles.Artifact[PqIndex, PqDelta](
+      "pq index", Seq("cents", "codes", "qn"), Seq("codes_new", "q_new")) {
+    protected def baseFrames(idx: PqIndex): Seq[DataFrame] = idx.frames
+    protected def meta(idx: PqIndex): Seq[(String, String)] = Seq(
       "version" -> idx.version.toString,
       "subspaces" -> idx.subspaces.toString,
       "n_codes" -> idx.nCodes.toString,
-      "iters" -> idx.iters.toString,
-      "last_delta" -> lastDelta.toString))
-    IndexFiles.publish(spark, tmp, s"$path/base_v$v")
-    IndexFiles.numbered(spark, path, "base_v").filter(_._1 < v)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
-  }
+      "iters" -> idx.iters.toString)
+    protected def deltaFrames(delta: PqDelta): Seq[DataFrame] = delta.frames
+    override protected def detach(loaded: PqIndex): PqIndex = loaded.truncated()
 
-  /** Persist one append's [[PqDelta]] — the O(batch) per-fold write. */
-  def savePqIndexDelta(delta: PqDelta, path: String): Long = {
-    val spark = delta.qNew.sparkSession
-    val n = pqDeltaHighWater(spark, path) + 1
-    val tmp = s"$path/delta_$n.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.inParallel(delta.frames.zip(PqDeltaComponents).map { case (df, name) =>
-      () => IndexFiles.sizedForWrite(df).write.mode("overwrite").parquet(s"$tmp/$name")
-    })
-    IndexFiles.publish(spark, tmp, s"$path/delta_$n")
-    n
-  }
-
-  /** Load the persisted PQ index: highest base + every delta above its
-    * stamp, appended in id order (pure append — replay is two unions).
-    * Contents-identical to the in-memory append chain (spec-pinned;
-    * `sim_pq_delta` pins the ADC chain's answers through the round trip). */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex =
-    loadPqIndex(spark, path, pin = true)
-
-  /** [[loadPqIndex]] with optional component pinning — `pin = false` for
-    * load-then-truncate callers (see [[graft.operators.Dedup.loadIndex]]). */
-  private[graft] def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, pin: Boolean): PqIndex = {
-    val bases = IndexFiles.numbered(spark, path, "base_v")
-    require(bases.nonEmpty, s"no persisted pq index at $path")
-    val base = bases.last._2.toString
-    val meta = IndexFiles.readMeta(spark, base)
-    val deltas = IndexFiles.numbered(spark, path, "delta_")
-      .filter(_._1 > meta("last_delta").toLong)
-    def rd(dir: String, name: String) = spark.read.parquet(s"$dir/$name")
-
-    var codes = rd(base, "codes")
-    var qn = rd(base, "qn")
-    deltas.foreach { case (_, p) =>
-      codes = codes.unionByName(rd(p.toString, "codes_new"))
-      qn = qn.unionByName(rd(p.toString, "q_new"))
-    }
-    val pinF: DataFrame => DataFrame =
-      if (pin) PinnedCaches.pin else identity
-    PqIndex(pinF(rd(base, "cents")), pinF(codes), pinF(qn),
-      meta("version").toInt, meta("subspaces").toInt,
-      meta("n_codes").toInt, meta("iters").toInt)
-  }
-
-  /** Compact the persisted base+deltas into one new base, then sweep the
-    * folded deltas — bounds restart replay-chain length, same discipline
-    * as [[graft.operators.Dedup.compactIndex]]. */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val folded = pqDeltaHighWater(spark, path)
-    val loaded = loadPqIndex(spark, path, pin = false)
-    val snap = loaded.truncated()
-    loaded.release()
-    savePqIndex(snap, path)
-    IndexFiles.numbered(spark, path, "delta_").filter(_._1 <= folded)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
+    protected def replay(c: IndexFiles.Chain,
+        pin: DataFrame => DataFrame): PqIndex =
+      PqIndex(pin(c.base("cents")),
+        pin(c.deltas.foldLeft(c.base("codes"))((acc, d) => acc.unionByName(d("codes_new")))),
+        pin(c.deltas.foldLeft(c.base("qn"))((acc, d) => acc.unionByName(d("q_new")))),
+        c.meta("version").toInt, c.meta("subspaces").toInt,
+        c.meta("n_codes").toInt, c.meta("iters").toInt)
   }
 
   /** The [[pqTopKLearned]] ADC/re-rank chain against an explicit

@@ -1170,103 +1170,27 @@ object TextAnalysis {
       |SELECT doc_id, tf_merge, tf_window, tf_hash, score
       |FROM bmscore ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
 
-  // ────────────── TEXT-STATS PERSISTENCE (additive LSM) ──────────────
-  // The retrieval/tokenizer statistics artifacts — [[bm25Stats]]'s one-row
-  // BIGINT frame and [[bpeWordStats]]'s (word, freq) table — fold
-  // ADDITIVELY, so their durable story is the simplest in the LSM family:
-  // a delta is the BATCH's own stats frame (pure append on disk, no
-  // re-key/tombstone/filter), load re-AGGREGATES the highest base plus
-  // every delta above its `last_delta` stamp (BIGINT sums are exact and
-  // order-free, so replay order cannot matter), and compaction
-  // materializes the aggregate into a new stamped base and sweeps the
-  // folded deltas. Same base_v<V>/delta_<N> layout, atomic tmp-rename
-  // publication, and high-water numbering (disk ∨ stamp — the
-  // post-compaction gotcha) as the corpus/embed/PQ/graph indexes, so the
-  // crash/replay arguments carry over verbatim. This closes the one
-  // lifecycle family ([[refreshBm25Stats]]/[[refreshBpeWordStats]]) that
-  // folded in memory but had no restart story.
+  /** The BM25 corpus stats' persisted artifact ([[IndexFiles.Artifact]]):
+    * the one-row BIGINT [[bm25Stats]] frame folds ADDITIVELY, so a delta
+    * is the batch's own stats row and the replay is one commutative
+    * BIGINT-sum aggregate over the base and the live deltas —
+    * bit-identical to the in-memory [[refreshBm25Stats]] chain and to
+    * from-scratch over the union, whatever the replay order. The streaming
+    * fold keys its deltas on the replay-stable batch id (`saveDeltaAt`). */
+  private[graft] object Bm25Files extends IndexFiles.Artifact[DataFrame, DataFrame](
+      "bm25 stats", Seq("stats"), Seq("stats")) {
+    protected def baseFrames(stats: DataFrame): Seq[DataFrame] = Seq(stats)
+    protected def meta(stats: DataFrame): Seq[(String, String)] = Nil
+    protected def deltaFrames(batchStats: DataFrame): Seq[DataFrame] = Seq(batchStats)
 
-  private def additiveHighWater(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val onDisk =
-      IndexFiles.numbered(spark, path, "delta_").map(_._1).maxOption.getOrElse(0L)
-    val stamped = IndexFiles.numbered(spark, path, "base_v").lastOption
-      .map { case (_, p) => IndexFiles.readMeta(spark, p.toString)("last_delta").toLong }
-      .getOrElse(0L)
-    math.max(onDisk, stamped)
-  }
-
-  private def saveAdditiveBase(stats: DataFrame, path: String): Unit = {
-    val spark = stats.sparkSession
-    val lastDelta = additiveHighWater(spark, path)
-    val v = IndexFiles.numbered(spark, path, "base_v")
-      .map(_._1).maxOption.getOrElse(0L) + 1
-    val tmp = s"$path/base_v$v.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.sizedForWrite(stats).write.mode("overwrite").parquet(s"$tmp/stats")
-    IndexFiles.writeMetaKv(spark, tmp, Seq("last_delta" -> lastDelta.toString))
-    IndexFiles.publish(spark, tmp, s"$path/base_v$v")
-    IndexFiles.numbered(spark, path, "base_v").filter(_._1 < v)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
-  }
-
-  private def saveAdditiveDelta(batchStats: DataFrame, path: String): Long =
-    saveAdditiveDeltaAt(batchStats, path,
-      additiveHighWater(batchStats.sparkSession, path) + 1)
-
-  private def saveAdditiveDeltaAt(batchStats: DataFrame, path: String,
-      id: Long): Long = {
-    val spark = batchStats.sparkSession
-    val tmp = s"$path/delta_$id.tmp"
-    IndexFiles.delete(spark, tmp)
-    IndexFiles.sizedForWrite(batchStats).write.mode("overwrite").parquet(s"$tmp/stats")
-    IndexFiles.publish(spark, tmp, s"$path/delta_$id")
-    id
-  }
-
-  /** Base + above-stamp delta stats frames, in replay order (order is
-    * immaterial — the loads aggregate commutatively). */
-  private def additiveParts(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[DataFrame] = {
-    val bases = IndexFiles.numbered(spark, path, "base_v")
-    require(bases.nonEmpty, s"no persisted stats at $path")
-    val base = bases.last._2.toString
-    val stamp = IndexFiles.readMeta(spark, base)("last_delta").toLong
-    spark.read.parquet(s"$base/stats") +:
-      IndexFiles.numbered(spark, path, "delta_").filter(_._1 > stamp)
-        .map { case (_, p) => spark.read.parquet(s"$p/stats") }
-  }
-
-  def textStatsExist(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    IndexFiles.numbered(spark, path, "base_v").nonEmpty
-
-  /** Persist a [[bm25Stats]] row as a new base version. */
-  def saveBm25Stats(stats: DataFrame, path: String): Unit =
-    saveAdditiveBase(stats, path)
-
-  /** Persist one batch's [[bm25Stats]] row as an O(batch) delta — the
-    * durable form of a [[refreshBm25Stats]] fold. */
-  def saveBm25StatsDelta(batchStats: DataFrame, path: String): Long =
-    saveAdditiveDelta(batchStats, path)
-
-  /** The streaming form: the delta keyed on a REPLAY-STABLE id (a
-    * foreachBatch batchId + 1, so ids start above the empty-base stamp 0).
-    * Stats deltas are NOT content-idempotent under the high-water
-    * numbering (a replayed batch would fold twice); keying the dir on the
-    * engine's id makes a replay an atomic OVERWRITE of identical bytes —
-    * replay-safe without the gates' staged/lagged machinery, because
-    * unlike an index fold the delta depends only on the batch itself. A
-    * replay arriving AFTER a compaction already swallowed its id (id ≤
-    * stamp) skips: the content is in the base. */
-  def saveBm25StatsDeltaAt(batchStats: DataFrame, path: String,
-      id: Long): Option[Long] = {
-    val spark = batchStats.sparkSession
-    val stamped = IndexFiles.numbered(spark, path, "base_v").lastOption
-      .map { case (_, p) =>
-        IndexFiles.readMeta(spark, p.toString)("last_delta").toLong }
-      .getOrElse(0L)
-    if (id <= stamped) None
-    else Some(saveAdditiveDeltaAt(batchStats, path, id))
+    protected def replay(c: IndexFiles.Chain,
+        pin: DataFrame => DataFrame): DataFrame = {
+      val parts = c.base("stats") +: c.deltas.map(_("stats"))
+      val cols = parts.head.columns.toSeq
+      parts.reduce(_ unionByName _)
+        .agg(sum(col(cols.head)).as(cols.head),
+          cols.tail.map(n => sum(col(n)).as(n)): _*)
+    }
   }
 
   /** An all-zeros [[bm25Stats]] row — the bootstrap base a streaming fold
@@ -1281,53 +1205,5 @@ object TextAnalysis {
       org.apache.spark.sql.types.StructType(cols.map(c =>
         org.apache.spark.sql.types.StructField(c,
           org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** Load the persisted BM25 stats: one commutative BIGINT-sum aggregate
-    * over base + above-stamp deltas — bit-identical to the in-memory
-    * [[refreshBm25Stats]] chain and to from-scratch over the union. */
-  def loadBm25Stats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val parts = additiveParts(spark, path)
-    val cols = parts.head.columns.toSeq
-    parts.reduce(_ unionByName _)
-      .agg(sum(col(cols.head)).as(cols.head),
-        cols.tail.map(c => sum(col(c)).as(c)): _*)
-  }
-
-  /** Compact the persisted BM25 stats into one new base and sweep the
-    * folded deltas — bounds restart replay-chain length. */
-  def compactBm25Stats(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val folded = additiveHighWater(spark, path)
-    saveAdditiveBase(loadBm25Stats(spark, path), path)
-    IndexFiles.numbered(spark, path, "delta_").filter(_._1 <= folded)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
-  }
-
-  /** Persist a [[bpeWordStats]] table as a new base version. */
-  def saveBpeWordStats(words: DataFrame, path: String): Unit =
-    saveAdditiveBase(words, path)
-
-  /** Persist one batch's word table as an O(batch-vocabulary) delta — the
-    * durable form of a [[refreshBpeWordStats]] fold. */
-  def saveBpeWordStatsDelta(batchWords: DataFrame, path: String): Long =
-    saveAdditiveDelta(batchWords, path)
-
-  /** Load the persisted word table: per-word sum over base + above-stamp
-    * deltas. Retraining over the result ([[bpeMergesFrom]]) is
-    * bit-identical to training over the union corpus. */
-  def loadBpeWordStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    additiveParts(spark, path).reduce(_ unionByName _)
-      .groupBy("word").agg(sum("freq").as("freq"))
-
-  /** Compact the persisted word table into one new base, sweep deltas. */
-  def compactBpeWordStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val folded = additiveHighWater(spark, path)
-    saveAdditiveBase(loadBpeWordStats(spark, path), path)
-    IndexFiles.numbered(spark, path, "delta_").filter(_._1 <= folded)
-      .foreach { case (_, p) => IndexFiles.delete(spark, p.toString) }
   }
 }

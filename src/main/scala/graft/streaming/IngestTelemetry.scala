@@ -20,7 +20,7 @@ import graft.operators.{IndexFiles, IndexMaintenance}
   * product. Batch stats are folded synchronously by the foreachBatch body
   * ([[StreamingCuration.CurationRun]] / `VecIngest.Pipeline.onBatch`), so
   * a scrape between batches sees a consistent snapshot; index-chain gauges
-  * come from an [[indexProbe]] the daemon installs (pure FS listings plus
+  * come from an [[indexProbe]] the daemon installs (FS listings, one `meta_kv` read, plus
   * the gates' in-memory [[IndexMaintenance.Decision]] trail — no Spark
   * jobs on the scrape path). */
 final class IngestTelemetry extends SelfTelemetry {
@@ -67,16 +67,16 @@ final class IngestTelemetry extends SelfTelemetry {
     indexStats = indexProbe()
   }
 
-  /** Chain-state probe for one index family — base version, delta count,
-    * staged backlog, all pure FS listings. */
+  /** Chain-state probe for one index family — base version, LIVE delta
+    * count (deltas a base stamp swallowed are not counted), staged
+    * backlog; FS listings plus one `meta_kv` read. */
   def probeIndexPath(spark: SparkSession, family: String, path: String,
       decisions: => Seq[IndexMaintenance.Decision] = Nil): IndexStat = {
     val ds = decisions
     IndexStat(family,
-      baseVersion = IndexFiles.numbered(spark, path, "base_v")
-        .map(_._1).maxOption.getOrElse(0L),
-      deltas = IndexFiles.numbered(spark, path, "delta_").size.toLong,
-      staged = IndexFiles.numbered(spark, s"$path/staged", "batch=").size.toLong,
+      baseVersion = IndexFiles.bases(spark, path).map(_._1).maxOption.getOrElse(0L),
+      deltas = IndexFiles.liveDeltas(spark, path).size.toLong,
+      staged = IngestGate.staged(spark, path).size.toLong,
       maintenancePasses = ds.size.toLong,
       retrains = ds.count(_.retrained).toLong,
       lastRecall = ds.lastOption

@@ -11,7 +11,7 @@ import graft.operators.IndexFiles
   * without maintenance that is ~500k directories/year at a minute-level
   * trigger — the classic downstream-read killer at 100 TB, and the one
   * artifact family that did NOT yet compact (the index delta chains do:
-  * [[graft.operators.Dedup.compactIndex]], `--near-compact-every`). The
+  * [[graft.operators.Dedup.CorpusFiles.compact]], `--near-compact-every`). The
   * reference consumes logrotate'd BOUNDED file sets (main.go:100-106
   * `ReOpen`); this gives the output side the same boundedness.
   *
@@ -42,7 +42,7 @@ import graft.operators.IndexFiles
   *   - [[read]] = every unclaimed segment above the highest full segment,
   *     plus that full segment, plus live dirs above the global stamp. An
   *     interrupted sweep leaves stale segments this rule ignores BY
-  *     CONSTRUCTION (the `last_delta` argument, segment-shaped); the next
+  *     CONSTRUCTION (the index artifact's stamp argument, segment-shaped); the next
   *     compaction deletes them.
   *   - a REPLAYED batch at or below the stamp (crash between compaction
   *     and checkpoint commit) must SKIP landing — its rows are in a

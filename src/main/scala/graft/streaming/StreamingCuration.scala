@@ -193,7 +193,7 @@ object StreamingCuration {
     * produces by crashing between a compaction and its checkpoint commit. */
   private[graft] final class CurationRun(spark: SparkSession, outPath: String,
       budget: Long,
-      nearGate: Option[DataFrame => DataFrame],
+      nearGate: Option[IngestGate],
       statsPath: Option[String], statsCompactEvery: Int,
       outCompactEvery: Int,
       outMergeRatio: Int = 4,
@@ -244,34 +244,30 @@ object StreamingCuration {
         // optional NEAR-dup admission against the living corpus index
         // (StreamingDedup.novelNearCorpusIngest): non-novel docs drop here,
         // before packing; the gate folds admissions back lagged one batch,
-        // so a replayed batch re-gates identically. An IngestGate gets the
-        // REAL foreachBatch id so its durable staging keys on the engine's
+        // so a replayed batch re-gates identically. The gate gets the REAL
+        // foreachBatch id so its durable staging keys on the engine's
         // replay-stable ids (a restart must distinguish "this batch's own
         // re-staged admissions" from leftovers of earlier batches).
         val admitted = nearGate.map { g =>
-          val decisions = g match {
-            case ig: StreamingDedup.IngestGate => ig(packable, batchId)
-            case f => f(packable)
-          }
-          packable.join(decisions.filter(col("novel"))
+          packable.join(g(packable, batchId).filter(col("novel"))
             .select("doc_id"), Seq("doc_id"))
         }.getOrElse(packable)
         // living retrieval stats over exactly the admitted (packed)
         // population: an O(batch) delta keyed on the replay-stable batch
         // id — a replayed batch overwrites identical bytes, and a replay
         // arriving after compaction swallowed its id skips (see
-        // TextAnalysis.saveBm25StatsDeltaAt)
+        // TextAnalysis.Bm25Files.saveDeltaAt)
         statsPath.foreach { sp =>
           if (!admitted.isEmpty) {
-            val landed = graft.operators.TextAnalysis.saveBm25StatsDeltaAt(
+            val landed = graft.operators.TextAnalysis.Bm25Files.saveDeltaAt(
               graft.operators.TextAnalysis.bm25Stats(admitted), sp, batchId + 1)
             // compaction cadence for the stats delta chain — without it a
-            // long-running ingest grows delta_<id> dirs (and the restart
+            // long-running ingest grows delta dirs (and the restart
             // load's union) unboundedly; counts only deltas that actually
             // landed (a swallowed replay must not advance the cadence)
             if (landed.isDefined && statsCompactEvery > 0 &&
                 statsDeltasSinceCompact.incrementAndGet() >= statsCompactEvery) {
-              graft.operators.TextAnalysis.compactBm25Stats(spark, sp)
+              graft.operators.TextAnalysis.Bm25Files.compact(spark, sp)
               statsDeltasSinceCompact.set(0L)
             }
           }
@@ -353,7 +349,7 @@ object StreamingCuration {
       rates: Map[String, Double] = Sampling.DefaultRates,
       defaultRate: Double = Sampling.DefaultRate,
       availableNow: Boolean = false,
-      nearGate: Option[DataFrame => DataFrame] = None,
+      nearGate: Option[IngestGate] = None,
       statsPath: Option[String] = None,
       statsCompactEvery: Int = 0,
       outCompactEvery: Int = 0,

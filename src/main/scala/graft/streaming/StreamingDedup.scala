@@ -62,176 +62,39 @@ object StreamingDedup {
     withFp(stream).join(fps, Seq("fp"), "left_anti").dropDuplicates("fp")
   }
 
-  /** Stream-vs-corpus novelty gate, NEAR-dup tier — the streaming twin of
-    * [[graft.operators.Dedup.incremental]]'s FULL semantics (where
-    * [[novelAgainstCorpus]] gates on exact fingerprints only): each
-    * streamed document reports its best corpus match `(doc_id, best_match,
-    * best_jaccard, novel)` through two tiers — the exact md5 join plus the
-    * banded-LSH candidate join with exact shingle-Jaccard verify — against
-    * the corpus's PRECOMPUTED, pinned signature index
-    * ([[graft.operators.Dedup.corpusIndex]], built once at call time).
+  /** The CLOSED near-dup ingest loop — the streaming twin of
+    * [[graft.operators.Dedup.incremental]]'s full semantics: each
+    * micro-batch reports every document's best corpus match `(doc_id,
+    * best_match, best_jaccard, novel)` against the LIVING corpus index
+    * ([[graft.operators.Dedup.bestMatchAgainst]]: the exact md5 join plus
+    * the banded-LSH candidate join with exact shingle-Jaccard verify), and
+    * the admitted (novel) documents fold back in lagged one batch, so batch
+    * N+1's copies of batch N's admissions are rejected — the full
+    * crawl-admission shape. The gate is a `foreachBatch` body, not a
+    * stream-native plan: the per-doc best-match fold is an aggregation, and
+    * a streaming aggregation would accrete one state entry per document
+    * forever, while as a `foreachBatch` body state is ZERO regardless of
+    * stream length. [[graft.operators.RefreshableCorpusIndex.fold]] is
+    * content-idempotent, which is the fold the [[IngestGate]]'s replay
+    * argument needs.
     *
-    * Returns the per-micro-batch transform for
-    * `DataStreamWriter.foreachBatch` — deliberately NOT a stream-native
-    * plan: the per-doc best-match fold is an aggregation, and a streaming
-    * aggregation would accrete one state-store entry per document forever;
-    * as a `foreachBatch` body the whole gate is stateless stream-static
-    * joins plus a batch-local aggregate (each doc's candidates all live in
-    * its own micro-batch), so state is ZERO regardless of stream length —
-    * the 100 TB ingest shape. Restart semantics are `foreachBatch`'s:
-    * exactly-once batch replay from the checkpoint, so the sink must be
-    * idempotent per (batchId, doc_id) — the standard contract.
-    *
-    * In-stream copies are NOT matched against each other (same contract as
-    * `incremental`, whose batch side doesn't self-dedup): compose with
-    * [[firstOccurrences]] upstream when the stream itself must collapse.
-    *
-    * Proven equivalent to `Dedup.incremental` on a parity-split corpus,
-    * across a kill/restart, in StreamingDedupSpec. */
-  def novelNearCorpus(corpus: DataFrame, threshold: Double = 0.8,
-      bucketCap: Int = graft.operators.Dedup.DefaultBucketCap): DataFrame => DataFrame = {
-    val idx = graft.operators.Dedup.corpusIndex(corpus, bucketCap)
-    batch => graft.operators.Dedup.bestMatchAgainst(batch, idx, threshold)
-  }
-
-  /** [[novelNearCorpus]] against a LIVING index: each micro-batch gates
-    * against whatever index version `ref` publishes at that moment, so an
-    * index-refresh loop (fold admitted docs back in —
-    * [[graft.operators.RefreshableCorpusIndex.fold]]) can run beside the
-    * stream and the gate picks the new index up at the next micro-batch —
-    * no stream restart. The batch body reads [[RefreshableCorpusIndex
-    * .current]] ONCE and uses that complete index value throughout (swap
-    * atomicity is the holder's contract); spec'd mid-stream in
-    * IndexLifecycleSpec: batch 2's decisions equal a from-scratch index
-    * over corpus ∪ batch 1. */
-  def novelNearCorpusRefreshable(ref: graft.operators.RefreshableCorpusIndex,
-      threshold: Double = 0.8): DataFrame => DataFrame =
-    batch => graft.operators.Dedup.bestMatchAgainst(batch, ref.current, threshold)
-
-  /** The CLOSED ingest loop: gate each micro-batch against the living
-    * index AND fold the admitted (novel) documents back in, so batch N+1's
-    * copies of batch N's admissions are rejected — the full
-    * crawl-admission shape ([[novelNearCorpusRefreshable]] gates against
-    * whatever someone else folds; this one folds for itself).
-    *
-    * The fold is LAGGED one batch by design: batch N's admissions are
-    * staged and folded at the START of batch N+1, never during N's own
-    * processing. That makes replay DETERMINISTIC — a `foreachBatch`
-    * re-delivery of batch N gates against exactly the index N saw the
-    * first time (folding inside N would poison its own replay: the
-    * re-gated docs would match themselves in the index and flip to
-    * non-novel). [[graft.operators.Dedup.refreshIndex]] is content-
-    * idempotent, so the one ambiguous crash window (fold done, checkpoint
-    * not) re-folds to the identical index.
-    *
-    * With `indexPath` set the loop is DURABLE end to end: staged
-    * admissions land as parquet under `indexPath/staged/batch=<id>`
-    * (overwritten idempotently on replay), each fold persists its O(batch)
-    * delta ([[graft.operators.Dedup.saveIndexDelta]]), and a restarted
-    * loop [[graft.operators.Dedup.loadIndex]]es base+deltas then folds the
-    * leftover staged batches before gating — the crash between batch N's
-    * commit and N+1's start no longer loses N's fold (exactly-once on
-    * novelty up to refreshIndex's content-idempotence). Without it the
-    * staged batch lives in driver memory — at-least-once on novelty,
-    * never lost data. Same in-batch contract as the other gates: compose
-    * [[firstOccurrences]] upstream so a batch never carries its own
-    * copies. */
+    * With `indexPath` set the loop is durable end to end (staged
+    * admissions, per-fold deltas and compaction every `compactEvery` folds
+    * through [[graft.operators.Dedup.CorpusFiles]]). In-stream copies are
+    * NOT matched against each other: compose [[firstOccurrences]] upstream
+    * so a batch never carries its own copies. */
   def novelNearCorpusIngest(ref: graft.operators.RefreshableCorpusIndex,
       threshold: Double = 0.8,
       indexPath: Option[String] = None,
       compactEvery: Int = 0): IngestGate =
-    new IngestGate(ref, threshold, indexPath, compactEvery)
-
-  /** The closed-loop gate as a value ([[novelNearCorpusIngest]] builds
-    * one): apply() is the per-micro-batch transform; [[flush]] folds
-    * everything still staged at clean shutdown — without it a one-batch
-    * `Trigger.AvailableNow` run would never fold at all (the lag defers
-    * every fold to the NEXT batch, and a terminated query has none). */
-  final class IngestGate(ref: graft.operators.RefreshableCorpusIndex,
-      threshold: Double, indexPath: Option[String], compactEvery: Int = 0)
-      extends (DataFrame => DataFrame) {
-    import org.apache.spark.sql.SparkSession
-    import graft.operators.{Dedup, IndexFiles}
-
-    private val pending =
-      new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-    private val nextSyntheticId = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val foldsSinceCompact = new java.util.concurrent.atomic.AtomicLong(0L)
-    // the durable form claims the path's WRITER LEASE at construction and
-    // re-checks it before every mutation: a second gate on the same index
-    // path fences this one (fail-fast) instead of silently interleaving
-    // delta numbers with it — IndexFiles.WriterLease
-    private val lease: Option[IndexFiles.WriterLease] =
-      indexPath.map(p => IndexFiles.claimWriter(ref.current.fps.sparkSession, p))
-
-    /** Fold every staged batch with id strictly below `before` (ALL staged
-      * when None — the clean-shutdown flush), ascending. Durable mode:
-      * each fold persists its delta and only THEN deletes the staged
-      * files, so a crash at any boundary re-folds idempotently on restart
-      * (a re-fold of already-indexed docs is an empty-fresh delta). The
-      * `before` guard is what keeps replays deterministic: a re-delivered
-      * batch N finds its own staged dir but does NOT fold it. */
-    private def foldStaged(spark: SparkSession, before: Option[Long]): Unit =
-      indexPath match {
-        case Some(p) =>
-          IndexFiles.numbered(spark, s"$p/staged", "batch=")
-            .filter { case (id, _) => before.forall(id < _) }
-            .foreach { case (_, dir) =>
-              val staged = spark.read.parquet(dir.toString)
-              if (!staged.isEmpty) {
-                ref.fold(staged, deltaPath = Some(p))
-                // LSM maintenance: without periodic compaction the durable
-                // loop appends delta_N forever and every RESTART replays an
-                // unbounded delta chain — the disk twin of the in-memory
-                // maxSegments bound. Runs AFTER the fold's delta landed and
-                // before the staged dir deletes, so a crash mid-compaction
-                // is the already-proven ignored-by-construction case.
-                if (compactEvery > 0 &&
-                    foldsSinceCompact.incrementAndGet() >= compactEvery) {
-                  Dedup.compactIndex(spark, p)
-                  foldsSinceCompact.set(0L)
-                }
-              }
-              IndexFiles.delete(spark, dir.toString)
-            }
-        case None =>
-          pending.getAndSet(None).foreach { st => ref.fold(st); st.unpersist() }
-      }
-
-    /** Fold whatever is staged. Safe to call at any quiet point; the next
-      * batch then gates against the folded index. */
-    def flush(): Unit = {
-      lease.foreach(_.check())
-      foldStaged(ref.current.fps.sparkSession, None)
-    }
-
-    /** The per-micro-batch transform with the REAL foreachBatch id —
-      * `StreamingCuration.ingestTo` calls this form so durable staging
-      * keys on the engine's replay-stable batch ids. */
-    def apply(batch: DataFrame, batchId: Long): DataFrame = {
-      lease.foreach(_.check())
-      foldStaged(batch.sparkSession, Some(batchId))
-      val decisions = Dedup.bestMatchAgainst(batch, ref.current, threshold)
-      val admitted = batch.join(
-        decisions.filter(org.apache.spark.sql.functions.col("novel"))
-          .select("doc_id"), Seq("doc_id"))
-      indexPath match {
-        case Some(p) =>
-          // durable staging: (doc_id, text) is all a fold consumes, and
-          // overwrite makes a replayed batch's re-stage byte-idempotent
-          admitted.select("doc_id", "text").write.mode("overwrite")
-            .parquet(s"$p/staged/batch=$batchId")
-        case None =>
-          // stage MATERIALIZED (persist + count): a foreachBatch frame's
-          // backing data is only guaranteed during its own batch, so the
-          // staged plan must not re-read it next batch
-          val a = admitted.persist()
-          if (a.count() > 0) pending.set(Some(a)) else a.unpersist()
-      }
-      decisions
-    }
-
-    override def apply(batch: DataFrame): DataFrame =
-      apply(batch, nextSyntheticId.getAndIncrement())
-  }
+    new IngestGate(ref.current.fps.sparkSession, indexPath,
+      batch => {
+        val decisions =
+          graft.operators.Dedup.bestMatchAgainst(batch, ref.current, threshold)
+        // (doc_id, text) is all a fold consumes
+        (decisions, batch.join(decisions.filter(col("novel")).select("doc_id"),
+          Seq("doc_id")).select("doc_id", "text"))
+      },
+      (staged, deltaPath) => { ref.fold(staged, deltaPath = deltaPath); () },
+      graft.operators.Dedup.CorpusFiles.compact, compactEvery)
 }

@@ -38,7 +38,7 @@ class DaemonCompositionSpec extends SparkSpec {
     val statsPath = s"$root/bm25"
     val out = s"$root/packed"; val ckpt = s"$root/ckpt"; val src = s"$root/src"
     val outC = s"$root/packedC"; val ckptC = s"$root/ckptC"; val srcC = s"$root/srcC"
-    TextAnalysis.saveBm25Stats(TextAnalysis.emptyBm25Stats(spark), statsPath)
+    TextAnalysis.Bm25Files.save(TextAnalysis.emptyBm25Stats(spark), statsPath)
 
     val telemetry = new IngestTelemetry
     def gateFor() = Ingest.nearGate(spark, Ingest.Config(src = "s", out = "o",
@@ -110,7 +110,7 @@ class DaemonCompositionSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     val population = docs.unionByName(variants)
       .filter(col("doc_id").isin(gatedIds.toSeq: _*))
-    assert(TextAnalysis.loadBm25Stats(spark, statsPath).collect().toSeq ==
+    assert(TextAnalysis.Bm25Files.load(spark, statsPath).collect().toSeq ==
       TextAnalysis.bm25Stats(population).collect().toSeq,
       "in-loop stats compaction must stay exact over the admitted population")
 

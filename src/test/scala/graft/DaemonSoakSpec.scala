@@ -47,7 +47,7 @@ class DaemonSoakSpec extends SparkSpec {
       nearIndex = Some(idx), nearThreshold = 0.8, nearCompactEvery = 8,
       bm25Stats = Some(stats), bm25CompactEvery = 8,
       outCompactEvery = 8, outMergeRatio = 2, outMergeMin = 2)
-    TextAnalysis.saveBm25Stats(TextAnalysis.emptyBm25Stats(spark), stats)
+    TextAnalysis.Bm25Files.save(TextAnalysis.emptyBm25Stats(spark), stats)
     val gate = Ingest.nearGate(spark, cfg).get
     val telemetry = new IngestTelemetry
     telemetry.indexProbe = () => Seq(

@@ -95,7 +95,7 @@ class EmbedGateRecallSpec extends SparkSpec {
       (i.toLong, a.toSeq, i % 4)
     })
     val idx0 = Similarity.embedIndex(corpus0)
-    Similarity.saveEmbedIndex(idx0, path)
+    Similarity.EmbedFiles.save(idx0, path)
     val ref = new RefreshableEmbedIndex(idx0)
     // probes: the corpus itself (true best match = itself at cosine 1) —
     // exactly the self-probe VecIngest wires on the cadence

@@ -77,15 +77,15 @@ class IndexDeltaSpec extends SparkSpec {
       31L -> "entirely new second fold text with plenty of distinct words inside")
 
     val path = tmpDir("delta-rt")
-    Dedup.saveIndex(Dedup.corpusIndex(corpus0, bucketCap = cap), path)
-    val ref = new RefreshableCorpusIndex(Dedup.loadIndex(spark, path))
+    Dedup.CorpusFiles.save(Dedup.corpusIndex(corpus0, bucketCap = cap), path)
+    val ref = new RefreshableCorpusIndex(Dedup.CorpusFiles.load(spark, path))
     ref.fold(b1, deltaPath = Some(path))
     ref.fold(b2, deltaPath = Some(path))
     assert(IndexFiles.numbered(spark, path, "delta_").map(_._1) == Seq(1L, 2L),
       "each fold must land exactly one numbered delta")
 
     // load over base + 2 deltas ≡ the in-memory folded index
-    val loaded = Dedup.loadIndex(spark, path)
+    val loaded = Dedup.CorpusFiles.load(spark, path)
     sameContents(loaded, ref.current)
     // ≡ from-scratch over the union (transitively, but assert directly too)
     val scratch = Dedup.corpusIndex(corpus0.unionAll(b1).unionAll(b2), bucketCap = cap)
@@ -100,10 +100,10 @@ class IndexDeltaSpec extends SparkSpec {
     loaded.release()
 
     // compaction: contents identical, deltas swept, ONE base version left
-    Dedup.compactIndex(spark, path)
+    Dedup.CorpusFiles.compact(spark, path)
     assert(IndexFiles.numbered(spark, path, "delta_").isEmpty, "compaction sweeps folded deltas")
     assert(IndexFiles.numbered(spark, path, "base_v").size == 1, "superseded bases pruned")
-    val compacted = Dedup.loadIndex(spark, path)
+    val compacted = Dedup.CorpusFiles.load(spark, path)
     sameContents(compacted, scratch)
     assert(gateRows(Dedup.bestMatchAgainst(gate, compacted)) ==
       gateRows(Dedup.bestMatchAgainst(gate, scratch)))
@@ -113,7 +113,7 @@ class IndexDeltaSpec extends SparkSpec {
     val ref2 = new RefreshableCorpusIndex(compacted)
     val b3 = docsDf(50L -> "third fold after compaction carries yet more unseen words still")
     ref2.fold(b3, deltaPath = Some(path))
-    val after = Dedup.loadIndex(spark, path)
+    val after = Dedup.CorpusFiles.load(spark, path)
     sameContents(after,
       Dedup.corpusIndex(corpus0.unionAll(b1).unionAll(b2).unionAll(b3), bucketCap = cap))
     after.release()
@@ -131,9 +131,9 @@ class IndexDeltaSpec extends SparkSpec {
       docsDf((1000L + 12 * k until 1000L + 12 * (k + 1)).map(doc): _*))
 
     val path = tmpDir("delta-size")
-    Dedup.saveIndex(Dedup.corpusIndex(base), path)
+    Dedup.CorpusFiles.save(Dedup.corpusIndex(base), path)
     val baseBytes = dirBytes(s"$path/base_v1")
-    val ref = new RefreshableCorpusIndex(Dedup.loadIndex(spark, path))
+    val ref = new RefreshableCorpusIndex(Dedup.CorpusFiles.load(spark, path))
     val deltaBytes = folds.zipWithIndex.map { case (b, k) =>
       ref.fold(b, deltaPath = Some(path))
       dirBytes(s"$path/delta_${k + 1}")
@@ -147,7 +147,7 @@ class IndexDeltaSpec extends SparkSpec {
     assert(deltaBytes.max.toDouble / deltaBytes.min < 2.0,
       s"equal batches must write equal-ish deltas (flat in index size): $deltaBytes")
     // the loaded result is still exactly the union index
-    val loaded = Dedup.loadIndex(spark, path)
+    val loaded = Dedup.CorpusFiles.load(spark, path)
     val scratch = Dedup.corpusIndex(folds.foldLeft(base)(_ unionAll _))
     assert(fpsSet(loaded) == fpsSet(scratch) && bucketsSet(loaded) == bucketsSet(scratch))
     loaded.release()
@@ -163,10 +163,10 @@ class IndexDeltaSpec extends SparkSpec {
       402L -> "crash test wave two text sharing nothing with wave one either", // copy of 301
       403L -> "wave three novel text arriving after the unplanned crash")
 
-    def freshGate(path: String): StreamingDedup.IngestGate = {
+    def freshGate(path: String): graft.streaming.IngestGate = {
       val idx0 =
-        if (Dedup.indexExists(spark, path)) Dedup.loadIndex(spark, path)
-        else { val i = Dedup.corpusIndex(corpus0); Dedup.saveIndex(i, path); i }
+        if (Dedup.CorpusFiles.exists(spark, path)) Dedup.CorpusFiles.load(spark, path)
+        else { val i = Dedup.corpusIndex(corpus0); Dedup.CorpusFiles.save(i, path); i }
       StreamingDedup.novelNearCorpusIngest(new RefreshableCorpusIndex(idx0),
         indexPath = Some(path))
     }
@@ -177,7 +177,7 @@ class IndexDeltaSpec extends SparkSpec {
     gc(b1, 0L); gc(b2, 1L)
     val controlB3 = gateRows(gc(b3, 2L))
     gc.flush()
-    val controlLoaded = Dedup.loadIndex(spark, pc)
+    val controlLoaded = Dedup.CorpusFiles.load(spark, pc)
     val controlFps = fpsSet(controlLoaded)
     controlLoaded.release()
 
@@ -197,7 +197,7 @@ class IndexDeltaSpec extends SparkSpec {
     assert(!byId(402L)._4 && byId(402L)._2 == Some(301L))
     assert(byId(403L)._4)
     g2.flush()
-    val crashedLoaded = Dedup.loadIndex(spark, p)
+    val crashedLoaded = Dedup.CorpusFiles.load(spark, p)
     assert(fpsSet(crashedLoaded) == controlFps, "final persisted indexes must agree")
     crashedLoaded.release()
     IndexFiles.delete(spark, p); IndexFiles.delete(spark, pc)
@@ -215,9 +215,9 @@ class IndexDeltaSpec extends SparkSpec {
       (202L + 10 * k) -> s"compaction wave $k doc two carrying tokens t${k}x t${k}y"))
 
     def run(path: String, every: Int): Seq[Seq[(Long, Option[Long], Option[Double], Boolean)]] = {
-      val idx0 = Dedup.corpusIndex(corpus0); Dedup.saveIndex(idx0, path)
+      val idx0 = Dedup.corpusIndex(corpus0); Dedup.CorpusFiles.save(idx0, path)
       val g = StreamingDedup.novelNearCorpusIngest(
-        new RefreshableCorpusIndex(Dedup.loadIndex(spark, path)),
+        new RefreshableCorpusIndex(Dedup.CorpusFiles.load(spark, path)),
         indexPath = Some(path), compactEvery = every)
       val out = batches.zipWithIndex.map { case (b, i) => gateRows(g(b, i.toLong)) }
       g.flush()
@@ -235,7 +235,7 @@ class IndexDeltaSpec extends SparkSpec {
     assert(IndexFiles.numbered(spark, pc, "delta_").size == 5,
       "control: one delta per non-empty fold, never compacted")
     // the persisted artifacts agree
-    val a = Dedup.loadIndex(spark, pm); val b = Dedup.loadIndex(spark, pc)
+    val a = Dedup.CorpusFiles.load(spark, pm); val b = Dedup.CorpusFiles.load(spark, pc)
     assert(fpsSet(a) == fpsSet(b) && bucketsSet(a) == bucketsSet(b))
     a.release(); b.release()
     IndexFiles.delete(spark, pm); IndexFiles.delete(spark, pc)
@@ -249,9 +249,9 @@ class IndexDeltaSpec extends SparkSpec {
       302L -> "replay wave two brand new text that shares no words with anything")
 
     val p = tmpDir("loop-replay")
-    val idx0 = Dedup.corpusIndex(corpus0); Dedup.saveIndex(idx0, p)
+    val idx0 = Dedup.corpusIndex(corpus0); Dedup.CorpusFiles.save(idx0, p)
     val g = StreamingDedup.novelNearCorpusIngest(
-      new RefreshableCorpusIndex(Dedup.loadIndex(spark, p)), indexPath = Some(p))
+      new RefreshableCorpusIndex(Dedup.CorpusFiles.load(spark, p)), indexPath = Some(p))
     g(b1, 0L)
     val first = gateRows(g(b2, 1L))
     // foreachBatch re-delivery: same batch, same id — the `before` guard
@@ -262,7 +262,7 @@ class IndexDeltaSpec extends SparkSpec {
     assert(first.find(_._1 == 302L).get._4)
     g.flush()
     // exactly one fold of batch 1's admissions despite the double staging
-    val loaded = Dedup.loadIndex(spark, p)
+    val loaded = Dedup.CorpusFiles.load(spark, p)
     val scratch = Dedup.corpusIndex(corpus0.unionAll(b1).unionAll(docsDf(
       302L -> "replay wave two brand new text that shares no words with anything")))
     assert(fpsSet(loaded) == fpsSet(scratch))
@@ -387,8 +387,8 @@ class IndexDeltaSpec extends SparkSpec {
     val b2 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
 
     val path = tmpDir("edelta-rt")
-    Similarity.saveEmbedIndex(Similarity.embedIndex(corpus0), path)
-    val ref = new RefreshableEmbedIndex(Similarity.loadEmbedIndex(spark, path))
+    Similarity.EmbedFiles.save(Similarity.embedIndex(corpus0), path)
+    val ref = new RefreshableEmbedIndex(Similarity.EmbedFiles.load(spark, path))
     ref.fold(b1, deltaPath = Some(path))
     ref.fold(b2, deltaPath = Some(path))
 
@@ -398,7 +398,7 @@ class IndexDeltaSpec extends SparkSpec {
       i.cb.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("table"),
         r.getAs[Long]("bucket"))).toSet
 
-    val loaded = Similarity.loadEmbedIndex(spark, path)
+    val loaded = Similarity.EmbedFiles.load(spark, path)
     val scratch = Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(4)) < 3))
     assert(qcSet(loaded) == qcSet(scratch) && cbSet(loaded) == cbSet(scratch))
     val gate = e.filter(pmod(col("vec_id"), lit(4)) === 3)
@@ -406,28 +406,28 @@ class IndexDeltaSpec extends SparkSpec {
     assert(Similarity.embedNoveltyAgainst(gate, loaded).collect().toSeq == want)
     loaded.release()
 
-    Similarity.compactEmbedIndex(spark, path)
+    Similarity.EmbedFiles.compact(spark, path)
     assert(IndexFiles.numbered(spark, path, "delta_").isEmpty)
-    val compacted = Similarity.loadEmbedIndex(spark, path)
+    val compacted = Similarity.EmbedFiles.load(spark, path)
     assert(qcSet(compacted) == qcSet(scratch) && cbSet(compacted) == cbSet(scratch))
     assert(Similarity.embedNoveltyAgainst(gate, compacted).collect().toSeq == want)
     IndexFiles.delete(spark, path)
 
-    // EmbedIngestGate.flush: an AvailableNow-style run (ONE batch, then
+    // IngestGate.flush: an AvailableNow-style run (ONE batch, then
     // shutdown) must still fold its final batch — the bare-closure form
     // never did (the lag deferred every fold to a batch that never came)
     val p2 = tmpDir("egate-flush")
     val idx0 = Similarity.embedIndex(corpus0)
-    Similarity.saveEmbedIndex(idx0, p2)
+    Similarity.EmbedFiles.save(idx0, p2)
     val g = graft.streaming.StreamingSimilarity.novelAgainstIndexIngest(
-      new RefreshableEmbedIndex(Similarity.loadEmbedIndex(spark, p2)),
+      new RefreshableEmbedIndex(Similarity.EmbedFiles.load(spark, p2)),
       indexPath = Some(p2))
     val d1 = g(b1, 0L)
     val admitted = d1.filter(col("novel")).count()
     assert(admitted > 0)
     g.flush()
     // the flushed fold landed durably: a FRESH load contains b1's admissions
-    val resumed = Similarity.loadEmbedIndex(spark, p2)
+    val resumed = Similarity.EmbedFiles.load(spark, p2)
     assert(resumed.qc.count() == idx0.qc.count() + admitted,
       "flush must fold and persist the final batch's admissions")
     resumed.release()

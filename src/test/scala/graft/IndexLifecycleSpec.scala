@@ -132,7 +132,8 @@ class IndexLifecycleSpec extends SparkSpec {
       302L -> "second batch completely novel text nothing shares these words")
 
     val ref = new RefreshableCorpusIndex(Dedup.corpusIndex(corpus0))
-    val gate = StreamingDedup.novelNearCorpusRefreshable(ref)
+    // each micro-batch reads the holder's CURRENT index once
+    val gate = (b: DataFrame) => Dedup.bestMatchAgainst(b, ref.current, 0.8)
 
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -225,8 +226,8 @@ class IndexLifecycleSpec extends SparkSpec {
 
     val idx = Dedup.corpusIndex(corpus0, bucketCap = 2)
     val path = java.nio.file.Files.createTempDirectory("graft-idx").toString
-    Dedup.saveIndex(idx, path)
-    val loaded = Dedup.loadIndex(spark, path)
+    Dedup.CorpusFiles.save(idx, path)
+    val loaded = Dedup.CorpusFiles.load(spark, path)
 
     assert(loaded.bucketCap == 2 && loaded.logBloomBits == idx.logBloomBits)
     assert(fpsSet(loaded) == fpsSet(idx))
@@ -276,8 +277,8 @@ class IndexLifecycleSpec extends SparkSpec {
     val refB = new RefreshableCorpusIndex(Dedup.corpusIndex(corpus0))
     val firstHalf = drive(StreamingDedup.novelNearCorpusIngest(refB), Seq(b1, b2, Seq.empty))
     val path = java.nio.file.Files.createTempDirectory("graft-loop-idx").toString
-    Dedup.saveIndex(refB.current, path)
-    val refC = new RefreshableCorpusIndex(Dedup.loadIndex(spark, path))
+    Dedup.CorpusFiles.save(refB.current, path)
+    val refC = new RefreshableCorpusIndex(Dedup.CorpusFiles.load(spark, path))
     val secondHalf = drive(StreamingDedup.novelNearCorpusIngest(refC), Seq(b3))
 
     assert((firstHalf ++ secondHalf) == control,
@@ -354,8 +355,8 @@ class IndexLifecycleSpec extends SparkSpec {
     // save/load round trip, vector side: a loaded index gates and
     // refreshes identically (bookkeeping survives)
     val path = java.nio.file.Files.createTempDirectory("graft-eidx").toString
-    Similarity.saveEmbedIndex(idx0, path)
-    val loaded = Similarity.loadEmbedIndex(spark, path)
+    Similarity.EmbedFiles.save(idx0, path)
+    val loaded = Similarity.EmbedFiles.load(spark, path)
     assert(loaded.bucketCap == idx0.bucketCap)
     val refreshed2 = Similarity.refreshEmbedIndex(loaded,
       e.filter(pmod(col("vec_id"), lit(3)) === 1))
@@ -452,59 +453,28 @@ class IndexLifecycleSpec extends SparkSpec {
     val b2 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
     val path = java.nio.file.Files.createTempDirectory("graft-bm25-lsm").toString
 
-    TextAnalysis.saveBm25Stats(TextAnalysis.bm25Stats(b0), path)
-    TextAnalysis.saveBm25StatsDelta(TextAnalysis.bm25Stats(b1), path)
-    TextAnalysis.saveBm25StatsDelta(TextAnalysis.bm25Stats(b2), path)
-    assert(TextAnalysis.textStatsExist(spark, path))
+    TextAnalysis.Bm25Files.save(TextAnalysis.bm25Stats(b0), path)
+    TextAnalysis.Bm25Files.saveDelta(TextAnalysis.bm25Stats(b1), path)
+    TextAnalysis.Bm25Files.saveDelta(TextAnalysis.bm25Stats(b2), path)
+    assert(TextAnalysis.Bm25Files.exists(spark, path))
 
     val scratch = TextAnalysis.bm25Stats(docs).collect().toSeq
-    assert(TextAnalysis.loadBm25Stats(spark, path).collect().toSeq == scratch,
+    assert(TextAnalysis.Bm25Files.load(spark, path).collect().toSeq == scratch,
       "base + two delta replays must equal from-scratch stats bit-for-bit")
 
     // compaction: contents identical, deltas swept
-    TextAnalysis.compactBm25Stats(spark, path)
+    TextAnalysis.Bm25Files.compact(spark, path)
     assert(operators.IndexFiles.numbered(spark, path, "delta_").isEmpty)
-    assert(TextAnalysis.loadBm25Stats(spark, path).collect().toSeq == scratch)
+    assert(TextAnalysis.Bm25Files.load(spark, path).collect().toSeq == scratch)
 
     // the high-water gotcha: a delta AFTER compaction must number above
     // the new base's stamp or every load would silently ignore it
-    val id = TextAnalysis.saveBm25StatsDelta(TextAnalysis.bm25Stats(b1), path)
+    val id = TextAnalysis.Bm25Files.saveDelta(TextAnalysis.bm25Stats(b1), path)
     assert(id > 2, s"post-compaction delta id must exceed the stamp, got $id")
-    val over = TextAnalysis.loadBm25Stats(spark, path).collect().head
+    val over = TextAnalysis.Bm25Files.load(spark, path).collect().head
     assert(over.getAs[Long]("n_docs") ==
       scratch.head.getAs[Long]("n_docs") + b1.count(),
       "the post-compaction delta must be visible to loads")
-    operators.IndexFiles.delete(spark, path)
-  }
-
-  test("BPE word-stats persistence: retraining over the reloaded table ≡ from-scratch over the union") {
-    import operators.TextAnalysis
-    val docs = operators.Tables.load(spark, sf(), "documents")
-    val b0 = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-    val b1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
-    val union = docs.filter(pmod(col("doc_id"), lit(3)) < 2)
-    val path = java.nio.file.Files.createTempDirectory("graft-bpe-lsm").toString
-
-    TextAnalysis.saveBpeWordStats(TextAnalysis.bpeWordStats(b0), path)
-    TextAnalysis.saveBpeWordStatsDelta(TextAnalysis.bpeWordStats(b1), path)
-
-    val loaded = TextAnalysis.loadBpeWordStats(spark, path)
-    def wordSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[String]("word"), r.getAs[Long]("freq"))).toSet
-    assert(wordSet(loaded) == wordSet(TextAnalysis.bpeWordStats(union)),
-      "per-word reload aggregate must equal the from-scratch word table")
-
-    // the artifact's purpose: retraining over the reloaded table is
-    // bit-identical to training over the union corpus
-    val got = TextAnalysis.bpeMergesFrom(loaded).collect().toSeq
-    val want = TextAnalysis.bpeMergesFrom(TextAnalysis.bpeWordStats(union))
-      .collect().toSeq
-    assert(got == want && got.nonEmpty)
-
-    TextAnalysis.compactBpeWordStats(spark, path)
-    assert(operators.IndexFiles.numbered(spark, path, "delta_").isEmpty)
-    assert(wordSet(TextAnalysis.loadBpeWordStats(spark, path)) ==
-      wordSet(TextAnalysis.bpeWordStats(union)))
     operators.IndexFiles.delete(spark, path)
   }
 }

@@ -162,29 +162,29 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val b2 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
     val path = java.nio.file.Files.createTempDirectory("graft-kg-delta").toString
 
-    Similarity.saveKnnGraph(Similarity.knnGraphIndex(base), path)
-    val holder = new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, path))
+    Similarity.GraphFiles.save(Similarity.knnGraphIndex(base), path)
+    val holder = new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path))
     holder.fold(b1, deltaPath = Some(path))
 
     // reload over base+delta (tombstone replay at load) ≡ the in-memory fold
     val expected = Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b1)
-    val r1 = Similarity.loadKnnGraph(spark, path)
+    val r1 = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(r1.edges) == edgeSet(expected.edges),
       "base+delta replay must equal the in-memory fold")
     r1.release()
 
     // compaction: contents identical, deltas swept
-    Similarity.compactKnnGraph(spark, path)
+    Similarity.GraphFiles.compact(spark, path)
     assert(graft.operators.IndexFiles.numbered(spark, path, "delta_").isEmpty)
-    val r2 = Similarity.loadKnnGraph(spark, path)
+    val r2 = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(r2.edges) == edgeSet(expected.edges))
     r2.release()
 
     // a post-compaction fold must number above the stamp and stay visible
-    val holder2 = new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, path))
+    val holder2 = new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path))
     holder2.fold(b2, deltaPath = Some(path))
     val contEdges = edgeSet(Similarity.refreshKnnGraph(expected, b2).edges)
-    val r3 = Similarity.loadKnnGraph(spark, path)
+    val r3 = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(r3.edges) == contEdges,
       "the post-compaction delta must be visible to loads")
     r3.release()
@@ -201,17 +201,17 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     // must equal folding b2 on the in-memory original
     val g1 = Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b1)
     val path = java.nio.file.Files.createTempDirectory("graft-kg").toString
-    Similarity.saveKnnGraph(g1, path)
-    assert(Similarity.knnGraphExists(spark, path))
-    val loaded = Similarity.loadKnnGraph(spark, path)
+    Similarity.GraphFiles.save(g1, path)
+    assert(Similarity.GraphFiles.exists(spark, path))
+    val loaded = Similarity.GraphFiles.load(spark, path)
     assert(loaded.k == g1.k && loaded.nProbe == g1.nProbe)
     assert(edgeSet(loaded.edges) == edgeSet(g1.edges))
     val resumed = Similarity.refreshKnnGraph(loaded, b2)
     val continued = Similarity.refreshKnnGraph(g1, b2)
     assert(edgeSet(resumed.edges) == edgeSet(continued.edges))
     // a second save supersedes the first base (versioned publish + prune)
-    Similarity.saveKnnGraph(resumed, path)
-    assert(edgeSet(Similarity.loadKnnGraph(spark, path).edges) ==
+    Similarity.GraphFiles.save(resumed, path)
+    assert(edgeSet(Similarity.GraphFiles.load(spark, path).edges) ==
       edgeSet(continued.edges))
     graft.operators.IndexFiles.delete(spark, path)
   }
@@ -257,19 +257,19 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val b0 = e.filter(pmod(col("vec_id"), lit(4)) === 1)
     val b1 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
     val path = java.nio.file.Files.createTempDirectory("graft-kg-ingest").toString
-    Similarity.saveKnnGraph(Similarity.knnGraphIndex(base), path)
+    Similarity.GraphFiles.save(Similarity.knnGraphIndex(base), path)
 
     // uninterrupted in-memory control
     val control = Similarity.refreshKnnGraph(
       Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b0), b1)
 
     val gate = StreamingSimilarity.knnGraphIngest(
-      new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, path)), Some(path))
+      new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path)), Some(path))
     gate.apply(b0, 0L) // stages batch 0; the lagged fold runs at batch 1
 
     // CRASH before batch 1: a new holder + gate rebuilt purely from disk
     val gate2 = StreamingSimilarity.knnGraphIngest(
-      new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, path)), Some(path))
+      new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path)), Some(path))
     gate2.apply(b1, 1L) // folds the staged batch 0 first, then stages b1
     gate2.apply(b1, 1L) // double delivery: re-stage is byte-idempotent
     gate2.flush()       // clean shutdown folds batch 1
@@ -281,7 +281,7 @@ class KnnGraphLifecycleSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$path/staged/batch=5")
     gate2.flush()
 
-    val reloaded = Similarity.loadKnnGraph(spark, path)
+    val reloaded = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(reloaded.edges) == edgeSet(control.edges),
       "the durable loop must equal the uninterrupted in-memory chain")
     assert(reloaded.qn.count() == reloaded.qn.select("vec_id").distinct().count(),
@@ -297,13 +297,13 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val b0 = e.filter(pmod(col("vec_id"), lit(4)) === 1)
     val b1 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
     val path = java.nio.file.Files.createTempDirectory("graft-kg-compact").toString
-    Similarity.saveKnnGraph(Similarity.knnGraphIndex(base), path)
+    Similarity.GraphFiles.save(Similarity.knnGraphIndex(base), path)
 
     // compactEvery=1: every fold compacts — the chain must stay at zero
     // deltas with the base version advancing, answers identical to the
     // never-compacting control
     val gate = StreamingSimilarity.knnGraphIngest(
-      new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, path)),
+      new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path)),
       Some(path), compactEvery = 1)
     gate.apply(b0, 0L); gate.apply(b1, 1L); gate.flush()
     assert(graft.operators.IndexFiles.numbered(spark, path, "delta_").isEmpty,
@@ -313,7 +313,7 @@ class KnnGraphLifecycleSpec extends SparkSpec {
 
     val control = Similarity.refreshKnnGraph(
       Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b0), b1)
-    val reloaded = Similarity.loadKnnGraph(spark, path)
+    val reloaded = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(reloaded.edges) == edgeSet(control.edges),
       "the compacting loop must answer exactly like the never-compacting chain")
     reloaded.release()
@@ -323,9 +323,9 @@ class KnnGraphLifecycleSpec extends SparkSpec {
   test("gated maintenance, durable: the loop observes drift, rebuilds, and PERSISTS the rebuilt graph") {
     import graft.streaming.StreamingSimilarity
     val path = java.nio.file.Files.createTempDirectory("graft-kg-maint").toString
-    Similarity.saveKnnGraph(
+    Similarity.GraphFiles.save(
       Similarity.knnGraphIndex(driftOriginal, centroidMod = 13), path)
-    val holder = new RefreshableKnnGraph(Similarity.loadKnnGraph(spark, path))
+    val holder = new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path))
     val union = driftOriginal.unionAll(driftShifted)
     val gate = StreamingSimilarity.knnGraphIngest(holder, Some(path),
       maintainEvery = 1,
@@ -342,7 +342,7 @@ class KnnGraphLifecycleSpec extends SparkSpec {
 
     // the rebuilt graph must be what a RESTART loads — without the
     // persist, the disk would still replay the stale-quantizer chain
-    val reloaded = Similarity.loadKnnGraph(spark, path)
+    val reloaded = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(reloaded.edges) == edgeSet(holder.current.edges),
       "a restart must load the rebuilt graph, not the stale one")
     reloaded.release()

@@ -42,13 +42,13 @@ class MetaKvSpec extends SparkSpec {
   test("index save writes meta_kv; load reads knobs and stamp through it") {
     val dir = tmpDir("metakv-save")
     val d = docsDf(1L -> text("a"), 2L -> text("b"), 3L -> text("c"))
-    Dedup.saveIndex(Dedup.corpusIndex(d), dir)
+    Dedup.CorpusFiles.save(Dedup.corpusIndex(d), dir)
     val base = IndexFiles.numbered(spark, dir, "base_v").last._2.toString
     val f = IndexFiles.fs(spark, dir)
     assert(f.exists(new org.apache.hadoop.fs.Path(base, "meta_kv")))
     assert(!f.exists(new org.apache.hadoop.fs.Path(base, "meta")),
       "the legacy parquet meta must no longer be written")
-    val loaded = Dedup.loadIndex(spark, dir)
+    val loaded = Dedup.CorpusFiles.load(spark, dir)
     assert(loaded.bucketCap == Dedup.DefaultBucketCap)
     loaded.release()
     IndexFiles.delete(spark, dir)
@@ -58,7 +58,7 @@ class MetaKvSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir("metakv-legacy")
     val e = Tables2.embeddings(spark, 12)
-    Similarity.saveEmbedIndex(Similarity.embedIndex(e), dir)
+    Similarity.EmbedFiles.save(Similarity.embedIndex(e), dir)
     val base = IndexFiles.numbered(spark, dir, "base_v").last._2.toString
     // devolve the artifact: replace meta_kv with a pre-r13 parquet meta
     // that lacks the `tables` column entirely
@@ -66,7 +66,7 @@ class MetaKvSpec extends SparkSpec {
     f.delete(new org.apache.hadoop.fs.Path(base, "meta_kv"), false)
     Seq((Dedup.DefaultBucketCap, 0L)).toDF("bucket_cap", "last_delta")
       .coalesce(1).write.mode("overwrite").parquet(s"$base/meta")
-    val loaded = Similarity.loadEmbedIndex(spark, dir)
+    val loaded = Similarity.EmbedFiles.load(spark, dir)
     assert(loaded.bucketCap == Dedup.DefaultBucketCap)
     // 4 = the pre-r13 global NumTables constant those metas were built at
     assert(loaded.tables == 4,

@@ -134,12 +134,12 @@ class PqDriftSpec extends SparkSpec {
   test("PQ gate compaction: the delta chain stays bounded, codes unchanged") {
     import graft.streaming.StreamingSimilarity
     val path = java.nio.file.Files.createTempDirectory("graft-pq-compact").toString
-    Similarity.savePqIndex(Similarity.pqIndexBuild(original), path)
+    Similarity.PqFiles.save(Similarity.pqIndexBuild(original), path)
     val b0 = frame(for { m <- 0 until 10 } yield vec(32, 0, m, 0L + m))
     val b1 = frame(for { m <- 0 until 10 } yield vec(40, 1, m, 100L + m))
 
     val gate = StreamingSimilarity.pqIngest(
-      new RefreshablePqIndex(Similarity.loadPqIndex(spark, path)),
+      new RefreshablePqIndex(Similarity.PqFiles.load(spark, path)),
       Some(path), compactEvery = 1)
     gate.apply(b0, 0L); gate.apply(b1, 1L); gate.flush()
     assert(IndexFiles.numbered(spark, path, "delta_").isEmpty,
@@ -149,7 +149,7 @@ class PqDriftSpec extends SparkSpec {
 
     val control = Similarity.appendEncodePq(
       Similarity.appendEncodePq(Similarity.pqIndexBuild(original), b0), b1)
-    val reloaded = Similarity.loadPqIndex(spark, path)
+    val reloaded = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(reloaded) == codeSetOf(control),
       "the compacting loop must encode exactly like the never-compacting chain")
     reloaded.release()
@@ -189,39 +189,39 @@ class PqDriftSpec extends SparkSpec {
 
   test("persisted base+delta round trip ≡ in-memory append; compaction and post-compaction folds stay sound") {
     val path = java.nio.file.Files.createTempDirectory("graft-pq-persist").toString
-    Similarity.savePqIndex(Similarity.pqIndexBuild(original), path)
+    Similarity.PqFiles.save(Similarity.pqIndexBuild(original), path)
 
-    val loaded = Similarity.loadPqIndex(spark, path)
+    val loaded = Similarity.PqFiles.load(spark, path)
     val (_, delta, dropFoldCaches) = Similarity.appendEncodePqTracked(loaded, shifted)
-    Similarity.savePqIndexDelta(delta, path)
+    Similarity.PqFiles.saveDelta(delta, path)
     dropFoldCaches()
     loaded.release()
 
     val expected = Similarity.appendEncodePq(Similarity.pqIndexBuild(original), shifted)
-    val r1 = Similarity.loadPqIndex(spark, path)
+    val r1 = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(r1) == codeSetOf(expected),
       "base+delta replay must equal the in-memory append chain")
     assert(r1.qn.count() == 150)
     r1.release()
 
     // compaction: contents identical, deltas swept, replay chain reset
-    Similarity.compactPqIndex(spark, path)
+    Similarity.PqFiles.compact(spark, path)
     assert(IndexFiles.numbered(spark, path, "delta_").isEmpty,
       "compaction must sweep folded deltas")
-    val r2 = Similarity.loadPqIndex(spark, path)
+    val r2 = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(r2) == codeSetOf(expected))
     r2.release()
 
     // the high-water gotcha: a fold AFTER compaction must number above the
     // compacted base's stamp, or it would be invisible to every load
     val extra = frame(for { m <- 0 until 5 } yield vec(0, 3, m, 2000L + m))
-    val base2 = Similarity.loadPqIndex(spark, path)
+    val base2 = Similarity.PqFiles.load(spark, path)
     val (_, d2, drop2) = Similarity.appendEncodePqTracked(base2, extra)
-    val id = Similarity.savePqIndexDelta(d2, path)
+    val id = Similarity.PqFiles.saveDelta(d2, path)
     drop2()
     base2.release()
     assert(id > 1, s"post-compaction delta id must exceed the stamp, got $id")
-    val r3 = Similarity.loadPqIndex(spark, path)
+    val r3 = Similarity.PqFiles.load(spark, path)
     assert(r3.qn.count() == 155, "the post-compaction delta must be visible to loads")
     r3.release()
     IndexFiles.delete(spark, path)
@@ -230,7 +230,7 @@ class PqDriftSpec extends SparkSpec {
   test("durable streaming PQ ingest: a crash between batches loses nothing; replays and re-folds append nothing") {
     import graft.streaming.StreamingSimilarity
     val path = java.nio.file.Files.createTempDirectory("graft-pq-ingest").toString
-    Similarity.savePqIndex(Similarity.pqIndexBuild(original), path)
+    Similarity.PqFiles.save(Similarity.pqIndexBuild(original), path)
     val b0 = frame(for { m <- 0 until 10 } yield vec(32, 0, m, 0L + m))
     val b1 = frame(for { m <- 0 until 10 } yield vec(40, 1, m, 100L + m))
 
@@ -239,12 +239,12 @@ class PqDriftSpec extends SparkSpec {
       Similarity.appendEncodePq(Similarity.pqIndexBuild(original), b0), b1)
 
     val gate = StreamingSimilarity.pqIngest(
-      new RefreshablePqIndex(Similarity.loadPqIndex(spark, path)), Some(path))
+      new RefreshablePqIndex(Similarity.PqFiles.load(spark, path)), Some(path))
     gate.apply(b0, 0L) // stages batch 0; the lagged fold runs at batch 1
 
     // CRASH before batch 1: a new holder + gate rebuilt purely from disk
     val gate2 = StreamingSimilarity.pqIngest(
-      new RefreshablePqIndex(Similarity.loadPqIndex(spark, path)), Some(path))
+      new RefreshablePqIndex(Similarity.PqFiles.load(spark, path)), Some(path))
     gate2.apply(b1, 1L) // folds the staged batch 0 first, then stages b1
     gate2.apply(b1, 1L) // double delivery: re-stage is byte-idempotent
     gate2.flush()       // clean shutdown folds batch 1
@@ -255,7 +255,7 @@ class PqDriftSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$path/staged/batch=5")
     gate2.flush()
 
-    val reloaded = Similarity.loadPqIndex(spark, path)
+    val reloaded = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(reloaded) == codeSetOf(control),
       "the durable loop must equal the uninterrupted in-memory chain")
     assert(reloaded.qn.count() == 100L + 20L, "no duplicate encodes")
@@ -265,8 +265,8 @@ class PqDriftSpec extends SparkSpec {
 
   test("retrain persists a new base whose stamp swallows dead-codebook deltas") {
     val path = java.nio.file.Files.createTempDirectory("graft-pq-retrain").toString
-    Similarity.savePqIndex(Similarity.pqIndexBuild(original), path)
-    val holder = new RefreshablePqIndex(Similarity.loadPqIndex(spark, path))
+    Similarity.PqFiles.save(Similarity.pqIndexBuild(original), path)
+    val holder = new RefreshablePqIndex(Similarity.PqFiles.load(spark, path))
 
     holder.append(shifted, deltaPath = Some(path))
     assert(IndexFiles.numbered(spark, path, "delta_").nonEmpty)
@@ -274,7 +274,7 @@ class PqDriftSpec extends SparkSpec {
     // retrain → version-2 base; the frozen-codebook delta was encoded
     // against the dead codebook and must be ignored by every future load
     holder.retrain(original.unionAll(shifted), indexPath = Some(path))
-    val reloaded = Similarity.loadPqIndex(spark, path)
+    val reloaded = Similarity.PqFiles.load(spark, path)
     assert(reloaded.version == 2)
     assert(reloaded.qn.count() == 150,
       "stale deltas must not double-count vectors after a retrain base")

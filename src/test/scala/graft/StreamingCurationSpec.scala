@@ -180,12 +180,12 @@ class StreamingCurationSpec extends SparkSpec {
     val runA = docs.filter(col("doc_id") < 60)
     val idxPath = Files.createTempDirectory("graft_near_idx").toString + "/idx"
 
-    def gateFor(): graft.streaming.StreamingDedup.IngestGate =
+    def gateFor(): graft.streaming.IngestGate =
       Ingest.nearGate(spark, Ingest.Config(src = "s", out = "o", checkpoint = "c",
         nearIndex = Some(idxPath))).get
 
     def drive(srcDir: String, outPath: String, ckpt: String,
-        gate: Option[graft.streaming.StreamingDedup.IngestGate]): Unit = {
+        gate: Option[graft.streaming.IngestGate]): Unit = {
       val in = spark.readStream.schema(docs.schema).parquet(srcDir)
       val q = StreamingCuration.ingestTo(spark, in, outPath, ckpt,
         availableNow = true, nearGate = gate)
@@ -274,7 +274,7 @@ class StreamingCurationSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_bmstats_ck").toString
     val statsPath = Files.createTempDirectory("graft_bmstats").toString + "/stats"
     // the CLI's bootstrap: zeros are the additive identity
-    TextAnalysis.saveBm25Stats(TextAnalysis.emptyBm25Stats(spark), statsPath)
+    TextAnalysis.Bm25Files.save(TextAnalysis.emptyBm25Stats(spark), statsPath)
 
     def drive(): Unit = {
       val in = spark.readStream.schema(docs.schema).parquet(src)
@@ -292,18 +292,18 @@ class StreamingCurationSpec extends SparkSpec {
       StreamingCuration.curated(a.unionByName(b))
         .filter(col("source").isNotNull)).collect().toSeq
     assert(expected.head.getAs[Long]("n_docs") > 0)
-    assert(TextAnalysis.loadBm25Stats(spark, statsPath).collect().toSeq == expected,
+    assert(TextAnalysis.Bm25Files.load(spark, statsPath).collect().toSeq == expected,
       "folded per-batch deltas must equal the one-shot stats over the admitted union")
 
     // compaction folds the chain into a stamped base, contents identical;
     // a replay whose id the stamp already swallowed must SKIP (its
     // content is in the base — folding it again would double-count)
-    TextAnalysis.compactBm25Stats(spark, statsPath)
-    assert(TextAnalysis.loadBm25Stats(spark, statsPath).collect().toSeq == expected)
-    assert(TextAnalysis.saveBm25StatsDeltaAt(
+    TextAnalysis.Bm25Files.compact(spark, statsPath)
+    assert(TextAnalysis.Bm25Files.load(spark, statsPath).collect().toSeq == expected)
+    assert(TextAnalysis.Bm25Files.saveDeltaAt(
       TextAnalysis.bm25Stats(a), statsPath, 1L).isEmpty,
       "a swallowed batch id must skip, not re-fold")
-    assert(TextAnalysis.loadBm25Stats(spark, statsPath).collect().toSeq == expected)
+    assert(TextAnalysis.Bm25Files.load(spark, statsPath).collect().toSeq == expected)
     graft.operators.IndexFiles.delete(spark, statsPath)
   }
 
@@ -312,7 +312,7 @@ class StreamingCurationSpec extends SparkSpec {
     import graft.operators.{IndexFiles, TextAnalysis}
     val out = Files.createTempDirectory("graft_bmce_out").toString + "/packed"
     val statsPath = Files.createTempDirectory("graft_bmce").toString + "/stats"
-    TextAnalysis.saveBm25Stats(TextAnalysis.emptyBm25Stats(spark), statsPath)
+    TextAnalysis.Bm25Files.save(TextAnalysis.emptyBm25Stats(spark), statsPath)
 
     // drive the run body directly: every landed delta compacts (cadence 1),
     // so no delta_<id> dir may survive any batch
@@ -329,7 +329,7 @@ class StreamingCurationSpec extends SparkSpec {
     assert(IndexFiles.numbered(spark, statsPath, "delta_").isEmpty)
     val expected = TextAnalysis.bm25Stats(
       batchDf(0).unionByName(batchDf(10))).collect().toSeq
-    assert(TextAnalysis.loadBm25Stats(spark, statsPath).collect().toSeq == expected,
+    assert(TextAnalysis.Bm25Files.load(spark, statsPath).collect().toSeq == expected,
       "compaction inside the loop must stay contents-identical")
     IndexFiles.delete(spark, statsPath)
   }

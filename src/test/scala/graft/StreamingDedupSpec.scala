@@ -178,7 +178,10 @@ class StreamingDedupSpec extends SparkSpec {
     val streamDocs = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
     val splitId = streamDocs.agg(org.apache.spark.sql.functions.expr(
       "percentile_approx(doc_id, 0.5)")).head().getLong(0)
-    val gate = StreamingDedup.novelNearCorpus(corpus)
+    // the corpus index is built once; each micro-batch gates against it
+    val idx = graft.operators.Dedup.corpusIndex(corpus)
+    val gate = (b: org.apache.spark.sql.DataFrame) =>
+      graft.operators.Dedup.bestMatchAgainst(b, idx, 0.8)
 
     def runOnce(): Unit = {
       val in = spark.readStream
@@ -272,7 +275,9 @@ class StreamingDedupSpec extends SparkSpec {
     val streamVecs = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val splitId = streamVecs.agg(org.apache.spark.sql.functions.expr(
       "percentile_approx(vec_id, 0.5)")).head().getLong(0)
-    val gate = graft.streaming.StreamingSimilarity.novelAgainstIndex(corpus)
+    val idx = graft.operators.Similarity.embedIndex(corpus)
+    val gate = (b: org.apache.spark.sql.DataFrame) =>
+      graft.operators.Similarity.embedNoveltyAgainst(b, idx, 0.35)
 
     def runOnce(): Unit = {
       val in = spark.readStream

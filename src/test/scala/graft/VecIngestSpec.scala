@@ -92,9 +92,9 @@ class VecIngestSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(landed1 == (1000L until 1050L).toSet,
       "a fresh index must admit the whole first batch")
-    assert(Similarity.pqIndexExists(spark, c.pqIndex.get),
+    assert(Similarity.PqFiles.exists(spark, c.pqIndex.get),
       "the PQ base must bootstrap from the first batch")
-    assert(Similarity.knnGraphExists(spark, c.graphIndex.get))
+    assert(Similarity.GraphFiles.exists(spark, c.graphIndex.get))
 
     // run 2 (daemon RESTART — fresh Pipeline, everything loaded from
     // disk): exact copies of run-1 vectors under NEW ids (near-matches
@@ -119,7 +119,7 @@ class VecIngestSpec extends SparkSpec {
 
     // the PQ index resumed from base+deltas must encode EXACTLY the
     // admitted population, once each (bootstrap overlap + replay guards)
-    val pq = Similarity.loadPqIndex(spark, c.pqIndex.get)
+    val pq = Similarity.PqFiles.load(spark, c.pqIndex.get)
     val pqIds = pq.qn.select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(pqIds.toSet == landed && pqIds.size == landed.size,
       "PQ must hold each admitted vector exactly once")
@@ -127,7 +127,7 @@ class VecIngestSpec extends SparkSpec {
 
     // the folded graph must equal a from-scratch build over the admitted
     // union under the SAME frozen centroids
-    val g = Similarity.loadKnnGraph(spark, c.graphIndex.get)
+    val g = Similarity.GraphFiles.load(spark, c.graphIndex.get)
     val admittedUnion = runA.unionByName(fresh)
       .unionByName(frame(Seq((5000L, dupEmb, dupLab))))
     val scratch = Similarity.knnGraphEdgesWith(admittedUnion, g.cents)
@@ -155,7 +155,7 @@ class VecIngestSpec extends SparkSpec {
       yield vec(8 * f, f, m, 100L + f * 10 + m)), 0)
     pipe1.onBatch(frame(for { m <- 0 until 6 }
       yield vec(40, 7, m, 300L + m)), 1)
-    val pqBefore = Similarity.loadPqIndex(spark, c.pqIndex.get)
+    val pqBefore = Similarity.PqFiles.load(spark, c.pqIndex.get)
     val idsBefore = pqBefore.qn.select("vec_id").collect().map(_.getLong(0)).toSet
     pqBefore.release()
     assert(!idsBefore.exists(_ >= 300L), "batch 1 must still be staged, not folded")
@@ -164,11 +164,11 @@ class VecIngestSpec extends SparkSpec {
     // off the persisted indexes) so flush() can fold the on-disk leftovers
     val pipe2 = new VecIngest.Pipeline(spark, c)
     pipe2.flush()
-    val pq = Similarity.loadPqIndex(spark, c.pqIndex.get)
+    val pq = Similarity.PqFiles.load(spark, c.pqIndex.get)
     val pqIds = pq.qn.select("vec_id").collect().map(_.getLong(0)).toSet
     pq.release()
     assert((300L until 306L).forall(pqIds), s"flush must fold staged batch 1: $pqIds")
-    val g = Similarity.loadKnnGraph(spark, c.graphIndex.get)
+    val g = Similarity.GraphFiles.load(spark, c.graphIndex.get)
     val gIds = g.qn.select("vec_id").collect().map(_.getLong(0)).toSet
     g.release()
     assert((300L until 306L).forall(gIds), "graph leftovers must fold too")
@@ -224,7 +224,7 @@ class VecIngestSpec extends SparkSpec {
 
     // the retrained base must be what a restart loads (version bumped
     // exactly once — the run-1 NaN pass must not have burned a version)
-    val reloaded = Similarity.loadPqIndex(spark, c.pqIndex.get)
+    val reloaded = Similarity.PqFiles.load(spark, c.pqIndex.get)
     assert(reloaded.version == 2,
       "the CLI maintenance path must persist exactly the drift retrain")
     reloaded.release()
@@ -255,9 +255,9 @@ class VecIngestSpec extends SparkSpec {
       yield vec(8 * (f % 4), f, m, 1000L + f * 10 + m))
     addFile(runA, c.src, "a.parquet")
     drive()
-    assert(!Similarity.pqIndexExists(spark, c.pqIndex.get),
+    assert(!Similarity.PqFiles.exists(spark, c.pqIndex.get),
       "below the threshold the PQ base must not bootstrap")
-    assert(!Similarity.knnGraphExists(spark, c.graphIndex.get))
+    assert(!Similarity.GraphFiles.exists(spark, c.graphIndex.get))
 
     // run 2 (restart — the cumulative count must resume from the landed
     // output): +30 crosses the threshold; the bootstrap must train over
@@ -269,11 +269,11 @@ class VecIngestSpec extends SparkSpec {
 
     val landed = spark.read.parquet(c.out).select("vec_id")
       .collect().map(_.getLong(0)).toSet
-    val pq = Similarity.loadPqIndex(spark, c.pqIndex.get)
+    val pq = Similarity.PqFiles.load(spark, c.pqIndex.get)
     assert(pq.qn.select("vec_id").collect().map(_.getLong(0)).toSet == landed,
       "the crossing bootstrap must encode every landed vector, incl. pre-threshold ones")
     pq.release()
-    val g = Similarity.loadKnnGraph(spark, c.graphIndex.get)
+    val g = Similarity.GraphFiles.load(spark, c.graphIndex.get)
     assert(g.qn.select("vec_id").collect().map(_.getLong(0)).toSet == landed)
     g.release()
     graft.operators.IndexFiles.delete(spark, root)

@@ -21,13 +21,13 @@ class WriterFenceSpec extends SparkSpec {
       .toDF("doc_id", "text")
   }
 
-  private def freshTextGate(path: String): StreamingDedup.IngestGate = {
+  private def freshTextGate(path: String): graft.streaming.IngestGate = {
     val idx0 =
-      if (Dedup.indexExists(spark, path)) Dedup.loadIndex(spark, path)
+      if (Dedup.CorpusFiles.exists(spark, path)) Dedup.CorpusFiles.load(spark, path)
       else {
         import spark.implicits._
         val empty = Dedup.corpusIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"))
-        Dedup.saveIndex(empty, path)
+        Dedup.CorpusFiles.save(empty, path)
         empty
       }
     StreamingDedup.novelNearCorpusIngest(new RefreshableCorpusIndex(idx0),
@@ -71,7 +71,7 @@ class WriterFenceSpec extends SparkSpec {
     gate2.flush()
     // the persisted chain loads cleanly and answers like a from-scratch
     // index over everything the WINNER admitted
-    val loaded = Dedup.loadIndex(spark, path)
+    val loaded = Dedup.CorpusFiles.load(spark, path)
     val fps = loaded.fps.select("match_id").collect().map(_.getLong(0)).toSet
     loaded.release()
     assert(fps == ((0L until 4L) ++ (200L until 202L)).toSet, s"got $fps")
@@ -137,12 +137,12 @@ class WriterFenceSpec extends SparkSpec {
     val ePath = Files.createTempDirectory("graft_fence_e").toString + "/idx"
     val eIdx = Similarity.embedIndex(
       Seq.empty[(Long, Int, Seq[Float])].toDF("vec_id", "label", "embedding"))
-    Similarity.saveEmbedIndex(eIdx, ePath)
+    Similarity.EmbedFiles.save(eIdx, ePath)
     val eg1 = StreamingSimilarity.novelAgainstIndexIngest(
       new RefreshableEmbedIndex(eIdx), indexPath = Some(ePath))
     eg1(vecs(0), 0)
     StreamingSimilarity.novelAgainstIndexIngest(
-      new RefreshableEmbedIndex(Similarity.loadEmbedIndex(spark, ePath)),
+      new RefreshableEmbedIndex(Similarity.EmbedFiles.load(spark, ePath)),
       indexPath = Some(ePath))
     intercept[IllegalStateException] { eg1(vecs(10), 1) }
     IndexFiles.delete(spark, ePath)
@@ -150,12 +150,12 @@ class WriterFenceSpec extends SparkSpec {
     // PQ gate
     val pPath = Files.createTempDirectory("graft_fence_p").toString + "/idx"
     val pIdx = Similarity.pqIndexBuild(vecs(0).select("vec_id", "label", "embedding"))
-    Similarity.savePqIndex(pIdx, pPath)
+    Similarity.PqFiles.save(pIdx, pPath)
     val pg1 = StreamingSimilarity.pqIngest(
       new graft.operators.RefreshablePqIndex(pIdx), Some(pPath))
     pg1(vecs(10), 0)
     StreamingSimilarity.pqIngest(
-      new graft.operators.RefreshablePqIndex(Similarity.loadPqIndex(spark, pPath)),
+      new graft.operators.RefreshablePqIndex(Similarity.PqFiles.load(spark, pPath)),
       Some(pPath))
     intercept[IllegalStateException] { pg1(vecs(20), 1) }
     intercept[IllegalStateException] { pg1.flush() }
@@ -165,12 +165,12 @@ class WriterFenceSpec extends SparkSpec {
     val gPath = Files.createTempDirectory("graft_fence_g").toString + "/idx"
     val gIdx = Similarity.knnGraphIndex(
       vecs(0).select("vec_id", "label", "embedding"), centroidMod = 13)
-    Similarity.saveKnnGraph(gIdx, gPath)
+    Similarity.GraphFiles.save(gIdx, gPath)
     val gg1 = StreamingSimilarity.knnGraphIngest(
       new graft.operators.RefreshableKnnGraph(gIdx), Some(gPath))
     gg1(vecs(10), 0)
     StreamingSimilarity.knnGraphIngest(
-      new graft.operators.RefreshableKnnGraph(Similarity.loadKnnGraph(spark, gPath)),
+      new graft.operators.RefreshableKnnGraph(Similarity.GraphFiles.load(spark, gPath)),
       Some(gPath))
     intercept[IllegalStateException] { gg1(vecs(20), 1) }
     IndexFiles.delete(spark, gPath)
