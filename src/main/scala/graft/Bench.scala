@@ -1,5 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.PinnedCaches
+
+/** The registry benchmark: one JSON line on stdout (the headline `total`
+  * and every row's best time) and a fuller `BENCH_FULL.json` that adds each
+  * row's attempts and load, what its best attempt cost in Spark jobs,
+  * stages, tasks, shuffle bytes and executor time, and each cache-warm
+  * stage's wall seconds, jobs and executor time ([[BenchListener]]). */
 object Bench {
 
   /** First three fields of /proc/loadavg (1/5/15-min load) — printed into
@@ -75,33 +81,17 @@ object Bench {
     * 1-min load before/after — enough for an adjudicator to see contention
     * in the artifact itself instead of needing a quiet-box re-run (the r6
     * artifact was captured at loadavg 8-10 and its numbers were 10-300x
-    * inflated with nothing in the record to prove it). */
+    * inflated with nothing in the record to prove it). `bestWindow` is the
+    * wall-clock ms window of the best attempt, for its job accounting. */
   private case class QRes(best: Option[Double], attempts: Seq[Double],
-      othersCpu: Seq[Double], load: Double, loadAfter: Double, extraAttempt: Boolean)
+      othersCpu: Seq[Double], load: Double, loadAfter: Double, extraAttempt: Boolean,
+      bestWindow: Option[(Long, Long)])
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC parity with Verify/Dev/SparkSpec: Tables.events' TIMESTAMP_NTZ
-      // branch casts through the session timezone, so a non-UTC JVM default
-      // would shift hourly/session bucket boundaries and bench different work
-      // than the verified queries
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // warmCaches submits its independent pin chains from concurrent
-      // driver threads (guide §2.6); under the default FIFO queue a long
-      // head-of-line stage (the CC loops, k-means) blocks every sibling
-      // chain's ready stages. FAIR interleaves them across the same core
-      // pool — measured 6-7 s off cache_build at sf0.1, A/B'd both
-      // orders. The per-query phase runs one job at a time, where FAIR
-      // and FIFO schedule identically, so query timings are unaffected.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val listener = new BenchListener
+    spark.sparkContext.addSparkListener(listener)
     val loadStart = loadavg()
     calibMs() // discarded: JIT-compiles the probe so sample 1 is honest
     val calibPreWarm = calibMs()
@@ -110,11 +100,13 @@ object Bench {
     // render+parse+merge materialization and per-query numbers were noise.
     // cache_build is also the CALIBRATION line: identical work every round,
     // so round-over-round drift on it is box noise, not code.
+    val warmFromMs = System.currentTimeMillis()
     val warm0 = System.nanoTime()
     val warmOk =
       try { SparkEntry.warmCaches(spark, sfDir); true }
       catch { case e: Throwable => System.err.println(s"[bench] cache warm failed: $e"); false }
     val cacheBuild = (System.nanoTime() - warm0) / 1e9
+    val warmToMs = System.currentTimeMillis()
     val calibPostWarm = calibMs()
     // per-query BEST-OF-N: a shared box steals cores in bursts, and one
     // burst landing on one query used to distort that query's number 10-25x
@@ -125,10 +117,13 @@ object Bench {
     // (external-CPU share or disagreement — see the attempt loop below).
     val results: Seq[(String, QRes)] = SparkEntry.queries.toSeq.map { case (name, fn) =>
       val loadQ = load1()
+      // each attempt's wall-clock ms window, for BenchListener.window
+      val windows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       // None = the run threw. A failing query must surface as "err" in the
       // artifact, never as its (tiny) fail-fast elapsed time — r5's broken
       // log/events rows looked like 100x speedups until the judge re-ran them.
       def once(): Option[Double] = {
+        val fromMs = System.currentTimeMillis()
         val t0 = System.nanoTime()
         // noop sink: computes every output column (a bare count() would let
         // Catalyst prune joins/projections and under-measure)
@@ -137,7 +132,7 @@ object Bench {
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
           case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None
-        }
+        } finally windows += ((fromMs, System.currentTimeMillis()))
       }
       // Attempt loop, 2..4 attempts. Retry triggers (r9 verdict #3: the
       // 1.5x-disagreement trigger alone passes attempts that are
@@ -172,8 +167,10 @@ object Bench {
       while (attempts.size < 4 && needMore()) attempt()
       val loadAfter = load1()
       val all = attempts.flatten.toSeq
+      val bestWindow = attempts.zip(windows).collect { case (Some(t), w) => (t, w) }
+        .minByOption(_._1).map(_._2)
       name -> QRes(if (all.isEmpty) None else Some(all.min), all,
-        others.toSeq, loadQ, loadAfter, attempts.size > 2)
+        others.toSeq, loadQ, loadAfter, attempts.size > 2, bestWindow)
     }
     // 3-decimal timings: ~100+ entries must survive the driver artifact's
     // 2000-char tail cap — full-precision doubles truncated the map mid-number
@@ -205,13 +202,25 @@ object Bench {
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errCount,"sf":"$sfDir","policy":"best_of_2_to_4_external_cpu_gt_25pct_or_1p5x_disagree","contended":$contendedJson,"calib_sha_ms":$calibJson,"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}"}"""
     println(line)
     // durable full copy — the stdout artifact is truncated by the driver;
-    // this one additionally carries every query's attempts and start load
+    // this one additionally carries every query's attempts and start load,
+    // the job cost of its best attempt, and the warm stages' costs
+    listener.sync(spark.sparkContext)
     val detail = results.map { case (n, r) =>
+      val cost = r.bestWindow.fold("")(w => "," + listener.window(w._1, w._2).rowJson)
       "\"" + n + "\":{\"load1\":" + fmt1(r.load) + ",\"load1_after\":" +
         fmt1(r.loadAfter) + ",\"others_cpu\":[" + r.othersCpu.map(fmt).mkString(",") +
-        "],\"attempts\":[" + r.attempts.map(fmt).mkString(",") + "]}"
+        "],\"attempts\":[" + r.attempts.map(fmt).mkString(",") + "]" + cost + "}"
     }.mkString("{", ",", "}")
-    val full = line.dropRight(1) + s""","detail":$detail}"""
+    val warmCosts = listener.byLabel(warmFromMs, warmToMs)
+    val warmSecs = PinnedCaches.warmTimes(spark)
+    // unattributed is always written: 0 says every warm job had a label
+    val labels = warmSecs.keySet ++ warmCosts.keySet + BenchListener.Unattributed
+    val warm = labels.toSeq.sorted.map { label =>
+      val c = warmCosts.getOrElse(label, JobCost())
+      "\"" + label + "\":{" + warmSecs.get(label).fold("")(s => "\"s\":" + fmt(s) + ",") +
+        "\"jobs\":" + c.jobs + ",\"executor_ms\":" + c.executorMs + "}"
+    }.mkString("{", ",", "}")
+    val full = line.dropRight(1) + s""","detail":$detail,"warm":$warm}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (full + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-point scale-curve bench: times the most expensive registry rows at
   * sf0.1 and at the [[ScaleData]]-rendered ~10× corpus, and prints ONE
   * JSON line per run plus a combined `BENCH_SCALE.json` with per-row
@@ -26,14 +24,7 @@ object BenchScale {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   private def timeAll(sfDir: String): Map[String, Double] = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     try {
       SparkEntry.warmCaches(spark, sfDir)
       Rows.map { name =>

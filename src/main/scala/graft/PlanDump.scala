@@ -1,27 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only plan dumper: `runMain graft.PlanDump <outDir> <query>...` writes
-  * each named [[SparkEntry.queries]] entry's `.explain("formatted")` output
-  * to `<outDir>/<query>.txt` under the Bench session config (caches warmed
-  * first, so the captured plan is the one the bench's timed run executes —
-  * with InMemoryRelation pins substituted, exactly as measured). Not part of
-  * the driver contract. */
+/** Plan dumper: `runMain graft.PlanDump <outDir> <query>...` writes each
+  * named [[SparkEntry.queries]] entry's `.explain("formatted")` output to
+  * `<outDir>/<query>.txt` under Bench's session ([[LocalSession]], same
+  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS defaults) with the caches warmed
+  * first. It answers the one question BENCH_FULL cannot: which physical
+  * plan, with the InMemoryRelation pins substituted, the timed run
+  * executed. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.head
     val names = args.tail.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     SparkEntry.warmCaches(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

@@ -64,17 +64,12 @@ object SparkEntry {
     * render+parse+merge cache build to whichever log query happens to run
     * first ([[Bench]] reports this as its own `cache_build` line item). */
   def warmCaches(s: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // per-stage stderr breakdown: cache_build is the bench's calibration
-    // line, and when it drifts round-over-round this log says WHICH index
-    // build moved (box noise shifts every stage; a code change shifts one)
-    def stage(name: String)(f: => Unit): Unit = PinnedCaches.warmStage(name)(f)
-    // GRAFT_WARM_SEQUENTIAL=1 (dev-only, graft.WarmProfile): run every
-    // chain/branch one at a time so each [warm] line is the stage's own
-    // compute, not its share of a saturated core pool
-    val sequential = PinnedCaches.warmSequential
+    import PinnedCaches.settle
+    // per-stage breakdown: cache_build is the bench's calibration line, and
+    // when it drifts round-over-round the stage times (stderr and
+    // BENCH_FULL's `warm`) say WHICH index build moved (box noise shifts
+    // every stage; a code change shifts one)
+    def stage(name: String)(f: => Unit): Unit = PinnedCaches.warmStage(s, name)(f)
     // THREE independent chains run CONCURRENTLY (Spark schedules jobs from
     // multiple driver threads across the same executor pool; no pin is
     // shared across chains, and PinnedCaches' TrieMaps are concurrent) —
@@ -82,14 +77,7 @@ object SparkEntry {
     // intra-stage barriers, and cache_build was ~40% of the whole bench.
     // Stages WITHIN a chain stay ordered (parse consumes render's lines;
     // text_pins reads dedup's dup-group pin).
-    def fut(body: => Unit): scala.concurrent.Future[Unit] =
-      if (sequential) Future.fromTry(scala.util.Try(body)) else Future(body)
-    // settle ALL futures to COMPLETION before rethrowing (fail-fast would
-    // return control while siblings still run warm jobs)
-    def settle(fs: Seq[scala.concurrent.Future[Unit]]): Unit =
-      Await.result(Future.sequence(
-        fs.map(_.transform(scala.util.Success(_)))), Duration.Inf)
-        .foreach(_.get)
+    def fut(body: => Unit) = PinnedCaches.warmFuture(s)(body)
     val logChain = fut {
       // the two parse+merge corpora are independent END TO END (the noisy
       // corpus renders its own lines inline), so both branches start at
@@ -129,8 +117,10 @@ object SparkEntry {
     }
     // the pipeline families' pinned working sets (dup groups, shingle sets,
     // winnowing fingerprints, quantized vectors, the k-means assignment)
-    val docs = Tables.load(s, dir, "documents")
     val docChain = fut {
+      // lazy: the parquet schema read is a Spark job, so it runs (and is
+      // attributed) inside dedup_base like sim_pins' load
+      lazy val docs = Tables.load(s, dir, "documents")
       // the shared dup-group + shingle pins first (both families read
       // them; materializing before the fork avoids a double-pin race on
       // the same plan key), then the CC cluster labeling and the text

@@ -63,20 +63,6 @@ object Documents {
       ds.join(Dedup.exact(df).select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
         .as[Document]
 
-    /** Keep one document per CANONICAL-text group ([[Dedup.canonical]]'s
-      * keep rule) — additionally folds case/punctuation/whitespace
-      * variants that [[withoutExactDups]] treats as distinct. */
-    def withoutCanonicalDups: Dataset[Document] =
-      ds.join(Dedup.canonical(df).select(col("keep_id").as("doc_id")),
-        Seq("doc_id"), "left_semi").as[Document]
-
-    /** Keep each near-dup family's HIGHEST-quality member — the typed form
-      * of [[CurationPipeline.qualityExemplars]]'s best-copy-wins rule
-      * (vs [[withoutNearDups]]'s first-id-wins). */
-    def bestOfEachFamily: Dataset[Document] =
-      ds.join(CurationPipeline.qualityExemplars(df).select(col("keep_id").as("doc_id")),
-        Seq("doc_id"), "left_semi").as[Document]
-
     /** PII-scrubbed copy: `text` replaced by [[Pii.scrub]]'s sequential
       * redaction (`n_chars` recomputed); pure map-side. */
     def scrubbed: Dataset[Document] =

@@ -181,13 +181,6 @@ object Layout {
       .bitwiseOR(shiftleft(spreadBits3(b), 1))
       .bitwiseOR(shiftleft(spreadBits3(c), 2))
 
-  /** Three-key [[zOrderBy]]: chunks become boxes in (a, b, c) space. */
-  def zOrderBy3(df: DataFrame, a: Column, b: Column, c: Column,
-      partitions: Int = 32): DataFrame =
-    df.withColumn("z_val", zValue3(a, b, c))
-      .repartitionByRange(partitions, col("z_val"))
-      .sortWithinPartitions("z_val")
-
   /** The 3-key registry form over `events`: (user_id, epoch hour, value
     * cents), each min/max-normalized to 10 bits — the third dimension a
     * fraud/anomaly dashboard boxes on (value bands). Same normalization

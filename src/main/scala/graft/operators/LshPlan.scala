@@ -13,20 +13,14 @@ package graft.operators
   * the divisor pairs of the signature budget, the cheapest layout whose
   * recall at the verify threshold still clears `minRecall`.
   *
-  * The shipped configuration (32 hashes as 8×4 for the 0.8 verify
-  * threshold) is exactly `plan(32, 0.8)` — spec-pinned so the constants in
-  * [[Dedup]] cannot drift from the analysis that justifies them. */
+  * [[Dedup]] takes its band layout from `plan(32, 0.8)` (8 bands × 4
+  * rows), so the constant cannot drift from the analysis that justifies
+  * it. */
 object LshPlan {
 
   /** P(pair at similarity `s` shares ≥1 band bucket) = 1 − (1 − s^r)^b. */
   def candidateProbability(b: Int, r: Int, s: Double): Double =
     1.0 - math.pow(1.0 - math.pow(s, r), b)
-
-  /** The S-curve midpoint `(1/b)^(1/r)` — similarity at which candidacy
-    * probability crosses ≈ 1 − e^{-1}; banding is deliberately tuned so
-    * this sits BELOW the verify threshold. */
-  def impliedThreshold(b: Int, r: Int): Double =
-    math.pow(1.0 / b, 1.0 / r)
 
   /** Lower bound on recall for pairs with similarity ≥ `t` (P is monotone
     * increasing in s, so the worst case is exactly at the threshold). */

@@ -1,5 +1,9 @@
 package graft.operators
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Success
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -57,6 +61,7 @@ object PinnedCaches {
     * `SparkEntry.clearCaches`; safe to call between corpora). */
   def release(s: SparkSession): Unit = {
     memos.keys.filter(_._1 == s).foreach(memos.remove)
+    warmSeconds.keys.filter(_._1 == s).foreach(warmSeconds.remove)
     pinned.keys.filter(_._1 == s).foreach { k =>
       pinned.remove(k).foreach(_.unpersist())
     }
@@ -105,19 +110,54 @@ object PinnedCaches {
         "through a checkpointed copy")
   }
 
-  /** Stage timer for the cache warms — ONE format (`[warm] <label> <s> s`
-    * on stderr) so the round-over-round cache_build drift adjudication
-    * greps a single shape; shared by SparkEntry.warmCaches and the
-    * families' warmPins. */
-  /** Dev-only profiling switch (graft.WarmProfile): serialize the warm
-    * chains/branches so each [[warmStage]] line times the stage's own
-    * compute instead of its share of a saturated core pool. */
-  private[graft] def warmSequential: Boolean =
-    sys.env.get("GRAFT_WARM_SEQUENTIAL").contains("1")
+  /** The job-local property that names the [[warmStage]] a job runs under,
+    * so a listener can attribute concurrent warm jobs to their stage. */
+  val WarmStageKey = "graft.warmStage"
 
-  private[graft] def warmStage(label: String)(f: => Unit): Unit = {
-    val t0 = System.nanoTime(); f
-    System.err.println(
-      f"[warm] $label ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  private val warmSeconds =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Double]
+
+  /** One labelled cache-warm stage, shared by SparkEntry.warmCaches and the
+    * families' warmPins. Its jobs carry `label` as [[WarmStageKey]] (a
+    * nested stage's jobs carry the innermost label), and its wall seconds
+    * are kept for [[warmTimes]] and printed as `[warm] <label> <s> s` on
+    * stderr. */
+  private[graft] def warmStage(s: SparkSession, label: String)(f: => Unit): Unit = {
+    val sc = s.sparkContext
+    val outer = sc.getLocalProperty(WarmStageKey)
+    sc.setLocalProperty(WarmStageKey, label)
+    val t0 = System.nanoTime()
+    try f finally sc.setLocalProperty(WarmStageKey, outer)
+    val secs = (System.nanoTime() - t0) / 1e9
+    warmSeconds((s, label)) = secs
+    System.err.println(f"[warm] $label $secs%.1f s")
   }
+
+  /** A concurrent warm branch that runs under the caller's warm-stage
+    * label. Pool threads are reused, so a branch must neither lose the
+    * label of the stage that forked it nor keep one a previous branch
+    * left on its thread. */
+  private[graft] def warmFuture(s: SparkSession)(body: => Unit): Future[Unit] = {
+    val sc = s.sparkContext
+    val label = sc.getLocalProperty(WarmStageKey)
+    Future {
+      val outer = sc.getLocalProperty(WarmStageKey)
+      sc.setLocalProperty(WarmStageKey, label)
+      try body finally sc.setLocalProperty(WarmStageKey, outer)
+    }(ExecutionContext.global)
+  }
+
+  /** Wait for ALL warm branches to complete, then rethrow the first failure:
+    * a fail-fast return would hand control back while siblings still run
+    * warm jobs. */
+  private[graft] def settle(fs: Seq[Future[Unit]]): Unit = {
+    import ExecutionContext.Implicits.global
+    Await.result(Future.sequence(fs.map(_.transform(Success(_)))), Duration.Inf)
+      .foreach(_.get)
+  }
+
+  /** Wall seconds of every [[warmStage]] label run in `s` (the last run of
+    * a label wins). */
+  def warmTimes(s: SparkSession): Map[String, Double] =
+    warmSeconds.collect { case ((ss, label), secs) if ss == s => label -> secs }.toMap
 }

@@ -343,20 +343,6 @@ object Sampling {
       .select("doc_id", "shard", "pos_in_shard", "skey")
   }
 
-  /** Materialize the [[shuffleShards]] ordering as a partitioned parquet
-    * layout — the 100 TB form of the training shuffle: one directory per
-    * shard (`shard=N/`), rows inside each shard ordered by the shuffle key
-    * (repartition-by-shard + sortWithinPartitions, so each shard is written
-    * by one task in key order with no global sort). An epoch reader consumes
-    * shard directories in index order for a deterministic, fully shuffled
-    * pass over the corpus. */
-  def writeShuffled(docs: DataFrame, path: String, salt: String = "graft0",
-      nShards: Int = 16): Unit =
-    shuffleShardsRaw(docs, salt, nShards)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions("shard", "skey", "doc_id")
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-
   val shuffleShardsSql: String =
     """WITH d AS (
       |  SELECT doc_id, md5('graft0:' || CAST(doc_id AS VARCHAR)) AS skey

@@ -840,11 +840,8 @@ object Similarity {
     * measure the queries instead of charging the shared materializations to
     * whichever family member happens to run first. */
   def warmPins(emb: DataFrame): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     def stage(name: String)(f: => Unit): Unit =
-      PinnedCaches.warmStage(s"  sim.$name")(f)
+      PinnedCaches.warmStage(emb.sparkSession, s"sim.$name")(f)
     // the shared base pin first (every index build reads it), then FOUR
     // independent branches concurrently — this chain was the cache_build
     // critical path (35.9 s sequential at sf0.1; the longest branch,
@@ -852,9 +849,7 @@ object Similarity {
     // (learned consumes the same pinned residual/slice frames as sampled,
     // materialized by the first build). Branch keys never collide in
     // PinnedCaches, so no pin is computed twice.
-    def fut(body: => Unit): scala.concurrent.Future[Unit] =
-      if (PinnedCaches.warmSequential) Future.fromTry(scala.util.Try(body))
-      else Future(body)
+    def fut(body: => Unit) = PinnedCaches.warmFuture(emb.sparkSession)(body)
     stage("quantized")(PinnedCaches.pin(quantized(emb).select("vec_id", "q", "nq")).count())
     val branches = Seq(
       fut(stage("kmeans")(kmeansAssign(emb, 8, 2).count())),
@@ -878,12 +873,8 @@ object Similarity {
       // the default kNN graph — the index artifact graph_quality_prop and
       // graph_pagerank traverse; warmed so their rows measure traversal
       fut(stage("knn_graph")(knnGraphPinned(emb).count())))
-    // settle ALL branches before rethrowing (same discipline as
-    // SparkEntry.warmCaches: no stray warm jobs after control returns)
-    val settled = Await.result(
-      Future.sequence(branches.map(_.transform(scala.util.Success(_)))), Duration.Inf)
-    settled.foreach(_.get)
-    ()
+    // no stray warm jobs after control returns
+    PinnedCaches.settle(branches)
   }
 
   /** Deterministic quantized k-means over the embedding corpus — the

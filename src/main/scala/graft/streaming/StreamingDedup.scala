@@ -45,23 +45,6 @@ object StreamingDedup {
     withFp(docs).withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("fp")
 
-  /** Stream-vs-corpus novelty gate — the streaming twin of
-    * [[graft.operators.Dedup.incremental]]'s exact tier: a streamed
-    * document is admitted only if its fingerprint appears neither in the
-    * EXISTING corpus (a stream-static anti join against the corpus's
-    * fingerprint set) nor earlier in the stream itself (the same stateful
-    * dropDuplicates as [[firstOccurrences]]). This is the ingest gate a
-    * crawler actually runs: "is this new relative to everything we
-    * already have, and to everything else in this crawl".
-    *
-    * At 100 TB the static side is a materialized 16-byte fingerprint
-    * table, bucketed on `fp`, so the per-micro-batch join prunes to
-    * matching buckets instead of re-scanning the corpus. */
-  def novelAgainstCorpus(stream: DataFrame, corpus: DataFrame): DataFrame = {
-    val fps = corpus.select(md5(col("text")).as("fp")).distinct()
-    withFp(stream).join(fps, Seq("fp"), "left_anti").dropDuplicates("fp")
-  }
-
   /** The CLOSED near-dup ingest loop — the streaming twin of
     * [[graft.operators.Dedup.incremental]]'s full semantics: each
     * micro-batch reports every document's best corpus match `(doc_id,

@@ -14,12 +14,6 @@ class LshPlanSpec extends AnyFunSuite {
     ps.sliding(2).foreach { case Seq(a, b) => assert(a <= b); case _ => }
   }
 
-  test("implied threshold of the shipped 8x4 layout sits below the 0.8 verify threshold") {
-    val t = impliedThreshold(8, 4)
-    assert(t > 0.55 && t < 0.65, s"expected ~0.594, got $t")
-    assert(t < 0.8, "banding must fire before the verify threshold to protect recall")
-  }
-
   test("shipped Dedup constants are the planner's own choice for threshold 0.8") {
     assert(plan(32, 0.8) == ((8, 4)))
     assert(recallAt(8, 4, 0.8) > 0.98)

@@ -822,22 +822,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("n_vecs")).sum == emb.count())
   }
 
-  test("writeShuffled materializes the shard layout: one dir per shard, key-ordered rows, full coverage") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shuffle_out").toFile.getAbsolutePath
-    Sampling.writeShuffled(docs, out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    // partitioned layout: shard is a directory column readers can prune on
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(dirs.forall(_.startsWith("shard=")) && dirs.nonEmpty)
-    // within each shard the expected ordering is recoverable by the key
-    val expected = Sampling.shuffleShards(docs).collect()
-      .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("doc_id"))).toSeq
-    val got = back.orderBy("shard", "skey", "doc_id").collect()
-      .map(r => (r.getAs[Int]("shard").toLong, r.getAs[Long]("doc_id"))).toSeq
-    assert(got == expected)
-  }
-
   test("shuffle shards: per-shard positions contiguous from 1, all docs covered, deterministic") {
     val a = Sampling.shuffleShards(docs).collect()
     val b = Sampling.shuffleShards(docs).collect()

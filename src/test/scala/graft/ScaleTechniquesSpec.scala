@@ -783,8 +783,10 @@ class ScaleTechniquesSpec extends SparkSpec {
     // a pure value-band box (full user + time range): only a layout that
     // clusters on the THIRD key can prune it
     val nChunks = 16
-    val laid = Layout.zOrderBy3(keyed.select("event_id", "u10", "h10", "v10"),
-      col("u10"), col("h10"), col("v10"), nChunks)
+    val laid = keyed.select("event_id", "u10", "h10", "v10")
+      .withColumn("z_val", Layout.zValue3(col("u10"), col("h10"), col("v10")))
+      .repartitionByRange(nChunks, col("z_val"))
+      .sortWithinPartitions("z_val")
     val stats = laid.withColumn("chunk", spark_partition_id())
       .groupBy("chunk").agg(min("v10").as("v_lo"), max("v10").as("v_hi"))
       .collect()

@@ -221,46 +221,6 @@ class StreamingDedupSpec extends SparkSpec {
     assert(got == want, s"first diff: ${got.zip(want).find(p => p._1 != p._2)}")
   }
 
-  test("novel-against-corpus: corpus copies rejected by the stream-static anti join, in-stream dups by state, across restarts") {
-    import spark.implicits._
-    val src = Files.createTempDirectory("graft_sdedup_corpus_src").toFile
-    val ckpt = Files.createTempDirectory("graft_sdedup_corpus_ckpt").toFile.getAbsolutePath
-    StreamingDedupSpec.emitted.clear()
-
-    val corpus = Seq((100L, "existing one"), (101L, "existing two"))
-      .toDF("doc_id", "text")
-
-    def runOnce(): Unit = {
-      val in = spark.readStream.schema(schema).json(src.getAbsolutePath)
-      val q = StreamingDedup.novelAgainstCorpus(in, corpus).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          StreamingDedupSpec.emitted.addAll(
-            batch.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq.asJava)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      try assert(q.awaitTermination(120000L), "the run must terminate on its own")
-      finally q.stop()
-    }
-
-    // b1: a corpus copy (rejected), a novel doc (kept), its in-stream dup (dropped)
-    writeJson(src, "b1.json", Seq(
-      """{"doc_id": 1, "text": "existing one"}""",
-      """{"doc_id": 2, "text": "fresh alpha"}""",
-      """{"doc_id": 3, "text": "fresh alpha"}"""))
-    runOnce()
-    // b2 after restart: another corpus copy, a dup of b1's novel doc (state
-    // recovered), and one genuinely new doc
-    writeJson(src, "b2.json", Seq(
-      """{"doc_id": 4, "text": "existing two"}""",
-      """{"doc_id": 5, "text": "fresh alpha"}""",
-      """{"doc_id": 6, "text": "fresh beta"}"""))
-    runOnce()
-    val kept = StreamingDedupSpec.emitted.asScala.toSeq
-    assert(kept == Seq((2L, "fresh alpha"), (6L, "fresh beta")), s"kept $kept")
-  }
-
   test("embedding novelty gate: stream output equals Similarity.embedNovelty on the same split, across a checkpointed restart") {
     import org.apache.spark.sql.functions.{col, pmod, lit}
     val emb = graft.operators.Tables.load(spark, sf(), "embeddings")
