@@ -12,7 +12,8 @@ import graft.sources.{TailFleetOffset, TailOffset}
 /** The exporter's metrics ABOUT ITSELF — the `graft_*` block every real
   * Prometheus exporter appends to its exposition (node_exporter's
   * `node_scrape_*`, promhttp's handler counters): scrape traffic, micro-batch
-  * cadence, merge-state size and partition count, and — the one only the
+  * cadence and per-phase time, merge-state size, partition count and
+  * commit time, and — the one only the
   * tail source can provide — the live backlog gauge,
   * `graft_tail_backlog_bytes`: how many bytes sit in the log file(s)
   * beyond what the stream has admitted. Under
@@ -47,6 +48,9 @@ final class ExporterTelemetry extends SelfTelemetry {
   @volatile private var lastBatchInputRows = 0L
   @volatile private var stateRows = 0L
   @volatile private var statePartitions = 0L
+  /** The last progress event's [[ExporterTelemetry.Phases]], in ms. */
+  @volatile private var phaseMs = ExporterTelemetry.Phases.map(_ -> 0L)
+  @volatile private var stateCommitMs = 0L
   /** server path -> unadmitted bytes; "" = the single-file (label-free)
     * form. Swapped whole per progress event — a scrape never sees a
     * half-updated gauge set. */
@@ -64,6 +68,9 @@ final class ExporterTelemetry extends SelfTelemetry {
     lastBatchDurationMs =
       Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
     lastBatchInputRows = p.numInputRows
+    phaseMs = ExporterTelemetry.Phases.map(k =>
+      k -> Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L))
+    stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum
     stateRows = p.stateOperators.map(_.numRowsTotal).sum
     statePartitions = p.stateOperators.map(_.numShufflePartitions).maxOption.getOrElse(0L)
     p.sources.foreach { s =>
@@ -110,8 +117,15 @@ final class ExporterTelemetry extends SelfTelemetry {
       "gauge", Seq(s"graft_last_batch_duration_seconds ${MetricsSink.fmtDouble(lastBatchDurationMs / 1000.0)}"))
     fam("graft_last_batch_input_rows", "Input rows of the last micro-batch",
       "gauge", Seq(s"graft_last_batch_input_rows $lastBatchInputRows"))
+    fam("graft_last_batch_phase_seconds", "Time the last micro-batch spent in each phase",
+      "gauge", phaseMs.map { case (k, ms) =>
+        s"""graft_last_batch_phase_seconds{phase="$k"} ${MetricsSink.fmtDouble(ms / 1000.0)}"""
+      })
     fam("graft_merge_state_rows", "Rows held by the keyed merge's state store",
       "gauge", Seq(s"graft_merge_state_rows $stateRows"))
+    fam("graft_merge_state_commit_seconds",
+      "State-store commit time of the last micro-batch, summed over partitions",
+      "gauge", Seq(s"graft_merge_state_commit_seconds ${MetricsSink.fmtDouble(stateCommitMs / 1000.0)}"))
     // fixed when the checkpoint was first written: a resumed old checkpoint
     // shows its original count here, not the session's default
     fam("graft_merge_state_partitions", "State-store partitions of the keyed merge",
@@ -130,6 +144,12 @@ final class ExporterTelemetry extends SelfTelemetry {
 }
 
 object ExporterTelemetry {
+
+  /** The micro-batch phases of Spark's progress report (`durationMs`), in
+    * execution order: the source's offset poll, planning, the offset-log
+    * write, the batch itself, and the commit-log write. */
+  val Phases: Seq[String] =
+    Seq("latestOffset", "queryPlanning", "walCommit", "addBatch", "commitOffsets")
 
   /** Per-server unadmitted bytes from a source's progress offsets: `end` is
     * the admitted position, `latest` the true tail the source reported

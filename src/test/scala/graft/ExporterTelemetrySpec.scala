@@ -24,6 +24,10 @@ class ExporterTelemetrySpec extends SparkSpec {
     ("(?m)^" + java.util.regex.Pattern.quote(name) + " (\\d+)$").r
       .findFirstMatchIn(body).map(_.group(1).toLong)
 
+  private def seconds(body: String, sample: String): Double =
+    ("(?m)^" + java.util.regex.Pattern.quote(sample) + " (\\S+)$").r
+      .findFirstMatchIn(body).map(_.group(1).toDouble).getOrElse(fail(s"no $sample in $body"))
+
   test("backlogOf: single-file offsets, same and bumped epochs, non-tail forms") {
     // same generation: plain byte difference
     assert(ExporterTelemetry.backlogOf("0:40:k", "0:100:k") ==
@@ -59,6 +63,11 @@ class ExporterTelemetrySpec extends SparkSpec {
     assert(r0.contains("graft_batches_total 0"))
     assert(r0.contains("# TYPE graft_merge_state_partitions gauge"))
     assert(r0.contains("graft_merge_state_partitions 0"))
+    assert(r0.contains("# TYPE graft_last_batch_phase_seconds gauge"))
+    assert(ExporterTelemetry.Phases.forall(k =>
+      r0.contains(s"""graft_last_batch_phase_seconds{phase="$k"} 0""")))
+    assert(r0.contains("# TYPE graft_merge_state_commit_seconds gauge"))
+    assert(r0.contains("graft_merge_state_commit_seconds 0"))
     // no backlog series until a tail-source progress event arrives
     assert(r0.contains("# TYPE graft_tail_backlog_bytes gauge"))
     assert(metric(r0, "graft_tail_backlog_bytes").isEmpty)
@@ -111,6 +120,21 @@ class ExporterTelemetrySpec extends SparkSpec {
       val s2 = metric(get(s"http://127.0.0.1:${server.boundPort}/metrics"),
         "graft_scrapes_total").get
       assert(s2 == s1 + 1, s"scrapes_total must count every request: $s1 -> $s2")
+      // the commit phases come straight from the progress report
+      assert(ExporterTelemetry.Phases.forall(k =>
+        drained.contains(s"""graft_last_batch_phase_seconds{phase="$k"} """)), drained)
+      assert(drained.contains("graft_merge_state_commit_seconds "), drained)
+      val p = query.lastProgress
+      val t = new ExporterTelemetry
+      t.onProgress(p)
+      val r = t.render()
+      for (k <- ExporterTelemetry.Phases) {
+        val ms = Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
+        assert(seconds(r, s"""graft_last_batch_phase_seconds{phase="$k"}""") == ms / 1000.0,
+          s"$k = $ms ms: $r")
+      }
+      assert(seconds(r, "graft_merge_state_commit_seconds") ==
+        p.stateOperators.map(_.commitTimeMs).sum / 1000.0)
     } finally {
       query.stop()
       server.stop(0)

@@ -56,10 +56,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Runs on the daemons' `file:` file system, so the checkpoint and index
+    * specs exercise the one the daemons ship. */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config(DaemonSession.LocalFileSystem)
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
