@@ -20,6 +20,20 @@ object DataPipelineQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
+  /** The `*_delta` rows' reload: base + delta at `path` loaded and
+    * checkpointed off the files, which are then deleted. The holder that
+    * folded the delta is discarded on purpose: the RELOAD is the artifact
+    * those rows gate through (`pin = false`: the load is checkpointed at
+    * once and dropped). */
+  private def reload[I <: IndexValue[I]](files: IndexFiles.Artifact[I, _],
+      s: SparkSession, path: String): I = {
+    val loaded = files.load(s, path, pin = false)
+    val pinned = loaded.truncated()
+    loaded.release()
+    IndexFiles.delete(s, path)
+    pinned
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
     "dedup_canonical" -> ((s, dir) => Dedup.canonical(docs(s, dir))),
@@ -44,21 +58,21 @@ object DataPipelineQueries {
         .orderBy("doc_id")
     }),
     // INDEX LIFECYCLE: corpus %3==0 indexed from scratch, %3==1 folded in
-    // via the incremental refresh, %3==2 gated through the REFRESHED index
+    // through the daemons' holder, %3==2 gated through the REFRESHED index
     // — the oracle knows only the union corpus, so the hash gate proves
     // refreshed ≡ from-scratch on the real corpus
     "dedup_index_refresh" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val d = docs(s, dir)
-      val idx0 = Dedup.corpusIndex(d.filter(pmod(col("doc_id"), lit(3)) === 0))
-      val idx1 = Dedup.refreshIndex(idx0, d.filter(pmod(col("doc_id"), lit(3)) === 1))
-      Dedup.bestMatchAgainst(d.filter(pmod(col("doc_id"), lit(3)) === 2), idx1)
-        .orderBy("doc_id")
+      val ref = new RefreshableCorpusIndex(
+        Dedup.corpusIndex(d.filter(pmod(col("doc_id"), lit(3)) === 0)))
+      Dedup.bestMatchAgainst(d.filter(pmod(col("doc_id"), lit(3)) === 2),
+        ref.fold(d.filter(pmod(col("doc_id"), lit(3)) === 1))).orderBy("doc_id")
     }),
     // DELTA-STRUCTURED PERSISTENCE: the same 3-way lifecycle split as
     // dedup_index_refresh, but routed THROUGH the persisted artifact — base
-    // snapshot saved, reloaded, folded with an O(batch) delta write,
-    // reloaded again (base + delta replay), then %3==2 gated through the
+    // snapshot saved, loaded into the holder, folded with an O(batch) delta
+    // write, reloaded (base + delta replay), then %3==2 gated through the
     // RELOADED index. Shares the refresh oracle: the DuckDB side knows only
     // the union corpus, so the hash gate proves base+delta load ≡
     // from-scratch. The gate output is checkpoint-materialized before the
@@ -68,23 +82,10 @@ object DataPipelineQueries {
       val d = docs(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-didx").toString
       Dedup.CorpusFiles.save(Dedup.corpusIndex(d.filter(pmod(col("doc_id"), lit(3)) === 0)), path)
-      // fold the batch and persist ONLY its O(batch) delta — the in-memory
-      // refreshed index is deliberately discarded: the RELOAD over
-      // base+delta is the artifact this row gates through (the in-memory
-      // swap path is dedup_index_refresh's row and IndexDeltaSpec)
-      val loaded = Dedup.CorpusFiles.load(s, path)
-      val (_, delta, dropFoldCaches) =
-        Dedup.refreshIndexTracked(loaded, d.filter(pmod(col("doc_id"), lit(3)) === 1))
-      Dedup.CorpusFiles.saveDelta(delta, path)
-      dropFoldCaches()
-      loaded.release()
-      // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Dedup.CorpusFiles.load(s, path, pin = false)
-      val pinned = reloaded.truncated()
-      reloaded.release()
-      IndexFiles.delete(s, path)
-      Dedup.bestMatchAgainst(d.filter(pmod(col("doc_id"), lit(3)) === 2), pinned)
-        .orderBy("doc_id")
+      new RefreshableCorpusIndex(Dedup.CorpusFiles.load(s, path, pin = false))
+        .fold(d.filter(pmod(col("doc_id"), lit(3)) === 1), deltaPath = Some(path))
+      Dedup.bestMatchAgainst(d.filter(pmod(col("doc_id"), lit(3)) === 2),
+        reload(Dedup.CorpusFiles, s, path)).orderBy("doc_id")
     }),
     "dedup_simhash" -> ((s, dir) => Dedup.simhash(docs(s, dir))),
     "dedup_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir))),
@@ -103,9 +104,10 @@ object DataPipelineQueries {
     "embed_index_refresh" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val e = emb(s, dir)
-      val idx0 = Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0))
-      val idx1 = Similarity.refreshEmbedIndex(idx0, e.filter(pmod(col("vec_id"), lit(3)) === 1))
-      Similarity.embedNoveltyAgainst(e.filter(pmod(col("vec_id"), lit(3)) === 2), idx1)
+      val ref = new RefreshableEmbedIndex(
+        Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0)))
+      Similarity.embedNoveltyAgainst(e.filter(pmod(col("vec_id"), lit(3)) === 2),
+        ref.fold(e.filter(pmod(col("vec_id"), lit(3)) === 1)))
     }),
     // the vector-side delta persistence round trip (dedup_index_delta's twin)
     "embed_index_delta" -> ((s, dir) => {
@@ -114,18 +116,10 @@ object DataPipelineQueries {
       val path = java.nio.file.Files.createTempDirectory("graft-eidx").toString
       Similarity.EmbedFiles.save(
         Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0)), path)
-      val loaded = Similarity.EmbedFiles.load(s, path)
-      val (_, delta, dropFoldCaches) = Similarity.refreshEmbedIndexTracked(
-        loaded, e.filter(pmod(col("vec_id"), lit(3)) === 1))
-      Similarity.EmbedFiles.saveDelta(delta, path)
-      dropFoldCaches()
-      loaded.release()
-      // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Similarity.EmbedFiles.load(s, path, pin = false)
-      val pinned = reloaded.truncated()
-      reloaded.release()
-      IndexFiles.delete(s, path)
-      Similarity.embedNoveltyAgainst(e.filter(pmod(col("vec_id"), lit(3)) === 2), pinned)
+      new RefreshableEmbedIndex(Similarity.EmbedFiles.load(s, path, pin = false))
+        .fold(e.filter(pmod(col("vec_id"), lit(3)) === 1), deltaPath = Some(path))
+      Similarity.embedNoveltyAgainst(e.filter(pmod(col("vec_id"), lit(3)) === 2),
+        reload(Similarity.EmbedFiles, s, path))
     }),
     "sim_topk_bruteforce" -> ((s, dir) => Similarity.bruteForceTopK(emb(s, dir))),
     "sim_topk_lsh" -> ((s, dir) => Similarity.lshTopK(emb(s, dir))),
@@ -138,9 +132,8 @@ object DataPipelineQueries {
     "knn_graph_refresh" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val e = emb(s, dir)
-      val g0 = Similarity.knnGraphIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0))
-      Similarity.refreshKnnGraph(g0, e.filter(pmod(col("vec_id"), lit(3)) === 1))
-        .edges.orderBy("query_id", "rnk")
+      new RefreshableKnnGraph(Similarity.knnGraphIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0)))
+        .fold(e.filter(pmod(col("vec_id"), lit(3)) === 1)).edges.orderBy("query_id", "rnk")
     }),
     // the graph-side delta persistence round trip (dedup/embed/pq _delta's
     // sibling, via TOMBSTONE deltas since a fold supersedes whole
@@ -154,15 +147,9 @@ object DataPipelineQueries {
       val path = java.nio.file.Files.createTempDirectory("graft-kgidx").toString
       Similarity.GraphFiles.save(
         Similarity.knnGraphIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0)), path)
-      val holder = new graft.operators.RefreshableKnnGraph(
-        Similarity.GraphFiles.load(s, path))
-      holder.fold(e.filter(pmod(col("vec_id"), lit(3)) === 1), deltaPath = Some(path))
-      // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Similarity.GraphFiles.load(s, path, pin = false)
-      val pinned = reloaded.truncated()
-      reloaded.release()
-      IndexFiles.delete(s, path)
-      pinned.edges.orderBy("query_id", "rnk")
+      new RefreshableKnnGraph(Similarity.GraphFiles.load(s, path, pin = false))
+        .fold(e.filter(pmod(col("vec_id"), lit(3)) === 1), deltaPath = Some(path))
+      reload(Similarity.GraphFiles, s, path).edges.orderBy("query_id", "rnk")
     }),
     "graph_quality_prop" -> ((s, dir) => Similarity.qualityPropagation(docs(s, dir), emb(s, dir))),
     "graph_pagerank" -> ((s, dir) => Similarity.pageRank(emb(s, dir))),
@@ -194,18 +181,9 @@ object DataPipelineQueries {
       val path = java.nio.file.Files.createTempDirectory("graft-pqidx").toString
       Similarity.PqFiles.save(
         Similarity.pqIndexBuild(e.filter(pmod(col("vec_id"), lit(3)) === 0)), path)
-      val loaded = Similarity.PqFiles.load(s, path)
-      val (_, delta, dropFoldCaches) = Similarity.appendEncodePqTracked(
-        loaded, e.filter(pmod(col("vec_id"), lit(3)) === 1))
-      Similarity.PqFiles.saveDelta(delta, path)
-      dropFoldCaches()
-      loaded.release()
-      // pin = false: reloaded is immediately checkpointed and discarded
-      val reloaded = Similarity.PqFiles.load(s, path, pin = false)
-      val pinned = reloaded.truncated()
-      reloaded.release()
-      IndexFiles.delete(s, path)
-      Similarity.pqTopKOver(pinned)
+      new RefreshablePqIndex(Similarity.PqFiles.load(s, path, pin = false))
+        .fold(e.filter(pmod(col("vec_id"), lit(3)) === 1), deltaPath = Some(path))
+      Similarity.pqTopKOver(reload(Similarity.PqFiles, s, path))
     }),
     "sim_topk_ivfpq" -> ((s, dir) => Similarity.ivfpqTopK(emb(s, dir))),
     "sim_topk_ivfpq_learned" -> ((s, dir) => Similarity.ivfpqTopKLearned(emb(s, dir))),

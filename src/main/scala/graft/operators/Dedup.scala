@@ -1190,12 +1190,12 @@ object Dedup {
 
   /** DuckDB oracle for the `dedup_index_refresh` registry row — the
     * INDEX-LIFECYCLE gate on a 3-way split: corpus = doc_id%3==0 (indexed
-    * from scratch), fold batch = %3==1 ([[refreshIndex]]ed in), gate batch
-    * = %3==2 (matched through the REFRESHED index). The oracle knows
-    * nothing about the refresh: it orients the same member-level pair
-    * chain batch(2)→existing(0∪1), so the hash gate validates that the
-    * incrementally-folded index answers exactly like a from-scratch build
-    * over the union corpus. */
+    * from scratch), fold batch = %3==1 (folded in through a
+    * [[RefreshableCorpusIndex]]), gate batch = %3==2 (matched through the
+    * REFRESHED index). The oracle knows nothing about the refresh: it
+    * orients the same member-level pair chain batch(2)→existing(0∪1), so
+    * the hash gate validates that the incrementally-folded index answers
+    * exactly like a from-scratch build over the union corpus. */
   val indexRefreshSql: String =
     s"""WITH $minhashPairsCoreSql,
        |pairs AS (
@@ -1227,39 +1227,13 @@ object Dedup {
   final case class CorpusIndex private[operators] (
       fps: DataFrame, sets: DataFrame, buckets: DataFrame,
       fpBloom: DataFrame, bucketBloom: DataFrame, logBloomBits: Int,
-      oversized: DataFrame, bucketCap: Int) {
-
-    /** Every frame the index owns — materialization / release order. */
+      oversized: DataFrame, bucketCap: Int) extends IndexValue[CorpusIndex] {
     private[operators] def frames: Seq[DataFrame] =
       Seq(fps, sets, buckets, fpBloom, bucketBloom, oversized)
-
-    /** Force-materialize all pinned components (an atomic swap must never
-      * publish a half-built index to a concurrent micro-batch). */
-    def materialize(): this.type = {
-      IndexFiles.inParallel(frames.map(f => () => f.count())); this
-    }
-
-    /** Materialize AND truncate lineage (eager `localCheckpoint` per
-      * component, the six jobs submitted concurrently): a refreshed
-      * index's frames otherwise embed the previous index's plans plus the
-      * fold batch's, and a per-batch refresh loop (the closed ingest gate)
-      * grows plan depth without bound — the same localCheckpoint-bounded-
-      * depth discipline the MMR/BPE loops use.
-      * [[graft.operators.RefreshableCorpusIndex.fold]] publishes THIS. */
     private[graft] def truncated(): CorpusIndex = {
-      val t = IndexFiles.inParallel(frames.map(f => () => f.localCheckpoint(true)))
+      val t = IndexValue.checkpointed(frames)
       CorpusIndex(t(0), t(1), t(2), t(3), t(4), logBloomBits, t(5), bucketCap)
     }
-
-    /** Unpin this index's frames (executor-storage hygiene after a swap).
-      * A pin whose plan is shared with another live operator (e.g. the
-      * full-corpus shingle sets) just re-caches on that operator's next
-      * call — correctness is unaffected. A [[truncated]] index's frames
-      * are checkpoint RDDs rather than pins; their storage frees via the
-      * ContextCleaner once the index value is unreferenced, and a reader
-      * mid-query over a released frame recomputes from lineage — staleness
-      * costs speed, never correctness. */
-    def release(): Unit = frames.foreach(PinnedCaches.unpin)
   }
 
   private val BloomHashes = 4
@@ -1320,9 +1294,9 @@ object Dedup {
     val fpBloom = PinnedCaches.pin(bloomWords(fps, Seq(col("fp")), logBloomBits))
     val bucketBloom = PinnedCaches.pin(
       bloomWords(buckets, Seq(col("band"), col("sig")), logBloomBits))
-    // sizes of the buckets the cap DROPPED — [[refreshIndex]]'s bookkeeping:
-    // a refresh landing new docs in a dropped bucket must know the true
-    // size (old + new still exceeds the cap), or the refreshed index would
+    // sizes of the buckets the cap DROPPED — the fold's bookkeeping
+    // ([[recapTouched]]): a fold landing new docs in a dropped bucket must
+    // know the true size (old + new still exceeds the cap), or the index would
     // resurrect the bucket with only its new members and diverge from a
     // from-scratch build. Bounded: only degenerate buckets appear here.
     val oversized = PinnedCaches.pin(minhashBuckets(sets)
@@ -1332,37 +1306,10 @@ object Dedup {
       oversized, bucketCap)
   }
 
-  /** INDEX LIFECYCLE — fold a batch of new documents into an existing
-    * [[CorpusIndex]], producing the index a from-scratch
-    * [[corpusIndex]](old corpus ∪ new docs) build would produce (same fps /
-    * sets / buckets contents; Bloom filters may carry extra stale bits for
-    * buckets the refresh dropped, which is false-positive-only and
-    * result-neutral by [[bloomFiltered]]'s construction — the gate
-    * DECISIONS are identical, spec-pinned).
-    *
-    * Cost is proportional to the NEW batch (shingle/minhash only the
-    * genuinely-new texts; joins against the index are key-partitioned),
-    * never the corpus — the property that makes a 100 TB index a living
-    * artifact instead of a one-shot build:
-    *
-    *   - exact-dup fold: new docs whose fingerprint already exists join
-    *     their group; a new member id SMALLER than the group's current rep
-    *     re-keys the rep everywhere (fps/sets/buckets) — the min-member
-    *     contract survives out-of-order ingest;
-    *   - genuinely-new texts group among themselves (first arrival in the
-    *     batch wins by min id, exactly [[dupGroups]]), then add their
-    *     shingle sets and band buckets;
-    *   - the bucket cap re-applies on TRUE combined sizes: a previously
-    *     present bucket pushed over the cap by the batch is dropped whole,
-    *     and a previously-dropped bucket stays dropped (its true size only
-    *     grew) — both exactly as from-scratch.
-    */
-  def refreshIndex(idx: CorpusIndex, newDocs: DataFrame): CorpusIndex =
-    refreshIndexCore(idx, newDocs, PinnedCaches.pin)._1
-
-  /** One fold's O(batch)-sized persistence payload — everything
-    * [[refreshIndex]] derives from the NEW batch, sufficient (with the
-    * previous persisted state) to reconstruct the refreshed index at load:
+  /** One fold's O(batch)-sized pieces ([[segmentFold]]) — what a
+    * [[RefreshableCorpusIndex]] checkpoints as a segment and persists as the
+    * fold's delta, sufficient (with the previous persisted state) to
+    * reconstruct the refreshed index at load:
     * the genuinely-new texts' fingerprints / shingle sets / UNFILTERED band
     * buckets, their Bloom word tables (Blooms fold by OR, so the delta is
     * pure append), the rep re-key map (collision-sized), and the refreshed
@@ -1455,143 +1402,84 @@ object Dedup {
     * shared spelling of the fold and the base+delta load. The remap holds
     * only cross-batch collisions with a smaller arriving id, so it always
     * broadcasts. */
-  private def rekeyWith(remap: DataFrame)(df: DataFrame, idCol: String): DataFrame =
+  private[operators] def rekeyWith(remap: DataFrame)(df: DataFrame, idCol: String): DataFrame =
     df.join(broadcast(remap.withColumnRenamed("old_id", idCol)), Seq(idCol), "left")
       .withColumn(idCol, coalesce(col("new_id"), col(idCol)))
       .drop("new_id")
 
-  /** The fold body, parameterized over the caching discipline: [[refreshIndex]]
-    * passes `PinnedCaches.pin` (cross-call reuse for one-shot/registry use);
-    * [[refreshIndexTracked]] passes a fold-local `persist` tracker so the
-    * lifecycle loop can DROP every intermediate after the published frames
-    * are checkpointed — pinning them would leak one index of executor
-    * storage per fold (the TrieMap strongly references each pin, so the
-    * ContextCleaner can never free them). */
-  private def refreshIndexCore(idx: CorpusIndex, newDocs: DataFrame,
-      cache: DataFrame => DataFrame): (CorpusIndex, IndexDelta) = {
-    val newGroups = cache(dupGroups(newDocs))
-    val newFps = newGroups.select(md5(col("text")).as("fp"),
-      col("doc_id").as("new_id"), col("text"))
-
-    // split arrivals: texts already indexed (fold into their group) vs new
-    // — scale-adaptive shape, see [[splitByIndexedFp]]
-    val (collide, freshGroups) = splitByIndexedFp(newFps, idx.fps, cache)
-    // rep re-key: a smaller member id becomes the group's reported match
-    // (and the rep id carried by sets/buckets) — empty under monotone ids
-    val remap = cache(collide.filter(col("new_id") < col("match_id"))
-      .select(col("match_id").as("old_id"), col("new_id")))
-    val rekey = rekeyWith(remap) _
-    val freshFps = cache(freshGroups.select(md5(col("text")).as("fp"),
-      col("doc_id").as("match_id")))
-    val freshSets = cache(shingleArrays(freshGroups))
-    val freshBuckets = cache(minhashBuckets(freshSets))
-
-    // unionByName throughout: rekey's key join moves the key column first,
-    // so a positional union would zip fp/match_id crosswise
-    val fps2 = cache(rekey(idx.fps, "match_id").unionByName(freshFps))
-    val sets2 = cache(rekey(idx.sets, "doc_id").unionByName(freshSets))
-
-    // re-cap on TRUE combined sizes — restricted to buckets the BATCH
-    // touches (guide §2.3: aggregate only what the decision needs). A
-    // bucket the batch never lands in cannot change state: present stays
-    // ≤ cap (its size didn't move), dropped stays dropped (sizes only
-    // grow, and idx.oversized carries its true size through unchanged).
-    // The old spelling aggregated the ENTIRE bucket table per fold
-    // (O(index) shuffle) and inner-joined every bucket row against an
-    // O(index) keep set; this one semi-joins the pinned bucket rows
-    // against the batch-sized touched-key set map-side, aggregates only
-    // those, and drops rows by a broadcast anti-join against the (tiny,
-    // degenerate-only) refreshed oversized table — O(batch) shuffle per
-    // fold, the property that makes a 100 TB fold loop viable.
-    val freshSizes = cache(
-      freshBuckets.groupBy("band", "sig").agg(count(lit(1)).as("n")))
-    val touched = freshSizes.select("band", "sig")
-    val oldPresentTouched = idx.buckets
-      .join(broadcast(touched), Seq("band", "sig"), "left_semi")
-      .groupBy("band", "sig").agg(count(lit(1)).as("n"))
-    val totals = cache(
-      oldPresentTouched.unionAll(idx.oversized).unionAll(freshSizes)
-        .groupBy("band", "sig").agg(sum("n").as("n")))
-    val oversized2 = cache(totals.filter(col("n") > idx.bucketCap))
-    val buckets2 = cache(
-      rekey(idx.buckets, "doc_id").unionByName(freshBuckets)
-        .join(broadcast(oversized2.select("band", "sig")),
-          Seq("band", "sig"), "left_anti"))
-
-    // Blooms fold incrementally: OR the fresh keys' word tables in. Keys
-    // never need removal — a dropped bucket's stale bits are FP-only.
-    val fpWords = cache(bloomWords(freshFps, Seq(col("fp")), idx.logBloomBits))
-    val bucketWords = cache(
-      bloomWords(freshBuckets, Seq(col("band"), col("sig")), idx.logBloomBits))
-    val fpBloom2 = cache(idx.fpBloom.unionAll(fpWords)
-      .groupBy("w").agg(bit_or(col("bits")).as("bits")))
-    val bucketBloom2 = cache(idx.bucketBloom.unionAll(bucketWords)
-      .groupBy("w").agg(bit_or(col("bits")).as("bits")))
-
-    (CorpusIndex(fps2, sets2, buckets2, fpBloom2, bucketBloom2,
-      idx.logBloomBits, oversized2, idx.bucketCap),
-      IndexDelta(freshFps, freshSets, freshBuckets, fpWords, bucketWords,
-        remap, oversized2))
-  }
-
-  /** [[refreshIndex]] for the LIFECYCLE LOOP ([[graft.operators
-    * .RefreshableCorpusIndex.fold]]): every frame the fold builds —
-    * intermediates AND the published components — is a fold-local
-    * `persist`, and the returned thunk unpersists all of them once the
-    * caller has checkpointed ([[CorpusIndex.truncated]]) what it publishes
-    * and written the delta. Storage after a fold is exactly the
-    * checkpointed index, never one-index-per-refresh. */
-  private[graft] def refreshIndexTracked(idx: CorpusIndex,
-      newDocs: DataFrame): (CorpusIndex, IndexDelta, () => Unit) = {
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val (next, delta) = refreshIndexCore(idx, newDocs,
-      df => { val c = df.persist(); tracked += c; c })
-    (next, delta, () => tracked.foreach(_.unpersist()))
-  }
-
-  // ───────────────── SEGMENTED IN-MEMORY FOLDS ─────────────────
-  // The in-memory twin of the on-disk delta structure: the refreshable
-  // holders keep the index as CHECKPOINTED SEGMENTS (one per fold) plus
-  // tiny folded tables (composed rep re-key map, Bloom words, per-segment
-  // bucket sizes), and the published CorpusIndex is a LAZY VIEW — union
-  // the segments, one broadcast re-key, one final dropped-bucket
-  // anti-join. A fold then checkpoints ONLY its O(batch) fresh segment and
-  // the tiny tables, where the monolithic [[CorpusIndex.truncated]] path
-  // re-materialized every component (O(index) memory writes per batch —
-  // the same cost class the persisted deltas removed from disk). Plan
-  // depth is bounded by periodic in-memory compaction (materialize the
-  // view into one segment), exactly the on-disk compaction discipline.
-
-  /** One fold's fresh, batch-sized pieces, computed against the current
-    * VIEW (same arithmetic as [[refreshIndexCore]] — the collide split,
-    * rep re-key, shingle/minhash of genuinely-new texts, Bloom words,
-    * fresh bucket sizes). */
-  private[operators] final case class SegmentParts(
-      freshFps: DataFrame, freshSets: DataFrame, freshBuckets: DataFrame,
-      freshSizes: DataFrame, fpWords: DataFrame, bucketWords: DataFrame,
-      remap: DataFrame)
-
-  private[operators] def segmentFold(viewFps: DataFrame, logBloomBits: Int,
-      newDocs: DataFrame, cache: DataFrame => DataFrame): SegmentParts = {
+  /** FOLD a batch of new documents into the index `view`: the batch's
+    * fresh pieces, such that the view plus these pieces is the index a
+    * from-scratch [[corpusIndex]](old corpus ∪ new docs) build produces
+    * (same fps / sets / buckets contents; Bloom filters may carry extra
+    * stale bits for buckets the fold dropped, which is false-positive-only
+    * and result-neutral by [[bloomFiltered]]'s construction). Cost is
+    * proportional to the NEW batch, never the corpus:
+    *
+    *   - exact-dup fold: new docs whose fingerprint already exists join
+    *     their group; a new member id SMALLER than the group's current rep
+    *     re-keys the rep everywhere (the `remap`) — the min-member contract
+    *     survives out-of-order ingest;
+    *   - genuinely-new texts group among themselves (first arrival in the
+    *     batch wins by min id, exactly [[dupGroups]]), then add their
+    *     shingle sets and UNFILTERED band buckets;
+    *   - the bucket cap re-applies on TRUE combined sizes
+    *     ([[recapTouched]]);
+    *   - the Bloom word tables of the fresh keys, OR-ed in by the holder.
+    *
+    * Every fold-local frame goes through `cache` (the holder's tracked
+    * persist, dropped after its checkpoints). */
+  private[operators] def segmentFold(view: CorpusIndex, newDocs: DataFrame,
+      cache: DataFrame => DataFrame): IndexDelta = {
     val newGroups = cache(dupGroups(newDocs))
     val newFps = newGroups.select(md5(col("text")).as("fp"),
       col("doc_id").as("new_id"), col("text"))
     // scale-adaptive collide/fresh split — see [[splitByIndexedFp]]
-    val (collide, freshGroups) = splitByIndexedFp(newFps, viewFps, cache)
-    val remapN = cache(collide.filter(col("new_id") < col("match_id"))
+    val (collide, freshGroups) = splitByIndexedFp(newFps, view.fps, cache)
+    // rep re-key: a smaller member id becomes the group's reported match
+    // (and the rep id carried by sets/buckets) — empty under monotone ids
+    val remap = cache(collide.filter(col("new_id") < col("match_id"))
       .select(col("match_id").as("old_id"), col("new_id")))
     val freshFps = cache(freshGroups.select(md5(col("text")).as("fp"),
       col("doc_id").as("match_id")))
     val freshSets = cache(shingleArrays(freshGroups))
     val freshBuckets = cache(minhashBuckets(freshSets))
-    val freshSizes = cache(
-      freshBuckets.groupBy("band", "sig").agg(count(lit(1)).as("n")))
-    val fpWords = cache(bloomWords(freshFps, Seq(col("fp")), logBloomBits))
-    val bucketWords = cache(
-      bloomWords(freshBuckets, Seq(col("band"), col("sig")), logBloomBits))
-    SegmentParts(freshFps, freshSets, freshBuckets, freshSizes,
-      fpWords, bucketWords, remapN)
+    IndexDelta(freshFps, freshSets, freshBuckets,
+      cache(bloomWords(freshFps, Seq(col("fp")), view.logBloomBits)),
+      cache(bloomWords(freshBuckets, Seq(col("band"), col("sig")), view.logBloomBits)),
+      remap,
+      recapTouched(view.buckets, view.oversized, freshBuckets, Seq("band", "sig"),
+        view.bucketCap, cache))
   }
+
+  /** The dropped-bucket table after a fold: the bucket cap re-applied on
+    * TRUE combined sizes, restricted to the buckets the BATCH touches. A
+    * bucket the batch never lands in cannot change state: present stays
+    * ≤ cap (its size did not move), dropped stays dropped (sizes only
+    * grow, and `oversized` carries its true size through unchanged). So
+    * the kept `present` rows are semi-joined map-side against the
+    * batch-sized touched keys and only those are counted; a touched
+    * bucket's true size is that count (present) or its `oversized` size
+    * (dropped), plus the batch's rows. A present bucket pushed over the cap
+    * drops whole and a dropped one stays dropped — both exactly as
+    * from-scratch — at an O(batch) shuffle per fold (the index's size
+    * table is never re-aggregated). Shared by the corpus and embed
+    * folds. */
+  private[operators] def recapTouched(present: DataFrame, oversized: DataFrame,
+      fresh: DataFrame, key: Seq[String], cap: Int,
+      cache: DataFrame => DataFrame): DataFrame = {
+    val freshSizes = cache(fresh.groupBy(key.map(col): _*).agg(count(lit(1)).as("n")))
+    val presentTouched = present
+      .join(broadcast(freshSizes.select(key.map(col): _*)), key, "left_semi")
+      .groupBy(key.map(col): _*).agg(count(lit(1)).as("n"))
+    presentTouched.unionByName(oversized).unionByName(freshSizes)
+      .groupBy(key.map(col): _*).agg(sum("n").as("n"))
+      .filter(col("n") > cap)
+  }
+
+  /** OR-fold a Bloom word table `(w, bits)` that may hold several rows per
+    * word (a base plus fresh words). */
+  private[operators] def orWords(words: DataFrame): DataFrame =
+    words.groupBy("w").agg(bit_or(col("bits")).as("bits"))
 
   /** An empty `(old_id, new_id)` re-key map. */
   private[operators] def emptyRemap(
@@ -1614,44 +1502,6 @@ object Dedup {
     chained.unionByName(fresh.select("old_id", "new_id"))
   }
 
-  /** The CURRENT dropped-bucket table over per-segment size tables —
-    * computed (and checkpointed) ONCE PER FOLD by the holder, never at
-    * gate time: leaving it lazy in the view would re-shuffle every
-    * distinct bucket's count on EVERY micro-batch gate, an O(index)
-    * per-gate cost the monolithic index never paid (its oversized table
-    * was always materialized). */
-  private[operators] def segmentOversized(sizes: Seq[DataFrame],
-      bucketCap: Int): DataFrame =
-    sizes.reduce(_ unionByName _).groupBy("band", "sig")
-      .agg(sum("n").as("n")).filter(col("n") > bucketCap)
-
-  /** Assemble the LAZY [[CorpusIndex]] view over checkpointed segments:
-    * union per component, one broadcast re-key by the composed map, bucket
-    * rows filtered once by the CURRENT (checkpointed, tiny) oversized set
-    * — sizes only grow, so the latest drop set subsumes every earlier one,
-    * the same argument as [[CorpusFiles]]' replay. */
-  private[operators] def segmentedView(
-      fps: Seq[DataFrame], sets: Seq[DataFrame], buckets: Seq[DataFrame],
-      oversized: DataFrame, remap: DataFrame,
-      fpBloom: DataFrame, bucketBloom: DataFrame,
-      logBloomBits: Int, bucketCap: Int): CorpusIndex = {
-    def u(fs: Seq[DataFrame]): DataFrame = fs.reduce(_ unionByName _)
-    val rk = rekeyWith(remap) _
-    CorpusIndex(
-      rk(u(fps), "match_id"),
-      rk(u(sets), "doc_id"),
-      rk(u(buckets), "doc_id").join(
-        broadcast(oversized.select("band", "sig")), Seq("band", "sig"), "left_anti"),
-      fpBloom, bucketBloom, logBloomBits, oversized, bucketCap)
-  }
-
-  /** The initial segment's TRUE size table (present counts ∪ the dropped
-    * sizes the index carries) — totals at time zero. */
-  private[operators] def initialSizes(idx: CorpusIndex): DataFrame =
-    idx.buckets.groupBy("band", "sig").agg(count(lit(1)).as("n"))
-      .unionByName(idx.oversized)
-      .groupBy("band", "sig").agg(sum("n").as("n"))
-
   /** The corpus index's persisted artifact ([[IndexFiles.Artifact]]). The
     * replay re-keys by each delta's remap, appends its fresh fps/sets/
     * bucket rows, ORs its Bloom words in, and applies the final
@@ -1659,7 +1509,7 @@ object Dedup {
     * grows, so the latest `oversized` table subsumes every earlier drop,
     * and filter-then-rekey commutes with rekey-then-filter because
     * re-keying never touches the bucket key. Gate decisions and later
-    * [[refreshIndex]]es equal the in-memory original's (spec-pinned), and
+    * folds equal the in-memory original's (spec-pinned), and
     * the `dedup_index_delta` registry row pins the gate output against the
     * DuckDB oracle through a base + delta round trip. */
   private[graft] object CorpusFiles extends IndexFiles.Artifact[CorpusIndex, IndexDelta](
@@ -1696,10 +1546,8 @@ object Dedup {
         if (c.deltas.isEmpty) pin(bucketRows) // base buckets are already capped
         else pin(bucketRows.join(
           broadcast(oversizedP.select("band", "sig")), Seq("band", "sig"), "left_anti"))
-      def orWords(df: DataFrame): DataFrame =
-        if (c.deltas.isEmpty) df
-        else df.groupBy("w").agg(bit_or(col("bits")).as("bits"))
-      CorpusIndex(pin(fps), pin(sets), buckets, pin(orWords(fpW)), pin(orWords(bW)),
+      def words(df: DataFrame): DataFrame = if (c.deltas.isEmpty) df else orWords(df)
+      CorpusIndex(pin(fps), pin(sets), buckets, pin(words(fpW)), pin(words(bW)),
         c.meta("log_bloom_bits").toInt, oversizedP, c.meta("bucket_cap").toInt)
     }
   }

@@ -1,384 +1,353 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
 
-/** INDEX LIFECYCLE — the refresh-and-swap discipline that turns the
-  * per-corpus retrieval/dedup artifacts ([[Dedup.corpusIndex]],
-  * [[Similarity.embedIndex]]) into LIVING indexes a 100 TB ingest loop can
-  * keep current:
+/** An index value the lifecycle holders manage: the four index families
+  * ([[Dedup.CorpusIndex]], [[Similarity.EmbedIndex]],
+  * [[Similarity.KnnGraphIndex]], [[Similarity.PqIndex]]) each declare the
+  * frames they own and how to rebuild themselves over checkpointed
+  * copies. */
+trait IndexValue[I] {
+  /** Every frame the index owns — materialization / release order. */
+  private[operators] def frames: Seq[DataFrame]
+
+  /** Materialize AND truncate lineage (one eager `localCheckpoint` per
+    * component, submitted concurrently): a refreshed index's frames
+    * otherwise embed the previous index's plans plus the fold batch's, and
+    * a per-batch loop grows plan depth without bound. */
+  private[graft] def truncated(): I
+
+  /** Force-materialize all components (an atomic swap must never publish a
+    * half-built index to a concurrent micro-batch). */
+  def materialize(): this.type = {
+    IndexFiles.inParallel(frames.map(f => () => f.count())); this
+  }
+
+  /** Unpin this index's frames (executor-storage hygiene after a swap). A
+    * pin whose plan is shared with another live operator just re-caches on
+    * that operator's next call. A [[truncated]] index's frames are
+    * checkpoint RDDs rather than pins; their storage frees via the
+    * ContextCleaner once the value is unreferenced, and a reader mid-query
+    * over a released frame recomputes from lineage — staleness costs
+    * speed, never correctness. */
+  def release(): Unit = frames.foreach(PinnedCaches.unpin)
+}
+
+object IndexValue {
+  /** An eager `localCheckpoint` of each frame, the jobs submitted
+    * concurrently — [[IndexValue.truncated]]'s and a fold's checkpoint. */
+  private[operators] def checkpointed(frames: Seq[DataFrame]): Seq[DataFrame] =
+    IndexFiles.inParallel(frames.map(f => () => f.localCheckpoint(true)))
+}
+
+/** INDEX LIFECYCLE — the refresh-and-swap discipline that turns a
+  * per-corpus index into a LIVING index a 100 TB ingest loop keeps current.
+  * This skeleton is the one fold path of all four index families; a
+  * family supplies only its segment pieces ([[pieces]], [[appended]]), its
+  * view over the segments ([[view]]) and its one-segment state
+  * ([[single]], which is also what compaction and a rebuild reset to):
   *
-  *   - `fold(batch)` is O(batch) END TO END: the holders keep the index as
+  *   - `fold(batch)` is O(batch) END TO END: the holder keeps the index as
   *     CHECKPOINTED SEGMENTS (the in-memory twin of the persisted
-  *     base+delta layout), so a fold computes the batch's fresh pieces
-  *     ([[Dedup.segmentFold]] — collide split, rep re-key, shingle/minhash
-  *     of genuinely-new texts), checkpoints ONLY that fresh segment plus
-  *     the tiny folded tables (the composed re-key map; the Bloom word
-  *     tables, whose size is capacity-bounded by `logBloomBits`, a
-  *     build-time knob constant in corpus growth), optionally persists the
-  *     same pieces as the fold's O(batch) [[Dedup.IndexDelta]]
-  *     (`deltaPath`; a restart loads base+deltas through
-  *     [[Dedup.CorpusFiles]] instead of rebuilding), and publishes a LAZY VIEW over the segments
-  *     ([[Dedup.segmentedView]]: union per component, one broadcast
-  *     re-key, one dropped-bucket anti-join) through one volatile write —
-  *     a concurrent reader (a streaming micro-batch gating against
+  *     base+delta layout, [[IndexFiles.Artifact]]). A fold computes the
+  *     batch's pieces against the published view — exactly the family's
+  *     persisted delta — checkpoints them (plus any tiny folded table),
+  *     optionally persists them as the fold's delta (`deltaPath`, BEFORE
+  *     the swap, so a restart loads base+deltas instead of rebuilding),
+  *     and publishes a LAZY VIEW over the segments through one volatile
+  *     write: a concurrent reader (a streaming micro-batch gating against
   *     [[current]]) sees only complete, checkpointed inputs;
-  *   - every `maxSegments` folds the holder COMPACTS in memory
-  *     (materialize the view into one segment — the same discipline as the
-  *     on-disk [[Dedup.CorpusFiles.compact]]), bounding both view plan depth (the
-  *     OOM the old checkpoint-everything fold existed to prevent) and the
-  *     segment count, and amortizing the one O(index) re-materialization
-  *     across that many O(batch) folds;
+  *   - folds are `synchronized`: concurrent folders would otherwise both
+  *     refresh the same state and lose one batch;
   *   - every fold-local frame is a tracked `persist` dropped right after
   *     the segment checkpoints (pinning them would root one index per fold
-  *     in the PinnedCaches TrieMap — the r10-advice leak); the
-  *     storage-bound and checkpoint-flatness specs in IndexDeltaSpec pin
-  *     both properties;
-  *   - refreshed ≡ from-scratch is the spec'd contract: the folded view's
-  *     fps/sets/buckets (resp. qc/cb) contents and the gate decisions equal
-  *     a from-scratch build over the union corpus — including across
-  *     in-memory compactions and re-keys arriving after one
-  *     (IndexLifecycleSpec, IndexDeltaSpec; the `dedup_index_refresh` /
-  *     `embed_index_refresh` registry rows pin the gate output against the
-  *     DuckDB oracle on a 3-way corpus split, and `dedup_index_delta` /
-  *     `embed_index_delta` pin it through the persisted base+delta round
-  *     trip).
+  *     in the PinnedCaches TrieMap); IndexDeltaSpec pins the storage bound
+  *     and the checkpoint flatness;
+  *   - once a holder has more than `maxSegments` segments it COMPACTS in
+  *     memory (materialize the view into one segment — the on-disk
+  *     `compact` discipline), bounding view plan depth and amortizing the
+  *     one O(index) re-materialization across that many O(batch) folds;
+  *   - [[rebuildWith]] swaps in a from-scratch rebuild (a PQ retrain, a
+  *     graph re-quantization), persisted first as a new base when
+  *     `indexPath` is set;
+  *   - the caller's pins on the initial index are released on the first
+  *     swap.
+  *
+  * Refreshed ≡ from-scratch is the spec'd contract, including across
+  * in-memory compactions (IndexLifecycleSpec, IndexDeltaSpec,
+  * KnnGraphLifecycleSpec, PqDriftSpec), and the `*_refresh` / `*_delta`
+  * registry rows fold through these holders, so the DuckDB oracle checks
+  * the fold the daemons run.
   *
   * Readers hold the index VALUE they read, not the holder: a micro-batch
   * that read the old view mid-swap finishes against a consistent (merely
-  * stale) index — the same monotonicity contract as any snapshot-isolated
-  * index server; its inputs are checkpointed segments that stay valid until
-  * unreferenced. Released pins only unpersist cached frames; a reader still
-  * executing against them recomputes from lineage, so staleness costs
-  * speed, never correctness.
-  */
-final class RefreshableCorpusIndex(initial: Dedup.CorpusIndex,
-    maxSegments: Int = RefreshableCorpusIndex.DefaultMaxSegments) {
-  import RefreshableCorpusIndex.Seg
+  * stale) index; its inputs are checkpointed segments that stay valid
+  * until unreferenced.
+  *
+  * A family's [[single]] and [[view]] run from this constructor, so they
+  * may read only their arguments. */
+abstract class SegmentedIndex[I <: IndexValue[I], D, S] private[graft] (initial: I,
+    files: IndexFiles.Artifact[I, D], maxSegments: Int) {
 
-  // SEGMENTED state: one checkpointed segment per fold (plus the base) and
-  // tiny folded tables. The published index is a LAZY VIEW over them
-  // (Dedup.segmentedView), so a fold checkpoints only its O(batch) fresh
-  // segment + the collision-sized composed re-key map + the bounded Bloom
-  // word tables — never the whole index (the monolithic truncated() path
-  // re-materialized every component per fold: O(index) memory writes per
-  // batch, the in-memory sibling of the per-fold full-rewrite the on-disk
-  // deltas removed). Segment count is bounded by in-memory compaction
-  // (materialize the view into one segment every `maxSegments` folds — the
-  // same base+deltas+compact discipline as the persisted layout), which
-  // also bounds view plan depth, the OOM the old truncated()-per-fold
-  // existed to prevent.
-  private final case class State(segs: Vector[Seg], remap: DataFrame,
-      fpBloom: DataFrame, bucketBloom: DataFrame, oversized: DataFrame,
-      view: Dedup.CorpusIndex)
+  /** The state over one checkpointed index: init, compaction, rebuild. */
+  protected def single(base: I): S
+  /** The lazy index the state publishes. */
+  protected def view(s: S): I
+  /** The batch's pieces against the published index — the family's
+    * persisted delta, with every fold-local frame passed through
+    * `track`. */
+  protected def pieces(current: I, batch: DataFrame,
+      track: DataFrame => DataFrame): D
+  /** Checkpoint `pieces` and append them to `s` as one segment; returns the
+    * next state and the checkpointed delta to persist. */
+  protected def appended(s: S, pieces: D): (S, D)
 
-  @volatile private var state: State = {
-    val t = initial.truncated() // segment 0: checkpointed off the caller's pins
-    val sizes = Dedup.initialSizes(initial).localCheckpoint(true)
-    val seg0 = Seg(t.fps, t.sets, t.buckets, sizes)
-    val remap0 = Dedup.emptyRemap(initial.fps.sparkSession)
-    State(Vector(seg0), remap0, t.fpBloom, t.bucketBloom, t.oversized,
-      view(Vector(seg0), remap0, t.fpBloom, t.bucketBloom, t.oversized))
+  private final class Published(val state: S, val segments: Int) {
+    val index: I = view(state)
   }
-  // the caller's initial pins are released on the first fold (releaseOld),
-  // matching the pre-segmented contract
-  private var initialToRelease: Option[Dedup.CorpusIndex] = Some(initial)
 
-  private def view(segs: Vector[Seg], remap: DataFrame,
-      fpBloom: DataFrame, bucketBloom: DataFrame,
-      oversized: DataFrame): Dedup.CorpusIndex =
-    Dedup.segmentedView(segs.map(_.fps), segs.map(_.sets), segs.map(_.buckets),
-      oversized, remap, fpBloom, bucketBloom,
-      initial.logBloomBits, initial.bucketCap)
+  @volatile private var published = new Published(single(initial.truncated()), 1)
+  private var initialPins: Option[I] = Some(initial)
 
   /** The currently-published index (a lazy view whose inputs are all
     * checkpointed — complete by construction for any concurrent reader). */
-  def current: Dedup.CorpusIndex = state.view
+  def current: I = published.index
 
-  /** Fold `newDocs` in and atomically publish the refreshed view.
-    * Synchronized: concurrent folders would otherwise both refresh the same
-    * base and lose one batch. When `deltaPath` is set, the fold's O(batch)
-    * delta lands there BEFORE the swap ([[Dedup.CorpusFiles.saveDelta]] is
-    * content-idempotent under replay: re-folding already-indexed docs
-    * yields an empty-fresh delta). Returns the published index. */
-  def fold(newDocs: DataFrame, releaseOld: Boolean = true,
-      deltaPath: Option[String] = None): Dedup.CorpusIndex =
-    synchronized {
-      val s = state
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def track(df: DataFrame): DataFrame = { val c = df.persist(); tracked += c; c }
-      val parts = Dedup.segmentFold(s.view.fps, initial.logBloomBits, newDocs, track)
+  /** Fold `batch` in and atomically publish the refreshed view. With
+    * `deltaPath` set, the fold's O(batch) delta lands there BEFORE the
+    * swap. Returns the published index. */
+  def fold(batch: DataFrame, deltaPath: Option[String] = None): I = synchronized {
+    val p = published
+    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val (next, delta) = appended(p.state,
+      pieces(p.index, batch, df => { val c = df.persist(); tracked += c; c }))
+    deltaPath.foreach(files.saveDelta(delta, _))
+    tracked.foreach(_.unpersist())
+    swap(
+      if (p.segments < maxSegments) new Published(next, p.segments + 1)
+      else new Published(single(view(next).truncated()), 1))
+  }
 
-      // checkpoint exactly the batch-sized fresh pieces + the tiny tables
-      // (incl. the refreshed dropped-bucket table: computing it here — one
-      // partial-aggregated pass over the per-segment size tables, the same
-      // per-fold totals cost the monolithic fold always paid — keeps every
-      // GATE execution free of it; leaving it lazy in the view would
-      // re-shuffle all distinct buckets' counts per micro-batch)
-      val allSizes = s.segs.map(_.sizes) :+ parts.freshSizes
-      val ck = IndexFiles.inParallel(Seq(
-        () => parts.freshFps.localCheckpoint(true),
-        () => parts.freshSets.localCheckpoint(true),
-        () => parts.freshBuckets.localCheckpoint(true),
-        () => parts.freshSizes.localCheckpoint(true),
-        () => parts.remap.localCheckpoint(true),
-        () => s.fpBloom.unionAll(parts.fpWords)
-          .groupBy("w").agg(org.apache.spark.sql.functions.bit_or(
-            org.apache.spark.sql.functions.col("bits")).as("bits"))
-          .localCheckpoint(true),
-        () => s.bucketBloom.unionAll(parts.bucketWords)
-          .groupBy("w").agg(org.apache.spark.sql.functions.bit_or(
-            org.apache.spark.sql.functions.col("bits")).as("bits"))
-          .localCheckpoint(true),
-        () => Dedup.segmentOversized(allSizes, initial.bucketCap)
-          .localCheckpoint(true)))
-      val seg = Seg(ck(0), ck(1), ck(2), ck(3))
-      val remap2 = Dedup.composeRemaps(s.remap, ck(4)).localCheckpoint(true)
+  /** Swap in a from-scratch rebuild, reset to one segment. With
+    * `indexPath` set the rebuild persists first as a NEW BASE whose stamp
+    * swallows the older deltas (they were folded against the replaced
+    * index; the base save sweeps them). */
+  def rebuildWith(rebuilt: I, indexPath: Option[String] = None): I = synchronized {
+    val t = rebuilt.truncated()
+    rebuilt.release() // the swap owns the checkpointed copy
+    indexPath.foreach(files.save(t, _))
+    swap(new Published(single(t), 1))
+  }
 
-      var segs2 = s.segs :+ seg
-      var next = view(segs2, remap2, ck(5), ck(6), ck(7))
-      // the persisted delta carries THIS fold's pieces + the refreshed
-      // dropped-bucket table
-      deltaPath.foreach { p =>
-        Dedup.CorpusFiles.saveDelta(Dedup.IndexDelta(seg.fps, seg.sets, seg.buckets,
-          parts.fpWords, parts.bucketWords, ck(4), ck(7)), p)
-      }
-      tracked.foreach(_.unpersist())
-
-      // in-memory compaction: bound segment count (and view plan depth)
-      if (segs2.size > maxSegments) {
-        val totalsCk = segs2.map(_.sizes).reduce(_ unionByName _)
-          .groupBy("band", "sig")
-          .agg(org.apache.spark.sql.functions.sum("n").as("n"))
-          .localCheckpoint(true)
-        val t = next.truncated()
-        segs2 = Vector(Seg(t.fps, t.sets, t.buckets, totalsCk))
-        val remap0 = Dedup.emptyRemap(initial.fps.sparkSession)
-        next = view(segs2, remap0, t.fpBloom, t.bucketBloom, t.oversized)
-        state = State(segs2, remap0, t.fpBloom, t.bucketBloom, t.oversized, next)
-      } else {
-        state = State(segs2, remap2, ck(5), ck(6), ck(7), next)
-      }
-      if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
-      next
-    }
+  private def swap(next: Published): I = {
+    published = next
+    initialPins.foreach(_.release())
+    initialPins = None
+    next.index
+  }
 }
 
-object RefreshableCorpusIndex {
+object SegmentedIndex {
   /** Segments folded between in-memory compactions — bounds the view's
     * plan depth and amortizes the one O(index) re-materialization across
     * that many O(batch) folds. */
   val DefaultMaxSegments: Int = 8
-  private[operators] final case class Seg(fps: DataFrame, sets: DataFrame,
-      buckets: DataFrame, sizes: DataFrame)
+
+  /** A base index plus the checkpointed deltas folded since — the state of
+    * the families whose deltas carry everything their view reads. */
+  final case class Segments[I, D](base: I, folds: Vector[D])
+
+  private[operators] def union(frames: Seq[DataFrame]): DataFrame =
+    frames.reduce(_ unionByName _)
 }
 
-/** The kNN GRAPH under the same refresh-and-swap discipline — the graph is
-  * a per-corpus index artifact ([[Similarity.knnGraphIndex]]), and its
-  * consumers ([[Similarity.pageRankOver]],
-  * [[Similarity.qualityPropagationOver]]) must never traverse a stale graph
-  * after the corpus they rank refreshed. `fold` is the INCREMENTAL path
-  * ([[Similarity.refreshKnnGraph]]'s arithmetic — frozen centroids,
-  * new-node edges plus affected-node re-rank, ≡ from-scratch under the same
-  * codebook, spec-pinned); rebuild-and-swap for codebook retraining is
-  * [[rebuildWith]]; drift is observed through [[Similarity.knnGraphRecall]]
-  * (or the [[IndexMaintenance.maintainKnnGraph]] policy).
+import IndexValue.checkpointed
+import SegmentedIndex.{DefaultMaxSegments, Segments, union}
+
+/** The text corpus index ([[Dedup.CorpusIndex]]). A segment is one fold's
+  * fresh fps / sets / UNFILTERED bucket rows ([[Dedup.segmentFold]]); the
+  * folded tables are the composed rep re-key map and the OR-ed Bloom word
+  * tables (both capped in size) and the dropped-bucket table. The view
+  * unions each component, re-keys once through the composed map and drops
+  * the CURRENT oversized buckets once — sizes only grow, so the latest
+  * drop set subsumes every earlier one. */
+final class RefreshableCorpusIndex(initial: Dedup.CorpusIndex,
+    maxSegments: Int = DefaultMaxSegments)
+    extends SegmentedIndex[Dedup.CorpusIndex, Dedup.IndexDelta, RefreshableCorpusIndex.State](
+      initial, Dedup.CorpusFiles, maxSegments) {
+  import RefreshableCorpusIndex.{Seg, State}
+
+  protected def single(t: Dedup.CorpusIndex): State =
+    State(t, Vector.empty, Dedup.emptyRemap(t.fps.sparkSession),
+      t.fpBloom, t.bucketBloom, t.oversized)
+
+  protected def view(s: State): Dedup.CorpusIndex =
+    if (s.fresh.isEmpty) s.base
+    else {
+      val rekey = Dedup.rekeyWith(s.remap) _
+      def all(base: DataFrame, f: Seg => DataFrame) = union(base +: s.fresh.map(f))
+      s.base.copy(
+        fps = rekey(all(s.base.fps, _.fps), "match_id"),
+        sets = rekey(all(s.base.sets, _.sets), "doc_id"),
+        buckets = rekey(all(s.base.buckets, _.buckets), "doc_id").join(
+          broadcast(s.oversized.select("band", "sig")), Seq("band", "sig"), "left_anti"),
+        fpBloom = s.fpBloom, bucketBloom = s.bucketBloom, oversized = s.oversized)
+    }
+
+  protected def pieces(current: Dedup.CorpusIndex, batch: DataFrame,
+      track: DataFrame => DataFrame): Dedup.IndexDelta =
+    Dedup.segmentFold(current, batch, track)
+
+  protected def appended(s: State, d: Dedup.IndexDelta): (State, Dedup.IndexDelta) = {
+    val ck = checkpointed(Seq(d.freshFps, d.freshSets, d.freshBuckets, d.remap,
+      d.oversized, Dedup.orWords(s.fpBloom.unionAll(d.fpBloomWords)),
+      Dedup.orWords(s.bucketBloom.unionAll(d.bucketBloomWords))))
+    val delta = d.copy(freshFps = ck(0), freshSets = ck(1), freshBuckets = ck(2),
+      remap = ck(3), oversized = ck(4))
+    (State(s.base, s.fresh :+ Seg(ck(0), ck(1), ck(2)),
+      Dedup.composeRemaps(s.remap, ck(3)).localCheckpoint(true), ck(5), ck(6), ck(4)),
+      delta)
+  }
+}
+
+object RefreshableCorpusIndex {
+  final case class Seg private[operators] (fps: DataFrame, sets: DataFrame,
+      buckets: DataFrame)
+  final case class State private[operators] (base: Dedup.CorpusIndex,
+      fresh: Vector[Seg], remap: DataFrame, fpBloom: DataFrame,
+      bucketBloom: DataFrame, oversized: DataFrame)
+}
+
+/** The embedding gate index ([[Similarity.EmbedIndex]]) — the corpus
+  * holder's vector twin, simpler: no re-key map, no Blooms. A segment is
+  * one fold's [[Similarity.EmbedDelta]]; the view drops the latest delta's
+  * oversized buckets once. */
+final class RefreshableEmbedIndex(initial: Similarity.EmbedIndex,
+    maxSegments: Int = DefaultMaxSegments)
+    extends SegmentedIndex[Similarity.EmbedIndex, Similarity.EmbedDelta,
+      Segments[Similarity.EmbedIndex, Similarity.EmbedDelta]](
+      initial, Similarity.EmbedFiles, maxSegments) {
+  private type State = Segments[Similarity.EmbedIndex, Similarity.EmbedDelta]
+
+  protected def single(t: Similarity.EmbedIndex): State = Segments(t, Vector.empty)
+
+  protected def view(s: State): Similarity.EmbedIndex =
+    if (s.folds.isEmpty) s.base
+    else {
+      val oversized = s.folds.last.oversized
+      s.base.copy(
+        qc = union(s.base.qc +: s.folds.map(_.qNew)),
+        cb = union(s.base.cb +: s.folds.map(_.freshBuckets)).join(
+          broadcast(oversized.select("table", "bucket")), Seq("table", "bucket"), "left_anti"),
+        oversized = oversized)
+    }
+
+  protected def pieces(current: Similarity.EmbedIndex, batch: DataFrame,
+      track: DataFrame => DataFrame): Similarity.EmbedDelta =
+    Similarity.embedSegmentFold(current, batch, track)
+
+  protected def appended(s: State,
+      d: Similarity.EmbedDelta): (State, Similarity.EmbedDelta) = {
+    val ck = checkpointed(d.frames)
+    val delta = Similarity.EmbedDelta(ck(0), ck(1), ck(2))
+    (s.copy(folds = s.folds :+ delta), delta)
+  }
+}
+
+/** The kNN GRAPH ([[Similarity.KnnGraphIndex]]) — its consumers
+  * ([[Similarity.pageRankOver]], [[Similarity.qualityPropagationOver]])
+  * must never traverse a stale graph after the corpus they rank refreshed.
+  * A fold is [[Similarity.knnGraphSegmentFold]] under the FROZEN centroids
+  * (≡ from-scratch under the same codebook, spec-pinned); drift is
+  * observed through [[Similarity.knnGraphRecall]] and answered by
+  * [[rebuildWith]] ([[IndexMaintenance.maintainKnnGraph]]).
   *
-  * SEGMENTED with TOMBSTONE REPLAY — the edge component is not pure-append
-  * (a fold REPLACES affected old queries' rows), but a fold never edits a
-  * row in place: it supersedes whole query_ids. So each fold checkpoints
-  * only its O(batch) segment (the batch's qn/probe rows, the fold's fresh
-  * edge rows, and the affected-query tombstone set — itself batch-bounded:
-  * probe cells are frozen, so only cells the batch lands in can be
-  * affected), and the published edge view is "each segment's rows minus
-  * every LATER segment's tombstones" — ≤ maxSegments broadcast anti-joins
-  * against batch-sized id sets, latest-wins by construction. qn/probes
-  * union plainly. In-memory compaction every `maxSegments` folds
-  * re-materializes the view into one tombstone-free segment, bounding both
-  * plan depth and the anti-join chain. */
+  * TOMBSTONE REPLAY: the edge component is not pure-append (a fold
+  * REPLACES affected old queries' rows), but a fold never edits a row in
+  * place — it supersedes whole query_ids. A segment is one fold's
+  * [[Similarity.KnnGraphDelta]] (the batch's qn/probe rows, its fresh edge
+  * rows and the affected-query tombstones, all batch-bounded: probe cells
+  * are frozen, so only cells the batch lands in can be affected), and the
+  * view's edges are "each segment's rows minus every LATER segment's
+  * tombstones" — latest-wins by construction; qn/probes union plainly. */
 final class RefreshableKnnGraph(initial: Similarity.KnnGraphIndex,
-    maxSegments: Int = RefreshableCorpusIndex.DefaultMaxSegments) {
-  private final case class GSeg(qn: DataFrame, probes: DataFrame,
-      edges: DataFrame, tombs: DataFrame)
-  private final case class State(cents: DataFrame, segs: Vector[GSeg],
-      view: Similarity.KnnGraphIndex)
+    maxSegments: Int = DefaultMaxSegments)
+    extends SegmentedIndex[Similarity.KnnGraphIndex, Similarity.KnnGraphDelta,
+      Segments[Similarity.KnnGraphIndex, Similarity.KnnGraphDelta]](
+      initial, Similarity.GraphFiles, maxSegments) {
+  private type State = Segments[Similarity.KnnGraphIndex, Similarity.KnnGraphDelta]
 
-  @volatile private var state: State = stateOf(initial.truncated())
-  private var initialToRelease: Option[Similarity.KnnGraphIndex] = Some(initial)
+  protected def single(t: Similarity.KnnGraphIndex): State = Segments(t, Vector.empty)
 
-  /** Single-segment state off an already-checkpointed index (init,
-    * post-compaction, post-rebuild). The base segment carries no
-    * tombstones: `limit(0)` over the checkpointed edges keeps the plan
-    * rooted on a checkpoint, never on released caller lineage. */
-  private def stateOf(t: Similarity.KnnGraphIndex): State = {
-    val seg0 = GSeg(t.qn, t.probes, t.edges,
-      t.edges.select("query_id").limit(0))
-    State(t.cents, Vector(seg0), viewOf(t.cents, Vector(seg0)))
-  }
-
-  private def viewOf(cents: DataFrame,
-      segs: Vector[GSeg]): Similarity.KnnGraphIndex = {
-    val edges = segs.zipWithIndex.map { case (s, i) =>
-      val later = segs.drop(i + 1).map(_.tombs)
-      if (later.isEmpty) s.edges
-      else s.edges.join(
-        org.apache.spark.sql.functions.broadcast(later.reduce(_ unionByName _)),
-        Seq("query_id"), "left_anti")
-    }.reduce(_ unionByName _)
-    Similarity.KnnGraphIndex(cents,
-      segs.map(_.qn).reduce(_ unionByName _),
-      segs.map(_.probes).reduce(_ unionByName _),
-      edges, initial.k, initial.nProbe)
-  }
-
-  /** The currently-published graph (a lazy view whose inputs are all
-    * checkpointed — complete by construction for any concurrent reader). */
-  def current: Similarity.KnnGraphIndex = state.view
-
-  /** Fold `newVecs` in under the frozen centroids and atomically publish —
-    * checkpointing only the fold's O(batch) segment. With `deltaPath` set,
-    * the same four frames land there BEFORE the swap
-    * ([[Similarity.GraphFiles.saveDelta]]) — a restart
-    * loads base+deltas ([[Similarity.GraphFiles]]) instead of re-folding. */
-  def fold(newVecs: DataFrame, releaseOld: Boolean = true,
-      deltaPath: Option[String] = None): Similarity.KnnGraphIndex =
-    synchronized {
-      val s = state
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val parts = Similarity.knnGraphSegmentFold(s.view, newVecs,
-        df => { val c = df.persist(); tracked += c; c })
-      val ck = IndexFiles.inParallel(Seq(
-        () => parts.qnNew.localCheckpoint(true),
-        () => parts.probesNew.localCheckpoint(true),
-        () => parts.edgesSeg.localCheckpoint(true),
-        () => parts.tombstones.localCheckpoint(true)))
-      deltaPath.foreach(p => Similarity.GraphFiles.saveDelta(
-        Similarity.KnnGraphDelta(ck(0), ck(1), ck(2), ck(3)), p))
-      tracked.foreach(_.unpersist())
-
-      var segs2 = s.segs :+ GSeg(ck(0), ck(1), ck(2), ck(3))
-      var next = viewOf(s.cents, segs2)
-      if (segs2.size > maxSegments) {
-        val t = next.truncated()
-        state = stateOf(t)
-      } else {
-        state = State(s.cents, segs2, next)
+  protected def view(s: State): Similarity.KnnGraphIndex =
+    if (s.folds.isEmpty) s.base
+    else {
+      val tombs = s.folds.map(_.tombstones)
+      // segment i (0 = the base) is superseded by folds i, i+1, …
+      val edges = (s.base.edges +: s.folds.map(_.edgesSeg)).zipWithIndex.map {
+        case (e, i) if i == s.folds.size => e
+        case (e, i) => e.join(broadcast(union(tombs.drop(i))), Seq("query_id"), "left_anti")
       }
-      if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
-      state.view
+      s.base.copy(
+        qn = union(s.base.qn +: s.folds.map(_.qnNew)),
+        probes = union(s.base.probes +: s.folds.map(_.probesNew)),
+        edges = union(edges))
     }
 
-  /** Swap in a from-scratch rebuild (new codebook — the retrain escape
-    * when the frozen centroids have drifted from the corpus). Resets to
-    * one tombstone-free segment. */
-  def rebuildWith(rebuilt: Similarity.KnnGraphIndex,
-      releaseOld: Boolean = true): Similarity.KnnGraphIndex =
-    synchronized {
-      val t = rebuilt.truncated()
-      rebuilt.release() // the swap owns the checkpointed copy; drop the build's pins
-      state = stateOf(t)
-      if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
-      state.view
-    }
+  protected def pieces(current: Similarity.KnnGraphIndex, batch: DataFrame,
+      track: DataFrame => DataFrame): Similarity.KnnGraphDelta =
+    Similarity.knnGraphSegmentFold(current, batch, track)
+
+  protected def appended(s: State,
+      d: Similarity.KnnGraphDelta): (State, Similarity.KnnGraphDelta) = {
+    val ck = checkpointed(d.frames)
+    val delta = Similarity.KnnGraphDelta(ck(0), ck(1), ck(2), ck(3))
+    (s.copy(folds = s.folds :+ delta), delta)
+  }
 }
 
-/** The learned-PQ index under the swap discipline — the codebook-drift
-  * lifecycle ([[Similarity.PqIndex]]'s scaladoc documents the policy):
-  * [[append]] is the routine frozen-codebook ingest; [[retrain]] trains a
-  * fresh codebook over the given (refreshed) corpus, re-encodes, bumps the
-  * version, and swaps. Drift is observed through
-  * [[Similarity.pqRecall]](current) on a monitoring cadence (or the
+/** The learned-PQ index ([[Similarity.PqIndex]]) under the codebook-drift
+  * lifecycle: [[fold]] append-encodes a batch under the FROZEN codebook
+  * (the routine ingest); [[retrain]] trains a fresh codebook over the
+  * refreshed corpus, re-encodes, bumps the version and swaps. Drift is
+  * observed through [[Similarity.pqRecall]] (or the
   * [[IndexMaintenance.maintainPq]] policy) — PqDriftSpec pins the whole
-  * story: a shifted batch degrades recall@k under the frozen codebook and
-  * retrain-and-swap recovers it.
-  *
-  * SEGMENTED like the corpus/embed holders — and more simply: under a
-  * frozen codebook both mutable components (codes, quantized vectors) are
-  * PURE append and the codebook itself never changes between retrains, so
-  * a segment is exactly the append's two batch-sized frames, the published
-  * view is a plain union per component (no re-key map, no dropped-bucket
-  * filter), and an append checkpoints O(batch) — the old path re-
-  * checkpointed the whole codes/qn per append. In-memory compaction every
-  * `maxSegments` appends bounds view plan depth; a RETRAIN is the natural
-  * full compaction (it re-encodes everything into one fresh segment). */
+  * story. Under a frozen codebook both mutable components (codes,
+  * quantized vectors) are PURE append, so a segment is one fold's
+  * [[Similarity.PqDelta]] and the view is a plain union per component. */
 final class RefreshablePqIndex(initial: Similarity.PqIndex,
-    maxSegments: Int = RefreshableCorpusIndex.DefaultMaxSegments) {
-  private final case class PSeg(codes: DataFrame, qn: DataFrame)
-  private final case class State(cents: DataFrame, segs: Vector[PSeg],
-      version: Int, view: Similarity.PqIndex)
+    maxSegments: Int = DefaultMaxSegments)
+    extends SegmentedIndex[Similarity.PqIndex, Similarity.PqDelta,
+      Segments[Similarity.PqIndex, Similarity.PqDelta]](
+      initial, Similarity.PqFiles, maxSegments) {
+  private type State = Segments[Similarity.PqIndex, Similarity.PqDelta]
 
-  @volatile private var state: State = stateOf(initial.truncated())
-  private var initialToRelease: Option[Similarity.PqIndex] = Some(initial)
+  protected def single(t: Similarity.PqIndex): State = Segments(t, Vector.empty)
 
-  /** Single-segment state off an already-checkpointed index (init,
-    * post-compaction, post-retrain). */
-  private def stateOf(t: Similarity.PqIndex): State =
-    State(t.cents, Vector(PSeg(t.codes, t.qn)), t.version,
-      viewOf(t.cents, Vector(PSeg(t.codes, t.qn)), t.version))
+  protected def view(s: State): Similarity.PqIndex =
+    if (s.folds.isEmpty) s.base
+    else s.base.copy(
+      codes = union(s.base.codes +: s.folds.map(_.codesNew)),
+      qn = union(s.base.qn +: s.folds.map(_.qNew)))
 
-  private def viewOf(cents: DataFrame, segs: Vector[PSeg],
-      version: Int): Similarity.PqIndex =
-    Similarity.PqIndex(cents,
-      segs.map(_.codes).reduce(_ unionByName _),
-      segs.map(_.qn).reduce(_ unionByName _),
-      version, initial.subspaces, initial.nCodes, initial.iters)
+  protected def pieces(current: Similarity.PqIndex, batch: DataFrame,
+      track: DataFrame => DataFrame): Similarity.PqDelta =
+    Similarity.pqAppendDelta(current.cents, current.subspaces, batch, track)
 
-  /** The currently-published index (a lazy union view over checkpointed
-    * segments — complete by construction for any concurrent reader). */
-  def current: Similarity.PqIndex = state.view
-
-  /** Frozen-codebook append-encode of a new batch — O(batch) end to end:
-    * the encode reads only the broadcast codebook, and only the batch's
-    * two fresh frames are checkpointed (a new segment). With `deltaPath`
-    * set, the same frames land there BEFORE the swap
-    * ([[Similarity.PqFiles.saveDelta]]) — the durable O(batch)-per-fold
-    * discipline; a restart loads base+deltas ([[Similarity.PqFiles]])
-    * instead of re-encoding. */
-  def append(newVecs: DataFrame, releaseOld: Boolean = true,
-      deltaPath: Option[String] = None): Similarity.PqIndex =
-    synchronized {
-      val s = state
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val delta = Similarity.pqAppendDelta(s.cents, initial.subspaces, newVecs,
-        df => { val c = df.persist(); tracked += c; c })
-      val ck = IndexFiles.inParallel(Seq(
-        () => delta.codesNew.localCheckpoint(true),
-        () => delta.qNew.localCheckpoint(true)))
-      deltaPath.foreach(p =>
-        Similarity.PqFiles.saveDelta(Similarity.PqDelta(ck(0), ck(1)), p))
-      tracked.foreach(_.unpersist())
-
-      var segs2 = s.segs :+ PSeg(ck(0), ck(1))
-      var next = viewOf(s.cents, segs2, s.version)
-      if (segs2.size > maxSegments) {
-        val t = next.truncated()
-        segs2 = Vector(PSeg(t.codes, t.qn))
-        next = viewOf(t.cents, segs2, s.version)
-        state = State(t.cents, segs2, s.version, next)
-      } else {
-        state = State(s.cents, segs2, s.version, next)
-      }
-      if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
-      next
-    }
+  protected def appended(s: State,
+      d: Similarity.PqDelta): (State, Similarity.PqDelta) = {
+    val ck = checkpointed(d.frames)
+    val delta = Similarity.PqDelta(ck(0), ck(1))
+    (s.copy(folds = s.folds :+ delta), delta)
+  }
 
   /** Retrain over `corpus` (the full refreshed population), re-encode,
-    * version-bump, swap — resets to one fresh segment (the full
-    * compaction a retrain is anyway). With `indexPath` set the retrained
-    * index persists as a NEW BASE whose stamp swallows the
-    * frozen-codebook deltas — they were encoded against the dead codebook;
-    * the stamp makes every future load ignore them and the base save
-    * sweeps them. */
-  def retrain(corpus: DataFrame, releaseOld: Boolean = true,
-      indexPath: Option[String] = None): Similarity.PqIndex =
-    synchronized {
-      val rebuilt = Similarity.retrainPqIndex(corpus, state.view)
-      val next = rebuilt.truncated()
-      rebuilt.release()
-      indexPath.foreach(p => Similarity.PqFiles.save(next, p))
-      state = stateOf(next)
-      if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
-      state.view
-    }
+    * version-bump and swap ([[rebuildWith]]); with `indexPath` set the
+    * retrained index persists first as a new base whose stamp swallows the
+    * frozen-codebook deltas. */
+  def retrain(corpus: DataFrame, indexPath: Option[String] = None): Similarity.PqIndex =
+    synchronized(rebuildWith(Similarity.retrainPqIndex(corpus, current), indexPath))
 }
 
 /** MONITOR-DRIVEN MAINTENANCE — the policy tier that closes the drift
@@ -457,70 +426,9 @@ object IndexMaintenance {
     if (before.isNaN || before >= floor) Decision(before, retrained = false, None)
     else {
       holder.rebuildWith(Similarity.knnGraphIndex(corpus,
-        holder.current.k, holder.current.nProbe, centroidMod))
-      indexPath.foreach(p => Similarity.GraphFiles.save(holder.current, p))
+        holder.current.k, holder.current.nProbe, centroidMod), indexPath)
       Decision(before, retrained = true, Some(recall()))
     }
   }
 }
 
-/** [[RefreshableCorpusIndex]]'s vector-side twin over
-  * [[Similarity.EmbedIndex]] — the same segmented O(batch)-checkpoint
-  * fold (simpler: no re-key map, no Blooms). */
-final class RefreshableEmbedIndex(initial: Similarity.EmbedIndex,
-    maxSegments: Int = RefreshableCorpusIndex.DefaultMaxSegments) {
-  private final case class ESeg(qc: DataFrame, cb: DataFrame, sizes: DataFrame)
-  private final case class State(segs: Vector[ESeg], oversized: DataFrame,
-      view: Similarity.EmbedIndex)
-
-  @volatile private var state: State = {
-    val t = initial.truncated()
-    val sizes = Similarity.embedInitialSizes(initial).localCheckpoint(true)
-    val seg0 = ESeg(t.qc, t.cb, sizes)
-    State(Vector(seg0), t.oversized, view(Vector(seg0), t.oversized))
-  }
-  private var initialToRelease: Option[Similarity.EmbedIndex] = Some(initial)
-
-  private def view(segs: Vector[ESeg], oversized: DataFrame): Similarity.EmbedIndex =
-    Similarity.embedSegmentedView(segs.map(_.qc), segs.map(_.cb),
-      oversized, initial.bucketCap, initial.tables)
-
-  def current: Similarity.EmbedIndex = state.view
-
-  def fold(newVecs: DataFrame, releaseOld: Boolean = true,
-      deltaPath: Option[String] = None): Similarity.EmbedIndex =
-    synchronized {
-      val s = state
-      val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def track(df: DataFrame): DataFrame = { val c = df.persist(); tracked += c; c }
-      val parts = Similarity.embedSegmentFold(newVecs, track, initial.tables)
-      val allSizes = s.segs.map(_.sizes) :+ parts.freshSizes
-      val ck = IndexFiles.inParallel(Seq(
-        () => parts.qNew.localCheckpoint(true),
-        () => parts.freshBuckets.localCheckpoint(true),
-        () => parts.freshSizes.localCheckpoint(true),
-        () => Similarity.embedSegmentOversized(allSizes, initial.bucketCap)
-          .localCheckpoint(true)))
-      val seg = ESeg(ck(0), ck(1), ck(2))
-      var segs2 = s.segs :+ seg
-      var next = view(segs2, ck(3))
-      deltaPath.foreach { p =>
-        Similarity.EmbedFiles.saveDelta(
-          Similarity.EmbedDelta(seg.qc, seg.cb, ck(3)), p)
-      }
-      tracked.foreach(_.unpersist())
-      if (segs2.size > maxSegments) {
-        val totalsCk = segs2.map(_.sizes).reduce(_ unionByName _)
-          .groupBy("table", "bucket")
-          .agg(org.apache.spark.sql.functions.sum("n").as("n"))
-          .localCheckpoint(true)
-        val t = next.truncated()
-        segs2 = Vector(ESeg(t.qc, t.cb, totalsCk))
-        state = State(segs2, t.oversized, view(segs2, t.oversized))
-      } else {
-        state = State(segs2, ck(3), next)
-      }
-      if (releaseOld) { initialToRelease.foreach(_.release()); initialToRelease = None }
-      state.view
-    }
-}

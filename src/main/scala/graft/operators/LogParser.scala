@@ -9,9 +9,10 @@ import graft.functions.ByteFmt.parse_bytes
   *
   * Re-expresses the reference's per-line dispatch (/root/reference/query.go:47-79)
   * as one declarative projection: a cheap severity prefilter
-  * (query.go:49-51), then the four patterns (query.go:15-18) evaluated via the
-  * single-pass [[graft.functions.RegexGroupsExpr]] expression, first match
-  * wins in the reference's order initial → stats → error → memory.
+  * (query.go:49-51), then the four patterns (query.go:15-18) evaluated by
+  * the fused single-pass [[graft.functions.LogLineParseExpr]] expression,
+  * first match wins in the reference's order initial → stats → error →
+  * memory.
   *
   * Each pattern is additionally guarded by a `contains` check on a literal
   * substring the regex requires anyway (e.g. "<Debug> executeQuery:"), so the

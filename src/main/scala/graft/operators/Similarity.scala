@@ -465,23 +465,13 @@ object Similarity {
     * pipeline materializes ONCE; every batch/micro-batch joins against it
     * ([[graft.operators.Dedup.CorpusIndex]]'s discipline). */
   final case class EmbedIndex private[operators] (qc: DataFrame, cb: DataFrame,
-      oversized: DataFrame, bucketCap: Int, tables: Int = EmbedGateTables) {
+      oversized: DataFrame, bucketCap: Int, tables: Int = EmbedGateTables)
+      extends IndexValue[EmbedIndex] {
     private[operators] def frames: Seq[DataFrame] = Seq(qc, cb, oversized)
-    /** Force-materialize all pinned components (atomic-swap discipline —
-      * see [[Dedup.CorpusIndex.materialize]]). */
-    def materialize(): this.type = {
-      IndexFiles.inParallel(frames.map(f => () => f.count())); this
-    }
-
-    /** Materialize and truncate lineage (see
-      * [[Dedup.CorpusIndex.truncated]] — bounds plan depth under a
-      * per-batch refresh loop; jobs submitted concurrently). */
     private[graft] def truncated(): EmbedIndex = {
-      val t = IndexFiles.inParallel(frames.map(f => () => f.localCheckpoint(true)))
+      val t = IndexValue.checkpointed(frames)
       EmbedIndex(t(0), t(1), t(2), bucketCap, tables)
     }
-    /** Unpin this index's frames after a swap. */
-    def release(): Unit = frames.foreach(PinnedCaches.unpin)
   }
 
   def embedIndex(corpus: DataFrame,
@@ -499,11 +489,12 @@ object Similarity {
     EmbedIndex(qc, cb, oversized, bucketCap, tables)
   }
 
-  /** One fold's O(batch) persistence payload — [[Dedup.IndexDelta]]'s
-    * vector twin: the batch's quantized vectors, their UNFILTERED LSH
-    * bucket rows (pure append — no dup-group collapse and no re-key on the
-    * vector side), and the refreshed dropped-bucket size table (tiny,
-    * latest-wins at load). */
+  /** One fold's O(batch) pieces ([[embedSegmentFold]]) — a
+    * [[RefreshableEmbedIndex]] segment and the fold's persisted delta,
+    * [[Dedup.IndexDelta]]'s vector twin: the batch's quantized vectors,
+    * their UNFILTERED LSH bucket rows (pure append — no dup-group collapse
+    * and no re-key on the vector side), and the refreshed dropped-bucket
+    * size table (tiny, latest-wins at load). */
   final case class EmbedDelta private[operators] (
       qNew: DataFrame, freshBuckets: DataFrame, oversized: DataFrame) {
     private[operators] def frames: Seq[DataFrame] =
@@ -547,100 +538,22 @@ object Similarity {
     }
   }
 
-  /** INDEX LIFECYCLE, vector side — fold a batch of new embeddings into an
-    * existing [[EmbedIndex]]: quantize ONLY the batch, append its LSH
-    * bucket rows, and re-apply the bucket cap on true combined sizes (a
-    * bucket the batch pushes over the cap drops whole; a previously-dropped
-    * bucket stays dropped) — contents identical to a from-scratch
-    * [[embedIndex]](old ∪ new), cost proportional to the batch. Unlike the
-    * text index there is no dup-group collapse to fold: every vec_id keys
-    * its own row. */
-  def refreshEmbedIndex(idx: EmbedIndex, newVecs: DataFrame): EmbedIndex =
-    refreshEmbedIndexCore(idx, newVecs, PinnedCaches.pin)._1
-
-  /** The fold body, parameterized over the caching discipline — see
-    * [[graft.operators.Dedup]]'s `refreshIndexCore` for why the lifecycle
-    * loop must NOT pin fold intermediates. */
-  private def refreshEmbedIndexCore(idx: EmbedIndex, newVecs: DataFrame,
-      cache: DataFrame => DataFrame): (EmbedIndex, EmbedDelta) = {
+  /** FOLD, vector side — a batch of new embeddings against the index
+    * `view`: quantize ONLY the batch, its UNFILTERED LSH bucket rows, and
+    * the bucket cap re-applied on true combined sizes
+    * ([[Dedup.recapTouched]]: a bucket the batch pushes over the cap drops
+    * whole, a previously-dropped bucket stays dropped). The view plus these
+    * pieces has the contents of a from-scratch [[embedIndex]](old ∪ new),
+    * at a cost proportional to the batch. Unlike the text index there is
+    * no dup-group collapse to fold: every vec_id keys its own row. */
+  private[operators] def embedSegmentFold(view: EmbedIndex, newVecs: DataFrame,
+      cache: DataFrame => DataFrame): EmbedDelta = {
     val qNew = cache(quantized(newVecs).select("vec_id", "q", "nq"))
-    val freshBuckets = cache(lshBuckets(qNew, idx.tables).select("vec_id", "table", "bucket"))
-    val qc2 = cache(idx.qc.unionAll(qNew))
-    // re-cap restricted to buckets the BATCH touches — see
-    // [[graft.operators.Dedup]]'s refreshIndexCore for the argument: an
-    // untouched bucket cannot change state (present stays ≤ cap, dropped
-    // rides through idx.oversized with its true size), so the O(index)
-    // full-bucket-table aggregation + O(index) keep join become an
-    // O(batch) semi-joined aggregation + broadcast anti-join per fold.
-    val freshSizes = cache(
-      freshBuckets.groupBy("table", "bucket").agg(count(lit(1)).as("n")))
-    val touched = freshSizes.select("table", "bucket")
-    val oldPresentTouched = idx.cb
-      .join(broadcast(touched), Seq("table", "bucket"), "left_semi")
-      .groupBy("table", "bucket").agg(count(lit(1)).as("n"))
-    val totals = cache(
-      oldPresentTouched.unionAll(idx.oversized).unionAll(freshSizes)
-        .groupBy("table", "bucket").agg(sum("n").as("n")))
-    val oversized2 = cache(totals.filter(col("n") > idx.bucketCap))
-    val cb2 = cache(
-      idx.cb.unionAll(freshBuckets).join(
-        broadcast(oversized2.select("table", "bucket")),
-        Seq("table", "bucket"), "left_anti"))
-    (EmbedIndex(qc2, cb2, oversized2, idx.bucketCap, idx.tables),
-      EmbedDelta(qNew, freshBuckets, oversized2))
+    val freshBuckets = cache(
+      lshBuckets(qNew, view.tables).select("vec_id", "table", "bucket"))
+    EmbedDelta(qNew, freshBuckets, Dedup.recapTouched(view.cb, view.oversized,
+      freshBuckets, Seq("table", "bucket"), view.bucketCap, cache))
   }
-
-  /** [[refreshEmbedIndex]] for the lifecycle loop: fold-local tracked
-    * persists, dropped by the returned thunk after the published frames are
-    * checkpointed ([[graft.operators.Dedup.refreshIndexTracked]]'s twin). */
-  private[graft] def refreshEmbedIndexTracked(idx: EmbedIndex,
-      newVecs: DataFrame): (EmbedIndex, EmbedDelta, () => Unit) = {
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val (next, delta) = refreshEmbedIndexCore(idx, newVecs,
-      df => { val c = df.persist(); tracked += c; c })
-    (next, delta, () => tracked.foreach(_.unpersist()))
-  }
-
-  // ───────────── SEGMENTED IN-MEMORY FOLDS, vector side ─────────────
-  // [[graft.operators.Dedup]]'s segmented-fold primitives mirrored for the
-  // embed index (simpler: no dup-group collapse, no re-key map).
-
-  private[operators] final case class EmbedSegmentParts(
-      qNew: DataFrame, freshBuckets: DataFrame, freshSizes: DataFrame)
-
-  private[operators] def embedSegmentFold(newVecs: DataFrame,
-      cache: DataFrame => DataFrame,
-      tables: Int = EmbedGateTables): EmbedSegmentParts = {
-    val qNew = cache(quantized(newVecs).select("vec_id", "q", "nq"))
-    val freshBuckets = cache(lshBuckets(qNew, tables).select("vec_id", "table", "bucket"))
-    val freshSizes = cache(
-      freshBuckets.groupBy("table", "bucket").agg(count(lit(1)).as("n")))
-    EmbedSegmentParts(qNew, freshBuckets, freshSizes)
-  }
-
-  /** The current dropped-bucket table over per-segment size tables —
-    * checkpointed per fold by the holder, never recomputed at gate time
-    * (see [[graft.operators.Dedup]]'s `segmentOversized`). */
-  private[operators] def embedSegmentOversized(sizes: Seq[DataFrame],
-      bucketCap: Int): DataFrame =
-    sizes.reduce(_ unionByName _).groupBy("table", "bucket")
-      .agg(sum("n").as("n")).filter(col("n") > bucketCap)
-
-  private[operators] def embedSegmentedView(qcs: Seq[DataFrame],
-      cbs: Seq[DataFrame], oversized: DataFrame, bucketCap: Int,
-      tables: Int = EmbedGateTables): EmbedIndex = {
-    def u(fs: Seq[DataFrame]): DataFrame = fs.reduce(_ unionByName _)
-    EmbedIndex(u(qcs),
-      u(cbs).join(broadcast(oversized.select("table", "bucket")),
-        Seq("table", "bucket"), "left_anti"),
-      oversized, bucketCap, tables)
-  }
-
-  /** The initial embed segment's TRUE size table (present ∪ dropped). */
-  private[operators] def embedInitialSizes(idx: EmbedIndex): DataFrame =
-    idx.cb.groupBy("table", "bucket").agg(count(lit(1)).as("n"))
-      .unionByName(idx.oversized)
-      .groupBy("table", "bucket").agg(sum("n").as("n"))
 
   /** [[embedNovelty]] against an already-built [[EmbedIndex]] — the form
     * the streaming gate applies per micro-batch. */
@@ -802,10 +715,10 @@ object Similarity {
 
   /** DuckDB oracle for the `embed_index_refresh` registry row — the
     * vector INDEX-LIFECYCLE gate on a 3-way split: vec_id%3==0 indexed
-    * from scratch, %3==1 [[refreshEmbedIndex]]ed in, %3==2 gated through
-    * the refreshed index. The oracle builds one flat existing side
-    * (%3 < 2) with the bucket cap over it, so the hash gate validates
-    * incrementally-folded ≡ from-scratch over the union corpus. */
+    * from scratch, %3==1 folded in through a [[RefreshableEmbedIndex]],
+    * %3==2 gated through the refreshed index. The oracle builds one flat
+    * existing side (%3 < 2) with the bucket cap over it, so the hash gate
+    * validates incrementally-folded ≡ from-scratch over the union corpus. */
   def embedIndexRefreshSql: String =
     s"""WITH $evNormsSql,
        |${sigsSqlTables(EmbedGateTables)},
@@ -1502,24 +1415,20 @@ object Similarity {
     *   - `edges` is the [[knnGraph]] edge list `(query_id, neighbor_id,
     *     cos, rnk)`.
     *
-    * [[refreshKnnGraph]] folds a batch in with cost proportional to the
+    * [[knnGraphSegmentFold]] folds a batch in with cost proportional to the
     * batch's candidate volume, provably ≡ a from-scratch build over the
     * union corpus UNDER THE SAME centroids (spec-pinned; the
     * `knn_graph_refresh` registry row pins the folded edges against the
     * DuckDB oracle replaying frozen base centroids). */
   final case class KnnGraphIndex private[operators] (
       cents: DataFrame, qn: DataFrame, probes: DataFrame, edges: DataFrame,
-      k: Int, nProbe: Int) {
+      k: Int, nProbe: Int) extends IndexValue[KnnGraphIndex] {
     private[operators] def frames: Seq[DataFrame] =
       Seq(cents, qn, probes, edges)
-    def materialize(): this.type = {
-      IndexFiles.inParallel(frames.map(f => () => f.count())); this
-    }
     private[graft] def truncated(): KnnGraphIndex = {
-      val t = IndexFiles.inParallel(frames.map(f => () => f.localCheckpoint(true)))
+      val t = IndexValue.checkpointed(frames)
       KnnGraphIndex(t(0), t(1), t(2), t(3), k, nProbe)
     }
-    def release(): Unit = frames.foreach(PinnedCaches.unpin)
   }
 
   /** Build the [[KnnGraphIndex]] for a static corpus — [[knnGraph]]'s
@@ -1564,10 +1473,10 @@ object Similarity {
     knnGraphIndexWith(quantized(emb).select("vec_id", "q", "nq"), cents,
       k, nProbe, identity).edges
 
-  /** GRAPH LIFECYCLE — fold a batch of new vectors into an existing
-    * [[KnnGraphIndex]] under its frozen centroids, producing exactly the
-    * graph a from-scratch build over the union corpus (same centroids)
-    * would produce:
+  /** GRAPH LIFECYCLE — fold a batch of new vectors into the graph `idx`
+    * under its frozen centroids: the fold's segment, such that `idx` with
+    * it applied is exactly the graph a from-scratch build over the union
+    * corpus (same centroids) produces:
     *
     *   - the batch assigns/probes against the broadcast codebook
     *     (map-side);
@@ -1582,27 +1491,16 @@ object Similarity {
     *     competition (ties break to the lower neighbor_id on both paths);
     *   - unaffected queries keep their edge rows verbatim.
     *
-    * Cost is the batch's candidate volume (batch·nProbe·cellSize) plus the
-    * affected queries' bounded re-rank (≤ k + new-in-cell candidates each)
-    * — never a corpus-wide rebuild. */
-  def refreshKnnGraph(idx: KnnGraphIndex, newVecs: DataFrame): KnnGraphIndex =
-    refreshKnnGraphCore(idx, newVecs, PinnedCaches.pin)
-
-  /** One graph fold's SEGMENT pieces — the decomposition the segmented
-    * holder checkpoints. Everything is batch-proportional: `edgesSeg` is
-    * the fold's fresh rows (new-as-query edges ∪ the re-ranked rows of
-    * affected old queries) and `tombstones` the affected query ids — the
-    * key fact making a segmented EDGE view possible despite edges not
-    * being pure-append: a fold never edits rows in place, it supersedes
-    * whole query_ids, so "earlier segments minus later tombstones" is
-    * exactly latest-wins. `qnAll` is the fold-local cached union the
-    * rankings ran against, returned so the monolithic path reuses it. */
-  private[operators] final case class GraphSegmentParts(
-      qnNew: DataFrame, probesNew: DataFrame, edgesSeg: DataFrame,
-      tombstones: DataFrame, qnAll: DataFrame)
-
+    * Everything is batch-proportional: `edgesSeg` is the fold's fresh rows
+    * (new-as-query edges ∪ the re-ranked rows of affected old queries) and
+    * `tombstones` the affected query ids — the key fact making a segmented
+    * edge view possible despite edges not being pure-append: a fold never
+    * edits rows in place, it supersedes whole query_ids, so "earlier
+    * segments minus later tombstones" is exactly latest-wins. Cost is the
+    * batch's candidate volume (batch·nProbe·cellSize) plus the affected
+    * queries' bounded re-rank (≤ k + new-in-cell candidates each). */
   private[operators] def knnGraphSegmentFold(idx: KnnGraphIndex,
-      newVecs: DataFrame, cache: DataFrame => DataFrame): GraphSegmentParts = {
+      newVecs: DataFrame, cache: DataFrame => DataFrame): KnnGraphDelta = {
     val qNew = cache(quantized(newVecs).select("vec_id", "q", "nq"))
     val scoredNew = qNew.crossJoin(broadcast(idx.cents))
       .withColumn("score", long_dot(col("q"), col("qc")).cast("double") /
@@ -1650,17 +1548,7 @@ object Similarity {
     val edgesSeg = rankCandidates(candNew.unionByName(mergedCand), qAll,
       idx.k, ordered = false)
 
-    GraphSegmentParts(qnNew, probesNew, edgesSeg, affected, qnAll)
-  }
-
-  private def refreshKnnGraphCore(idx: KnnGraphIndex, newVecs: DataFrame,
-      cache: DataFrame => DataFrame): KnnGraphIndex = {
-    val p = knnGraphSegmentFold(idx, newVecs, cache)
-    val edges2 = cache(
-      idx.edges.join(broadcast(p.tombstones), Seq("query_id"), "left_anti")
-        .unionByName(p.edgesSeg))
-    KnnGraphIndex(idx.cents, p.qnAll,
-      cache(idx.probes.unionByName(p.probesNew)), edges2, idx.k, idx.nProbe)
+    KnnGraphDelta(qnNew, probesNew, edgesSeg, affected)
   }
 
   /** MEASURED recall of the graph's edges against the exact kNN over the
@@ -1739,13 +1627,14 @@ object Similarity {
   // ──────────── kNN-GRAPH PERSISTENCE (base + tombstone deltas) ────────────
   // The edge component is not pure-append (a fold REPLACES affected old queries'
   // rows), but a fold supersedes WHOLE query_ids — so a delta is the
-  // fold's [[GraphSegmentParts]] (batch qn/probe rows, fresh edge rows,
+  // fold's [[knnGraphSegmentFold]] segment (batch qn/probe rows, fresh edge rows,
   // affected-id tombstones) and load replays deltas in id order: append
   // qn/probes, and per delta `edges := (edges ⊖ tombstones) ∪ edges_seg`
   // — the on-disk twin of the segmented holder's latest-wins view.
 
-  /** One graph fold's O(batch) persistence payload (see
-    * [[GraphSegmentParts]] for why each piece is batch-proportional). */
+  /** One graph fold's O(batch) pieces — a [[RefreshableKnnGraph]] segment
+    * and the fold's persisted delta (see [[knnGraphSegmentFold]] for why
+    * each piece is batch-proportional). */
   final case class KnnGraphDelta private[operators] (
       qnNew: DataFrame, probesNew: DataFrame, edgesSeg: DataFrame,
       tombstones: DataFrame) {
@@ -1786,8 +1675,8 @@ object Similarity {
 
   /** DuckDB oracle for the `knn_graph_refresh` registry row — the graph
     * lifecycle on the 3-way split: corpus %3==0 built from scratch (its
-    * centroids FROZEN), %3==1 folded in via [[refreshKnnGraph]], output =
-    * the refreshed edge list. The oracle knows nothing about the refresh:
+    * centroids FROZEN), %3==1 folded in through a [[RefreshableKnnGraph]],
+    * output = the refreshed edge list. The oracle knows nothing about the refresh:
     * it builds the whole graph over the union population under the base
     * corpus's centroid set, so the hash gate proves folded ≡ from-scratch
     * (same codebook). */
@@ -2266,8 +2155,8 @@ object Similarity {
     * (PqDriftSpec):
     *
     *   - routine ingest APPEND-ENCODES against the frozen codebook
-    *     ([[appendEncodePq]] — O(batch): slice, broadcast-codebook argmin,
-    *     append);
+    *     ([[RefreshablePqIndex]]`.fold` of [[pqAppendDelta]] — O(batch):
+    *     slice, broadcast-codebook argmin, append);
     *   - drift is MEASURED, not assumed: [[pqRecall]] computes recall@k of
     *     the index's ADC chain against the exact quantized-cosine top-k
     *     over the same corpus — run on a monitoring cadence; a drop below
@@ -2279,16 +2168,13 @@ object Similarity {
     */
   final case class PqIndex private[operators] (
       cents: DataFrame, codes: DataFrame, qn: DataFrame,
-      version: Int, subspaces: Int, nCodes: Int, iters: Int) {
+      version: Int, subspaces: Int, nCodes: Int, iters: Int)
+      extends IndexValue[PqIndex] {
     private[operators] def frames: Seq[DataFrame] = Seq(cents, codes, qn)
-    def materialize(): this.type = {
-      IndexFiles.inParallel(frames.map(f => () => f.count())); this
-    }
     private[graft] def truncated(): PqIndex = {
-      val t = IndexFiles.inParallel(frames.map(f => () => f.localCheckpoint(true)))
+      val t = IndexValue.checkpointed(frames)
       PqIndex(t(0), t(1), t(2), version, subspaces, nCodes, iters)
     }
-    def release(): Unit = frames.foreach(PinnedCaches.unpin)
   }
 
   /** Train the version-1 [[PqIndex]] over a corpus: Lloyd codebook
@@ -2303,12 +2189,6 @@ object Similarity {
         .agg(min_by(col("cent_id"), struct(col("d"), col("cent_id"))).as("code")))
     PqIndex(cents, codes, qn, version, subspaces, nCodes, iters)
   }
-
-  /** FROZEN-codebook append: encode only the batch against the existing
-    * codebook and append its codes/vectors — same version (the codebook
-    * did not change; recall under drift is [[pqRecall]]'s to observe). */
-  def appendEncodePq(idx: PqIndex, newVecs: DataFrame): PqIndex =
-    appendEncodePqCore(idx, newVecs, PinnedCaches.pin)._1
 
   /** One append's O(batch) persistence payload — the PQ side is the
     * simplest delta of the four index families: codes and quantized
@@ -2330,25 +2210,6 @@ object Similarity {
       .groupBy("vec_id", "m")
       .agg(min_by(col("cent_id"), struct(col("d"), col("cent_id"))).as("code")))
     PqDelta(codesNew, qNew)
-  }
-
-  private def appendEncodePqCore(idx: PqIndex, newVecs: DataFrame,
-      cache: DataFrame => DataFrame): (PqIndex, PqDelta) = {
-    val delta = pqAppendDelta(idx.cents, idx.subspaces, newVecs, cache)
-    (PqIndex(idx.cents, cache(idx.codes.unionByName(delta.codesNew)),
-      cache(idx.qn.unionByName(delta.qNew)),
-      idx.version, idx.subspaces, idx.nCodes, idx.iters),
-      delta)
-  }
-
-  /** [[appendEncodePq]] for the lifecycle holder (tracked fold-local
-    * persists — the shared no-pin-in-loops discipline). */
-  private[graft] def appendEncodePqTracked(idx: PqIndex,
-      newVecs: DataFrame): (PqIndex, PqDelta, () => Unit) = {
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val (next, delta) = appendEncodePqCore(idx, newVecs,
-      df => { val c = df.persist(); tracked += c; c })
-    (next, delta, () => tracked.foreach(_.unpersist()))
   }
 
   /** RETRAIN-AND-SWAP: a fresh Lloyd codebook over the (refreshed) corpus,

@@ -1077,8 +1077,7 @@ object TextAnalysis {
     * codebooks deliberately do NOT refresh this way: codebooks train once
     * and new vectors encode against the FROZEN codebooks — the standard
     * vector-index practice; their encode tables append per-vector exactly
-    * like [[graft.operators.Similarity.refreshEmbedIndex]]'s quantized
-    * rows.) */
+    * like [[graft.operators.RefreshableEmbedIndex]]'s quantized rows.) */
   def refreshBm25Stats(stats: DataFrame, newDocs: DataFrame,
       terms: Seq[String] = Seq("merge", "window", "hash")): DataFrame = {
     val cols = "n_docs" +: "total_dl" +: terms.map(t => s"df_$t")

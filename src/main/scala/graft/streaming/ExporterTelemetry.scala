@@ -104,42 +104,37 @@ final class ExporterTelemetry extends SelfTelemetry {
     * a `server` label per fleet member; the single-file form is label-free
     * like the rest of the reference-shaped exposition. */
   def render(): String = {
-    val sb = new StringBuilder
-    def fam(name: String, help: String, typ: String, lines: Seq[String]): Unit = {
-      sb.append(s"# HELP $name $help\n# TYPE $name $typ\n")
-      lines.foreach(l => sb.append(l).append('\n'))
-    }
-    fam("graft_scrapes_total", "Metrics endpoint requests served (incl. this one)",
-      "counter", Seq(s"graft_scrapes_total ${scrapes.get()}"))
-    fam("graft_batches_total", "Micro-batches processed since exporter start",
-      "counter", Seq(s"graft_batches_total $batches"))
-    fam("graft_last_batch_duration_seconds", "Trigger execution time of the last micro-batch",
-      "gauge", Seq(s"graft_last_batch_duration_seconds ${MetricsSink.fmtDouble(lastBatchDurationMs / 1000.0)}"))
-    fam("graft_last_batch_input_rows", "Input rows of the last micro-batch",
-      "gauge", Seq(s"graft_last_batch_input_rows $lastBatchInputRows"))
-    fam("graft_last_batch_phase_seconds", "Time the last micro-batch spent in each phase",
-      "gauge", phaseMs.map { case (k, ms) =>
-        s"""graft_last_batch_phase_seconds{phase="$k"} ${MetricsSink.fmtDouble(ms / 1000.0)}"""
-      })
-    fam("graft_merge_state_rows", "Rows held by the keyed merge's state store",
-      "gauge", Seq(s"graft_merge_state_rows $stateRows"))
-    fam("graft_merge_state_commit_seconds",
-      "State-store commit time of the last micro-batch, summed over partitions",
-      "gauge", Seq(s"graft_merge_state_commit_seconds ${MetricsSink.fmtDouble(stateCommitMs / 1000.0)}"))
-    // fixed when the checkpoint was first written: a resumed old checkpoint
-    // shows its original count here, not the session's default
-    fam("graft_merge_state_partitions", "State-store partitions of the keyed merge",
-      "gauge", Seq(s"graft_merge_state_partitions $statePartitions"))
     val backlogLines = backlog.toSeq.sortBy(_._1).map {
       case ("", v) => s"graft_tail_backlog_bytes $v"
       case (srv, v) =>
-        val esc = srv.replace("\\", "\\\\").replace("\"", "\\\"")
-        s"""graft_tail_backlog_bytes{server="$esc"} $v"""
+        s"""graft_tail_backlog_bytes{server="${PromRegistry.escapeLabel(srv)}"} $v"""
     }
-    fam("graft_tail_backlog_bytes",
-      "Bytes in the tailed file(s) beyond the admitted stream position",
-      "gauge", backlogLines)
-    sb.toString
+    import PromRegistry.family
+    PromRegistry.assemble(Seq(
+      family("graft_scrapes_total", "Metrics endpoint requests served (incl. this one)",
+        "counter", Seq(s"graft_scrapes_total ${scrapes.get()}")),
+      family("graft_batches_total", "Micro-batches processed since exporter start",
+        "counter", Seq(s"graft_batches_total $batches")),
+      family("graft_last_batch_duration_seconds", "Trigger execution time of the last micro-batch",
+        "gauge", Seq(s"graft_last_batch_duration_seconds ${MetricsSink.fmtDouble(lastBatchDurationMs / 1000.0)}")),
+      family("graft_last_batch_input_rows", "Input rows of the last micro-batch",
+        "gauge", Seq(s"graft_last_batch_input_rows $lastBatchInputRows")),
+      family("graft_last_batch_phase_seconds", "Time the last micro-batch spent in each phase",
+        "gauge", phaseMs.map { case (k, ms) =>
+          s"""graft_last_batch_phase_seconds{phase="$k"} ${MetricsSink.fmtDouble(ms / 1000.0)}"""
+        }),
+      family("graft_merge_state_rows", "Rows held by the keyed merge's state store",
+        "gauge", Seq(s"graft_merge_state_rows $stateRows")),
+      family("graft_merge_state_commit_seconds",
+        "State-store commit time of the last micro-batch, summed over partitions",
+        "gauge", Seq(s"graft_merge_state_commit_seconds ${MetricsSink.fmtDouble(stateCommitMs / 1000.0)}")),
+      // fixed when the checkpoint was first written: a resumed old checkpoint
+      // shows its original count here, not the session's default
+      family("graft_merge_state_partitions", "State-store partitions of the keyed merge",
+        "gauge", Seq(s"graft_merge_state_partitions $statePartitions")),
+      family("graft_tail_backlog_bytes",
+        "Bytes in the tailed file(s) beyond the admitted stream position",
+        "gauge", backlogLines)))
   }
 }
 

@@ -84,46 +84,41 @@ final class IngestTelemetry extends SelfTelemetry {
   }
 
   def render(): String = {
-    val sb = new StringBuilder
-    def fam(name: String, help: String, typ: String, lines: Seq[String]): Unit = {
-      sb.append(s"# HELP $name $help\n# TYPE $name $typ\n")
-      lines.foreach(l => sb.append(l).append('\n'))
-    }
-    def lbl(s: IndexStat) =
-      s"""{index="${s.family.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
-    fam("graft_ingest_scrapes_total", "Metrics endpoint requests served (incl. this one)",
-      "counter", Seq(s"graft_ingest_scrapes_total ${scrapes.get()}"))
-    fam("graft_ingest_batches_total", "Micro-batches processed since daemon start",
-      "counter", Seq(s"graft_ingest_batches_total ${batches.get()}"))
-    fam("graft_ingest_input_rows_total", "Rows read from the source (post in-batch collapse)",
-      "counter", Seq(s"graft_ingest_input_rows_total ${inputRows.get()}"))
-    fam("graft_ingest_admitted_rows_total", "Rows admitted and landed in the curated output",
-      "counter", Seq(s"graft_ingest_admitted_rows_total ${admittedRows.get()}"))
-    fam("graft_ingest_rejected_rows_total", "Rows the admission gates dropped",
-      "counter", Seq(s"graft_ingest_rejected_rows_total ${inputRows.get() - admittedRows.get()}"))
-    fam("graft_ingest_last_batch_input_rows", "Input rows of the last micro-batch",
-      "gauge", Seq(s"graft_ingest_last_batch_input_rows $lastBatchInput"))
-    fam("graft_ingest_last_batch_admitted_rows", "Admitted rows of the last micro-batch",
-      "gauge", Seq(s"graft_ingest_last_batch_admitted_rows $lastBatchAdmitted"))
-    fam("graft_ingest_last_batch_duration_seconds", "Wall time of the last foreachBatch body",
-      "gauge", Seq(s"graft_ingest_last_batch_duration_seconds ${MetricsSink.fmtDouble(lastBatchSeconds)}"))
-    fam("graft_output_segments", "Published compacted output segments",
-      "gauge", Seq(s"graft_output_segments $outputSegments"))
-    fam("graft_output_live_batch_dirs", "Landed ingest_batch dirs awaiting compaction",
-      "gauge", Seq(s"graft_output_live_batch_dirs $outputLiveDirs"))
+    import PromRegistry.family
+    def lbl(s: IndexStat) = s"""{index="${PromRegistry.escapeLabel(s.family)}"}"""
     val stats = indexStats
-    fam("graft_index_base_version", "Latest persisted base version of the index chain",
-      "gauge", stats.map(s => s"graft_index_base_version${lbl(s)} ${s.baseVersion}"))
-    fam("graft_index_delta_chain_length", "Persisted deltas above the base (compaction sweeps them)",
-      "gauge", stats.map(s => s"graft_index_delta_chain_length${lbl(s)} ${s.deltas}"))
-    fam("graft_index_staged_batches", "Staged batch dirs awaiting their lagged fold",
-      "gauge", stats.map(s => s"graft_index_staged_batches${lbl(s)} ${s.staged}"))
-    fam("graft_index_maintenance_passes_total", "Monitor-driven maintenance passes run",
-      "counter", stats.map(s => s"graft_index_maintenance_passes_total${lbl(s)} ${s.maintenancePasses}"))
-    fam("graft_index_retrains_total", "Maintenance passes that breached the floor and retrained",
-      "counter", stats.map(s => s"graft_index_retrains_total${lbl(s)} ${s.retrains}"))
-    fam("graft_index_last_recall", "Recall the last maintenance pass measured (NaN = never)",
-      "gauge", stats.map(s => s"graft_index_last_recall${lbl(s)} ${MetricsSink.fmtDouble(s.lastRecall)}"))
-    sb.toString
+    PromRegistry.assemble(Seq(
+      family("graft_ingest_scrapes_total", "Metrics endpoint requests served (incl. this one)",
+        "counter", Seq(s"graft_ingest_scrapes_total ${scrapes.get()}")),
+      family("graft_ingest_batches_total", "Micro-batches processed since daemon start",
+        "counter", Seq(s"graft_ingest_batches_total ${batches.get()}")),
+      family("graft_ingest_input_rows_total", "Rows read from the source (post in-batch collapse)",
+        "counter", Seq(s"graft_ingest_input_rows_total ${inputRows.get()}")),
+      family("graft_ingest_admitted_rows_total", "Rows admitted and landed in the curated output",
+        "counter", Seq(s"graft_ingest_admitted_rows_total ${admittedRows.get()}")),
+      family("graft_ingest_rejected_rows_total", "Rows the admission gates dropped",
+        "counter", Seq(s"graft_ingest_rejected_rows_total ${inputRows.get() - admittedRows.get()}")),
+      family("graft_ingest_last_batch_input_rows", "Input rows of the last micro-batch",
+        "gauge", Seq(s"graft_ingest_last_batch_input_rows $lastBatchInput")),
+      family("graft_ingest_last_batch_admitted_rows", "Admitted rows of the last micro-batch",
+        "gauge", Seq(s"graft_ingest_last_batch_admitted_rows $lastBatchAdmitted")),
+      family("graft_ingest_last_batch_duration_seconds", "Wall time of the last foreachBatch body",
+        "gauge", Seq(s"graft_ingest_last_batch_duration_seconds ${MetricsSink.fmtDouble(lastBatchSeconds)}")),
+      family("graft_output_segments", "Published compacted output segments",
+        "gauge", Seq(s"graft_output_segments $outputSegments")),
+      family("graft_output_live_batch_dirs", "Landed ingest_batch dirs awaiting compaction",
+        "gauge", Seq(s"graft_output_live_batch_dirs $outputLiveDirs")),
+      family("graft_index_base_version", "Latest persisted base version of the index chain",
+        "gauge", stats.map(s => s"graft_index_base_version${lbl(s)} ${s.baseVersion}")),
+      family("graft_index_delta_chain_length", "Persisted deltas above the base (compaction sweeps them)",
+        "gauge", stats.map(s => s"graft_index_delta_chain_length${lbl(s)} ${s.deltas}")),
+      family("graft_index_staged_batches", "Staged batch dirs awaiting their lagged fold",
+        "gauge", stats.map(s => s"graft_index_staged_batches${lbl(s)} ${s.staged}")),
+      family("graft_index_maintenance_passes_total", "Monitor-driven maintenance passes run",
+        "counter", stats.map(s => s"graft_index_maintenance_passes_total${lbl(s)} ${s.maintenancePasses}")),
+      family("graft_index_retrains_total", "Maintenance passes that breached the floor and retrained",
+        "counter", stats.map(s => s"graft_index_retrains_total${lbl(s)} ${s.retrains}")),
+      family("graft_index_last_recall", "Recall the last maintenance pass measured (NaN = never)",
+        "gauge", stats.map(s => s"graft_index_last_recall${lbl(s)} ${MetricsSink.fmtDouble(s.lastRecall)}"))))
   }
 }

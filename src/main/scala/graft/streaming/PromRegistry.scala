@@ -281,9 +281,18 @@ object PromRegistry {
   /** Label rendering with a `server` label prepended to every series —
     * the fleet form. */
   private[streaming] def serverWrap(server: String): String => String = {
-    val esc = server.replace("\\", "\\\\").replace("\"", "\\\"")
+    val esc = escapeLabel(server)
     body => s"""{server="$esc"""" + (if (body.isEmpty) "}" else "," + body + "}")
   }
+
+  /** A label VALUE escaped for the text exposition (`\` and `"`). */
+  private[streaming] def escapeLabel(value: String): String =
+    value.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** A family of plain series lines — the telemetry blocks' form. */
+  private[streaming] def family(name: String, help: String, typ: String,
+      lines: Seq[String]): Family =
+    Family(name, help, typ, Seq(lines).filter(_.nonEmpty))
 
   private[streaming] def assemble(fams: Seq[Family]): String = {
     val sb = new StringBuilder

@@ -17,12 +17,16 @@ import graft.model.{ChQuery, LogEvent}
   * non-insert query completes AND evicts, later same-id lines are orphans,
   * a post-eviction initial starts a fresh lifecycle — hold exactly.
   *
-  * Deliberate, documented improvement over the reference: a processing-time
-  * state timeout evicts never-completing queries (inserts, error-only,
-  * abandoned), fixing the unbounded `map[string]*chQuery` growth the
-  * reference leaks (query.go:230-233 never marks inserts FullInfo; no other
-  * eviction exists). On timeout the partial record is emitted with
-  * `fullInfo = false` so no data is lost.
+  * An optional processing-time state timeout (`timeoutMs > 0`) evicts
+  * never-completing queries (inserts, error-only, abandoned), which would
+  * fix the unbounded `map[string]*chQuery` growth the reference leaks
+  * (query.go:230-233 never marks inserts FullInfo; no other eviction
+  * exists). On timeout the partial record is emitted with
+  * `fullInfo = false` so no data is lost. The shipped exporter runs with it
+  * OFF: both `MetricsServing` call sites pass `timeoutMs = 0L`, so merge
+  * state keeps one row per never-completing query, as the reference does
+  * (19,794 rows after the sf0.1 catch-up drain). Switching eviction on
+  * waits for eviction on the log's own clock (ROADMAP item 2).
   *
   * Scale: state is hash-partitioned by id across executors (RocksDB state
   * store in production — checkpoint recovery is spec-verified under
@@ -30,8 +34,7 @@ import graft.model.{ChQuery, LogEvent}
   * HDFS-backed in-memory default falls over), one in-flight record per id;
   * per-batch per-key work is O(lines of that query). Checkpointing gives
   * exactly-once the reference never had. The eviction timeout is
-  * wall-clock (`ProcessingTimeTimeout`); `timeoutMs <= 0` disables it, as
-  * both exporter call sites do.
+  * wall-clock (`ProcessingTimeTimeout`); `timeoutMs <= 0` disables it.
   */
 object StreamingMerge {
 

@@ -105,7 +105,7 @@ object StreamingSimilarity {
     new IngestGate(ref.current.cents.sparkSession, indexPath, admitAll,
       (staged, deltaPath) => {
         val fresh = IngestGate.unindexed(ref.current.qn, staged)
-        if (!fresh.isEmpty) { ref.append(fresh, deltaPath = deltaPath); () }
+        if (!fresh.isEmpty) { ref.fold(fresh, deltaPath = deltaPath); () }
       },
       Similarity.PqFiles.compact, compactEvery, maintainEvery, maintain)
 

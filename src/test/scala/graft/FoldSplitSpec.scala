@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.{Dedup, PinnedCaches}
+import graft.operators.{Dedup, PinnedCaches, RefreshableCorpusIndex}
 
 /** The fold's scale-adaptive collide/fresh split (Dedup.splitByIndexedFp):
   * the LARGE-index shape (broadcast semi-join shrink + broadcast splits)
@@ -46,11 +46,12 @@ class FoldSplitSpec extends SparkSpec {
       5L -> "one two three four five six seven eight",
       6L -> "totally fresh text never indexed before at all")
 
-    val direct = snap(Dedup.refreshIndex(Dedup.corpusIndex(base), batch))
+    def folded() = snap(new RefreshableCorpusIndex(Dedup.corpusIndex(base)).fold(batch))
+    val direct = folded()
     val scratch = snap(Dedup.corpusIndex(union))
     System.setProperty("graft.fold.forceSemiJoinSplit", "true")
     val forced =
-      try snap(Dedup.refreshIndex(Dedup.corpusIndex(base), batch))
+      try folded()
       finally System.clearProperty("graft.fold.forceSemiJoinSplit")
 
     assert(forced === direct)

@@ -91,8 +91,8 @@ class IndexArtifactSpec extends SparkSpec {
 
   test("PQ fixture loads ≡ the same build and frozen-codebook append") {
     val loaded = Similarity.PqFiles.load(spark, s"$fixtures/pq")
-    val scratch = Similarity.appendEncodePq(
-      Similarity.pqIndexBuild(even(vecs, "vec_id"), nCodes = 8), odd(vecs, "vec_id"))
+    val scratch = new RefreshablePqIndex(
+      Similarity.pqIndexBuild(even(vecs, "vec_id"), nCodes = 8)).fold(odd(vecs, "vec_id"))
     assert(rows(loaded.cents) == rows(scratch.cents))
     assert(rows(loaded.codes) == rows(scratch.codes))
     assert(rows(loaded.qn) == rows(scratch.qn))

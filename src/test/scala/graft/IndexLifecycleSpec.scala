@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, RefreshableCorpusIndex, Similarity}
+import graft.operators.{Dedup, RefreshableCorpusIndex, RefreshableEmbedIndex, Similarity}
 import graft.streaming.StreamingDedup
 
 /** INDEX LIFECYCLE: an incrementally-refreshed corpus index must equal a
@@ -69,7 +69,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val union = corpus0.unionAll(fold)
 
     val idx0 = Dedup.corpusIndex(corpus0, bucketCap = cap)
-    val refreshed = Dedup.refreshIndex(idx0, fold)
+    val refreshed = new RefreshableCorpusIndex(idx0).fold(fold)
     val scratch = Dedup.corpusIndex(union, bucketCap = cap)
 
     // the cap edges are really exercised: the family's shared buckets are
@@ -97,26 +97,55 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(got.last._4, "the novel gate doc must pass")
   }
 
+  // a second near-identical family, disjoint in words from `variant`
+  private def variant2(tag: String): String =
+    s"an old lighthouse keeper paints seven wooden boats every autumn near " +
+      s"the harbour wall while gulls circle slowly above grey northern waters " +
+      s"marker $tag closes this line"
+
+  private def oversizedSet(idx: Dedup.CorpusIndex): Set[(Int, String, Long)] =
+    idx.oversized.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+
   test("refresh folds a second batch on top of a refresh (chained ≡ from-scratch; present bucket pushed over the cap drops)") {
     val cap = 2
     val a = docsDf(
       1L -> "one two three four five six seven eight nine ten eleven twelve",
       2L -> variant("a"),
-      3L -> variant("b")) // family size 2 ≤ cap: shared buckets PRESENT
+      3L -> variant("b"), // family size 2 ≤ cap: shared buckets PRESENT
+      8L -> variant2("a"),
+      9L -> variant2("b")) // second family, also 2 ≤ cap: PRESENT
     val b = docsDf(4L -> variant("c"), // family → 3 > cap: those buckets DROP
       5L -> "one two three four five six seven eight nine ten eleven twelve")
-    val c = docsDf(6L -> variant("d"), // stays dropped through a second fold
+    val c = docsDf(6L -> variant("d"), // lands in the already-dropped buckets
       7L -> "entirely new third batch text with plenty of distinct words inside")
+    val d = docsDf(10L -> variant2("c"), // second family → 3 > cap: DROPS
+      11L -> variant("e")) // first family's buckets stay dropped
+    val e = docsDf(12L -> variant2("d"), // lands in the second family's dropped buckets
+      13L -> "a closing batch sentence that shares no words with the others")
     val idx0 = Dedup.corpusIndex(a, bucketCap = cap)
-    val chained = Dedup.refreshIndex(Dedup.refreshIndex(idx0, b), c)
-    val scratch = Dedup.corpusIndex(a.unionAll(b).unionAll(c), bucketCap = cap)
-    // the crossing is real: some bucket present in idx0 is gone from scratch
-    val dropped = bucketsSet(idx0).map(t => (t._2, t._3)) --
-      bucketsSet(scratch).map(t => (t._2, t._3))
-    assert(dropped.nonEmpty, "fold must push a previously-present bucket over the cap")
-    assert(fpsSet(chained) == fpsSet(scratch))
-    assert(setsSet(chained) == setsSet(scratch))
-    assert(bucketsSet(chained) == bucketsSet(scratch))
+    val present0 = bucketsSet(idx0).map(t => (t._2, t._3))
+    // maxSegments = 2: b adds segment 2, c makes 3 and compacts, d lands
+    // on the compacted segment (2), e makes 3 and compacts again — so the
+    // re-cap runs before, across and after each compaction
+    val ref = new RefreshableCorpusIndex(idx0, maxSegments = 2)
+    var corpus = a
+    Seq(b, c, d, e).foreach { batch =>
+      val folded = ref.fold(batch)
+      corpus = corpus.unionAll(batch)
+      val scratch = Dedup.corpusIndex(corpus, bucketCap = cap)
+      assert(fpsSet(folded) == fpsSet(scratch))
+      assert(setsSet(folded) == setsSet(scratch))
+      assert(bucketsSet(folded) == bucketsSet(scratch))
+      assert(oversizedSet(folded) == oversizedSet(scratch),
+        "the dropped-bucket table must carry the true sizes forward")
+    }
+    // both cases are real: buckets present in idx0 end up dropped, and
+    // dropped buckets kept growing after the fold that dropped them
+    val dropped = oversizedSet(Dedup.corpusIndex(corpus, bucketCap = cap))
+    assert(present0.intersect(dropped.map(t => (t._1, t._2))).nonEmpty,
+      "folds must push previously-present buckets over the cap")
+    assert(dropped.exists(_._3 > cap + 1),
+      s"folds must land in already-dropped buckets: $dropped")
   }
 
   test("streaming novelty gate picks up a swapped index mid-stream") {
@@ -235,7 +264,7 @@ class IndexLifecycleSpec extends SparkSpec {
       gateRows(Dedup.bestMatchAgainst(gate, idx)))
     // refresh bookkeeping (incl. the oversized table) survives the round
     // trip: refreshing the LOADED index equals from-scratch over the union
-    val refreshed = Dedup.refreshIndex(loaded, fold)
+    val refreshed = new RefreshableCorpusIndex(loaded).fold(fold)
     val scratch = Dedup.corpusIndex(corpus0.unionAll(fold), bucketCap = 2)
     assert(fpsSet(refreshed) == fpsSet(scratch))
     assert(setsSet(refreshed) == setsSet(scratch))
@@ -338,8 +367,8 @@ class IndexLifecycleSpec extends SparkSpec {
   test("refreshed embed index equals from-scratch on the testdata corpus") {
     val e = operators.Tables.load(spark, sf(), "embeddings")
     val idx0 = Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(3)) === 0))
-    val refreshed = Similarity.refreshEmbedIndex(idx0,
-      e.filter(pmod(col("vec_id"), lit(3)) === 1))
+    val refreshed = new RefreshableEmbedIndex(idx0)
+      .fold(e.filter(pmod(col("vec_id"), lit(3)) === 1))
     val scratch = Similarity.embedIndex(e.filter(pmod(col("vec_id"), lit(3)) < 2))
     def qcSet(i: Similarity.EmbedIndex) =
       i.qc.collect().map(r => (r.getAs[Long]("vec_id"), r.getSeq[Long](1), r.getAs[Long]("nq"))).toSet
@@ -358,8 +387,8 @@ class IndexLifecycleSpec extends SparkSpec {
     Similarity.EmbedFiles.save(idx0, path)
     val loaded = Similarity.EmbedFiles.load(spark, path)
     assert(loaded.bucketCap == idx0.bucketCap)
-    val refreshed2 = Similarity.refreshEmbedIndex(loaded,
-      e.filter(pmod(col("vec_id"), lit(3)) === 1))
+    val refreshed2 = new RefreshableEmbedIndex(loaded)
+      .fold(e.filter(pmod(col("vec_id"), lit(3)) === 1))
     assert(qcSet(refreshed2) == qcSet(scratch) && cbSet(refreshed2) == cbSet(scratch))
     assert(Similarity.embedNoveltyAgainst(gate, refreshed2).collect().toSeq == want)
   }

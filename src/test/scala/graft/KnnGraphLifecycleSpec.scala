@@ -31,17 +31,19 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val b2 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
 
     val g0 = Similarity.knnGraphIndex(base)
-    val g1 = Similarity.refreshKnnGraph(g0, b1)
-    val g2 = Similarity.refreshKnnGraph(g1, b2)
+    val cents = g0.cents
+    val baseIds = base.select("vec_id").collect().map(_.getLong(0)).toSet
+    val before = edgeSet(g0.edges).filter(t => baseIds(t._1))
+    val holder = new RefreshableKnnGraph(g0)
+    holder.fold(b1)
+    val g2 = holder.fold(b2)
 
     val union = e.filter(pmod(col("vec_id"), lit(4)) < 3)
-    val scratch = Similarity.knnGraphEdgesWith(union, g0.cents)
+    val scratch = Similarity.knnGraphEdgesWith(union, cents)
     assert(edgeSet(g2.edges) == edgeSet(scratch))
 
     // non-degenerate: the fold displaced some OLD query's neighbor — the
     // affected-node merge path did real work, not just appended new nodes
-    val baseIds = base.select("vec_id").collect().map(_.getLong(0)).toSet
-    val before = edgeSet(g0.edges).filter(t => baseIds(t._1))
     val after = edgeSet(g2.edges).filter(t => baseIds(t._1))
     assert(before != after, "a new vector must displace at least one old top-k edge")
     // and some old rows survived verbatim (unaffected path exercised too)
@@ -166,24 +168,27 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val holder = new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path))
     holder.fold(b1, deltaPath = Some(path))
 
-    // reload over base+delta (tombstone replay at load) ≡ the in-memory fold
-    val expected = Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b1)
+    // reload over base+delta (tombstone replay at load) ≡ from-scratch
+    // under the frozen base centroids
+    val cents = holder.current.cents
+    val expected = edgeSet(Similarity.knnGraphEdgesWith(base.unionAll(b1), cents))
     val r1 = Similarity.GraphFiles.load(spark, path)
-    assert(edgeSet(r1.edges) == edgeSet(expected.edges),
-      "base+delta replay must equal the in-memory fold")
+    assert(edgeSet(r1.edges) == expected,
+      "base+delta replay must equal the from-scratch build")
     r1.release()
 
     // compaction: contents identical, deltas swept
     Similarity.GraphFiles.compact(spark, path)
     assert(graft.operators.IndexFiles.numbered(spark, path, "delta_").isEmpty)
     val r2 = Similarity.GraphFiles.load(spark, path)
-    assert(edgeSet(r2.edges) == edgeSet(expected.edges))
+    assert(edgeSet(r2.edges) == expected)
     r2.release()
 
     // a post-compaction fold must number above the stamp and stay visible
     val holder2 = new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path))
     holder2.fold(b2, deltaPath = Some(path))
-    val contEdges = edgeSet(Similarity.refreshKnnGraph(expected, b2).edges)
+    val contEdges = edgeSet(
+      Similarity.knnGraphEdgesWith(base.unionAll(b1).unionAll(b2), cents))
     val r3 = Similarity.GraphFiles.load(spark, path)
     assert(edgeSet(r3.edges) == contEdges,
       "the post-compaction delta must be visible to loads")
@@ -198,21 +203,21 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val b2 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
 
     // fold b1, snapshot, "restart" (load), fold b2 on the LOADED index —
-    // must equal folding b2 on the in-memory original
-    val g1 = Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b1)
+    // must equal the from-scratch build under the frozen centroids
+    val g1 = new RefreshableKnnGraph(Similarity.knnGraphIndex(base)).fold(b1)
     val path = java.nio.file.Files.createTempDirectory("graft-kg").toString
     Similarity.GraphFiles.save(g1, path)
     assert(Similarity.GraphFiles.exists(spark, path))
     val loaded = Similarity.GraphFiles.load(spark, path)
     assert(loaded.k == g1.k && loaded.nProbe == g1.nProbe)
     assert(edgeSet(loaded.edges) == edgeSet(g1.edges))
-    val resumed = Similarity.refreshKnnGraph(loaded, b2)
-    val continued = Similarity.refreshKnnGraph(g1, b2)
-    assert(edgeSet(resumed.edges) == edgeSet(continued.edges))
+    val resumed = new RefreshableKnnGraph(loaded).fold(b2)
+    val continued = edgeSet(Similarity.knnGraphEdgesWith(
+      base.unionAll(b1).unionAll(b2), g1.cents))
+    assert(edgeSet(resumed.edges) == continued)
     // a second save supersedes the first base (versioned publish + prune)
     Similarity.GraphFiles.save(resumed, path)
-    assert(edgeSet(Similarity.GraphFiles.load(spark, path).edges) ==
-      edgeSet(continued.edges))
+    assert(edgeSet(Similarity.GraphFiles.load(spark, path).edges) == continued)
     graft.operators.IndexFiles.delete(spark, path)
   }
 
@@ -259,9 +264,9 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-kg-ingest").toString
     Similarity.GraphFiles.save(Similarity.knnGraphIndex(base), path)
 
-    // uninterrupted in-memory control
-    val control = Similarity.refreshKnnGraph(
-      Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b0), b1)
+    // control: the from-scratch graph under the frozen base centroids
+    val control = Similarity.knnGraphEdgesWith(base.unionAll(b0).unionAll(b1),
+      Similarity.knnGraphIndex(base).cents)
 
     val gate = StreamingSimilarity.knnGraphIngest(
       new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path)), Some(path))
@@ -282,8 +287,8 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     gate2.flush()
 
     val reloaded = Similarity.GraphFiles.load(spark, path)
-    assert(edgeSet(reloaded.edges) == edgeSet(control.edges),
-      "the durable loop must equal the uninterrupted in-memory chain")
+    assert(edgeSet(reloaded.edges) == edgeSet(control),
+      "the durable loop must equal the from-scratch build")
     assert(reloaded.qn.count() == reloaded.qn.select("vec_id").distinct().count(),
       "no duplicate qn rows after the re-staged replay")
     reloaded.release()
@@ -301,7 +306,7 @@ class KnnGraphLifecycleSpec extends SparkSpec {
 
     // compactEvery=1: every fold compacts — the chain must stay at zero
     // deltas with the base version advancing, answers identical to the
-    // never-compacting control
+    // from-scratch build
     val gate = StreamingSimilarity.knnGraphIngest(
       new RefreshableKnnGraph(Similarity.GraphFiles.load(spark, path)),
       Some(path), compactEvery = 1)
@@ -311,11 +316,11 @@ class KnnGraphLifecycleSpec extends SparkSpec {
     assert(graft.operators.IndexFiles.numbered(spark, path, "base_v")
       .map(_._1).max > 1, "compaction must advance the base version")
 
-    val control = Similarity.refreshKnnGraph(
-      Similarity.refreshKnnGraph(Similarity.knnGraphIndex(base), b0), b1)
+    val control = Similarity.knnGraphEdgesWith(base.unionAll(b0).unionAll(b1),
+      Similarity.knnGraphIndex(base).cents)
     val reloaded = Similarity.GraphFiles.load(spark, path)
-    assert(edgeSet(reloaded.edges) == edgeSet(control.edges),
-      "the compacting loop must answer exactly like the never-compacting chain")
+    assert(edgeSet(reloaded.edges) == edgeSet(control),
+      "the compacting loop must answer exactly like the from-scratch build")
     reloaded.release()
     graft.operators.IndexFiles.delete(spark, path)
   }

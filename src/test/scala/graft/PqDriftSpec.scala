@@ -52,7 +52,7 @@ class PqDriftSpec extends SparkSpec {
     assert(holder.current.version == 1)
 
     // routine ingest: frozen-codebook append (version unchanged, O(batch))
-    holder.append(shifted)
+    holder.fold(shifted)
     assert(holder.current.version == 1)
     assert(holder.current.codes.select("vec_id").distinct().count() == 150)
 
@@ -77,19 +77,20 @@ class PqDriftSpec extends SparkSpec {
   }
 
   test("segmented holder: appends across an in-memory compaction equal the monolithic chain") {
-    // maxSegments=2 forces a compaction on the third append — the folded
-    // view must stay contents-identical to the monolithic append chain
-    // through the boundary (and each append checkpoints only its own two
-    // batch-sized frames, never the whole codes/qn)
+    // maxSegments=2 forces a compaction on the second append — the folded
+    // view must stay contents-identical to the union encoded in one fold
+    // under the same codebook, through the boundary (and each append
+    // checkpoints only its own two batch-sized frames, never the whole
+    // codes/qn)
     val batches = Seq(
       frame(for { m <- 0 until 10 } yield vec(32, 0, m, 0L + m)),
       frame(for { m <- 0 until 10 } yield vec(40, 1, m, 100L + m)),
       frame(for { m <- 0 until 10 } yield vec(48, 2, m, 200L + m)))
     val holder = new RefreshablePqIndex(
       Similarity.pqIndexBuild(original), maxSegments = 2)
-    batches.foreach(b => holder.append(b))
-    var mono = Similarity.pqIndexBuild(original)
-    batches.foreach(b => mono = Similarity.appendEncodePq(mono, b))
+    batches.foreach(b => holder.fold(b))
+    val mono = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
+      .fold(batches.reduce(_ unionAll _))
     assert(codeSetOf(holder.current) == codeSetOf(mono))
     assert(holder.current.qn.count() == mono.qn.count())
     assert(holder.current.version == 1)
@@ -102,7 +103,7 @@ class PqDriftSpec extends SparkSpec {
     // re-shuffle per reader)
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     val holder = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
-    holder.append(shifted)
+    holder.fold(shifted)
     val v = holder.current
     Seq("cents" -> v.cents, "codes" -> v.codes, "qn" -> v.qn).foreach {
       case (name, df) =>
@@ -114,7 +115,7 @@ class PqDriftSpec extends SparkSpec {
 
   test("maintenance policy: a floor breach fires the retrain exactly once, above-floor is measure-only") {
     val holder = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
-    holder.append(shifted)
+    holder.fold(shifted)
 
     // drifted → below floor → the policy retrains and re-measures
     val d1 = IndexMaintenance.maintainPq(holder, original.unionAll(shifted),
@@ -147,11 +148,11 @@ class PqDriftSpec extends SparkSpec {
     assert(IndexFiles.numbered(spark, path, "base_v").map(_._1).max > 1,
       "compaction must advance the base version")
 
-    val control = Similarity.appendEncodePq(
-      Similarity.appendEncodePq(Similarity.pqIndexBuild(original), b0), b1)
+    val control = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
+      .fold(b0.unionAll(b1))
     val reloaded = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(reloaded) == codeSetOf(control),
-      "the compacting loop must encode exactly like the never-compacting chain")
+      "the compacting loop must encode exactly like one fold of the union")
     reloaded.release()
     IndexFiles.delete(spark, path)
   }
@@ -191,16 +192,11 @@ class PqDriftSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-pq-persist").toString
     Similarity.PqFiles.save(Similarity.pqIndexBuild(original), path)
 
-    val loaded = Similarity.PqFiles.load(spark, path)
-    val (_, delta, dropFoldCaches) = Similarity.appendEncodePqTracked(loaded, shifted)
-    Similarity.PqFiles.saveDelta(delta, path)
-    dropFoldCaches()
-    loaded.release()
-
-    val expected = Similarity.appendEncodePq(Similarity.pqIndexBuild(original), shifted)
+    val expected = new RefreshablePqIndex(Similarity.PqFiles.load(spark, path))
+      .fold(shifted, deltaPath = Some(path))
     val r1 = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(r1) == codeSetOf(expected),
-      "base+delta replay must equal the in-memory append chain")
+      "base+delta replay must equal the in-memory fold")
     assert(r1.qn.count() == 150)
     r1.release()
 
@@ -215,11 +211,9 @@ class PqDriftSpec extends SparkSpec {
     // the high-water gotcha: a fold AFTER compaction must number above the
     // compacted base's stamp, or it would be invisible to every load
     val extra = frame(for { m <- 0 until 5 } yield vec(0, 3, m, 2000L + m))
-    val base2 = Similarity.PqFiles.load(spark, path)
-    val (_, d2, drop2) = Similarity.appendEncodePqTracked(base2, extra)
-    val id = Similarity.PqFiles.saveDelta(d2, path)
-    drop2()
-    base2.release()
+    new RefreshablePqIndex(Similarity.PqFiles.load(spark, path))
+      .fold(extra, deltaPath = Some(path))
+    val id = IndexFiles.highWater(spark, path)
     assert(id > 1, s"post-compaction delta id must exceed the stamp, got $id")
     val r3 = Similarity.PqFiles.load(spark, path)
     assert(r3.qn.count() == 155, "the post-compaction delta must be visible to loads")
@@ -234,9 +228,9 @@ class PqDriftSpec extends SparkSpec {
     val b0 = frame(for { m <- 0 until 10 } yield vec(32, 0, m, 0L + m))
     val b1 = frame(for { m <- 0 until 10 } yield vec(40, 1, m, 100L + m))
 
-    // uninterrupted in-memory control
-    val control = Similarity.appendEncodePq(
-      Similarity.appendEncodePq(Similarity.pqIndexBuild(original), b0), b1)
+    // control: both batches encoded in one fold under the same codebook
+    val control = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
+      .fold(b0.unionAll(b1))
 
     val gate = StreamingSimilarity.pqIngest(
       new RefreshablePqIndex(Similarity.PqFiles.load(spark, path)), Some(path))
@@ -257,7 +251,7 @@ class PqDriftSpec extends SparkSpec {
 
     val reloaded = Similarity.PqFiles.load(spark, path)
     assert(codeSetOf(reloaded) == codeSetOf(control),
-      "the durable loop must equal the uninterrupted in-memory chain")
+      "the durable loop must equal one fold of the union")
     assert(reloaded.qn.count() == 100L + 20L, "no duplicate encodes")
     reloaded.release()
     IndexFiles.delete(spark, path)
@@ -268,7 +262,7 @@ class PqDriftSpec extends SparkSpec {
     Similarity.PqFiles.save(Similarity.pqIndexBuild(original), path)
     val holder = new RefreshablePqIndex(Similarity.PqFiles.load(spark, path))
 
-    holder.append(shifted, deltaPath = Some(path))
+    holder.fold(shifted, deltaPath = Some(path))
     assert(IndexFiles.numbered(spark, path, "delta_").nonEmpty)
 
     // retrain → version-2 base; the frozen-codebook delta was encoded
@@ -286,14 +280,17 @@ class PqDriftSpec extends SparkSpec {
 
   test("append-encode is exact encoding under the frozen codebook (the holder adds no drift of its own)") {
     val idx = Similarity.pqIndexBuild(original)
-    val appended = Similarity.appendEncodePq(idx, shifted)
-    val holder = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
-    holder.append(shifted)
-    def codeSet(i: Similarity.PqIndex): Set[(Long, Long, Long)] =
-      i.codes.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("m"),
-        r.getAs[Long]("code"))).toSet
-    assert(codeSet(holder.current) == codeSet(appended))
+    val before = codeSetOf(idx)
+    // the union encoded in one fold vs the same vectors over two folds
+    // across an in-memory compaction (maxSegments = 1)
+    val appended = new RefreshablePqIndex(Similarity.pqIndexBuild(original))
+      .fold(shifted)
+    val holder = new RefreshablePqIndex(idx, maxSegments = 1)
+    holder.fold(shifted.filter("vec_id < 25"))
+    holder.fold(shifted.filter("vec_id >= 25"))
+    assert(codeSetOf(holder.current) == codeSetOf(appended))
     // old codes pass through verbatim; new ids encode against v1's codebook
-    assert(codeSet(appended).filter(_._1 >= 1000L) == codeSet(idx))
+    assert(codeSetOf(appended).filter(_._1 >= 1000L) == before)
+    assert(codeSetOf(appended).count(_._1 < 1000L) == 50 * idx.subspaces)
   }
 }
